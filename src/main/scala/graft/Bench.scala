@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.SparkEntry.jsonString
+import graft.core.JobMetrics
 
 /** Benchmark main — driver contract: ONE JSON line on stdout.
   *
@@ -80,14 +80,15 @@ import org.apache.spark.sql.SparkSession
   * plan, not the machine — a plan regression (lost broadcast, lost
   * partial agg, lost semi-join prune) shows up as a bytes jump long
   * before it is timeable above co-tenant noise. The warmup round runs
-  * under a [[QueryMetrics]] listener; per-query shuffle bytes/records
-  * and output rows land in target/bench.json (and a TSV snapshot at
-  * target/shuffle_current.tsv), and are compared against the committed
-  * record `bench/shuffle_baseline.tsv` when its scale factor matches —
-  * any query growing >10% (and >64 KiB absolute, so a few-KiB query
-  * can't flake the gate) is listed in `shuffle_regressions` in both
-  * JSON outputs. Accepting an intentional plan change = regenerating
-  * the baseline from target/shuffle_current.tsv in the same commit.
+  * each query under its own [[JobMetrics]] tag; per-query shuffle
+  * bytes/records and output rows land in target/bench.json (and a TSV
+  * snapshot at target/shuffle_current.tsv), and are compared against
+  * the committed record `bench/shuffle_baseline.tsv` when its scale
+  * factor matches — any query growing >10% (and >64 KiB absolute, so
+  * a few-KiB query can't flake the gate) is listed in
+  * `shuffle_regressions` in both JSON outputs. Accepting an intentional
+  * plan change = regenerating the baseline from
+  * target/shuffle_current.tsv in the same commit.
   *
   * Wall-time regression gate ([[timeRegressions]]): the bytes gate is
   * blind to same-plan slow-creep (more work per row, a lost cache, a
@@ -437,55 +438,6 @@ object Bench {
         "worktree A/B (COVERAGE.md protocol) before trusting this normalization"
     }
 
-  /** Per-query task-metric totals, accumulated from the async listener
-    * bus. [[quiesce]] must be called after the action returns and
-    * before [[snapshot]]: bus delivery is in-order, so once every
-    * posted job-start has its job-end delivered (and the counters hold
-    * still for a beat), all task-end events of the finished query are
-    * folded in. */
-  private[graft] final class QueryMetrics extends SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    private val shufBytes = new AtomicLong
-    private val shufRecords = new AtomicLong
-    private val outRows = new AtomicLong
-    private val cpuNs = new AtomicLong
-    private val jobsStarted = new AtomicLong
-    private val jobsEnded = new AtomicLong
-    override def onJobStart(js: SparkListenerJobStart): Unit = { jobsStarted.incrementAndGet(); () }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit = { jobsEnded.incrementAndGet(); () }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shufBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        outRows.addAndGet(m.outputMetrics.recordsWritten)
-        // task-summed executor CPU: with the same-window wall time this
-        // yields the effective-cores ratio [[sustainedCpuClass]] keys on
-        cpuNs.addAndGet(m.executorCpuTime)
-        ()
-      }
-    }
-    def snapshot(): (Long, Long, Long, Long) =
-      (shufBytes.get, shufRecords.get, outRows.get, cpuNs.get)
-    def quiesce(timeoutMs: Long = 5000): Unit = {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      var stable = false
-      while (!stable && System.nanoTime() < deadline) {
-        val s = jobsStarted.get
-        if (s == jobsEnded.get) {
-          Thread.sleep(50)
-          stable = s == jobsStarted.get && s == jobsEnded.get
-        } else Thread.sleep(10)
-      }
-      // a deadline exit means straggler listener events can land in the
-      // NEXT query's window — say so, so a corrupted bytes recording is
-      // distinguishable from a clean one
-      if (!stable) System.err.println(
-        s"[bench] WARN: listener bus not quiescent after ${timeoutMs} ms -- " +
-          "shuffle-byte attribution for the adjacent queries may be skewed")
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val benchStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - benchStart) / 1e9
@@ -501,14 +453,7 @@ object Bench {
     val loadStart = loadavg1()
     val (stealStart, jiffiesStart) = cpuJiffies()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(defaultCpus = 32, logLevel = "WARN")
 
     // first failure message per query, for the summary JSON: the
     // driver's ~2000-char tail kept only the STACK of r9's failures —
@@ -562,25 +507,18 @@ object Bench {
     // warmup round: JIT + per-query codegen + FS cache; not timed — so
     // it doubles as the metrics round: shuffle bytes are a plan
     // property (identical every run), and capturing them here keeps the
-    // quiesce wait out of the measured samples
-    val metrics = new QueryMetrics
-    spark.sparkContext.addSparkListener(metrics)
-    val shuffleStats = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long)]
-    // per-query (cpu_sec, wall_sec) from the same metrics round — the
+    // tagging and the quiesce wait out of the measured samples. Per query
+    // it keeps totals and wall (None = failed); CPU over wall is the
     // effective-cores shape datum behind [[sustainedCpuClass]]
-    val cpuStats = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    names.foreach { n =>
-      metrics.quiesce()
-      val before = metrics.snapshot()
-      val t = time(n)
-      metrics.quiesce()
-      val after = metrics.snapshot()
-      shuffleStats(n) =
-        if (t < 0) (-1L, -1L, -1L)
-        else (after._1 - before._1, after._2 - before._2, after._3 - before._3)
-      cpuStats(n) =
-        if (t < 0) (-1.0, -1.0) else ((after._4 - before._4) / 1e9, t)
-    }
+    val measured = names.map { n =>
+      n -> JobMetrics.tagged(spark.sparkContext) { metrics =>
+        val t = time(n)
+        // a deadline exit may leave task events uncounted — say so, so a
+        // short bytes recording is distinguishable from a clean one
+        if (!metrics.quiesce()) System.err.println(s"[bench] WARN: $n not quiescent, metrics may be short")
+        Option.when(t >= 0)((metrics.totals, t))
+      }
+    }.toMap
 
     // measured rounds, interleaved: samples(q) accumulates one time per
     // round, so any noise window spans many queries × one sample each.
@@ -681,70 +619,60 @@ object Bench {
     // cannot apply says so on stderr, so a silent no-op run (wrong CWD,
     // non-matching sf) is distinguishable from a genuinely clean one.
     val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val repoRoot: java.nio.file.Path = {
-      var p = java.nio.file.Paths.get("").toAbsolutePath
-      var found: Option[java.nio.file.Path] = None
-      while (found.isEmpty && p != null) {
-        if (java.nio.file.Files.exists(p.resolve("build.sbt"))) found = Some(p)
-        p = p.getParent
-      }
-      found.getOrElse(java.nio.file.Paths.get("").toAbsolutePath)
-    }
-    // shared sf-matched TSV loader for both gates: returns the data
-    // rows when the baseline's recorded sf matches this run's, else
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val repoRoot = Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
+      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt"))).getOrElse(cwd)
+    // shared sf-matched TSV loader for the gates: query -> its numeric
+    // columns when the baseline's recorded sf matches this run's, else
     // empty with a LOUD stderr note (a silently inactive gate looks
-    // like a clean one)
-    def baselineRows(path: java.nio.file.Path, gate: String): Seq[Array[String]] =
+    // like a clean one). Unparsable rows and negative first values (a
+    // hand-committed failed-run sentinel: prev = -1 would flag every
+    // healthy run) are rejected.
+    def baselineRows(file: String, gate: String): Map[String, Seq[Double]] = {
+      val path = repoRoot.resolve("bench").resolve(file)
       if (java.nio.file.Files.exists(path)) {
         val lines = scala.jdk.CollectionConverters
           .ListHasAsScala(java.nio.file.Files.readAllLines(path)).asScala.toSeq
         val sfLine = lines.find(_.startsWith("# sf=")).map(_.stripPrefix("# sf="))
         if (sfLine.contains(sfName))
-          lines.filterNot(_.startsWith("#")).map(_.split('\t'))
+          lines.filterNot(_.startsWith("#")).map(_.split('\t')).flatMap { f =>
+            scala.util.Try(f.head -> f.toSeq.tail.map(_.toDouble)).toOption
+              .filter { case (_, v) => v.nonEmpty && v.head >= 0 }
+          }.toMap
         else {
           System.err.println(s"[bench] $gate gate INACTIVE: baseline " +
             s"$path is for sf=${sfLine.getOrElse("?")}, this run is sf=$sfName")
-          Seq.empty
+          Map.empty
         }
       } else {
         System.err.println(s"[bench] $gate gate INACTIVE: no baseline at $path")
-        Seq.empty
+        Map.empty
       }
-    val baseline: Map[String, Long] =
-      baselineRows(repoRoot.resolve("bench").resolve("shuffle_baseline.tsv"), "shuffle")
-        .flatMap {
-          // negative rows (a hand-committed failed-run sentinel)
-          // are rejected — prev = -1 would flag every healthy run
-          case Array(q, b, _*) =>
-            scala.util.Try(q -> b.toLong).toOption.filter(_._2 >= 0)
-          case _ => None
-        }.toMap
-    val currentBytes = shuffleStats.collect { case (q, (b, _, _)) if b >= 0 => q -> b }.toMap
+    }
+    val baseline: Map[String, Long] = baselineRows("shuffle_baseline.tsv", "shuffle")
+      .map { case (q, v) => q -> v.head.toLong }
+    val currentBytes = measured.collect { case (q, Some((m, _))) => q -> m.shuffleBytes }
     val regressions = shuffleRegressions(currentBytes, baseline)
     regressions.foreach(r => System.err.println(s"[bench] SHUFFLE REGRESSION $r"))
+    def writeTarget(file: String, text: String): Unit = {
+      val path = java.nio.file.Paths.get("target", file)
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.write(path, text.getBytes("UTF-8"))
+    }
+    def snapshot(file: String, rows: Seq[String]): Unit =
+      writeTarget(file, s"# sf=$sfName\n" + rows.mkString("\n") + "\n")
     // snapshot for regenerating the committed baseline after an
-    // intentional plan change
-    val tsvOut = java.nio.file.Paths.get("target", "shuffle_current.tsv")
-    java.nio.file.Files.createDirectories(tsvOut.getParent)
-    // failed queries (-1 sentinel) are EXCLUDED from the snapshot: a
-    // committed -1 baseline row would make the gate fire on every
-    // subsequent healthy run of that query
-    java.nio.file.Files.write(tsvOut,
-      (s"# sf=$sfName\n" + names.filter(n => shuffleStats(n)._1 >= 0)
-        .map(n => s"$n\t${shuffleStats(n)._1}").mkString("\n") + "\n")
-        .getBytes("UTF-8"))
+    // intentional plan change. Failed queries (-1 sentinel) are
+    // EXCLUDED from every snapshot: a committed -1 baseline row would
+    // make the gate fire on every subsequent healthy run of that query
+    snapshot("shuffle_current.tsv",
+      names.flatMap(n => measured(n).map { case (m, _) => s"$n\t${m.shuffleBytes}" }))
 
     // wall-time gate vs the committed record (median + MAD spread per
     // query, sf-matched) — catches the slow-creep regressions the
     // bytes gate is blind to (same plan, more work per row)
-    val timeBaseline: Map[String, (Double, Double)] =
-      baselineRows(repoRoot.resolve("bench").resolve("time_baseline.tsv"), "time")
-        .flatMap {
-          case Array(q, m, sp, _*) =>
-            scala.util.Try(q -> (m.toDouble, sp.toDouble)).toOption
-              .filter(_._2._1 >= 0)
-          case _ => None
-        }.toMap
+    val timeBaseline: Map[String, (Double, Double)] = baselineRows("time_baseline.tsv", "time")
+      .collect { case (q, Seq(m, sp, _*)) => q -> (m, sp) }
     val currentTimes = stats.collect {
       case (q, m, sp, _) if m >= 0 => q -> (m, sp)
     }.toMap
@@ -759,14 +687,8 @@ object Bench {
     // (wall medians from time_baseline, effective cores from
     // cpu_baseline) — the selective machine-day signature the board
     // median misses; the gate normalizes members by max(board, class)
-    val cpuBaseline: Map[String, (Double, Double)] =
-      baselineRows(repoRoot.resolve("bench").resolve("cpu_baseline.tsv"), "cpu-class")
-        .flatMap {
-          case Array(q, c, w, _*) =>
-            scala.util.Try(q -> (c.toDouble, w.toDouble)).toOption
-              .filter(_._2._1 >= 0)
-          case _ => None
-        }.toMap
+    val cpuBaseline: Map[String, (Double, Double)] = baselineRows("cpu_baseline.tsv", "cpu-class")
+      .collect { case (q, Seq(c, w, _*)) => q -> (c, w) }
     val cpuClass = sustainedCpuClass(timeBaseline, cpuBaseline)
     val cdrift = cohortDrift(currentTimes, timeBaseline, cpuClass)
     val cohortWarnings = cohortDriftWarnings(Seq("sustained-cpu" -> cdrift))
@@ -785,19 +707,11 @@ object Bench {
     val timeRegs = timeRegressions(currentTimes, timeBaseline, drift = drift,
       cohorts = Seq(cpuClass -> cdrift))
     timeRegs.foreach(r => System.err.println(s"[bench] TIME REGRESSION $r"))
-    // snapshot for regenerating the committed time baseline
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("target", "time_current.tsv"),
-      (s"# sf=$sfName\n" + names.filter(n => currentTimes.contains(n))
-        .map { n => val (m, sp) = currentTimes(n); f"$n\t$m%.3f\t$sp%.3f" }
-        .mkString("\n") + "\n").getBytes("UTF-8"))
-    // snapshot for regenerating the committed cpu-shape baseline
-    // (failed queries excluded, same rule as the other snapshots)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("target", "cpu_current.tsv"),
-      (s"# sf=$sfName\n" + names.filter(n => cpuStats.get(n).exists(_._1 >= 0))
-        .map { n => val (c, w) = cpuStats(n); f"$n\t$c%.3f\t$w%.3f" }
-        .mkString("\n") + "\n").getBytes("UTF-8"))
+    // snapshots for regenerating the committed time and cpu-shape baselines
+    snapshot("time_current.tsv", names.filter(n => currentTimes.contains(n))
+      .map { n => val (m, sp) = currentTimes(n); f"$n\t$m%.3f\t$sp%.3f" })
+    snapshot("cpu_current.tsv",
+      names.flatMap(n => measured(n).map { case (m, w) => f"$n\t${m.cpuNs / 1e9}%.3f\t$w%.3f" }))
 
     // environment evidence: loadavg at both ends, hypervisor steal
     // share over the whole run, and end-of-run CPU pressure. loadEnd
@@ -816,17 +730,11 @@ object Bench {
     // tail capture holds ~2000 chars, and the 122-entry per-query map
     // overflowed it (BENCH_r06/r07 landed with parsed:null). The full
     // per-query record lives in target/bench.json.
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val failedNames = stats.collect { case (k, m, _, _) if m < 0 => k }
     // one `err` line per failed query (not the whole board — the tail
     // budget is ~2000 chars and failures should be rare)
     val errJson = failedNames
-      .map(k => s"${jstr(k)}: ${jstr(errors.getOrElse(k, "unknown"))}")
+      .map(k => s"${jsonString(k)}: ${jsonString(errors.getOrElse(k, "unknown"))}")
       .mkString("{", ",", "}")
     val top10 = stats.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (k, m, _, _) => "\"" + k + f"\":$m%.2f" }
@@ -835,20 +743,18 @@ object Bench {
     val full = {
       val perQuery = stats.map { case (k, m, sp, ts) =>
         val runs = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-        val (sb, sr, or) = shuffleStats(k)
-        val cpuSec = cpuStats.get(k).map(_._1).getOrElse(-1.0)
+        val (sb, sr, or, cpuSec) = measured(k).fold((-1L, -1L, -1L, -1.0)) { case (m, _) =>
+          (m.shuffleBytes, m.shuffleRecords, m.outputRows, m.cpuNs / 1e9) }
         "\"" + k + f"""\":{"median":$m%.3f,"spread":$sp%.3f,"raw_spread":${rawSpread(ts)}%.3f,"shuffle_bytes":$sb,"shuffle_records":$sr,"out_rows":$or,"cpu_sec":$cpuSec%.3f,"runs":$runs}"""
       }.mkString("{", ",", "}")
-      val stillBurstyJson = bursty.map(jstr).mkString("[", ",", "]")
+      val stillBurstyJson = bursty.map(jsonString).mkString("[", ",", "]")
       // cohort warnings ride the persisted record, not just stderr
       // (ADVICE r16): the worktree-A/B demand has to live in the file
       // later rounds actually read
-      val warnJson = cohortWarnings.map(jstr).mkString("[", ",", "]")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","rounds":$rounds,"noise":$noise%.3f,"raw_noise":$rawNoise%.3f,"spread_stat":"mad2","degraded":$degraded,"degraded_reason":${jstr(degradedReason)},"board_drift":$drift%.3f,"cohort_drift":$cdrift%.3f,"cpu_class_size":${cpuClass.size},"cohort_warnings":$warnJson,"still_bursty":$stillBurstyJson,"budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsedSec%.1f,"load":$loadJson,"shuffle_regressions":$regJson,"time_regressions":$timeRegJson,"queries":$perQuery,"sf":"$sfDir"}"""
+      val warnJson = cohortWarnings.map(jsonString).mkString("[", ",", "]")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","rounds":$rounds,"noise":$noise%.3f,"raw_noise":$rawNoise%.3f,"spread_stat":"mad2","degraded":$degraded,"degraded_reason":${jsonString(degradedReason)},"board_drift":$drift%.3f,"cohort_drift":$cdrift%.3f,"cpu_class_size":${cpuClass.size},"cohort_warnings":$warnJson,"still_bursty":$stillBurstyJson,"budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsedSec%.1f,"load":$loadJson,"shuffle_regressions":$regJson,"time_regressions":$timeRegJson,"queries":$perQuery,"sf":"$sfDir"}"""
     }
-    val out = java.nio.file.Paths.get("target", "bench.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out, full.getBytes("UTF-8"))
+    writeTarget("bench.json", full)
 
     // summary keeps the reason SHORT (the driver tail holds ~2000
     // chars; the full reason lives in target/bench.json)
@@ -856,12 +762,10 @@ object Bench {
       if (degradedReason.length > 120) degradedReason.take(117) + "..."
       else degradedReason
     val summary =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_queries":${names.size},"failed":$failedJson,"errors":$errJson,"queries":$top10,"noise":$noise%.2f,"raw_noise":$rawNoise%.2f,"spread_stat":"mad2","rounds":$rounds,"degraded":$degraded,"degraded_reason":${jstr(reasonShort)},"board_drift":$drift%.2f,"cohort_drift":$cdrift%.2f,"cpu_class_size":${cpuClass.size},"budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsedSec%.1f,"load":$loadJson,"shuffle_regressions":$regJson,"time_regressions":$timeRegJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","n_queries":${names.size},"failed":$failedJson,"errors":$errJson,"queries":$top10,"noise":$noise%.2f,"raw_noise":$rawNoise%.2f,"spread_stat":"mad2","rounds":$rounds,"degraded":$degraded,"degraded_reason":${jsonString(reasonShort)},"board_drift":$drift%.2f,"cohort_drift":$cdrift%.2f,"cpu_class_size":${cpuClass.size},"budget_sec":$budgetSec%.0f,"elapsed_sec":$elapsedSec%.1f,"load":$loadJson,"shuffle_regressions":$regJson,"time_regressions":$timeRegJson,"sf":"$sfDir"}"""
     // mirrored to disk so the summary survives even if a future harness
     // change re-decorates or truncates stdout
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("target", "bench_summary.json"),
-      (summary + "\n").getBytes("UTF-8"))
+    writeTarget("bench_summary.json", summary + "\n")
     spark.stop()
     // LAST stdout line, after Spark's shutdown chatter (which goes to
     // stderr) — the driver greps the tail for a bare-JSON line

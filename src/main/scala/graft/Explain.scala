@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.core.JobMetrics
 
 /** Plan-audit helper main: print a query's formatted physical plan and
   * its timed end-to-end cost through the noop sink. Usage:
@@ -11,98 +10,41 @@ import org.apache.spark.sql.SparkSession
   * multiline code under batch mode).
   *
   * Every rep also prints a per-JOB timing table (job id, wall seconds,
-  * number of stages/tasks, first line of the job's callsite) — the
-  * fastest way to see whether a query's wall time is one big stage or
-  * fifty tiny scheduling round-trips (the superstep-query signature).
+  * number of stages, first line of the job's callsite, and each
+  * completed stage's tasks/run/cpu/shuffle row) — the fastest way to see
+  * whether a query's wall time is one big stage or fifty tiny scheduling
+  * round-trips (the superstep-query signature).
   */
 object Explain {
-
-  private final class JobTimer extends SparkListener {
-    case class J(id: Int, start: Long, var end: Long = -1L,
-        var site: String = "", var nStages: Int = 0)
-    case class S(id: Int, name: String, sec: Double, nTasks: Int,
-        runSec: Double, cpuSec: Double, shufRead: Long, shufWrite: Long)
-    val jobs = scala.collection.mutable.LinkedHashMap.empty[Int, J]
-    val stages = scala.collection.mutable.LinkedHashMap.empty[Int, S]
-    val stageJob = scala.collection.mutable.HashMap.empty[Int, Int]
-    override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
-      val j = J(js.jobId, js.time)
-      j.site = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
-      j.nStages = js.stageInfos.size
-      js.stageInfos.foreach(si => stageJob(si.stageId) = js.jobId)
-      jobs(js.jobId) = j
-    }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
-      jobs.get(je.jobId).foreach(_.end = je.time)
-    }
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
-      val si = sc.stageInfo
-      val wall = (for (a <- si.completionTime; b <- si.submissionTime)
-        yield (a - b) / 1e3).getOrElse(-1.0)
-      val m = si.taskMetrics
-      stages(si.stageId) = S(si.stageId, si.name.takeWhile(_ != '\n'), wall,
-        si.numTasks, m.executorRunTime / 1e3, m.executorCpuTime / 1e9,
-        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten)
-    }
-    def report(): String = synchronized {
-      val sb = new StringBuilder
-      var tot = 0.0
-      jobs.values.foreach { j =>
-        val sec = if (j.end < 0) -1.0 else (j.end - j.start) / 1e3
-        if (sec >= 0) tot += sec
-        val tag = if (j.end < 0) "running" else f"${sec}%7.3f s"
-        sb.append(f"  job ${j.id}%4d  $tag  stages=${j.nStages}%2d  ${j.site}%s%n")
-        stages.values.filter(s => stageJob.get(s.id).contains(j.id)).foreach { s =>
-          sb.append(f"    stage ${s.id}%4d  ${s.sec}%7.3f s  tasks=${s.nTasks}%3d" +
-            f"  run=${s.runSec}%7.2f  cpu=${s.cpuSec}%7.2f" +
-            f"  sR=${s.shufRead / 1024}%8dK sW=${s.shufWrite / 1024}%8dK  ${s.name}%s%n")
-        }
-      }
-      sb.append(f"  -- ${jobs.size} jobs, sum of job walls ${tot}%.3f s%n")
-      sb.toString
-    }
-    def reset(): Unit = synchronized { jobs.clear(); stages.clear(); stageJob.clear() }
-  }
 
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("q1_agg").split(',').toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val reps = args.lift(2).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val timer = new JobTimer
-    spark.sparkContext.addSparkListener(timer)
+    val spark = SparkEntry.localSession(defaultCpus = 32, logLevel = "ERROR")
+
+    /** Run `body` under its own job tag; print its wall time and the
+      * table of exactly its jobs (`running` = no end by the deadline). */
+    def timed[T](label: String)(body: => T): T =
+      JobMetrics.tagged(spark.sparkContext) { metrics =>
+        val t0 = System.nanoTime()
+        val result = body
+        println(f"[explain] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        metrics.quiesce()
+        println(metrics.report())
+        result
+      }
+
     names.foreach { name =>
+      println(s"==== $name ($sfDir) ====")
       // query CONSTRUCTION runs eager work for superstep queries
       // (localCheckpoint/persist+count inside the def) — time and
       // job-table it separately so that cost is visible, not hidden
-      timer.reset()
-      val tc = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      println(s"==== $name ($sfDir) ====")
-      println(f"[explain] $name construction: ${(System.nanoTime() - tc) / 1e9}%.3f s")
-      println(timer.report())
+      val df = timed(s"$name construction")(SparkEntry.queries(name)(spark, sfDir))
       df.explain("formatted")
       (1 to reps).foreach { r =>
-        timer.reset()
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        println(f"[explain] $name rep $r: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        timed(s"$name rep $r")(df.write.format("noop").mode("overwrite").save())
         spark.catalog.clearCache()
-        // listenerBus is private[spark]; poll until every started job has
-        // its end event (bounded), flagging stragglers as 'running'
-        val deadline = System.nanoTime() + 5e9.toLong
-        while (System.nanoTime() < deadline &&
-            timer.jobs.synchronized(timer.jobs.values.exists(_.end < 0)))
-          Thread.sleep(50)
-        println(timer.report())
       }
     }
     spark.stop()

@@ -22,6 +22,34 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
+  /** The mains' one session: `local[SPARK_GRAFT_CPUS]` (`defaultCpus`
+    * when unset), one shuffle partition per core, UTC, no UI. */
+  private[graft] def localSession(defaultCpus: Int, logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** `s` as a JSON string literal: backslash, quote and ALL control
+    * chars (<0x20) escaped — a tab or CR in an oracle's SQL would
+    * otherwise make a consumer's json.load fail and silently zero the
+    * correctness check. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")

@@ -215,10 +215,13 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
     * carries `Failed`; per-sink `onFlush` events record which sinks
     * committed. */
   def exec(spark: SparkSession,
-      events: PipelineEvents = PipelineEvents.Silent): PipelineReport = {
+      events: PipelineEvents = PipelineEvents.Silent): PipelineReport =
+    JobMetrics.tagged(spark.sparkContext, events.onProgress)(run(spark, events, _))
+
+  /** [[exec]]'s body; every job it starts carries `metrics`' tag. */
+  private def run(spark: SparkSession, events: PipelineEvents,
+      metrics: JobMetrics): PipelineReport = {
     val t0 = System.nanoTime()
-    val progress = new TaskProgressListener(events)
-    spark.sparkContext.addSparkListener(progress)
     events.onStart()
     try {
       val c = compile(spark, forExec = true)
@@ -228,6 +231,8 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
           events.onFlush(i)
         }
       } finally c.persisted.foreach(_.unpersist(blocking = false))
+      // every progress tick of this flow's own jobs lands before success
+      metrics.quiesce()
       val counters = c.observations.flatMap { case (name, obs) =>
         val m = obs.get
         // a break signal that never fires observes ZERO rows, and Spark
@@ -257,7 +262,7 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
       case e: Throwable =>
         events.onFail(e)
         PipelineReport(PipelineStatus.Failed(e), Map.empty, (System.nanoTime() - t0) / 1000000)
-    } finally spark.sparkContext.removeSparkListener(progress)
+    }
   }
 
   /** Fold the step list into lineage.

@@ -1,18 +1,20 @@
 package graft.core
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.AtomicLong
-
 /** Flow-lifecycle event hooks — the reference's symfony-dispatcher event
   * surface (`src/Events/YaEtlEvent.php:17-37`, `docs/events.md:52-149`):
   * `flow.start / progress / success / fail / flush`.
   *
   * Progress in the reference fires every `progressMod` (default 1024)
   * record iterations of a single-threaded pump. The distributed analog
-  * is per-task completion: [[TaskProgressListener]] reports cumulative
-  * output records as executor tasks finish — same UX contract (a
-  * monotonically growing record count), sampled at task granularity
-  * instead of a driver-side modulo, so it costs nothing on the hot path.
+  * is per-task completion: [[Pipeline.exec]] tags its own jobs and its
+  * [[JobMetrics]] collector reports the cumulative records READ by their
+  * finished tasks — same UX contract (a monotonically growing record
+  * count), sampled at task granularity instead of a per-record modulo,
+  * so it costs nothing on the hot path. Records read is the analog of
+  * the reference's per-record iteration counter at extractors (shuffle
+  * or output rows would count a record once per stage it crosses), and
+  * jobs of other threads on the same SparkContext never tick it. The
+  * last tick lands before `onSuccess`.
   */
 trait PipelineEvents {
   def onStart(): Unit = ()
@@ -55,21 +57,4 @@ object PipelineEvents {
     override def onFail(e: Throwable): Unit = out(s"[graft] FAIL: ${e.getMessage}")
   }
   object Console { private def stdout(s: String): Unit = println(s) }
-}
-
-/** SparkListener translating task completions into progress events.
-  * Registered for the duration of one [[Pipeline.exec]]. Counts records
-  * READ by finished tasks — the distributed analog of the reference's
-  * per-record iteration counter at extractors (mixing in shuffle or
-  * output rows would double-count a record per stage it crosses).
-  * Scope note: the listener sees every job on the SparkContext, so a
-  * concurrently running foreign job would also tick this counter. */
-private[core] final class TaskProgressListener(events: PipelineEvents) extends SparkListener {
-  private val records = new AtomicLong(0)
-  override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-    val m = taskEnd.taskMetrics
-    if (m != null && m.inputMetrics.recordsRead > 0) {
-      events.onProgress(records.addAndGet(m.inputMetrics.recordsRead))
-    }
-  }
 }

@@ -28,15 +28,6 @@ object CurationQueries {
   private val toksCte =
     "WITH toks AS (SELECT doc_id, text, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents)"
 
-  /** Narrow-scan widening (shared definition, see
-    * [[ProfilingQueries.widened]]): a small corpus parquet arrives as
-    * ONE input split, serializing the CPU-heavy per-doc work on a
-    * single core — measured 12.9 s → 0.7 s for text_repetition at
-    * sf0.1. */
-  private def widened(s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    ProfilingQueries.widened(s, df)
-
   /** DuckDB n-gram list matching [[graft.functions.TextFunctions.shingles]]:
     * empty below n tokens, positions 1..len-n+1 joined by one space. */
   private def gramsSql(t: String, n: Int): String =
@@ -268,7 +259,7 @@ object CurationQueries {
         // ELSE [] path yields 0, and the old plan's left-join+coalesce
         // did too — a NULL-in-NULL-out expression would diverge on the
         // degenerate docs CurationPropsSpec generates)
-        val docs = widened(s, Tables(s, dir, "documents"))
+        val docs = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
           .select(col("doc_id"), repetitionStats(
             coalesce(tokens(col("text")), array().cast("array<string>"))).as("st"))
         val nTg = col("st.n_tg")
@@ -317,7 +308,7 @@ object CurationQueries {
         // stage and BOTH split branches consume it — unpersisted, it
         // runs twice (caller's clearCache sweep releases it, the
         // Bench/Verify contract shared with DedupQueries)
-        val base = widened(s, Tables(s, dir, "documents"))
+        val base = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
           .select(col("doc_id"), ProfilingQueries.splitCol.as("split"),
             array_distinct(shingles(tokens(col("text")), n)).as("grams"))
           .persist()
@@ -1001,7 +992,7 @@ object CurationQueries {
         // scored frame feeds the offsets aggregation AND the main
         // join/window — unpersisted, the per-row qualityScore text pass
         // (the expensive stage) would run twice
-        val scored = widened(s, Tables(s, dir, "documents"))
+        val scored = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
           .select(col("doc_id"), col("lang"), qm.as("qm"))
           .withColumn("bkt", floor(col("qm") / lit(50000.0)).cast("long"))
           .persist()
@@ -1055,7 +1046,7 @@ object CurationQueries {
     QueryDef("lm_perplexity_filter",
       (s, dir) => {
         val t = tokens(col("text"))
-        val docs = widened(s, Tables(s, dir, "documents"))
+        val docs = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
         val bigrams = docs.select(col("doc_id"),
             explode(when(size(t) >= 2,
               transform(sequence(lit(1), size(t) - 1),
@@ -1278,7 +1269,7 @@ object CurationQueries {
     // would bloat the compare at higher SFs).
     QueryDef("boilerplate_lines",
       (s, dir) => {
-        val lines = widened(s, Tables(s, dir, "documents"))
+        val lines = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
           .select(col("doc_id"),
             regexp_replace(col("text"), BoilerReshapeRe, "$1\n").as("t"))
           .select(col("doc_id"),

@@ -186,7 +186,9 @@ object DedupQueries {
     * sharing ≥1 shingle when `cand` is None). Callers pass an already
     * persisted `sh` — the plan consumes it 3-4× (sizes + both join
     * sides) and recomputing the tokenize/shingle/distinct chain per
-    * branch dominates runtime otherwise. */
+    * branch dominates runtime otherwise. `cand` must be distinct on
+    * (doc_a, doc_b): a duplicate row inflates both `n_a` and `inter`
+    * (both are counts over the pair's joined shingle rows). */
   private[graft] def jaccardPairs(sh: DataFrame, cand: Option[DataFrame]): DataFrame = {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     cand match {
@@ -1824,7 +1826,10 @@ object DedupQueries {
         // recall semantics are unchanged: discovery is still the LSH
         // bucket join; verification of a discovered TRUE pair is a
         // no-op by definition, and discovered false pairs die in the
-        // join exactly as they died in the old J-filter.
+        // join exactly as they died in the old J-filter. Exact only
+        // while the truth threshold is at least the LSH leg's 0.8: a
+        // lower tau would count truth pairs the old leg filtered out.
+        require(SetSimTau >= 0.8, s"dedup_lsh_eval's unverified LSH leg needs SetSimTau >= 0.8, got $SetSimTau")
         //
         // n_true and n_found ride ONE left-outer probe + aggregate
         // (count(*) vs count(hit)) instead of [persist truth; semi-join;

@@ -81,8 +81,9 @@ object ProfilingQueries {
     * CPU work would otherwise serialize on a small corpus's single
     * input split (DedupQueries.shingleSet, CurationQueries) — one
     * definition so a tuning change cannot silently leave one module
-    * single-cored again. A 100 TB corpus already scans wider than the
-    * core count, so this is a no-op at scale. */
+    * single-cored again (text_repetition at sf0.1: 12.9 s → 0.7 s). A
+    * 100 TB corpus already scans wider than the core count, so this is
+    * a no-op at scale. */
   private[graft] def widened(s: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     widenedByCol(s, df, col("doc_id"))

@@ -4,6 +4,8 @@ import graft.core.{Pipeline, PipelineEvents, PipelineStatus}
 import graft.sinks.ParquetSink
 import graft.sources.{JdbcSource, ParquetSource}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.mutable
 
 class ObservabilitySpec extends SparkSuite {
@@ -37,6 +39,32 @@ class ObservabilitySpec extends SparkSuite {
     val deadline = System.currentTimeMillis() + 5000
     while (rec.lastProgress == 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
     assert(rec.lastProgress > 0)
+  }
+
+  test("progress counts only the flow's own jobs while a foreign scan runs on another thread") {
+    def flow(out: String) = Pipeline.from(ParquetSource(sf("lineitem"))).to(ParquetSink(out))
+    val solo = new Recorder
+    assert(flow(tmpDir("solo")).exec(spark, solo).status == PipelineStatus.Clean)
+    assert(solo.lastProgress == spark.read.parquet(sf("lineitem")).count())
+    // started before exec, so the foreign thread never inherits its tag;
+    // it keeps scanning from before exec starts until after it returns
+    val stop = new AtomicBoolean(false)
+    val scanning = new CountDownLatch(1)
+    val foreign = new Thread(() =>
+      while (!stop.get) {
+        spark.read.parquet(sf("orders")).write.format("noop").mode("overwrite").save()
+        scanning.countDown()
+      })
+    foreign.start()
+    val busy = new Recorder
+    try {
+      assert(scanning.await(60, TimeUnit.SECONDS))
+      assert(flow(tmpDir("busy")).exec(spark, busy).status == PipelineStatus.Clean)
+    } finally {
+      stop.set(true)
+      foreign.join()
+    }
+    assert(busy.lastProgress == solo.lastProgress)
   }
 
   test("flow.continue fires with the exact skipped-record count; no break on a clean flow") {
