@@ -24,7 +24,15 @@ object Tables {
     * are likewise encoding-agnostic — `src/Extractors/PdoExtractor.php:66`
     * passes rows through as the driver delivers them). So: read with
     * `nanosAsLong` enabled (a no-op for non-nano files), then normalize
-    * on the column's ACTUAL type —
+    * with [[eventTs]]. */
+  def events(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    eventTs(apply(spark, dir, "events"), s"$dir/events.parquet")
+  }
+
+  /** The ONE rule for the events `ts` encodings, shared by [[events]]
+    * and the streaming reader `EventStreams.readEventStream`; it
+    * normalizes on the column's ACTUAL type —
     *   - `LongType`            → raw nanos; truncate to a microsecond
     *                             TimestampType,
     *   - `TimestampType`       → already session-zoned micros; pass through,
@@ -32,14 +40,12 @@ object Tables {
     *                             UTC, so the instant is unchanged and the
     *                             driver's schema check + DuckDB
     *                             `CAST(ts AS TIMESTAMP)` oracle agree),
-    *   - anything else         → fail loudly naming the type, instead of
-    *                             letting 13 downstream queries die in
-    *                             analysis. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    *   - anything else         → fail loudly naming the type and `source`,
+    *                             instead of letting 13 downstream queries
+    *                             die in analysis. */
+  private[graft] def eventTs(raw: DataFrame, source: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val raw = apply(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>
         // integer `div`, NOT `/`: double division loses precision above
@@ -51,7 +57,7 @@ object Tables {
       case other =>
         throw new IllegalArgumentException(
           s"events.ts: unsupported physical type $other (expected " +
-            s"INT64 nanos, TIMESTAMP, or TIMESTAMP_NTZ) in $dir/events.parquet")
+            s"INT64 nanos, TIMESTAMP, or TIMESTAMP_NTZ) in $source")
     }
   }
 }

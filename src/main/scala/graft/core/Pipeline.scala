@@ -188,11 +188,12 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
     * Record-at-a-time injection becomes set-at-a-time: `base` flows
     * through the steps AFTER the label only. The tail is returned as a
     * Pipeline — `toDF` it for the transformed records (the reference's
-    * `$result`) or `exec` it to also run the tail's sinks. */
+    * `$result`) or `exec` it to also run the tail's sinks. The tail
+    * keeps this flow's [[durable]] and [[ordered]] modes. */
   def sendTo(name: String, base: DataFrame): Pipeline = {
     val at = steps.indexOf(Label(name))
     require(at >= 0, s"no label '$name' in this flow")
-    new Pipeline(BaseDf(base) +: steps.drop(at + 1))
+    new Pipeline(BaseDf(base) +: steps.drop(at + 1), durableFanout, orderedConcat)
   }
 
   /** Compile the flow to a DataFrame without running it (the reference's

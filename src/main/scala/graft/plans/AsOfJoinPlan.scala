@@ -239,13 +239,6 @@ object AsOfJoin {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteAsOfJoin(spark)
 
-  /** Public constructor: an as-of-joined DataFrame carrying the custom
-    * logical node (visible in `.queryExecution.logical`; gone after
-    * optimization). Validates up front what the lowering's by-name
-    * resolution requires — cross-side disjoint names, per-side unique
-    * names, no dots or backticks (they would mis-resolve as struct
-    * paths / break quoting deep inside the optimizer, far from this
-    * call site). */
   /** The name contract the by-name lowering requires: cross-side
     * disjoint, per-side unique, no dots or backticks (they would
     * mis-resolve as struct paths / break quoting deep inside the
@@ -288,6 +281,13 @@ object AsOfJoin {
         s"vs $rc: ${rt.sql}")
   }
 
+  /** Public constructor: an as-of-joined DataFrame carrying the custom
+    * logical node (visible in `.queryExecution.logical`; gone after
+    * optimization). Validates up front what the lowering's by-name
+    * resolution requires — cross-side disjoint names, per-side unique
+    * names, no dots or backticks (they would mis-resolve as struct
+    * paths / break quoting deep inside the optimizer, far from this
+    * call site). */
   def df(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,

@@ -20,16 +20,6 @@ case object NoOpSink extends Sink {
     df.write.format("noop").mode(SaveMode.Overwrite).save()
 }
 
-/** Parquet out. `maxRecordsPerFile` is the file-sizing knob a 100 TB
-  * write needs: without it one task's partition becomes one
-  * arbitrarily large file (slow to open, impossible to split for
-  * downstream row-group skipping); with it the writer rolls files at
-  * the record cap while keeping task parallelism unchanged.
-  * `compression` picks the codec per sink (None = session default,
-  * snappy out of the box): zstd trades ~2× better ratio for CPU —
-  * at 100 TB the right answer differs between a write-once archive
-  * tier (zstd) and a hot re-read tier (snappy/lz4), so it must be a
-  * per-sink choice, not a cluster constant. */
 /** Shared writer configuration for the columnar sinks — ONE definition
   * of the knob chain so a new per-write option cannot be added to one
   * format and silently missed on the other. */
@@ -56,6 +46,16 @@ private[sinks] object ColumnarWriter {
   }
 }
 
+/** Parquet out. `maxRecordsPerFile` is the file-sizing knob a 100 TB
+  * write needs: without it one task's partition becomes one
+  * arbitrarily large file (slow to open, impossible to split for
+  * downstream row-group skipping); with it the writer rolls files at
+  * the record cap while keeping task parallelism unchanged.
+  * `compression` picks the codec per sink (None = session default,
+  * snappy out of the box): zstd trades ~2× better ratio for CPU —
+  * at 100 TB the right answer differs between a write-once archive
+  * tier (zstd) and a hot re-read tier (snappy/lz4), so it must be a
+  * per-sink choice, not a cluster constant. */
 final case class ParquetSink(path: String, mode: SaveMode = SaveMode.Overwrite,
     partitionBy: Seq[String] = Nil,
     maxRecordsPerFile: Option[Long] = None,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -43,6 +43,26 @@ trait Source {
       if (offset > 0) df = df.offset(offset.toInt)
     }
     limit.fold(df)(n => df.limit(n.toInt))
+  }
+}
+
+object Source {
+  /** The first data file under `path` (a plain path, directory or
+    * glob), by name — for the driver-side sniffs (CSV prolog, Avro
+    * header, Arrow footer). Zero-length and marker files (_SUCCESS,
+    * dotfiles) are skipped: they sort before part-* and a 0-byte
+    * "first file" would silently defeat the sniff for the whole
+    * directory. `None` when no such file exists. */
+  private[sources] def firstDataFile(spark: SparkSession, path: String): Option[FileStatus] = {
+    val p = new HPath(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // globStatus resolves plain paths, directories and glob patterns
+    Option(fs.globStatus(p)).getOrElse(Array.empty).flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile) else Array(st)
+    }.filter { st =>
+      val name = st.getPath.getName
+      st.getLen > 0 && !name.startsWith("_") && !name.startsWith(".")
+    }.sortBy(_.getPath.getName).headOption
   }
 }
 
@@ -222,22 +242,8 @@ object CsvSource {
   def preScan(spark: SparkSession, path: String): PreScan = {
     val none = PreScan(None, None, None)
     try {
-      val p = new HPath(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // globStatus resolves plain paths, directories and glob patterns.
-      // Skip zero-length and marker files (_SUCCESS, dotfiles): they
-      // sort before part-* and a 0-byte "first file" would silently
-      // disable BOM/sep= detection for the whole directory.
-      val statuses = Option(fs.globStatus(p)).getOrElse(Array.empty)
-      val fileOpt = statuses.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
-        else Array(st)
-      }.filter { st =>
-        val name = st.getPath.getName
-        st.getLen > 0 && !name.startsWith("_") && !name.startsWith(".")
-      }.sortBy(_.getPath.getName).headOption.map(_.getPath)
-      fileOpt.fold(none) { file =>
-      val in = fs.open(file)
+      Source.firstDataFile(spark, path).map(_.getPath).fold(none) { file =>
+      val in = file.getFileSystem(spark.sparkContext.hadoopConfiguration).open(file)
       val buf = new Array[Byte](4096)
       val n = try in.read(buf) finally in.close()
       if (n <= 0) none
@@ -527,15 +533,7 @@ final case class AvroSource(
     * preScan discipline): the container header carries the writer
     * schema; data blocks are never touched. */
   private def sniffWriterSchema(spark: SparkSession): org.apache.avro.Schema = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    val file = statuses.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile) else Array(st)
-    }.filter { st =>
-      val n = st.getPath.getName
-      st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-    }.sortBy(_.getPath.getName).headOption.map(_.getPath)
+    val file = Source.firstDataFile(spark, path).map(_.getPath)
       .getOrElse(throw new IllegalArgumentException(
         s"AvroSource($path): no data files to sniff a schema from — pass an explicit schema"))
     val in = new org.apache.avro.mapred.FsInput(file, spark.sparkContext.hadoopConfiguration)
@@ -683,17 +681,10 @@ final case class ArrowSource(
     * body: a multi-GiB part file costs a few KiB of driver IO, and
     * lengths stay Long throughout (no 2 GiB array cap). */
   private def sniffSchema(spark: SparkSession): StructType = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statuses = Option(fs.globStatus(p)).getOrElse(Array.empty)
-    val file = statuses.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile) else Array(st)
-    }.filter { st =>
-      val nm = st.getPath.getName
-      st.getLen > 0 && !nm.startsWith("_") && !nm.startsWith(".")
-    }.sortBy(_.getPath.getName).headOption
+    val file = Source.firstDataFile(spark, path)
       .getOrElse(throw new IllegalArgumentException(
         s"ArrowSource($path): no data files to sniff a schema from — pass an explicit schema"))
+    val fs = file.getPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // The channel (and its Hadoop stream) must not leak if allocator
     // or reader CONSTRUCTION throws before the reader owns it — hence
     // the outer try closing ch on any path the reader didn't close it.

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
@@ -93,27 +93,14 @@ object EventStreams {
         if (probed != LongType) restore()
         probed
     }
-    def stream(withTs: DataType): DataFrame = spark.readStream
+    val stream = spark.readStream
       .schema(StructType(eventSchema.map {
-        case f if f.name == "ts" => f.copy(dataType = withTs)
+        case f if f.name == "ts" => f.copy(dataType = tsType)
         case f => f
       }))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(dir)
-    tsType match {
-      case LongType =>
-        // integer `div`, NOT `/`: epoch-nanos (~1.7e18) exceed a
-        // double's 2^53 integer range
-        stream(LongType).withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType => stream(TimestampType)
-      case TimestampNTZType =>
-        // UTC session: cast changes the schema, not the instant
-        stream(TimestampNTZType).withColumn("ts", col("ts").cast(TimestampType))
-      case other =>
-        throw new IllegalArgumentException(
-          s"events stream at $dir: unsupported ts type $other (expected " +
-            "INT64 nanos, TIMESTAMP, or TIMESTAMP_NTZ)")
-    }
+    graft.Tables.eventTs(stream, s"events stream at $dir")
   }
 
   /** Watermarked tumbling-window aggregation — the streaming twin of
@@ -532,59 +519,52 @@ object EventStreams {
       }
   }
 
-  /** Per-user last-event state for [[transitionsStateful]]: epoch ms,
-    * tie-break id, and type of the latest event consumed. */
+  /** Per-user last-event state of the successor operators
+    * ([[transitionsStateful]], [[sessionGapsStream]] and their in-query
+    * aggregation forms): epoch ms, tie-break id, and type of the latest
+    * event consumed. */
   final case class LastEvent(ms: Long, id: Long, tpe: String)
-  final case class TransitionOut(user_id: Long, from_type: String,
-      to_type: String, to_ms: Long)
 
-  /** Stateful event-transition pairs — the streaming twin of the batch
-    * `event_transitions` query (per-user consecutive (from, to) event
-    * pairs under the (ts, event_id) total order; downstream
-    * `groupBy(from_type, to_type).count()` is the live Markov matrix
-    * behind funnel design).
-    *
-    * State is ONE (ms, id, type) triple per user — O(1) per key,
-    * hash-partitioned on user_id — evicted once the watermark passes
-    * `last + idleMs` (nothing to emit at timeout: pairs emit inline as
-    * their second event arrives, so eviction is purely a state bound).
-    * Within a micro-batch rows fold in (ts, event_id) order, matching
-    * the batch window's sort. Divergence by construction (the
-    * bounded-state contract every twin here documents): an event
-    * arriving between two already-paired events — late but within the
-    * watermark, delivered in a later micro-batch — appends to the
-    * carried last event instead of splicing between them; the batch
-    * twin, seeing all data at once, would order it in place. */
-  def transitionsStateful(events: Dataset[Event],
-      idleMs: Long = 2L * 60 * 60 * 1000,
-      watermark: String = "2 hours"): Dataset[TransitionOut] = {
+  /** The per-user successor fold, ONE definition for both state APIs:
+    * rows fold in (ts, event_id) order — matching the batch window's
+    * sort — and each pairs with the carried last event through `pair`.
+    * An out-of-order row at-or-before the carried event (same-batch
+    * rows are sorted, so only cross-batch late data hits this) still
+    * pairs — in arrival order, per the documented divergence — but
+    * must not REGRESS the carried (ms, id) clock. Returns the new
+    * carried event and the emitted rows. */
+  private def successorFold[O](last: Option[LastEvent], rows: Iterator[Event])(
+      pair: (LastEvent, Event) => O): (Option[LastEvent], Seq[O]) = {
+    val out = Seq.newBuilder[O]
+    var cur = last
+    rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+      val t = e.ts.getTime
+      cur.foreach(p => out += pair(p, e))
+      if (cur.forall(p => p.ms < t || (p.ms == t && p.id < e.event_id)))
+        cur = Some(LastEvent(t, e.event_id, e.event_type))
+    }
+    (cur, out.result())
+  }
+
+  /** [[successorFold]] under state API v1 (`flatMapGroupsWithState`):
+    * ONE [[LastEvent]] per user — O(1) per key, hash-partitioned on
+    * user_id — evicted once the watermark passes `last + idleMs`
+    * (nothing to emit at timeout: rows emit inline as their successor
+    * arrives, so eviction is purely a state bound). */
+  private def successorStateful[O: Encoder](events: Dataset[Event], idleMs: Long,
+      watermark: String)(pair: (Long, LastEvent, Event) => O): Dataset[O] = {
     import events.sparkSession.implicits._
-    def ms(t: java.sql.Timestamp): Long = t.getTime
-
     events
       .withWatermark("ts", watermark)
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, TransitionOut](
+      .flatMapGroupsWithState[LastEvent, O](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (userId: Long, rows: Iterator[Event], state: GroupState[LastEvent]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
-            val sorted = rows.toSeq.sortBy(e => (ms(e.ts), e.event_id))
-            val out = Seq.newBuilder[TransitionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = ms(e.ts)
-              // an out-of-order row at-or-before the carried last event
-              // (same-batch rows are sorted, so only cross-batch late
-              // data hits this) still pairs — in arrival order, per the
-              // documented divergence — but must not REGRESS the
-              // carried (ms, id) watermark clock
-              cur.foreach(p => out += TransitionOut(userId, p.tpe, e.event_type, t))
-              if (cur.forall(p => p.ms < t || (p.ms == t && p.id < e.event_id)))
-                cur = Some(LastEvent(t, e.event_id, e.event_type))
-            }
+            val (cur, out) = successorFold(state.getOption, rows)(pair(userId, _, _))
             cur match {
               // the attributeStateful arming guard: a timeout at-or-
               // before the current watermark throws — an idle user the
@@ -595,195 +575,96 @@ object EventStreams {
               case Some(_) => state.remove()
               case None => ()
             }
-            out.result().iterator
+            out.iterator
           }
       }
   }
 
-  /** State-API-v2 processor behind [[attributeForwardStreamV2]] — the
-    * same first-following-purchase fold as [[attributeForwardStateful]]
-    * with the pending-click queue in a LISTSTATE (clear / appendList /
-    * get round-trips through RocksDB — the v2 primitive the Value- and
-    * Map-state ports don't reach) and the v1 timeout slot replaced by
-    * a [[TimerHygiene]]-managed event-time timer. The expiry handler
-    * re-runs the same horizon sweep the inline path uses, so a stale
-    * timer can only ever expire clicks whose horizon the watermark has
-    * genuinely passed. */
-  private class ForwardAttributionProcessor(horizonMs: Long)
-      extends StatefulProcessor[Long, Event, ForwardAttributionOut]
-      with TimerHygiene {
-    @transient private var pending: org.apache.spark.sql.streaming.ListState[ClickState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState[ClickState]("pending",
-        org.apache.spark.sql.Encoders.product[ClickState], TTLConfig.NONE)
-      initArmed()
-    }
-
-    private def before(aMs: Long, aId: Long, bMs: Long, bId: Long): Boolean =
-      aMs < bMs || (aMs == bMs && aId < bId)
-
-    /** NULL-flush every pending click whose horizon the watermark has
-      * passed; returns the still-live remainder. */
-    private def sweep(userId: Long, p: Vector[ClickState], wm: Long,
-        out: scala.collection.mutable.Builder[ForwardAttributionOut, Seq[ForwardAttributionOut]]): Vector[ClickState] = {
-      val (expired, live) = p.partition(c => c.clickMs + horizonMs <= wm)
-      expired.sortBy(c => (c.clickMs, c.clickId)).foreach(c =>
-        out += ForwardAttributionOut(c.clickId, userId, c.clickMs, None, None, None))
-      live
-    }
-
-    /** Persist the live queue and keep exactly one timer at the
-      * earliest horizon (or none when the queue drained). */
-    private def store(live: Vector[ClickState]): Unit = {
-      pending.clear()
-      if (live.nonEmpty) {
-        pending.appendList(live.toArray)
-        rearmTimer(live.map(c => c.clickMs + horizonMs).min)
-      } else disarmTimer()
-    }
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-        tv: TimerValues): Iterator[ForwardAttributionOut] = {
-      val out = Seq.newBuilder[ForwardAttributionOut]
-      var p = pending.get().toVector
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-        val t = e.ts.getTime
-        if (e.event_type == "click") p :+= ClickState(t, e.event_id)
-        else {
-          val (flushed, waiting) = p.partition(c =>
-            before(c.clickMs, c.clickId, t, e.event_id))
-          flushed.foreach { c =>
-            if (t - c.clickMs <= horizonMs)
-              out += ForwardAttributionOut(c.clickId, userId, c.clickMs,
-                Some(e.event_id), Some(t), Some(t - c.clickMs))
-            else
-              out += ForwardAttributionOut(c.clickId, userId, c.clickMs,
-                None, None, None)
-          }
-          p = waiting
-        }
-      }
-      store(sweep(userId, p, tv.getCurrentWatermarkInMs(), out))
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[ForwardAttributionOut] = {
-      clearArmed() // this timer just fired; the slot is free
-      val out = Seq.newBuilder[ForwardAttributionOut]
-      val wm = math.max(info.getExpiryTimeInMs(), tv.getCurrentWatermarkInMs())
-      store(sweep(userId, pending.get().toVector, wm, out))
-      out.result().iterator
-    }
-  }
-
-  /** State-API-v2 twin of [[attributeForwardStateful]]
-    * (`transformWithState`, RocksDB, ListState + stale-guarded timers).
-    * With the Value-state ports (sessionize/funnel/gap/transitions),
-    * the Bloom bitmap, and the heavy-hitter MapState, this closes v2
-    * coverage of ALL THREE keyed-state primitives. StreamingSpec pins
-    * it row-equal to the v1 twin (conversion, tie, and horizon-NULL
-    * paths) and exactly-once across a RocksDB checkpoint restart.
-    * Scale posture is v1's: pending clicks per user bounded by the
-    * horizon, one pending timer per key. */
-  def attributeForwardStreamV2(events: Dataset[Event],
-      horizonMs: Long = 24L * 3600 * 1000,
-      watermark: String = "2 hours"): Dataset[ForwardAttributionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(e => e.event_type == "click" || e.event_type == "purchase")
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new ForwardAttributionProcessor(horizonMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  final case class TransitionEv(user_id: Long, ts: java.sql.Timestamp,
-      from_type: String, to_type: String)
-
-  /** Timer hygiene for the state-API-v2 processors. v2 timers are NOT
-    * the single-slot v1 `setTimeoutTimestamp`: every `registerTimer`
-    * call ADDS a pending timer, so a processor that re-arms each
-    * micro-batch hands an always-active user one pending timer per
-    * batch inside its idle window — correctness survives (the expiry
-    * handlers re-check the CURRENT state's horizon before evicting),
-    * but timer-store state grows with batch rate, not key count.
-    * Tracking the last armed expiry in a ValueState lets a re-arm
-    * DELETE the superseded timer and skip the no-op re-arm entirely,
-    * holding pending timers at ≤ 1 per key. */
-  private trait TimerHygiene { this: StatefulProcessor[_, _, _] =>
-    @transient private var armedMs: ValueState[Long] = _
-    protected def initArmed(): Unit =
-      armedMs = getHandle.getValueState[Long]("armedMs",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    protected def rearmTimer(expiryMs: Long): Unit = {
-      val prev = if (armedMs.exists()) Some(armedMs.get()) else None
-      if (!prev.contains(expiryMs)) {
-        prev.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(expiryMs)
-        armedMs.update(expiryMs)
-      }
-    }
-    protected def clearArmed(): Unit = armedMs.clear()
-    /** Inline full-clear: delete the pending timer too (clearArmed alone
-      * leaves it to fire as a guarded no-op — harmless but it would
-      * double-arm the key if a later re-arm lands first). */
-    protected def disarmTimer(): Unit = {
-      if (armedMs.exists()) getHandle.deleteTimer(armedMs.get())
-      armedMs.clear()
-    }
-  }
-
-  /** State-API-v2 twin of [[transitionsStateful]]'s fold, emitting the
-    * pair WITH its event time so the output can feed further stateful
-    * operators (see [[GapDistProcessor]] for the v1-vs-v2 contrast). */
-  private class TransitionProcessor(idleMs: Long)
-      extends StatefulProcessor[Long, Event, TransitionEv] with TimerHygiene {
+  /** [[successorFold]] under state API v2 (`transformWithState`), for
+    * the two operators that chain an aggregation after it: run with the
+    * output's `ts` DECLARED as its event-time column, the emitted rows
+    * may feed a downstream stateful aggregation (the v1 API cannot
+    * declare one). Requires the RocksDB state store. State: ONE
+    * ValueState[LastEvent] per user, evicted by an event-time timer at
+    * last + idleMs.
+    *
+    * Timer hygiene: v2 timers are NOT the single-slot v1
+    * `setTimeoutTimestamp` — every `registerTimer` ADDS a pending
+    * timer. Tracking the armed expiry in a ValueState lets a re-arm
+    * DELETE the superseded timer and skip a no-op re-arm, holding
+    * pending timers at ≤ 1 per key; and because a timer may still fire
+    * after its user spoke again, the expiry handler re-checks the
+    * CURRENT state's horizon before clearing. */
+  private class SuccessorProcessor[O](idleMs: Long, pair: (Long, LastEvent, Event) => O)
+      extends StatefulProcessor[Long, Event, O] {
     @transient private var last: ValueState[LastEvent] = _
+    @transient private var armedMs: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       last = getHandle.getValueState[LastEvent]("last",
         org.apache.spark.sql.Encoders.product[LastEvent], TTLConfig.NONE)
-      initArmed()
+      armedMs = getHandle.getValueState[Long]("armedMs",
+        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
     }
 
     override def handleInputRows(userId: Long, rows: Iterator[Event],
-        tv: TimerValues): Iterator[TransitionEv] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      val out = Seq.newBuilder[TransitionEv]
-      var cur = if (last.exists()) Some(last.get()) else None
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur.foreach(p => out += TransitionEv(userId, e.ts, p.tpe, e.event_type))
-        if (cur.forall(p => p.ms < t || (p.ms == t && p.id < e.event_id)))
-          cur = Some(LastEvent(t, e.event_id, e.event_type))
-      }
+        tv: TimerValues): Iterator[O] = {
+      val prior = if (last.exists()) Some(last.get()) else None
+      val (cur, out) = successorFold(prior, rows)(pair(userId, _, _))
       cur.foreach { c =>
         last.update(c)
-        rearmTimer(c.ms + idleMs)
+        val expiryMs = c.ms + idleMs
+        val armed = if (armedMs.exists()) Some(armedMs.get()) else None
+        if (!armed.contains(expiryMs)) {
+          armed.foreach(getHandle.deleteTimer)
+          getHandle.registerTimer(expiryMs)
+          armedMs.update(expiryMs)
+        }
       }
-      out.result().iterator
+      out.iterator
     }
 
     override def handleExpiredTimer(userId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[TransitionEv] = {
-      // stale-timer guard (the GapDistProcessor rule): a timer armed
-      // by an older batch must not evict a user who has since spoken
+        info: ExpiredTimerInfo): Iterator[O] = {
       if (last.exists() && last.get().ms + idleMs <= info.getExpiryTimeInMs()) {
-        last.clear(); clearArmed()
+        last.clear(); armedMs.clear()
       }
       Iterator.empty
     }
   }
 
+  final case class TransitionOut(user_id: Long, from_type: String,
+      to_type: String, to_ms: Long)
+
+  /** Stateful event-transition pairs — the streaming twin of the batch
+    * `event_transitions` query (per-user consecutive (from, to) event
+    * pairs under the (ts, event_id) total order; downstream
+    * `groupBy(from_type, to_type).count()` is the live Markov matrix
+    * behind funnel design, done in-query by [[transitionMatrixStream]]).
+    *
+    * State and eviction are [[successorStateful]]'s. Divergence by
+    * construction (the bounded-state contract every twin here
+    * documents): an event arriving between two already-paired events —
+    * late but within the watermark, delivered in a later micro-batch —
+    * appends to the carried last event instead of splicing between
+    * them; the batch twin, seeing all data at once, would order it in
+    * place. */
+  def transitionsStateful(events: Dataset[Event],
+      idleMs: Long = 2L * 60 * 60 * 1000,
+      watermark: String = "2 hours"): Dataset[TransitionOut] = {
+    import events.sparkSession.implicits._
+    successorStateful(events, idleMs, watermark)((userId, p, e) =>
+      TransitionOut(userId, p.tpe, e.event_type, e.ts.getTime))
+  }
+
+  final case class TransitionEv(user_id: Long, ts: java.sql.Timestamp,
+      from_type: String, to_type: String)
+
   /** The LIVE Markov matrix in one query — `event_transitions`' final
-    * shape (from_type, to_type, n), not just the pair stream:
-    * [[transitionsStateful]]'s scaladoc promises "downstream
-    * groupBy(from, to).count()" as the consumer's step because the v1
-    * state API cannot chain it; this is that step done IN-QUERY via
-    * [[TransitionProcessor]] under `transformWithState` with `ts`
-    * declared as the output's event time. Agg state = the
+    * shape (from_type, to_type, n), not just the pair stream: the
+    * transition pairs, emitted WITH their event time by
+    * [[SuccessorProcessor]], feed an in-query
+    * `groupBy(from_type, to_type).count()`. Agg state = the
     * |types|²-key count grid — bounded by construction, map-side
     * combinable, exactly the batch plan's shuffle shape. Requires the
     * RocksDB state store (state-API-v2 constraint). Update-mode
@@ -792,10 +673,12 @@ object EventStreams {
       idleMs: Long = 2L * 60 * 60 * 1000,
       watermark: String = "2 hours"): DataFrame = {
     import events.sparkSession.implicits._
+    val pair = (userId: Long, p: LastEvent, e: Event) =>
+      TransitionEv(userId, e.ts, p.tpe, e.event_type)
     events
       .withWatermark("ts", watermark)
       .groupByKey(_.user_id)
-      .transformWithState(new TransitionProcessor(idleMs), "ts", OutputMode.Append())
+      .transformWithState(new SuccessorProcessor(idleMs, pair), "ts", OutputMode.Append())
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
   }
@@ -803,15 +686,22 @@ object EventStreams {
   final case class GapOut(user_id: Long, ts: java.sql.Timestamp,
       gap_s: Long, bucket: Long)
 
+  /** One inter-event gap row: seconds since the carried last event,
+    * floored at 0 (a late row's negative difference must never reach
+    * the two's-complement bucket), and its floor(log₂ gap_s) bucket —
+    * the batch column's JVM twin: length(bin(gap_s)) − 1 =
+    * 63 − numberOfLeadingZeros, never a float log. */
+  private def gapOut(userId: Long, p: LastEvent, e: Event): GapOut = {
+    val g = math.max(0L, (e.ts.getTime - p.ms) / 1000L)
+    GapOut(userId, e.ts, g,
+      if (g == 0L) 0L else 63L - java.lang.Long.numberOfLeadingZeros(g))
+  }
+
   /** Streaming inter-event gaps — the streaming half of the batch
     * `session_gap_dist` twin (the sessionization-timeout tuning
     * curve): per-user consecutive-event gap seconds with their
-    * floor(log₂ gap_s) bucket, emitted as each successor event
-    * arrives. State is the [[transitionsStateful]] shape — ONE
-    * (ms, id, type) triple per user, hash-partitioned on user_id,
-    * watermark-evicted after `idleMs` idle. The bucket is the batch
-    * column's JVM twin: length(bin(gap_s)) − 1 =
-    * 63 − numberOfLeadingZeros, never a float log.
+    * floor(log₂ gap_s) bucket ([[gapOut]]), emitted as each successor
+    * event arrives. State and eviction are [[successorStateful]]'s.
     *
     * The histogram rollup lives in [[gapHistogram]], applied per sink
     * batch (`foreachBatch` + upsert, the repo's streaming-JDBC
@@ -831,124 +721,26 @@ object EventStreams {
     * documents): a late row delivered in a later micro-batch — within
     * the watermark but behind its user's carried last event — pairs in
     * ARRIVAL order (the batch plan, seeing all data, would splice it
-    * in place), with the gap floored at 0 so the two's-complement
-    * bucket of a negative difference can never appear. */
+    * in place). */
   def sessionGapsStream(events: Dataset[Event],
       idleMs: Long = 2L * 60 * 60 * 1000,
       watermark: String = "2 hours"): Dataset[GapOut] = {
     import events.sparkSession.implicits._
-    def ms(t: java.sql.Timestamp): Long = t.getTime
-    def bucketOf(gapS: Long): Long =
-      if (gapS <= 0L) 0L else 63L - java.lang.Long.numberOfLeadingZeros(gapS)
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, GapOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[LastEvent]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (ms(e.ts), e.event_id))
-            val out = Seq.newBuilder[GapOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = ms(e.ts)
-              cur.foreach { p =>
-                val g = math.max(0L, (t - p.ms) / 1000L)
-                out += GapOut(userId, e.ts, g, bucketOf(g))
-              }
-              // never regress the carried (ms, id) clock (late-row rule)
-              if (cur.forall(p => p.ms < t || (p.ms == t && p.id < e.event_id)))
-                cur = Some(LastEvent(t, e.event_id, e.event_type))
-            }
-            cur match {
-              case Some(c) if c.ms + idleMs > state.getCurrentWatermarkMs() =>
-                state.update(c)
-                state.setTimeoutTimestamp(c.ms + idleMs)
-              case Some(_) => state.remove()
-              case None => ()
-            }
-            out.result().iterator
-          }
-      }
-  }
-
-  /** State-API-v2 processor behind [[sessionGapDistStream]]: the same
-    * per-user (ms, id, type) fold as [[sessionGapsStream]], expressed
-    * as a `StatefulProcessor` so the emitted rows carry a DECLARED
-    * event-time column — the property that lets a downstream stateful
-    * aggregation chain legally (the arbitrary-state API v1 cannot
-    * declare one, which is why the fMGWS twin needs its read-side
-    * rollup). State: ONE ValueState[LastEvent] per user. Eviction:
-    * an event-time timer at last+idleMs; because a fresh timer is
-    * registered per batch and stale ones still fire, the expiry
-    * handler re-checks the CURRENT state's horizon before clearing —
-    * an early-firing stale timer must not evict a user who has since
-    * spoken (and [[TimerHygiene]] deletes the superseded timer on
-    * re-arm, so pending timers stay ≤ 1 per key). */
-  private class GapDistProcessor(idleMs: Long)
-      extends StatefulProcessor[Long, Event, GapOut] with TimerHygiene {
-    @transient private var last: ValueState[LastEvent] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      last = getHandle.getValueState[LastEvent]("last",
-        org.apache.spark.sql.Encoders.product[LastEvent], TTLConfig.NONE)
-      initArmed()
-    }
-
-    private def bucketOf(gapS: Long): Long =
-      if (gapS <= 0L) 0L else 63L - java.lang.Long.numberOfLeadingZeros(gapS)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-        tv: TimerValues): Iterator[GapOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      val out = Seq.newBuilder[GapOut]
-      var cur = if (last.exists()) Some(last.get()) else None
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur.foreach { p =>
-          val g = math.max(0L, (t - p.ms) / 1000L)
-          out += GapOut(userId, e.ts, g, bucketOf(g))
-        }
-        if (cur.forall(p => p.ms < t || (p.ms == t && p.id < e.event_id)))
-          cur = Some(LastEvent(t, e.event_id, e.event_type))
-      }
-      cur.foreach { c =>
-        last.update(c)
-        rearmTimer(c.ms + idleMs)
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[GapOut] = {
-      // stale-timer guard: clear only when the CURRENT state really is
-      // past its idle horizon at this expiry
-      if (last.exists() && last.get().ms + idleMs <= info.getExpiryTimeInMs()) {
-        last.clear(); clearArmed()
-      }
-      Iterator.empty
-    }
+    successorStateful(events, idleMs, watermark)(gapOut)
   }
 
   /** The full `session_gap_dist` twin IN ONE STREAMING QUERY — gap
-    * emission AND the bucket histogram, no read-side fold: the
-    * [[GapDistProcessor]] runs under `transformWithState` with `ts`
-    * declared as the output's event-time column, which is exactly what
-    * Spark's multi-stateful-operator support requires to admit the
-    * downstream `groupBy(bucket)` aggregation (the fMGWS-based
-    * [[sessionGapsStream]] documents why v1 cannot do this). The agg
-    * state is the ≤ ~40-key bucket grid — bounded without a watermark,
-    * map-side combinable like the batch plan; `share_mille` stays a
-    * read-time projection over the final tiny frame (a SECOND global
-    * agg in-query is still unsupported, and the counts are
-    * associative anyway). Requires the RocksDB state store provider
-    * (a state-API-v2 constraint; StreamingSpec sets it for the
-    * query's lifetime). Same late-row divergence contract as the v1
-    * twin. */
+    * emission AND the bucket histogram, no read-side fold: the gaps,
+    * emitted by [[SuccessorProcessor]] with `ts` declared as the
+    * output's event-time column, feed the downstream `groupBy(bucket)`
+    * aggregation (the fMGWS-based [[sessionGapsStream]] documents why
+    * v1 cannot do this). The agg state is the ≤ ~40-key bucket grid —
+    * bounded without a watermark, map-side combinable like the batch
+    * plan; `share_mille` stays a read-time projection over the final
+    * tiny frame (a SECOND global agg in-query is still unsupported,
+    * and the counts are associative anyway). Requires the RocksDB
+    * state store provider (a state-API-v2 constraint). Same late-row
+    * divergence contract as [[sessionGapsStream]]. */
   def sessionGapDistStream(events: Dataset[Event],
       idleMs: Long = 2L * 60 * 60 * 1000,
       watermark: String = "2 hours"): DataFrame = {
@@ -956,7 +748,7 @@ object EventStreams {
     events
       .withWatermark("ts", watermark)
       .groupByKey(_.user_id)
-      .transformWithState(new GapDistProcessor(idleMs), "ts", OutputMode.Append())
+      .transformWithState(new SuccessorProcessor(idleMs, gapOut), "ts", OutputMode.Append())
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_gaps"), sum(col("gap_s")).as("sum_gap_s"))
   }
@@ -1035,88 +827,6 @@ object EventStreams {
             closed.result().iterator
           }
       }
-  }
-
-  /** State-API-v2 processor behind [[sessionizeStream]] — the SAME
-    * per-user session fold as [[sessionizeStateful]] (inline close on
-    * gap, min/max bound merge for late-but-in-watermark rows), with the
-    * v1 single-slot `setTimeoutTimestamp` replaced by an explicit
-    * event-time timer at `lastMs + gapMs` under [[TimerHygiene]] (the
-    * superseded timer is deleted on every re-arm). The expiry handler
-    * EMITS the open session — unlike the transition/gap processors,
-    * sessionize's timeout path carries payload, so this pins the v2
-    * semantics the others don't: timer-driven OUTPUT, not just
-    * eviction — and re-checks the CURRENT state's horizon first, so a
-    * stale timer cannot flush a session its user has since extended. */
-  private class SessionizeProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Event, SessionOut] with TimerHygiene {
-    @transient private var sess: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      sess = getHandle.getValueState[SessionState]("sess",
-        org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
-      initArmed()
-    }
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-        tv: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      val closed = Seq.newBuilder[SessionOut]
-      var cur = if (sess.exists()) Some(sess.get()) else None
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.lastMs > gapMs =>
-            closed += SessionOut(userId, s.startMs, s.lastMs, s.n, s.total)
-            cur = Some(SessionState(t, t, 1, e.value))
-          case Some(s) =>
-            // min/max, not overwrite — the v1 late-row rule verbatim
-            cur = Some(SessionState(math.min(s.startMs, t),
-              math.max(s.lastMs, t), s.n + 1, s.total + e.value))
-          case None =>
-            cur = Some(SessionState(t, t, 1, e.value))
-        }
-      }
-      cur.foreach { s =>
-        sess.update(s)
-        rearmTimer(s.lastMs + gapMs)
-      }
-      closed.result().iterator
-    }
-
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[SessionOut] = {
-      if (sess.exists()) {
-        val s = sess.get()
-        if (s.lastMs + gapMs <= info.getExpiryTimeInMs()) {
-          sess.clear(); clearArmed()
-          return Iterator.single(SessionOut(userId, s.startMs, s.lastMs, s.n, s.total))
-        }
-      }
-      Iterator.empty
-    }
-  }
-
-  /** State-API-v2 twin of [[sessionizeStateful]] — the flagship
-    * sessionization fold under `transformWithState` (RocksDB state
-    * store, explicit timers) instead of `flatMapGroupsWithState`.
-    * Row-for-row the same output as the v1 twin by construction: same
-    * inline gap-close, same min/max late-row merge, and the timeout
-    * emission rides a stale-guarded event-time timer instead of the v1
-    * timeout slot. StreamingSpec pins the v2 rows bit-equal to v1 over
-    * the same micro-batches and the RocksDB checkpoint-restart
-    * exactly-once contract. Scale posture is v1's: ONE SessionState +
-    * one pending timer per active user, hash-partitioned on user_id,
-    * watermark-bounded. */
-  def sessionizeStream(events: Dataset[Event],
-      gapMs: Long = 30L * 60 * 1000,
-      watermark: String = "2 hours"): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionizeProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Per-user funnel state: min event-time (ms) per step, MaxValue =
@@ -1204,88 +914,6 @@ object EventStreams {
       }
   }
 
-  /** State-API-v2 processor behind [[funnelStream]] — the same
-    * conditional-min funnel fold as [[funnelStateful]] with the v1
-    * timeout slot replaced by a [[TimerHygiene]]-managed event-time
-    * timer. Like [[SessionizeProcessor]], the expiry handler EMITS
-    * (the funnel report is timeout-driven payload, not mere eviction)
-    * and re-checks the CURRENT state's idle horizon first, so a stale
-    * timer cannot report a funnel its user has since advanced. The v1
-    * path's "horizon already behind the watermark → report inline"
-    * special case disappears: v2 timers may be registered in the past
-    * and simply fire on the next micro-batch — same rows, one less
-    * code path. */
-  private class FunnelProcessor(idleMs: Long)
-      extends StatefulProcessor[Long, Event, FunnelOut] with TimerHygiene {
-    @transient private var st: ValueState[FunnelState] = _
-    private val Unseen = Long.MaxValue
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[FunnelState]("funnel",
-        org.apache.spark.sql.Encoders.product[FunnelState], TTLConfig.NONE)
-      initArmed()
-    }
-
-    private def report(userId: Long, s: FunnelState): FunnelOut = {
-      val step1 = s.clickMs != Unseen
-      val step2 = step1 && s.viewMs != Unseen && s.viewMs > s.clickMs
-      val step3 = step2 && s.purchaseMs != Unseen && s.purchaseMs > s.viewMs
-      val step = if (step3) 3 else if (step2) 2 else if (step1) 1 else 0
-      def opt(v: Long) = if (v == Unseen) None else Some(v)
-      FunnelOut(userId, step, opt(s.clickMs), opt(s.viewMs), opt(s.purchaseMs))
-    }
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-        tv: TimerValues): Iterator[FunnelOut] = {
-      var s = if (st.exists()) st.get()
-        else FunnelState(Unseen, Unseen, Unseen, Long.MinValue)
-      rows.foreach { e =>
-        val t = e.ts.getTime
-        s = e.event_type match {
-          case "click" => s.copy(clickMs = math.min(s.clickMs, t))
-          case "view" => s.copy(viewMs = math.min(s.viewMs, t))
-          case _ => s.copy(purchaseMs = math.min(s.purchaseMs, t))
-        }
-        s = s.copy(lastMs = math.max(s.lastMs, t))
-      }
-      st.update(s)
-      rearmTimer(s.lastMs + idleMs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[FunnelOut] = {
-      if (st.exists()) {
-        val s = st.get()
-        if (s.lastMs + idleMs <= info.getExpiryTimeInMs()) {
-          st.clear(); clearArmed()
-          return Iterator.single(report(userId, s))
-        }
-      }
-      Iterator.empty
-    }
-  }
-
-  /** State-API-v2 twin of [[funnelStateful]] (`transformWithState`,
-    * RocksDB, explicit stale-guarded timers) — with [[sessionizeStream]]
-    * this closes the v2 ports of both timer-EMITTING stateful
-    * operators; StreamingSpec pins it row-equal to the v1 twin
-    * including the timer-driven report path. Scale posture is v1's:
-    * three min-timestamps + an idle clock + one pending timer per
-    * active user, hash-partitioned on user_id, watermark-bounded. */
-  def funnelStream(events: Dataset[Event],
-      idleMs: Long = 2L * 3600 * 1000,
-      watermark: String = "2 hours"): Dataset[FunnelOut] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(e => e.event_type == "click" || e.event_type == "view" ||
-        e.event_type == "purchase")
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(idleMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
   final case class HeavyUser(event_type: String, user_id: String, est: Long, n: Long)
   final case class HhState(entries: List[(String, Long)], n: Long)
 
@@ -1324,61 +952,6 @@ object EventStreams {
               HeavyUser(tpe, u, est, total)
           }.toList.sortBy(_.user_id).iterator
       }
-  }
-
-  /** State-API-v2 processor behind [[heavyHittersStreamV2]] — the same
-    * Space-Saving reseed-and-offer fold as the v1 twin, with the
-    * summary held in a MAPSTATE (user → estimate entries) plus a
-    * ValueState row counter: the v2 port that pins the MapState
-    * primitive (clear / updateValue / iterator round-trips through
-    * RocksDB) — the ValueState-only ports can't reach it. Reseeding
-    * sorts the read-back entries first, exactly the v1 twin's sorted
-    * serialization, so tie-breaking in the weighted offer cannot
-    * depend on RocksDB iteration order. */
-  private class HeavyHittersProcessor(capacity: Int, perMille: Long)
-      extends StatefulProcessor[String, Event, HeavyUser] {
-    @transient private var entries: org.apache.spark.sql.streaming.MapState[String, Long] = _
-    @transient private var nState: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      entries = getHandle.getMapState[String, Long]("ss",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-      nState = getHandle.getValueState[Long]("n",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(tpe: String, rows: Iterator[Event],
-        tv: TimerValues): Iterator[HeavyUser] = {
-      val ss = new graft.operators.HeavyHitters.SpaceSaving(capacity)
-      val prev = entries.iterator().map(p => (p._1, p._2)).toList.sorted
-      prev.foreach { case (k, c) => ss.offerWeighted(k, c) }
-      var n = if (nState.exists()) nState.get() else 0L
-      rows.foreach { e => ss.offer(e.user_id.toString); n += 1 }
-      entries.clear()
-      ss.entries.foreach { case (k, c) => entries.updateValue(k, c) }
-      nState.update(n)
-      val total = n
-      ss.entries.collect {
-        case (u, est) if 1000L * est >= perMille * total =>
-          HeavyUser(tpe, u, est, total)
-      }.toList.sortBy(_.user_id).iterator
-    }
-  }
-
-  /** State-API-v2 twin of [[heavyHittersStream]] (`transformWithState`,
-    * RocksDB, MapState + ValueState, TimeMode.None — like the Bloom
-    * twin the sketch never evicts). StreamingSpec pins it row-equal to
-    * the v1 twin across batches and exactly-once across a RocksDB
-    * checkpoint restart. Scale posture is v1's: O(capacity) entries
-    * per event type, where exact per-user counting is unbounded. */
-  def heavyHittersStreamV2(events: Dataset[Event], capacity: Int = 64,
-      perMille: Long = 100): Dataset[HeavyUser] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .transformWithState(new HeavyHittersProcessor(capacity, perMille),
-        TimeMode.None(), OutputMode.Update())
   }
 
   final case class DistinctEst(event_type: String, n_est: Long, sketch_size: Int)
@@ -1446,69 +1019,19 @@ object EventStreams {
         (g: Int, rows: Iterator[(Long, Long)], state: GroupState[Array[Byte]]) =>
           val bm = state.getOption.map(_.clone())
             .getOrElse(new Array[Byte](bitsPerGroup / 8))
-          val out = bloomFoldGroup(bm, rows, bitsPerGroup, k)
+          // each fingerprint probes k positions; a duplicate = all
+          // probed bits already set (the fold mutates `bm` in place)
+          val out = rows.toSeq.sortBy(_._1).map { case (id, fp) =>
+            val pos = (0 until k).map(i =>
+              (graft.functions.TextFunctions.portableHashJvm(fp.toString, 131 + i)
+                % bitsPerGroup).toInt)
+            val dup = pos.forall(p => (bm(p >> 3) & (1 << (p & 7))) != 0)
+            pos.foreach(p => bm(p >> 3) = (bm(p >> 3) | (1 << (p & 7))).toByte)
+            BloomFlag(id, fp, dup)
+          }
           state.update(bm)
           out.iterator
       }
-  }
-
-  /** One group's micro-batch Bloom fold, shared VERBATIM by the v1 and
-    * v2 twins so their bit positions, intra-batch ordering and flags
-    * cannot drift: rows fold in doc_id order (deterministic intra-batch
-    * dup flagging), each fingerprint probes k positions, duplicates =
-    * all probed bits already set. Mutates `bm` in place. */
-  private def bloomFoldGroup(bm: Array[Byte], rows: Iterator[(Long, Long)],
-      bitsPerGroup: Int, k: Int): Seq[BloomFlag] =
-    rows.toSeq.sortBy(_._1).map { case (id, fp) =>
-      val pos = (0 until k).map(i =>
-        (graft.functions.TextFunctions.portableHashJvm(fp.toString, 131 + i)
-          % bitsPerGroup).toInt)
-      val dup = pos.forall(p => (bm(p >> 3) & (1 << (p & 7))) != 0)
-      pos.foreach(p => bm(p >> 3) = (bm(p >> 3) | (1 << (p & 7))).toByte)
-      BloomFlag(id, fp, dup)
-    }
-
-  /** State-API-v2 processor behind [[bloomDedupStreamV2]] — the same
-    * per-group bitmap fold as the v1 twin ([[bloomFoldGroup]]); the
-    * state is the raw bitmap under the BINARY encoder, no timers
-    * (the filter never evicts — that is its contract). */
-  private class BloomDedupProcessor(bitsPerGroup: Int, k: Int)
-      extends StatefulProcessor[Int, (Long, Long), BloomFlag] {
-    @transient private var st: ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Array[Byte]]("bloom",
-        org.apache.spark.sql.Encoders.BINARY, TTLConfig.NONE)
-
-    override def handleInputRows(g: Int, rows: Iterator[(Long, Long)],
-        tv: TimerValues): Iterator[BloomFlag] = {
-      val bm = if (st.exists()) st.get().clone()
-        else new Array[Byte](bitsPerGroup / 8)
-      val out = bloomFoldGroup(bm, rows, bitsPerGroup, k)
-      st.update(bm)
-      out.iterator
-    }
-  }
-
-  /** State-API-v2 twin of [[bloomDedupStream]] (`transformWithState`,
-    * RocksDB) — the constant-memory streaming dedup on the forward
-    * state API: with sessionize/funnel/gap-dist/transitions this pins
-    * the TIMERLESS ValueState path (TimeMode.None — the filter's state
-    * is permanent by design, so there is no watermark, no TTL and no
-    * timer to manage). StreamingSpec pins it row-equal to the v1 twin
-    * and exactly-once across a RocksDB checkpoint restart. Scale
-    * posture is v1's: `groups` independent mini-Blooms, fixed
-    * `groups × bitsPerGroup` bits forever, no false negatives. */
-  def bloomDedupStreamV2(docs: Dataset[Doc], bitsPerGroup: Int = 8192,
-      groups: Int = 256, k: Int = 4): Dataset[BloomFlag] = {
-    import docs.sparkSession.implicits._
-    require(Integer.bitCount(bitsPerGroup) == 1 && bitsPerGroup >= 64,
-      s"bitsPerGroup must be a power of two >= 64: $bitsPerGroup")
-    docs
-      .map(d => (d.doc_id, graft.functions.TextFunctions.portableHashJvm(d.text, 31)))
-      .groupByKey { case (_, fp) => (fp % groups).toInt }
-      .transformWithState(new BloomDedupProcessor(bitsPerGroup, k),
-        TimeMode.None(), OutputMode.Update())
   }
 
   final case class CmEst(event_type: String, user_id: Long, cm_est: Long, n: Long)

@@ -428,6 +428,26 @@ class PipelineSpec extends SparkSuite {
     }
   }
 
+  test("sendTo keeps durable(): the injected tail's fan-out needs a checkpoint dir too") {
+    // the tail sendTo returns must run in the flow's own modes — a
+    // durable flow whose tail fell back to best-effort persist() would
+    // silently lose the fan-out guarantee and report Clean
+    withNoCheckpointDir {
+      val out = tmpDir("nockpt_sendto")
+      val flow = Pipeline
+        .from(RangeSource(10))
+        .label("in")
+        .to(ParquetSink(s"$out/a"))
+        .to(ParquetSink(s"$out/b"))
+        .durable()
+      flow.sendTo("in", spark.range(5).toDF()).exec(spark).status match {
+        case PipelineStatus.Failed(e) =>
+          assert(e.getMessage.contains("setCheckpointDir"))
+        case other => fail(s"expected Failed(setCheckpointDir), got $other")
+      }
+    }
+  }
+
   test("durable fan-out: chained sinks agree even when the cache is lost mid-exec") {
     // The README caveat, reproduced then closed. persist() pins ids
     // only best-effort: losing the cached prefix between the two sink

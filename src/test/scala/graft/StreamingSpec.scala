@@ -10,6 +10,19 @@ class StreamingSpec extends SparkSuite {
   private def ts(minute: Int): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
 
+  /** Run `body` on the RocksDB state store provider (state API v2
+    * needs it), restoring the session's previous provider after. */
+  private def withRocksDb[A](body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("watermarked tumbling-window aggregation over a memory stream") {
     implicit val sql = spark.sqlContext
     import spark.implicits._
@@ -285,85 +298,6 @@ class StreamingSpec extends SparkSuite {
       assert(res(13L) == (None, None), "unconverted click NULLs at horizon")
       assert(res.size == 5, s"exactly one row per click: $res")
     } finally q.stop()
-  }
-
-  test("transformWithState forward attribution (ListState) matches v1 and restarts exactly") {
-    import spark.implicits._
-    val batch1 = Seq(
-      Event(10, ts(0), 1, "click", 0.0), Event(11, ts(5), 1, "click", 0.0),
-      Event(12, ts(9), 1, "purchase", 5.0), Event(20, ts(9), 2, "purchase", 7.0))
-    val batch2 = Seq(
-      Event(21, ts(15), 2, "click", 0.0), Event(22, ts(22), 2, "purchase", 1.0),
-      Event(29, ts(40), 3, "purchase", 0.0), Event(30, ts(40), 3, "click", 0.0),
-      Event(31, ts(40), 3, "purchase", 2.0), Event(13, ts(20), 1, "click", 0.0))
-    val batch3 = Seq(Event(90, ts(120), 9, "purchase", 0.0))
-    def drive(name: String,
-        mk: org.apache.spark.sql.Dataset[Event] =>
-          org.apache.spark.sql.Dataset[EventStreams.ForwardAttributionOut]): Set[(Long, Option[Long], Option[Long])] = {
-      implicit val sql = spark.sqlContext
-      val ms = MemoryStream[Event]
-      val q = mk(ms.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-      try {
-        Seq(batch1, batch2, batch3).foreach { b =>
-          ms.addData(b: _*); q.processAllAvailable()
-        }
-        spark.table(name).select("click_id", "purchase_id", "latency_ms")
-          .collect().map(r => (r.getLong(0),
-            Option(r.get(1)).map(_.asInstanceOf[Long]),
-            Option(r.get(2)).map(_.asInstanceOf[Long]))).toSet
-      } finally q.stop()
-    }
-    val v1 = drive("fattr_v1", EventStreams.attributeForwardStateful(_,
-      horizonMs = 10L * 60 * 1000, watermark = "10 minutes"))
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val v2 = drive("fattr_v2", EventStreams.attributeForwardStreamV2(_,
-        horizonMs = 10L * 60 * 1000, watermark = "10 minutes"))
-      assert(v2 == v1, s"v2 forward attribution $v2 diverged from v1 $v1")
-      // the scenario exercises conversion, tie and horizon-NULL paths
-      assert(v1.exists(r => r._1 == 30L && r._2 == Some(31L)) &&
-        v1.exists(r => r._1 == 13L && r._2.isEmpty), v1)
-
-      // restart pin: the ListState queue AND the armed timer must both
-      // come back from the RocksDB checkpoint (the v1 restart test's
-      // scenario, on the v2 operator)
-      val dir = tmpDir("fattr_v2_restart")
-      val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
-      def writeFile(events: Event*): Unit =
-        events.toDF().withColumn("props", lit("{}"))
-          .repartition(1).write.mode("append").parquet(src)
-      def run(): Unit = {
-        val ds = EventStreams.readEventStream(spark, src, nanosTs = Some(false))
-          .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-        val q = EventStreams.attributeForwardStreamV2(ds,
-            horizonMs = 30L * 60 * 1000, watermark = "10 minutes")
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", chk)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      writeFile(
-        Event(1, ts(0), 1, "click", 0.0), Event(2, ts(5), 2, "click", 0.0),
-        Event(3, ts(10), 1, "purchase", 1.0))
-      run() // user 1 converts; user 2's click survives in ListState
-      writeFile(Event(50, ts(200), 9, "click", 0.0))
-      run() // watermark passes user 2's horizon -> exactly one NULL row
-      val after2 = spark.read.parquet(out).collect()
-        .map(r => (r.getAs[Long]("click_id"), Option(r.getAs[Any]("purchase_id"))))
-      assert(after2.sortBy(_._1).toSeq == Seq((1L, Some(3L)), (2L, None)),
-        after2.toSeq.toString)
-      run() // nothing new — no replay
-      assert(spark.read.parquet(out).count() == 2)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("stateful forward attribution restart from checkpoint: rows exactly-once") {
@@ -684,11 +618,7 @@ class StreamingSpec extends SparkSuite {
     // the state-API-v2 form: the LIVE Markov matrix in one query —
     // the groupBy(from, to).count() the v1 twin's doc delegates to the
     // consumer chains in-query under transformWithState
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms2 = MemoryStream[Event]
       val q2 = EventStreams.transitionMatrixStream(ms2.toDS())
         .writeStream.format("memory").queryName("trans_matrix")
@@ -708,11 +638,6 @@ class StreamingSpec extends SparkSuite {
         assert(fin == matrixExpected,
           s"in-query matrix $fin diverged from batch pair counts $matrixExpected")
       } finally q2.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -777,11 +702,7 @@ class StreamingSpec extends SparkSuite {
     // with a declared event-time column, which admits the bucket
     // aggregation IN-QUERY (the chaining fMGWS categorically cannot
     // do). Needs the RocksDB state store; scoped to this query.
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val ms2 = MemoryStream[Event]
       val q2 = EventStreams.sessionGapDistStream(ms2.toDS(),
           idleMs = 48L * 3600 * 1000, watermark = "48 hours")
@@ -802,11 +723,6 @@ class StreamingSpec extends SparkSuite {
         assert(got2 == expected,
           s"transformWithState gap histogram $got2 diverged from batch $expected")
       } finally q2.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -882,11 +798,7 @@ class StreamingSpec extends SparkSuite {
     def writeFile(events: Event*): Unit =
       events.toDF().withColumn("props", lit("{}"))
         .repartition(1).write.mode("append").parquet(src)
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       def run(): Unit = {
         val ds = EventStreams.readEventStream(spark, src, nanosTs = Some(false))
           .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
@@ -918,11 +830,6 @@ class StreamingSpec extends SparkSuite {
       // both state layers survived the restart
       assert(fin == Set((0L, 2L, 2L), (2L, 1L, 4L), (10L, 1L, 1024L)),
         s"restarted histogram diverged: $fin")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1014,9 +921,13 @@ class StreamingSpec extends SparkSuite {
       s"user 9 must report exactly once after its horizon passes: ${finalRows.toSeq}")
   }
 
-  test("stateful sessionize restart from checkpoint: closed sessions emit exactly-once") {
+  /** The sessionize restart contract: state carried across restarts
+    * closes a session inline, a restart with no new data replays
+    * nothing, and the armed event-time timeout comes back from the
+    * checkpoint to close the last session exactly once. */
+  private def sessionizeRestart(prefix: String): Unit = {
     import spark.implicits._
-    val dir = tmpDir("sess_restart")
+    val dir = tmpDir(prefix)
     val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
     def writeFile(events: Event*): Unit =
       events.toDF().withColumn("props", lit("{}"))
@@ -1031,11 +942,11 @@ class StreamingSpec extends SparkSuite {
       try q.processAllAvailable() finally q.stop()
     }
     writeFile(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(5), 7, "click", 2.0))
-    run() // session open, nothing emitted
+    run() // incarnation 1: session open, nothing emitted
     assert(spark.read.schema(implicitly[org.apache.spark.sql.Encoder[
       EventStreams.SessionOut]].schema).parquet(out).isEmpty)
-    // a 120-min-later event in the NEXT incarnation closes the first
-    // session inline — session state carried across the restart
+    // incarnation 2: a 120-min-later event closes the first session
+    // inline — session state carried across the restart
     writeFile(Event(3, ts(120), 7, "click", 4.0))
     run()
     val after2 = spark.read.parquet(out).collect()
@@ -1043,171 +954,28 @@ class StreamingSpec extends SparkSuite {
         r.getAs[Double]("total_value")))
     assert(after2.toSeq == Seq((7L, 2L, 3.0)),
       s"first session must close exactly once across restarts: ${after2.toSeq}")
-    // idempotent restart with no new data
+    // incarnation 3: nothing new — a restart must not replay batches
     run()
     assert(spark.read.parquet(out).count() == 1)
-    // close the second session too (inline, via the next gap-breaker)
-    writeFile(Event(4, ts(300), 7, "click", 8.0))
+    // incarnation 4: a flusher pushes the watermark past user 7's idle
+    // horizon (150 min < 480) — the armed timeout survived the restart
+    // and closes the second session exactly once
+    writeFile(Event(4, ts(600), 9, "view", 0.0))
     run()
-    val sessions = spark.read.parquet(out).collect()
-      .map(r => (r.getAs[Long]("start_ms"), r.getAs[Long]("n_events")))
-    assert(sessions.length == 2 && sessions.distinct.length == 2,
-      s"each closed session exactly once: ${sessions.toSeq}")
+    val finalRows = spark.read.parquet(out).collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("start_ms"),
+        r.getAs[Long]("n_events")))
+    assert(finalRows.length == 2 &&
+      finalRows.count(r => r._1 == 7L && r._3 == 1L) == 1,
+      s"timeout-closed second session exactly once: ${finalRows.toSeq}")
   }
 
-  test("transformWithState sessionize: row-equal to the v1 twin on inline AND timer closes") {
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    // inline close (user 7's 120-min gap), timer close (users 7 and 8
-    // once the flusher pushes the watermark past their idle horizons),
-    // and an open session that must NOT emit (the flusher user itself)
-    val batch1 = Seq(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(5), 7, "click", 2.0),
-      Event(3, ts(0), 8, "view", 4.0))
-    val batch2 = Seq(Event(4, ts(120), 7, "click", 8.0),
-      Event(5, ts(600), 9, "click", 16.0)) // flusher: watermark → 480 min
-    def collectRows(table: String): Set[(Long, Long, Long, Long, Double)] =
-      spark.table(table).as[EventStreams.SessionOut].collect()
-        .map(s => (s.user_id, s.start_ms, s.end_ms, s.n_events, s.total_value)).toSet
-
-    val ms1 = MemoryStream[Event]
-    val q1 = EventStreams.sessionizeStateful(ms1.toDS())
-      .writeStream.format("memory").queryName("sess_v1").outputMode("append").start()
-    val v1 = try {
-      ms1.addData(batch1: _*); q1.processAllAvailable()
-      ms1.addData(batch2: _*); q1.processAllAvailable()
-      collectRows("sess_v1")
-    } finally q1.stop()
-    // the scenario exercises what it claims: one inline close (user
-    // 7's first session) and two timer closes (user 7's second, user 8)
-    assert(v1.size == 3 && v1.exists(_._1 == 8L) && v1.count(_._1 == 7L) == 2, v1)
-    assert(!v1.exists(_._1 == 9L), s"open session must not emit: $v1")
-
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms2 = MemoryStream[Event]
-      val q2 = EventStreams.sessionizeStream(ms2.toDS())
-        .writeStream.format("memory").queryName("sess_v2").outputMode("append").start()
-      val v2 = try {
-        ms2.addData(batch1: _*); q2.processAllAvailable()
-        ms2.addData(batch2: _*); q2.processAllAvailable()
-        collectRows("sess_v2")
-      } finally q2.stop()
-      assert(v2 == v1, s"v2 sessionize rows $v2 diverged from v1 $v1")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+  test("stateful sessionize restart from checkpoint: closed sessions emit exactly-once") {
+    sessionizeRestart("sess_restart")
   }
 
-  test("transformWithState sessionize restarts from a RocksDB checkpoint exactly-once") {
-    import spark.implicits._
-    val dir = tmpDir("sess_v2_restart")
-    val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
-    def writeFile(events: Event*): Unit =
-      events.toDF().withColumn("props", lit("{}"))
-        .repartition(1).write.mode("append").parquet(src)
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def run(): Unit = {
-        val ds = EventStreams.readEventStream(spark, src, nanosTs = Some(false))
-          .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-        val q = EventStreams.sessionizeStream(ds)
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", chk)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      writeFile(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(5), 7, "click", 2.0))
-      run() // incarnation 1: session open, nothing emitted
-      assert(spark.read.schema(implicitly[org.apache.spark.sql.Encoder[
-        EventStreams.SessionOut]].schema).parquet(out).isEmpty)
-      // incarnation 2: the 120-min-later event closes the first session
-      // inline — SessionState carried across the restart in RocksDB
-      writeFile(Event(3, ts(120), 7, "click", 4.0))
-      run()
-      val after2 = spark.read.parquet(out).collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
-          r.getAs[Double]("total_value")))
-      assert(after2.toSeq == Seq((7L, 2L, 3.0)),
-        s"first session must close exactly once across restarts: ${after2.toSeq}")
-      // incarnation 3: nothing new — a restart must not replay batches
-      run()
-      assert(spark.read.parquet(out).count() == 1)
-      // incarnation 4: a flusher pushes the watermark past user 7's
-      // idle horizon (150 min < 480) — the armed TIMER survived the
-      // restart and flushes the second session exactly once
-      writeFile(Event(4, ts(600), 9, "view", 0.0))
-      run()
-      val finalRows = spark.read.parquet(out).collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("start_ms"),
-          r.getAs[Long]("n_events")))
-      assert(finalRows.length == 2 &&
-        finalRows.count(r => r._1 == 7L && r._3 == 1L) == 1,
-        s"timer-closed second session exactly once: ${finalRows.toSeq}")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState funnel: row-equal to the v1 twin incl. timer-driven reports") {
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    // user 1 reaches step 3 (click < view < purchase), user 2 only
-    // step 1 (its view PRECEDES its click — the conditional-min kill),
-    // user 3 steps 0 rows never exist (filtered types only), and the
-    // flusher user 9 stays open (no report)
-    val batch1 = Seq(
-      Event(1, ts(0), 1, "click", 0.0), Event(2, ts(10), 1, "view", 0.0),
-      Event(3, ts(5), 2, "view", 0.0), Event(4, ts(7), 2, "click", 0.0))
-    val batch2 = Seq(
-      Event(5, ts(20), 1, "purchase", 0.0),
-      Event(6, ts(600), 9, "click", 0.0)) // watermark -> 480 min
-    def rows(table: String): Set[(Long, Int, Option[Long], Option[Long], Option[Long])] =
-      spark.table(table).as[EventStreams.FunnelOut].collect()
-        .map(f => (f.user_id, f.step, f.click_ms, f.view_ms, f.purchase_ms)).toSet
-
-    val ms1 = MemoryStream[Event]
-    val q1 = EventStreams.funnelStateful(ms1.toDS())
-      .writeStream.format("memory").queryName("funnel_v1").outputMode("append").start()
-    val v1 = try {
-      ms1.addData(batch1: _*); q1.processAllAvailable()
-      ms1.addData(batch2: _*); q1.processAllAvailable()
-      rows("funnel_v1")
-    } finally q1.stop()
-    // scenario sanity: both reports arrived via the timer path
-    assert(v1.map(r => (r._1, r._2)) == Set((1L, 3), (2L, 1)), v1)
-
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ms2 = MemoryStream[Event]
-      val q2 = EventStreams.funnelStream(ms2.toDS())
-        .writeStream.format("memory").queryName("funnel_v2").outputMode("append").start()
-      val v2 = try {
-        ms2.addData(batch1: _*); q2.processAllAvailable()
-        ms2.addData(batch2: _*); q2.processAllAvailable()
-        rows("funnel_v2")
-      } finally q2.stop()
-      assert(v2 == v1, s"v2 funnel rows $v2 diverged from v1 $v1")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+  test("stateful sessionize restarts from a RocksDB checkpoint: inline and timer closes exactly-once") {
+    withRocksDb(sessionizeRestart("sess_rocksdb_restart"))
   }
 
   test("flatMapGroupsWithState sessionization closes sessions on gap") {
@@ -1325,92 +1093,40 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState Bloom dedup matches the v1 twin row for row") {
-    implicit val sql = spark.sqlContext
+  test("streaming Bloom dedup restart from checkpoint: bitmap carried, no replay") {
     import spark.implicits._
-    val batch1 = Seq(
-      EventStreams.Doc(1L, "alpha beta gamma"),
-      EventStreams.Doc(2L, "delta epsilon"),
-      EventStreams.Doc(3L, "zeta eta theta"),
-      EventStreams.Doc(4L, "alpha beta gamma"))
-    val batch2 = Seq(
-      EventStreams.Doc(5L, "delta epsilon"),
-      EventStreams.Doc(6L, "iota kappa lambda"))
-    def drive(name: String,
-        mk: org.apache.spark.sql.Dataset[EventStreams.Doc] =>
-          org.apache.spark.sql.Dataset[EventStreams.BloomFlag]): Set[(Long, Long, Boolean)] = {
-      val ms = MemoryStream[EventStreams.Doc]
-      val q = mk(ms.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("update").start()
-      try {
-        ms.addData(batch1: _*); q.processAllAvailable()
-        ms.addData(batch2: _*); q.processAllAvailable()
-        spark.table(name).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      } finally q.stop()
-    }
-    val v1 = drive("bloom_v1",
-      EventStreams.bloomDedupStream(_, bitsPerGroup = 8192, groups = 8))
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val v2 = drive("bloom_v2",
-        EventStreams.bloomDedupStreamV2(_, bitsPerGroup = 8192, groups = 8))
-      assert(v2 == v1, s"v2 bloom rows $v2 diverged from v1 $v1")
-      // the scenario exercises both dup paths: intra-batch + cross-batch
-      assert(v1.exists(r => r._1 == 4L && r._3) && v1.exists(r => r._1 == 5L && r._3))
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState Bloom dedup restarts from a RocksDB checkpoint: state carried, no replay") {
-    import spark.implicits._
-    val dir = tmpDir("bloom_v2_restart")
+    val dir = tmpDir("bloom_restart")
     val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
     def writeFile(docs: EventStreams.Doc*): Unit =
       docs.toDF().repartition(1).write.mode("append").parquet(src)
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def run(): Unit = {
-        val ds = spark.readStream
-          .schema(implicitly[org.apache.spark.sql.Encoder[EventStreams.Doc]].schema)
-          .parquet(src).as[EventStreams.Doc]
-        val q = EventStreams.bloomDedupStreamV2(ds, bitsPerGroup = 8192, groups = 4)
-          .writeStream.format("parquet").outputMode("append")
-          .option("path", out).option("checkpointLocation", chk)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      writeFile(EventStreams.Doc(1L, "first text"), EventStreams.Doc(2L, "second text"))
-      run() // incarnation 1: both unique against an empty filter
-      // incarnation 2: exact dup of doc 1 (bitmap carried in RocksDB) +
-      // a fresh unique
-      writeFile(EventStreams.Doc(3L, "first text"), EventStreams.Doc(4L, "third text"))
-      run()
-      val res = spark.read.parquet(out).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("dup_suspect")).toMap
-      assert(res.size == 4, s"each doc exactly once across restarts: $res")
-      assert(res(3L), "cross-restart duplicate must be flagged (bitmap carried)")
-      Seq(1L, 2L, 4L).foreach(id =>
-        assert(!res(id), s"unique doc $id falsely flagged at negligible fill"))
-      // incarnation 3: nothing new — a restart must not replay batches
-      run()
-      assert(spark.read.parquet(out).count() == 4)
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    def run(): Unit = {
+      val ds = spark.readStream
+        .schema(implicitly[org.apache.spark.sql.Encoder[EventStreams.Doc]].schema)
+        .parquet(src).as[EventStreams.Doc]
+      val q = EventStreams.bloomDedupStream(ds, bitsPerGroup = 8192, groups = 4)
+        .writeStream.outputMode("update")
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[EventStreams.BloomFlag], _: Long) =>
+          b.write.mode("append").parquet(out); ()
+        }
+        .option("checkpointLocation", chk)
+        .start()
+      try q.processAllAvailable() finally q.stop()
     }
+    writeFile(EventStreams.Doc(1L, "first text"), EventStreams.Doc(2L, "second text"))
+    run() // incarnation 1: both unique against an empty filter
+    // incarnation 2: exact dup of doc 1 (bitmap carried in the
+    // checkpoint) + a fresh unique
+    writeFile(EventStreams.Doc(3L, "first text"), EventStreams.Doc(4L, "third text"))
+    run()
+    val res = spark.read.parquet(out).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("dup_suspect")).toMap
+    assert(res.size == 4, s"each doc exactly once across restarts: $res")
+    assert(res(3L), "cross-restart duplicate must be flagged (bitmap carried)")
+    Seq(1L, 2L, 4L).foreach(id =>
+      assert(!res(id), s"unique doc $id falsely flagged at negligible fill"))
+    // incarnation 3: nothing new — a restart must not replay batches
+    run()
+    assert(spark.read.parquet(out).count() == 4)
   }
 
   test("streaming Count-Min sketch: running estimates equal the one-shot fold, never undercount") {
@@ -1597,71 +1313,45 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("transformWithState heavy hitters (MapState) matches the v1 twin and restarts exactly") {
+  test("streaming heavy hitters restart from checkpoint: summary and count carried, no replay") {
     import spark.implicits._
     def mkBatch(idBase: Long, minuteBase: Int): Seq[Event] =
       (0 until 25).map { i =>
         val user = if (i < 13) 1L else if (i < 24) (2L + i % 5) else 9L
         Event(idBase + i, ts(minuteBase + i / 10), user, "click", 0.0)
       }
-    def drive(name: String,
-        mk: org.apache.spark.sql.Dataset[Event] =>
-          org.apache.spark.sql.Dataset[EventStreams.HeavyUser]): Set[(String, String, Long, Long)] = {
-      implicit val sql = spark.sqlContext
-      val ms = MemoryStream[Event]
-      val q = mk(ms.toDF().as[Event]).writeStream.format("memory")
-        .queryName(name).outputMode("update").start()
-      try {
-        ms.addData(mkBatch(0L, 0): _*); q.processAllAvailable()
-        ms.addData(mkBatch(100L, 30): _*); q.processAllAvailable()
-        spark.table(name).collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
-      } finally q.stop()
+    val dir = tmpDir("hh_restart")
+    val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
+    def writeFile(events: Event*): Unit =
+      events.toDF().withColumn("props", lit("{}"))
+        .repartition(1).write.mode("append").parquet(src)
+    def run(): Unit = {
+      val ds = EventStreams.readEventStream(spark, src, nanosTs = Some(false))
+        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
+      val q = EventStreams.heavyHittersStream(ds, capacity = 4, perMille = 300)
+        .writeStream.outputMode("update")
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[EventStreams.HeavyUser], _: Long) =>
+          b.write.mode("append").parquet(out); ()
+        }
+        .option("checkpointLocation", chk)
+        .start()
+      try q.processAllAvailable() finally q.stop()
     }
-    val v1 = drive("hh_v1",
-      EventStreams.heavyHittersStream(_, capacity = 4, perMille = 300))
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val v2 = drive("hh_v2",
-        EventStreams.heavyHittersStreamV2(_, capacity = 4, perMille = 300))
-      assert(v2 == v1, s"v2 heavy hitters $v2 diverged from v1 $v1")
-
-      // restart pin: MapState entries + the ValueState counter must
-      // both come back from the RocksDB checkpoint (a lost counter
-      // would halve thresholds; lost entries would drop the heavy user)
-      val dir = tmpDir("hh_v2_restart")
-      val (src, out, chk) = (s"$dir/src", s"$dir/out", s"$dir/chk")
-      def writeFile(events: Event*): Unit =
-        events.toDF().withColumn("props", org.apache.spark.sql.functions.lit("{}"))
-          .repartition(1).write.mode("append").parquet(src)
-      def run(): Unit = {
-        val ds = EventStreams.readEventStream(spark, src, nanosTs = Some(false))
-          .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-        val q = EventStreams.heavyHittersStreamV2(ds, capacity = 4, perMille = 300)
-          .writeStream.format("parquet").outputMode("append")
-          .option("path", out).option("checkpointLocation", chk)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      writeFile(mkBatch(0L, 0): _*)
-      run() // incarnation 1: n = 25
-      writeFile(mkBatch(100L, 30): _*)
-      run() // incarnation 2: counter and summary carried -> n = 50 rows
-      val rows = spark.read.parquet(out).collect()
-        .map(r => (r.getAs[String]("user_id"), r.getAs[Long]("est"), r.getAs[Long]("n")))
-      assert(rows.exists(r => r._1 == "1" && r._3 == 50L && r._2 >= 26L),
-        s"heavy user must survive the MapState restart with the merged count: ${rows.toSeq}")
-      assert(!rows.exists(r => r._1 == "9" && r._3 == 50L),
-        s"light user surfaced after restart: ${rows.toSeq}")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    writeFile(mkBatch(0L, 0): _*)
+    run() // incarnation 1: n = 25
+    writeFile(mkBatch(100L, 30): _*)
+    run() // incarnation 2: summary and counter carried -> n = 50 rows
+    val rows = spark.read.parquet(out).collect()
+      .map(r => (r.getAs[String]("user_id"), r.getAs[Long]("est"), r.getAs[Long]("n")))
+    // a lost counter would restart n at 25; lost entries would drop the
+    // heavy user's estimate below its true 26
+    assert(rows.exists(r => r._1 == "1" && r._3 == 50L && r._2 >= 26L),
+      s"heavy user must survive the restart with the merged count: ${rows.toSeq}")
+    assert(!rows.exists(r => r._1 == "9" && r._3 == 50L),
+      s"light user surfaced after restart: ${rows.toSeq}")
+    // incarnation 3: nothing new — a restart must not replay batches
+    run()
+    assert(spark.read.parquet(out).count() == rows.length)
   }
 
   test("readEventStream on an empty/missing dir: waits for files instead of throwing") {
