@@ -259,7 +259,7 @@ object CurationQueries {
         // ELSE [] path yields 0, and the old plan's left-join+coalesce
         // did too — a NULL-in-NULL-out expression would diverge on the
         // degenerate docs CurationPropsSpec generates)
-        val docs = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val docs = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), repetitionStats(
             coalesce(tokens(col("text")), array().cast("array<string>"))).as("st"))
         val nTg = col("st.n_tg")
@@ -308,7 +308,7 @@ object CurationQueries {
         // stage and BOTH split branches consume it — unpersisted, it
         // runs twice (caller's clearCache sweep releases it, the
         // Bench/Verify contract shared with DedupQueries)
-        val base = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val base = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), ProfilingQueries.splitCol.as("split"),
             array_distinct(shingles(tokens(col("text")), n)).as("grams"))
           .persist()
@@ -392,7 +392,7 @@ object CurationQueries {
           greatest(nTg, lit(1L)).cast("double"), 6)
         val top2 = round(st.getField("top_bg").cast("double") /
           greatest(st.getField("n_bg"), lit(1L)).cast("double"), 6)
-        val r = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val r = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"),
             when(dup3 > 0.01 || top2 > 0.07, 0L).otherwise(1L).as("kr"))
         val j = g.join(c, Seq("doc_id")).join(r, Seq("doc_id"))
@@ -992,7 +992,7 @@ object CurationQueries {
         // scored frame feeds the offsets aggregation AND the main
         // join/window — unpersisted, the per-row qualityScore text pass
         // (the expensive stage) would run twice
-        val scored = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val scored = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), col("lang"), qm.as("qm"))
           .withColumn("bkt", floor(col("qm") / lit(50000.0)).cast("long"))
           .persist()
@@ -1046,7 +1046,7 @@ object CurationQueries {
     QueryDef("lm_perplexity_filter",
       (s, dir) => {
         val t = tokens(col("text"))
-        val docs = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val docs = ProfilingQueries.widened(Tables(s, dir, "documents"))
         val bigrams = docs.select(col("doc_id"),
             explode(when(size(t) >= 2,
               transform(sequence(lit(1), size(t) - 1),
@@ -1269,7 +1269,7 @@ object CurationQueries {
     // would bloat the compare at higher SFs).
     QueryDef("boilerplate_lines",
       (s, dir) => {
-        val lines = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val lines = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"),
             regexp_replace(col("text"), BoilerReshapeRe, "$1\n").as("t"))
           .select(col("doc_id"),

@@ -137,7 +137,7 @@ object DedupQueries {
     * for the measured r17 trade that removed its persist. */
   private[graft] def shingleSet(s: SparkSession, dir: String,
       maxDfFrac: Option[Double] = None): DataFrame = {
-    val wide = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+    val wide = ProfilingQueries.widened(Tables(s, dir, "documents"))
     val sh = wide
       .select(col("doc_id"), explode(shingles(tokens(col("text")))).as("s"))
       .distinct()
@@ -189,34 +189,13 @@ object DedupQueries {
     * branch dominates runtime otherwise. `cand` must be distinct on
     * (doc_a, doc_b): a duplicate row inflates both `n_a` and `inter`
     * (both are counts over the pair's joined shingle rows). */
-  private[graft] def jaccardPairs(sh: DataFrame, cand: Option[DataFrame]): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+  private[graft] def jaccardPairs(sh: DataFrame, cand: Option[DataFrame]): DataFrame =
     cand match {
       case Some(c) =>
-        // the two sh joins are deliberately LEFT to the planner
-        // (broadcast at bench SFs, SMJ at scale): a SHUFFLE_HASH hint
-        // was tried in r18 and REJECTED — it forces the cand×|A|
-        // explode output through the b-join's exchange (measured
-        // 2.6 MB → 232 MB shuffled at sf0.1), the exact §2.3 explode-
-        // before-shuffle disease the broadcast shape avoids by partial-
-        // aggregating the explode in-stage.
-        //
-        // the b join is LEFT OUTER (r18) so |A| rides the same
-        // aggregate as the intersection: the a join emits exactly A's
-        // shingle rows per pair, so count(*) = n_a and count(b.s) =
-        // |A∩B| — one sizes join (n_b) instead of two, one fewer
-        // aggregation pass over the shingle set feeding it. Same
-        // numbers by construction.
-        verifyWidened(sh, c).join(sh.as("a"), col("doc_a") === col("a.doc_id"))
-          .join(sh.as("b"),
-            col("doc_b") === col("b.doc_id") && col("a.s") === col("b.s"),
-            "left_outer")
-          .groupBy("doc_a", "doc_b")
-          .agg(count(lit(1)).as("n_a"), count(col("b.s")).as("inter"))
-          .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-          .select(col("doc_a"), col("doc_b"),
-            jaccard(col("inter"), col("n_a"), col("sb.n")).as("jaccard"))
+        verifyCounts(sh, c).select(col("doc_a"), col("doc_b"),
+          jaccard(col("inter"), col("n_a"), col("sb.n")).as("jaccard"))
       case None =>
+        val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
         sh.as("a").join(sh.as("b"),
           col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
           .withColumn("doc_a", col("a.doc_id"))
@@ -227,25 +206,54 @@ object DedupQueries {
           .select(col("doc_a"), col("doc_b"),
             jaccard(col("inter"), col("sa.n"), col("sb.n")).as("jaccard"))
     }
+
+  /** THE verify fold over a candidate-pair frame (distinct on
+    * (doc_a, doc_b), see [[jaccardPairs]]): per pair `n_a` = |A|,
+    * `inter` = |A∩B| and `sb.n` = |B| — shared by [[jaccardPairs]] and
+    * `dedup_containment`, which each select their own score.
+    *
+    * The candidates are first spread by doc_a ([[ProfilingQueries.widened]],
+    * sized by the shingle set they fan out over — the candidate
+    * frame's own estimate multiplies through its joins). The list is
+    * BYTE-tiny (two longs per row) but each row fans out into |A|
+    * probe rows inside the verify stage, so AQE's byte-based partition
+    * coalescing funnels the stage onto 1-2 tasks (r18, measured: 4.3
+    * cpu-s of verify serialized onto 2 tasks = 2.8 s of the setsim
+    * wall at sf0.1). The exchange is keyed on doc_a — the verify
+    * join's own key — so it REPLACES the join's exchange rather than
+    * adding one (PlanAuditSpec pins this); above the narrow threshold
+    * the candidates go unrepartitioned and that join exchange spreads
+    * them.
+    *
+    * The two sh joins are deliberately LEFT to the planner (broadcast
+    * at bench SFs, SMJ at scale): a SHUFFLE_HASH hint was tried in r18
+    * and REJECTED — it forces the cand×|A| explode output through the
+    * b-join's exchange (measured 2.6 MB → 232 MB shuffled at sf0.1),
+    * the exact §2.3 explode-before-shuffle disease the broadcast shape
+    * avoids by partial-aggregating the explode in-stage.
+    *
+    * The b join is LEFT OUTER (r18) so |A| rides the same aggregate as
+    * the intersection: the a join emits exactly A's shingle rows per
+    * pair, so count(*) = n_a and count(b.s) = |A∩B| — one sizes join
+    * (n_b) instead of two, one fewer aggregation pass over the shingle
+    * set feeding it. */
+  private def verifyCounts(sh: DataFrame, cand: DataFrame): DataFrame = {
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    ProfilingQueries.widened(cand, col("doc_a"), sizedBy = Some(sh))
+      .join(sh.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(sh.as("b"),
+        col("doc_b") === col("b.doc_id") && col("a.s") === col("b.s"),
+        "left_outer")
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("n_a"), count(col("b.s")).as("inter"))
+      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
   }
 
-  /** Spread a candidate-pair frame to the verification join's true
-    * width before the per-pair shingle explode (r18). The candidate
-    * list is BYTE-tiny (two longs per row) but each row fans out into
-    * |A| probe rows inside the verify stage, so AQE's byte-based
-    * partition coalescing funnels the stage onto 1-2 tasks (measured:
-    * 4.3 cpu-s of verify serialized onto 2 tasks = 2.8 s of the
-    * setsim wall at sf0.1). The explicit width (REPARTITION_BY_NUM —
-    * exempt from coalescing) is derived from the shingle cache's own
-    * partition count, i.e. the corpus's scan width, so it grows with
-    * the data instead of pinning a local-mode constant; the exchange
-    * is keyed on doc_a — the verify join's own key — so at scale it
-    * REPLACES the join's exchange rather than adding one. */
-  private def verifyWidened(sh: DataFrame, cand: DataFrame): DataFrame = {
-    val w = math.max(sh.sparkSession.sparkContext.defaultParallelism,
-      sh.rdd.getNumPartitions)
-    cand.repartition(w, col("doc_a"))
-  }
+  /** THE verified near-dup pair set of the driver dedup queries: LSH
+    * candidates over the capped shingle set `sh`, kept at exact
+    * Jaccard ≥ 0.8 (the threshold [[pairsCteSql]] mirrors). */
+  private[graft] def verifiedPairs(sh: DataFrame): DataFrame =
+    jaccardPairs(sh, Some(lshCandidates(sh))).filter(col("jaccard") >= 0.8)
 
   /** Cluster labels (doc_id → cluster_id) of the verified near-dup
     * graph — the shared core of `dedup_clusters` AND `dedup_canonical`,
@@ -277,10 +285,7 @@ object DedupQueries {
     * returning wrong labels. */
   private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
-    val pairs = jaccardPairs(sh, Some(lshCandidates(sh)))
-      .filter(col("jaccard") >= 0.8)
-      .select(col("doc_a"), col("doc_b"))
-    propagateMinLabels(pairs)
+    propagateMinLabels(verifiedPairs(sh).select(col("doc_a"), col("doc_b")))
   }
 
   /** Min-label propagation over an undirected near-dup pair list
@@ -510,8 +515,9 @@ object DedupQueries {
     * `lab(doc_id, cluster_id)` — the DuckDB twin of [[clusterLabels]]
     * (recursive-CTE reachability + per-node min over reached nodes, a
     * different algorithm computing the same fixpoint). Shared by
-    * `dedup_clusters` and `dedup_cluster_stats` so the closure
-    * definition cannot de-synchronize between them. */
+    * `dedup_clusters`, `dedup_cluster_stats`, `dedup_canonical` and
+    * `corpus_cleaned` so the closure definition cannot de-synchronize
+    * between them. */
   private val clustersCteSql =
     s"""$shCappedCte,
        |$candCteSql,
@@ -529,6 +535,39 @@ object DedupQueries {
        |lab AS (
        |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
        |  FROM reach GROUP BY u)""".stripMargin
+
+  /** THE canonical pick: per near-dup cluster of `clusters` (doc_id,
+    * cluster_id), the member with the best quality score
+    * ([[TextQueries.qualityScore]]), ties broken toward the smaller
+    * doc_id, plus the member count — shared by `dedup_canonical` and
+    * `corpus_cleaned`. One map-side-combinable max_by per cluster. */
+  private def canonicalPicks(s: SparkSession, dir: String,
+      clusters: DataFrame): DataFrame = {
+    val docs = Tables(s, dir, "documents")
+      .select(col("doc_id"), TextQueries.qualityScore(col("text")).as("q"))
+    clusters.join(docs, Seq("doc_id"))
+      .groupBy(col("cluster_id"))
+      .agg(
+        max_by(col("doc_id"), struct(col("q"), lit(0L) - col("doc_id")))
+          .as("canonical_doc_id"),
+        count(lit(1)).as("n_members"))
+  }
+
+  /** DuckDB twin of [[canonicalPicks]], appended after
+    * [[clustersCteSql]]: `ranked` numbers each cluster's members by
+    * quality (rn = 1 is the canonical doc) and carries the cluster's
+    * member count. */
+  private val rankedCteSql =
+    s"""qual AS (
+       |  SELECT doc_id, ${TextQueries.qualityScoreSql("text",
+            "regexp_extract_all(lower(text), '[a-z0-9]+')")} AS q
+       |  FROM documents),
+       |ranked AS (
+       |  SELECT l.cluster_id, l.doc_id, q.q,
+       |    row_number() OVER (PARTITION BY l.cluster_id
+       |      ORDER BY q.q DESC, l.doc_id ASC) AS rn,
+       |    COUNT(*) OVER (PARTITION BY l.cluster_id) AS n_members
+       |  FROM lab l JOIN qual q ON q.doc_id = l.doc_id)""".stripMargin
 
   /** All-pairs exact Jaccard — the QUADRATIC small-N recall verifier
     * for [[lshCandidates]]-gated discovery. Never a driver query: the
@@ -628,9 +667,7 @@ object DedupQueries {
     QueryDef("source_overlap",
       (s, dir) => {
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
-        val pairs = jaccardPairs(sh, Some(lshCandidates(sh)))
-          .filter(col("jaccard") >= 0.8)
-          .select(col("doc_a"), col("doc_b"))
+        val pairs = verifiedPairs(sh).select(col("doc_a"), col("doc_b"))
         val src = Tables(s, dir, "documents").select(col("doc_id"), col("source"))
         val half = src.join(broadcast(pairs), col("doc_id") === col("doc_a"))
           .select(col("doc_b"), col("source").as("sa"))
@@ -660,8 +697,7 @@ object DedupQueries {
     QueryDef("dedup_ngram_jaccard",
       (s, dir) => {
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
-        jaccardPairs(sh, Some(lshCandidates(sh)))
-          .filter(col("jaccard") >= 0.8)
+        verifiedPairs(sh)
       },
       Some(s"""$shCappedCte,
               |$candCteSql,
@@ -677,9 +713,7 @@ object DedupQueries {
         // persisted: consumed by the signature build AND both sides of
         // the candidate-verification join
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
-        val dupped = jaccardPairs(sh, Some(lshCandidates(sh)))
-          .filter(col("jaccard") >= 0.8)
-          .select(col("doc_b").as("doc_id")).distinct()
+        val dupped = verifiedPairs(sh).select(col("doc_b").as("doc_id")).distinct()
         Tables(s, dir, "documents").select(col("doc_id"))
           .join(dupped, Seq("doc_id"), "left_anti")
       },
@@ -764,45 +798,13 @@ object DedupQueries {
     QueryDef("dedup_canonical",
       (s, dir) => {
         // clusterLabels is already checkpoint-BACKED (its supersteps
-        // truncate lineage), so the join below reads the materialized
+        // truncate lineage), so the pick reads the materialized
         // few-hundred-row table — no re-walk of the iterative pipeline,
         // no second checkpoint
-        val clusters = clusterLabels(s, dir)
-        val docs = Tables(s, dir, "documents")
-          .select(col("doc_id"), TextQueries.qualityScore(col("text")).as("q"))
-        clusters.join(docs, Seq("doc_id"))
-          .groupBy(col("cluster_id"))
-          .agg(
-            max_by(col("doc_id"), struct(col("q"), lit(0L) - col("doc_id")))
-              .as("canonical_doc_id"),
-            count(lit(1)).as("n_members"))
+        canonicalPicks(s, dir, clusterLabels(s, dir))
       },
-      Some(s"""$shCappedCte,
-              |$candCteSql,
-              |$interCteSql,
-              |$pairsCteSql,
-              |edges AS (
-              |  SELECT doc_a AS u, doc_b AS v FROM pairs
-              |  UNION SELECT doc_b, doc_a FROM pairs),
-              |reach AS (
-              |  WITH RECURSIVE r(u, v) AS (
-              |    SELECT u, v FROM edges
-              |    UNION
-              |    SELECT r.u, e.v FROM r JOIN edges e ON r.v = e.u)
-              |  SELECT u, v FROM r),
-              |labels AS (
-              |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
-              |  FROM reach GROUP BY u),
-              |qual AS (
-              |  SELECT doc_id, ${TextQueries.qualityScoreSql("text",
-                  "regexp_extract_all(lower(text), '[a-z0-9]+')")} AS q
-              |  FROM documents),
-              |ranked AS (
-              |  SELECT l.cluster_id, l.doc_id, q.q,
-              |    row_number() OVER (PARTITION BY l.cluster_id
-              |      ORDER BY q.q DESC, l.doc_id ASC) AS rn,
-              |    COUNT(*) OVER (PARTITION BY l.cluster_id) AS n_members
-              |  FROM labels l JOIN qual q ON q.doc_id = l.doc_id)
+      Some(s"""$clustersCteSql,
+              |$rankedCteSql
               |SELECT cluster_id, doc_id AS canonical_doc_id,
               |  CAST(n_members AS BIGINT) AS n_members
               |FROM ranked WHERE rn = 1""".stripMargin)),
@@ -818,44 +820,16 @@ object DedupQueries {
     QueryDef("corpus_cleaned",
       (s, dir) => {
         val clusters = clusterLabels(s, dir) // checkpoint-backed
-        val docs = Tables(s, dir, "documents")
-          .select(col("doc_id"), TextQueries.qualityScore(col("text")).as("q"))
-        val canon = clusters.join(docs, Seq("doc_id"))
-          .groupBy(col("cluster_id"))
-          .agg(max_by(col("doc_id"), struct(col("q"), lit(0L) - col("doc_id")))
-            .as("doc_id"))
-          .select(col("doc_id"))
+        val canon = canonicalPicks(s, dir, clusters)
+          .select(col("canonical_doc_id").as("doc_id"))
         val losers = clusters.select(col("doc_id"))
           .join(canon, Seq("doc_id"), "left_anti")
         Tables(s, dir, "documents")
           .select(col("doc_id"), col("lang"))
           .join(losers, Seq("doc_id"), "left_anti")
       },
-      Some(s"""$shCappedCte,
-              |$candCteSql,
-              |$interCteSql,
-              |$pairsCteSql,
-              |edges AS (
-              |  SELECT doc_a AS u, doc_b AS v FROM pairs
-              |  UNION SELECT doc_b, doc_a FROM pairs),
-              |reach AS (
-              |  WITH RECURSIVE r(u, v) AS (
-              |    SELECT u, v FROM edges
-              |    UNION
-              |    SELECT r.u, e.v FROM r JOIN edges e ON r.v = e.u)
-              |  SELECT u, v FROM r),
-              |labels AS (
-              |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
-              |  FROM reach GROUP BY u),
-              |qual AS (
-              |  SELECT doc_id, ${TextQueries.qualityScoreSql("text",
-                  "regexp_extract_all(lower(text), '[a-z0-9]+')")} AS q
-              |  FROM documents),
-              |ranked AS (
-              |  SELECT l.cluster_id, l.doc_id, q.q,
-              |    row_number() OVER (PARTITION BY l.cluster_id
-              |      ORDER BY q.q DESC, l.doc_id ASC) AS rn
-              |  FROM labels l JOIN qual q ON q.doc_id = l.doc_id)
+      Some(s"""$clustersCteSql,
+              |$rankedCteSql
               |SELECT doc_id, lang FROM documents
               |WHERE doc_id NOT IN (SELECT doc_id FROM ranked WHERE rn > 1)""".stripMargin)),
 
@@ -878,9 +852,7 @@ object DedupQueries {
         val splits = Tables(s, dir, "documents").select(
           col("doc_id"), ProfilingQueries.splitCol.as("split"))
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
-        val pairs = jaccardPairs(sh, Some(lshCandidates(sh)))
-          .filter(col("jaccard") >= 0.8)
-          .select(col("doc_a"), col("doc_b"))
+        val pairs = verifiedPairs(sh).select(col("doc_a"), col("doc_b"))
         val sym = pairs.unionByName(
           pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
         sym
@@ -1294,7 +1266,7 @@ object DedupQueries {
     // fingerprints in the output.
     QueryDef("dedup_cdc_chunks",
       (s, dir) => {
-        cdcChunks(ProfilingQueries.widened(s, Tables(s, dir, "documents")))
+        cdcChunks(ProfilingQueries.widened(Tables(s, dir, "documents")))
           .filter(col("n_tokens") >= CdcMinChunk)
           .groupBy(col("chunk"))
           .agg(min(col("n_tokens")).as("n_tokens"),
@@ -1338,7 +1310,7 @@ object DedupQueries {
 
     QueryDef("dedup_winnowing",
       (s, dir) =>
-        winnowingAudit(ProfilingQueries.widened(s, Tables(s, dir, "documents"))),
+        winnowingAudit(ProfilingQueries.widened(Tables(s, dir, "documents"))),
       Some(s"""WITH g AS (
               |  SELECT doc_id, list_transform(range(1, length(text) - $WinnowK + 2),
               |      i -> md5(substr(text, CAST(i AS INTEGER), $WinnowK))) AS gr
@@ -1380,7 +1352,7 @@ object DedupQueries {
     // the running-max frame deterministic (no peer-order ties).
     QueryDef("dedup_winnowing_spans",
       (s, dir) =>
-        winnowingSpans(ProfilingQueries.widened(s, Tables(s, dir, "documents"))),
+        winnowingSpans(ProfilingQueries.widened(Tables(s, dir, "documents"))),
       Some(s"""WITH g AS (
               |  SELECT doc_id, list_transform(range(1, length(text) - $WinnowK + 2),
               |      i -> md5(substr(text, CAST(i AS INTEGER), $WinnowK))
@@ -1446,7 +1418,7 @@ object DedupQueries {
     // partitions per doc — bounded by one doc's gram count.
     QueryDef("dedup_substring",
       (s, dir) =>
-        substringSpans(ProfilingQueries.widened(s, Tables(s, dir, "documents"))),
+        substringSpans(ProfilingQueries.widened(Tables(s, dir, "documents"))),
       Some(s"""WITH g AS (
               |  SELECT doc_id, list_transform(range(1, length(text) - $SubstrK + 2),
               |      i -> md5(substr(text, CAST(i AS INTEGER), $SubstrK))
@@ -1494,7 +1466,7 @@ object DedupQueries {
     // corpus pass and no global ordering beyond doc_id itself.
     QueryDef("substring_cleaned",
       (s, dir) =>
-        substringCleaned(ProfilingQueries.widened(s, Tables(s, dir, "documents"))),
+        substringCleaned(ProfilingQueries.widened(Tables(s, dir, "documents"))),
       // concatenated, NOT interpolated into a stripMargin string — the
       // chain's `||` concat lines would lose a bar to a second strip
       Some("WITH " + substringCleanedCteSql + "\n" +
@@ -1527,7 +1499,7 @@ object DedupQueries {
           .agg(min_by(col("n_chars"), col("doc_id")).as("keep_chars"))
           .agg(count(lit(1)).as("n_docs"), sum(col("keep_chars")).as("n_chars"))
           .select(lit("exact_dedup").as("stage"), col("n_docs"), col("n_chars"))
-        val sub = substringCleaned(ProfilingQueries.widened(s, docs))
+        val sub = substringCleaned(ProfilingQueries.widened(docs))
           .agg(count(lit(1)).as("n_docs"), sum(col("kept_chars")).as("n_chars"))
           .select(lit("substring_cleaned").as("stage"), col("n_docs"), col("n_chars"))
         raw.unionByName(exact).unionByName(sub)
@@ -1625,20 +1597,9 @@ object DedupQueries {
     QueryDef("dedup_containment",
       (s, dir) => {
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
-        val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
         val contain = round(col("inter").cast("double") /
           least(col("n_a"), col("sb.n")).cast("double"), 6)
-        // left-outer b join: count(*) = |A|, count(b.s) = |A∩B| — the
-        // same n_a-rides-the-aggregate fold as [[jaccardPairs]] (r18),
-        // one sizes join instead of two
-        verifyWidened(sh, prefixCandidates(sh, ContainTau))
-          .join(sh.as("a"), col("doc_a") === col("a.doc_id"))
-          .join(sh.as("b"),
-            col("doc_b") === col("b.doc_id") && col("a.s") === col("b.s"),
-            "left_outer")
-          .groupBy("doc_a", "doc_b")
-          .agg(count(lit(1)).as("n_a"), count(col("b.s")).as("inter"))
-          .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
+        verifyCounts(sh, prefixCandidates(sh, ContainTau))
           .select(col("doc_a"), col("doc_b"),
             col("n_a"), col("sb.n").as("n_b"),
             contain.as("containment"))

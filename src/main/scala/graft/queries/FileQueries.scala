@@ -248,18 +248,18 @@ object FileQueries {
         // jobs). A real ingest is distributed; spreading the rolls over
         // the cluster keeps the same ~500-record files and the same
         // verified aggregate. No-op at scale (ingest already wide).
-        // deliberately the UNPINNED repartition form (r18): the shared
-        // widenedByCol guard now pins an AQE-proof explicit width for
-        // CPU-heavy scan chains, but here the exchange feeds a
-        // file-ROLLING write whose staged-file contract (2/20/200
-        // files across the driver SFs, pinned in FileFormatsSpec) is
-        // produced by AQE coalescing the tiny stream + the 500-record
-        // roll; the r17 ingest-distribution win was measured with this
-        // form and the downstream work is I/O, not per-row CPU.
+        // The shared narrow test, but deliberately the UNPINNED
+        // repartition form (r18): ProfilingQueries.widened pins an
+        // AQE-proof explicit width for CPU-heavy scan chains, but here
+        // the exchange feeds a file-ROLLING write whose staged-file
+        // contract (2/20/200 files across the driver SFs, pinned in
+        // FileFormatsSpec) is produced by AQE coalescing the tiny
+        // stream + the 500-record roll; the r17 ingest-distribution win
+        // was measured with this form and the downstream work is I/O,
+        // not per-row CPU.
         val ev = graft.Tables.events(s, dir)
         val staged =
-          if (ev.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-            ev.repartition(col("event_id"))
+          if (ProfilingQueries.isNarrow(ev)) ev.repartition(col("event_id"))
           else ev
         ParquetSink(smallDir, maxRecordsPerFile = Some(500L)).write(staged)
         val filesBefore = parquetParts(s, smallDir)

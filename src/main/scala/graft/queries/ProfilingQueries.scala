@@ -77,19 +77,30 @@ object ProfilingQueries {
   private[queries] def inputBytes(df: org.apache.spark.sql.DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
+  /** THE narrow test: Catalyst sizes `df` ([[inputBytes]]) below
+    * defaultParallelism × `spark.sql.files.openCostInBytes` — the same
+    * condition under which `FilePartition.maxSplitBytes` plans fewer
+    * scan splits than cores. Decided from statistics alone: no RDD is
+    * built and no job runs. Meaningful for a scan or a cache only — a
+    * derived frame's estimate multiplies through its joins (the LSH
+    * candidate frame at sf0.1 estimates ~974 GB over 3.4 MB of
+    * leaves), so callers size a derived frame by the input it fans out
+    * over. */
+  private[graft] def isNarrow(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val session = df.queryExecution.sparkSession
+    inputBytes(df) < BigInt(session.sparkContext.defaultParallelism) *
+      session.sessionState.conf.filesOpenCostInBytes
+  }
+
   /** Narrow-scan widening guard, shared by every query whose per-doc
     * CPU work would otherwise serialize on a small corpus's single
-    * input split (DedupQueries.shingleSet, CurationQueries) — one
-    * definition so a tuning change cannot silently leave one module
-    * single-cored again (text_repetition at sf0.1: 12.9 s → 0.7 s). A
-    * 100 TB corpus already scans wider than the core count, so this is
-    * a no-op at scale. */
-  private[graft] def widened(s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    widenedByCol(s, df, col("doc_id"))
-
-  /** [[widened]] with a caller-chosen key, for frames without a
-    * doc_id (events etc.).
+    * input split (DedupQueries.shingleSet and the verify join,
+    * CurationQueries, TextQueries) — one definition so a tuning change
+    * cannot silently leave one module single-cored again
+    * (text_repetition at sf0.1: 12.9 s → 0.7 s). A narrow `sizedBy`
+    * frame (default: `df` itself; see [[isNarrow]]) spreads `df` over
+    * the cluster by `key`; anything else comes back unchanged, so this
+    * is a no-op at scale.
     *
     * The partition count is EXPLICIT (r18): a bare `repartition(key)`
     * plans a REPARTITION_BY_COL exchange, which AQE's partition
@@ -99,13 +110,13 @@ object ProfilingQueries {
     * to ONE task at bench SFs (dfCap's recompute legs: 1.8 s
     * single-task stages). REPARTITION_BY_NUM is exempt from coalescing,
     * and the pinned width is the cluster's own parallelism, not a
-    * constant — at 100 TB the guard never fires at all (the scan is
-    * already wider than the core count). */
-  private[graft] def widenedByCol(s: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame,
-      key: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
-    if (df.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-      df.repartition(s.sparkContext.defaultParallelism, key)
+    * constant. */
+  private[graft] def widened(df: org.apache.spark.sql.DataFrame,
+      key: org.apache.spark.sql.Column = col("doc_id"),
+      sizedBy: Option[org.apache.spark.sql.DataFrame] = None)
+      : org.apache.spark.sql.DataFrame =
+    if (isNarrow(sizedBy.getOrElse(df)))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
     else df
 
   /** `k_anonymity` class-size threshold: classes below K members are

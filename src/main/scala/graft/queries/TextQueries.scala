@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionScope
 
 /** Text-analysis operators over the `documents` corpus — the
   * training-data-pipeline extensions (language-ID, quality scoring,
@@ -363,7 +364,7 @@ object TextQueries {
     QueryDef("padding_waste",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val lens = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val lens = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("len"))
         def strategyWaste(name: String, bucket: org.apache.spark.sql.Column,
             s1: org.apache.spark.sql.Column, s2: org.apache.spark.sql.Column) = {
@@ -488,7 +489,7 @@ object TextQueries {
     QueryDef("inverted_index",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val tf = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val tf = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
           .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
         val dfcf = tf.groupBy(col("term"))
@@ -538,7 +539,7 @@ object TextQueries {
     // corpus at every SF.
     QueryDef("doc_entropy",
       (s, dir) => {
-        val tc = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        val tc = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), explode(tokens(col("text"))).as("tk"))
           .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("c"))
         val dn = tc.groupBy(col("doc_id")).agg(sum(col("c")).as("n"))
@@ -601,8 +602,7 @@ object TextQueries {
         // from 4 concurrent subtrees, and an unmaterialized persist
         // let AQE race them into recomputing the corpus-sized gram
         // chain per subtree (measured: two concurrent 17 s jobs).
-        val vocab = graft.queries.ProfilingQueries
-          .widened(s, Tables(s, dir, "documents"))
+        val vocab = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(explode(shingles(tokens(col("text")), 2)).as("tk"))
           .groupBy(col("tk")).agg(count(lit(1)).as("freq"))
           .persist()
@@ -641,7 +641,7 @@ object TextQueries {
           transform(sequence(lit(1), length(word) - 1),
             i => word.substr(i, lit(2))))
           .otherwise(array().cast("array<string>"))
-        ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(explode(tokens(col("text"))).as("word"))
           .select(explode(pairs).as("pair"))
           .groupBy(col("pair"))
@@ -689,7 +689,7 @@ object TextQueries {
         val enc = vocab.select(
           regexp_replace(col("syms"), " ", "").as("word"),
           size(split(col("syms"), " ")).cast("long").as("n_toks"))
-        ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+        ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
           .join(enc, Seq("word"))
           .groupBy(col("doc_id"))
@@ -1071,8 +1071,7 @@ object TextQueries {
         // the lazy persist let the df count and the join probe race
         // into recomputing the chain concurrently (measured: two
         // parallel ~6 s single-stage jobs for one 4 s query).
-        val sh = graft.queries.ProfilingQueries
-          .widened(s, Tables(s, dir, "documents"))
+        val sh = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"),
             explode(array_distinct(shingles(tokens(col("text"))))).as("sng"))
           .select(col("doc_id"), portableHash(col("sng"), 0).as("h"))
@@ -1229,33 +1228,6 @@ object TextQueries {
     keptFull.select(col("tk"), col("freq")).unionByName(keptBoundary)
   }
 
-  /** Iterated BPE merge training (Sennrich et al. 2016), shared by
-    * `bpe_merges` (wants the merge table) and `bpe_encode` (wants the
-    * encoded vocab). ONE corpus-sized shuffle collapses the corpus to
-    * the word-frequency table (the standard BPE-training trick — at
-    * 100 TB the vocab is ~1e7 rows, corpus-size-independent); every
-    * merge round after that runs on the vocab-sized cached frame.
-    * Each round is a superstep in the dedup_clusters style: a
-    * TakeOrdered 1-row argmax action picks the (count DESC, pair ASC)
-    * best pair — the documented 1-row driver-action contract, like the
-    * hot-cell guard — then the merge is applied with a left-fold over
-    * each word's symbol string ([[bpeApplyMerge]]). ONE job per round:
-    * round r's argmax action is what materializes vocab_r's cache, so
-    * the parent cache is dropped only after that action returns
-    * (dropping it earlier would recompute the whole chain; a separate
-    * eager count() per round would double the job count). Every
-    * [[BpeCheckpointEvery]] rounds a localCheckpoint replaces the
-    * persist (one extra vocab-sized job), bounding the logical-plan
-    * depth — and so per-round analysis time — by the cadence constant
-    * instead of r. `onRound` receives (round, analyzed-plan node count
-    * of the merged vocab) — the lineage probe BpeRoundsSpec pins.
-    *
-    * `applyLast = false` skips the final round's merge-apply (nobody
-    * consumes it) and unpersists everything before returning.
-    * `applyLast = true` applies ALL rounds and returns the encoded
-    * vocab still persisted but UNMATERIALIZED — its parent stays
-    * cached until the caller's first action over it; the harness
-    * clearCache sweep releases both (the Verify/Bench contract). */
   /** Per-language stopword-evidence scores over a token array — the
     * shared scoring of `lang_id` and `langid_confusion`. */
   private def langScores(t: Column): Seq[(String, Column)] =
@@ -1282,11 +1254,40 @@ object TextQueries {
     s"CASE $cases ELSE '${stopwords.last._1}' END"
   }
 
+  /** Iterated BPE merge training (Sennrich et al. 2016), shared by
+    * `bpe_merges` (wants the merge table) and `bpe_encode` (wants the
+    * encoded vocab). ONE corpus-sized shuffle collapses the corpus to
+    * the word-frequency table (the standard BPE-training trick — at
+    * 100 TB the vocab is ~1e7 rows, corpus-size-independent); every
+    * merge round after that runs on the vocab-sized cached frame.
+    * Each round is a superstep in the dedup_clusters style: a
+    * TakeOrdered 1-row argmax action picks the (count DESC, pair ASC)
+    * best pair — the documented 1-row driver-action contract, like the
+    * hot-cell guard — then the merge is applied with a left-fold over
+    * each word's symbol string ([[bpeApplyMerge]]). ONE job per round:
+    * round r's argmax action is what materializes vocab_r's cache, so
+    * the parent cache is dropped only after that action returns
+    * (dropping it earlier would recompute the whole chain; a separate
+    * eager count() per round would double the job count). Every
+    * [[BpeCheckpointEvery]] rounds a localCheckpoint replaces the
+    * persist (one extra vocab-sized job), bounding the logical-plan
+    * depth — and so per-round analysis time — by the cadence constant
+    * instead of r. `onRound` receives (round, analyzed-plan node count
+    * of the merged vocab) — the lineage probe BpeRoundsSpec pins.
+    *
+    * `applyLast = false` skips the final round's merge-apply (nobody
+    * consumes it) and unpersists everything before returning.
+    * `applyLast = true` applies ALL rounds and returns the encoded
+    * vocab still persisted but UNMATERIALIZED — its parent stays
+    * cached until the caller's first action over it; the harness
+    * clearCache sweep releases both (the Verify/Bench contract). Either
+    * way the returned vocab plans in `s`; the rounds run in a child
+    * session, so `s`'s conf is never written. */
   private[graft] def bpeTrain(s: org.apache.spark.sql.SparkSession,
       dir: String, applyLast: Boolean,
       onRound: (Int, Int) => Unit = (_, _) => ())
       : (Seq[(Long, String, Long)], org.apache.spark.sql.DataFrame) = {
-    var vocab = ProfilingQueries.widened(s, Tables(s, dir, "documents"))
+    var vocab = ProfilingQueries.widened(Tables(s, dir, "documents"))
       .select(explode(tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(trim(regexp_replace(col("word"), "(.)", "$1 ")).as("syms"),
@@ -1301,11 +1302,10 @@ object TextQueries {
     // map stage ALSO launched 32 near-empty tasks. Both widths now
     // scale with the materialized vocab row count (floor 4, one
     // partition per ~250k vocab rows — a 100 TB corpus' ~1e7-word
-    // vocab still spreads over ~40 tasks); the session default is
-    // restored in the finally below, before bpe_encode's corpus-sized
-    // join plans. The count() doubles as the eager materialization of
-    // the build cache; the loop then iterates on a re-persisted
-    // coalesced copy (coalesce is narrow — one cache pass, no shuffle).
+    // vocab still spreads over ~40 tasks). The count() doubles as the
+    // eager materialization of the build cache; the loop then iterates
+    // on a re-persisted coalesced copy (coalesce is narrow — one cache
+    // pass, no shuffle).
     val built = vocab
     val nVocab = built.count()
     val roundParts = math.min(
@@ -1314,22 +1314,19 @@ object TextQueries {
     vocab = built.coalesce(roundParts).persist()
     vocab.count()
     built.unpersist()
-    // SERIAL-EXECUTION CONTRACT (r18, advisor's ask): the save/restore
-    // of session conf below is only safe because Bench/Verify execute
-    // queries strictly sequentially on one SparkSession — a second
-    // concurrent bpeTrain (or any concurrent query on this session)
-    // would race the restore and silently reshape other queries'
-    // shuffles. Callers composing these defs concurrently must scope
-    // the loop in their own s.newSession().
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", roundParts.toString)
-    // AQE off for the loop only (restored in the finally): each round
-    // is a tiny 2-stage agg over the vocab cache with NO join and an
-    // explicitly sized width — AQE has nothing to decide, but its
-    // per-stage materialize-and-replan round-trips cost a measured
-    // 0.030 s per round (0.106 → 0.076 s/round at sf0.1, ×50 rounds).
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
+    // The loop runs in its own child session: the vocab-scaled width
+    // and AQE-off below are ITS conf, so the caller's session (and
+    // bpe_encode's corpus-sized join, planned there) keeps its own
+    // settings, and concurrent callers cannot see each other's loops.
+    // AQE is off because each round is a tiny 2-stage agg over the
+    // vocab cache with NO join and an explicitly sized width — AQE has
+    // nothing to decide, but its per-stage materialize-and-replan
+    // round-trips cost a measured 0.030 s per round (0.106 → 0.076
+    // s/round at sf0.1, ×50 rounds).
+    val loop = SessionScope.child(s)
+    loop.conf.set("spark.sql.shuffle.partitions", roundParts.toString)
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    vocab = SessionScope.rebind(loop, vocab)
     var parent: org.apache.spark.sql.DataFrame = null
     val merges = Seq.newBuilder[(Long, String, Long)]
     var ok = false
@@ -1394,10 +1391,6 @@ object TextQueries {
       }
       ok = true
     } finally {
-      // restore the session's corpus-scale shuffle width and AQE before
-      // any caller-side plan (bpe_encode's corpus join) is built or run
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
       if (!ok || !applyLast) {
         if (parent != null) parent.unpersist()
         vocab.unpersist()
@@ -1410,7 +1403,7 @@ object TextQueries {
     // testdata SF; a corpus failing this needs more rounds)
     require(rows.exists(_._2.split(' ').exists(_.length > 1)),
       s"no compounded merge in $BpeMergeRounds BPE rounds")
-    (rows, vocab)
+    (rows, SessionScope.rebind(s, vocab))
   }
 
   /** The recursive-CTE DuckDB twin of [[bpeTrain]]: `bpe` carries the

@@ -44,4 +44,28 @@ class BpeRoundsSpec extends SparkSuite {
     assert(late <= earlyChain,
       s"post-checkpoint chains must not exceed the initial chain: $probes")
   }
+
+  test("the round loop runs in its own session: the caller's AQE and shuffle width are untouched") {
+    // the loop's vocab-scaled width and AQE-off live on a child
+    // session; the caller's width is set apart from the loop's floor
+    // of 4 so a leaked setting shows
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val keep = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try {
+      val caller = keys.map(spark.conf.get)
+      val seen = scala.collection.mutable.Set.empty[Seq[String]]
+      val (_, vocab) = TextQueries.bpeTrain(spark, "/root/testdata/sf0.001",
+        applyLast = true, onRound = (_, _) => seen += keys.map(spark.conf.get))
+      assert(seen == Set(caller), s"caller conf inside the loop: $seen, expected $caller")
+      assert(keys.map(spark.conf.get) == caller)
+      assert(vocab.sparkSession eq spark, "the returned vocab must plan in the caller's session")
+    } finally {
+      keep.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      spark.catalog.clearCache()
+    }
+  }
 }

@@ -1107,4 +1107,61 @@ class PlanAuditSpec extends SparkSuite {
       .filter(_.contains("hashpartitioning")).mkString("\n")
     assert(!afterFirstExchange.contains("embedding"), afterFirstExchange)
   }
+
+  test("width rule: a narrow documents scan gains exactly one pinned REPARTITION_BY_NUM exchange") {
+    import graft.queries.ProfilingQueries.{isNarrow, widened}
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    assert(isNarrow(docs))
+    val p = plan(widened(docs))
+    val dp = spark.sparkContext.defaultParallelism
+    assert("(?m)^\\(\\d+\\) Exchange".r.findAllIn(p).size == 1, p)
+    assert(s"hashpartitioning\\(doc_id#\\d+L, $dp\\), REPARTITION_BY_NUM".r
+      .findAllIn(p).size == 1, p)
+  }
+
+  test("width rule: a frame sized at the threshold is left unchanged, one row less is spread") {
+    // Catalyst sizes spark.range(n) at 8n bytes; the threshold is
+    // defaultParallelism × openCostInBytes — the no-op-at-scale side
+    // of the rule and its exact boundary
+    import graft.queries.ProfilingQueries.{isNarrow, widened}
+    val dp = spark.sparkContext.defaultParallelism
+    val openCost = spark.range(1).queryExecution.sparkSession
+      .sessionState.conf.filesOpenCostInBytes
+    val n = dp * openCost / 8
+    val at = spark.range(n).toDF()
+    assert(!isNarrow(at))
+    val p = plan(widened(at, col("id")))
+    assert(!p.contains("Exchange"), p)
+    val below = spark.range(n - 1).toDF()
+    assert(isNarrow(below))
+    val q = plan(widened(below, col("id")))
+    assert(s"hashpartitioning\\(id#\\d+L, $dp\\), REPARTITION_BY_NUM".r
+      .findAllIn(q).size == 1, q)
+  }
+
+  test("verify exchange: the candidates' doc_a spread is the doc_a join's own exchange, not a second") {
+    // With broadcasts off the a-side verify join is a shuffle join on
+    // doc_a; the widened candidates are already hash-partitioned on
+    // doc_a at the join's width, so the planner must reuse that
+    // exchange instead of stacking a second one on top of it
+    import graft.queries.DedupQueries
+    val keep = Seq("spark.sql.autoBroadcastJoinThreshold")
+      .map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val sh = DedupQueries.shingleSet(spark, dir,
+        maxDfFrac = Some(DedupQueries.DriverMaxDfFrac))
+      val p = plan(DedupQueries.jaccardPairs(sh, Some(DedupQueries.lshCandidates(sh))))
+      assert(p.contains("SortMergeJoin"), p)
+      val docA = "hashpartitioning\\(doc_a#\\d+L, \\d+\\), (\\w+)".r
+        .findAllMatchIn(p).map(_.group(1)).toSeq
+      assert(docA == Seq("REPARTITION_BY_NUM"), p)
+    } finally {
+      keep.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      spark.catalog.clearCache()
+    }
+  }
 }
