@@ -1067,10 +1067,7 @@ object DedupQueries {
     QueryDef("dedup_semantic",
       (s, dir) => {
         val (assigned, drops, _) = semanticDropsFrozen(s, dir, tau = 0.4)
-        assigned
-          .join(drops, Seq("vec_id"), "left_anti")
-          .select(col("vec_id"), col("c_id"))
-          .withColumn("kept", lit(1L))
+        semanticKept(assigned, drops)
       },
       Some(semanticOracleSql(CellTargetRows))),
 
@@ -1090,10 +1087,7 @@ object DedupQueries {
           targetRows = GrowthProbeTargetRows)
         require(k > 8,
           s"dedup_semantic_k must exercise the k-growth branch, got floor k=$k")
-        assigned
-          .join(drops, Seq("vec_id"), "left_anti")
-          .select(col("vec_id"), col("c_id"))
-          .withColumn("kept", lit(1L))
+        semanticKept(assigned, drops)
       },
       Some(semanticOracleSql(GrowthProbeTargetRows))),
 
@@ -1136,24 +1130,8 @@ object DedupQueries {
         // shape for iterative ML (guide §5: reused AND expensive).
         val reps = quantizedReps(s, dir).persist()
         reps.count()
-        val cents = graft.operators.KMeans.train(reps, TrainedK, TrainedIters)
-        // eager count: the persist has THREE consumers (both self-join
-        // sides + the anti-join left) that otherwise race to populate
-        // the cache under AQE (the shingleSet contract)
-        val assigned = graft.operators.KMeans.assign(reps, cents)
-          .withColumn("nrm", sqrt(dotFast(col("embedding"), col("embedding"))))
-          .persist()
-        assigned.count()
-        val drops = assigned.as("a").join(assigned.as("b"),
-            col("a.c_id") === col("b.c_id") && col("a.vec_id") > col("b.vec_id"))
-          .filter(cosineFast(col("a.embedding"), col("b.embedding"),
-            col("a.nrm"), col("b.nrm")) >= 0.4)
-          .select(col("a.vec_id").as("vec_id"))
-          .distinct()
-        assigned
-          .join(drops, Seq("vec_id"), "left_anti")
-          .select(col("vec_id"), col("c_id"))
-          .withColumn("kept", lit(1L))
+        val assigned = trainedCells(reps, TrainedK, TrainedIters)
+        semanticKept(assigned, withinCellDrops(assigned, 0.4))
       },
       Some(trainedOracleSql)),
 
@@ -1179,18 +1157,13 @@ object DedupQueries {
           .withColumn("is_batch", col("vec_id") * 10 >= (col("mx") + 1) * 9)
         val batch = tagged.filter(col("is_batch"))
         val corpus = tagged.filter(!col("is_batch"))
-        val cosAB = cosineFast(col("a.embedding"), col("b.embedding"),
-          col("a.nrm"), col("b.nrm"))
         val vsCorpus = batch.as("a").join(corpus.as("b"),
             col("a.c_id") === col("b.c_id"))
-          .filter(cosAB >= 0.4)
+          .filter(cosineFast(col("a.embedding"), col("b.embedding"),
+            col("a.nrm"), col("b.nrm")) >= 0.4)
           .select(col("a.vec_id").as("vec_id")).distinct()
           .withColumn("dc", lit(1L))
-        val inBatch = batch.as("a").join(batch.as("b"),
-            col("a.c_id") === col("b.c_id") && col("a.vec_id") > col("b.vec_id"))
-          .filter(cosAB >= 0.4)
-          .select(col("a.vec_id").as("vec_id")).distinct()
-          .withColumn("db", lit(1L))
+        val inBatch = withinCellDrops(batch, 0.4).withColumn("db", lit(1L))
         batch.select(col("vec_id"), col("c_id"))
           .join(vsCorpus, Seq("vec_id"), "left_outer")
           .join(inBatch, Seq("vec_id"), "left_outer")
@@ -2128,11 +2101,7 @@ object DedupQueries {
     * constant that happens to match at one scale factor. */
   private def semanticOracleSql(targetRows: Long): String =
     s"""${frozenCellsCteSql(targetRows)},
-       |drops AS (
-       |  SELECT DISTINCT a.vec_id
-       |  FROM cells a JOIN cells b
-       |    ON a.c_id = b.c_id AND a.vec_id > b.vec_id
-       |  WHERE ${cosineSql("a.embedding", "b.embedding")} >= 0.4)
+       |${withinCellDropsSql("cells")}
        |SELECT c.vec_id, c.c_id, CAST(1 AS BIGINT) AS kept
        |FROM cells c
        |WHERE NOT EXISTS (SELECT 1 FROM drops d WHERE d.vec_id = c.vec_id)""".stripMargin
@@ -2223,11 +2192,7 @@ object DedupQueries {
        |      row_number() OVER (PARTITION BY r.vec_id
        |        ORDER BY ${d2Sql("r.embedding", "c.c_emb")}, c.c_id) AS rk
        |    FROM reps r CROSS JOIN c2 c) WHERE rk = 1),
-       |drops AS (
-       |  SELECT DISTINCT a.vec_id
-       |  FROM af a JOIN af b
-       |    ON a.c_id = b.c_id AND a.vec_id > b.vec_id
-       |  WHERE ${cosineSql("a.embedding", "b.embedding")} >= 0.4)
+       |${withinCellDropsSql("af")}
        |SELECT f.vec_id, f.c_id, CAST(1 AS BIGINT) AS kept
        |FROM af f
        |WHERE NOT EXISTS (SELECT 1 FROM drops d WHERE d.vec_id = f.vec_id)""".stripMargin
@@ -2243,12 +2208,28 @@ object DedupQueries {
        |cents AS (
        |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings
        |  WHERE vec_id < (SELECT k FROM p)),
-       |assign AS (
+       |assign AS $centroidRanksSql,
+       |cells AS (SELECT vec_id, embedding, c_id FROM assign WHERE rk = 1)""".stripMargin
+
+  /** DuckDB twin of [[centroidRanks]] over the whole `embeddings` table
+    * against a `cents(c_id, c_emb)` CTE: the parenthesized body of the
+    * ranking CTE (vec_id, embedding, c_id, rk) the IVF oracles and
+    * [[frozenCellsCteSql]] share. A def (defs-init-order contract). */
+  private[queries] def centroidRanksSql: String =
+    s"""(
        |  SELECT vec_id, embedding, c_id,
        |    row_number() OVER (PARTITION BY vec_id
        |      ORDER BY ${cosineSql("e.embedding", "c_emb")} DESC, c_id) AS rk
-       |  FROM embeddings e CROSS JOIN cents),
-       |cells AS (SELECT vec_id, embedding, c_id FROM assign WHERE rk = 1)""".stripMargin
+       |  FROM embeddings e CROSS JOIN cents)""".stripMargin
+
+  /** DuckDB twin of [[withinCellDrops]] at τ = 0.4 over the cell table
+    * `cells(vec_id, embedding, c_id)`: the `drops` CTE. */
+  private def withinCellDropsSql(cells: String): String =
+    s"""drops AS (
+       |  SELECT DISTINCT a.vec_id
+       |  FROM $cells a JOIN $cells b
+       |    ON a.c_id = b.c_id AND a.vec_id > b.vec_id
+       |  WHERE ${cosineSql("a.embedding", "b.embedding")} >= 0.4)""".stripMargin
 
   /** SemDeDup cell-count sizing: one k-means cell per ~256 KiB of
     * embedding input (≈1024 64-dim float32 vectors), floor 8, capped at
@@ -2310,14 +2291,57 @@ object DedupQueries {
       tau: Double, targetRows: Long = CellTargetRows)
       : (DataFrame, DataFrame, Int) = {
     val (assigned, k) = frozenCells(s, dir, targetRows)
-    val drops = assigned.as("a").join(assigned.as("b"),
+    (assigned, withinCellDrops(assigned, tau), k)
+  }
+
+  /** The within-cell prune every SemDeDup path shares: the vec_ids of
+    * `assigned` (vec_id, embedding, nrm, c_id) with a lower-id cell-mate
+    * at cosine ≥ `tau`, distinct. The self-join is keyed on c_id, so
+    * its cost is Σ|cell|², never all-pairs. [[withinCellDropsSql]] is
+    * the DuckDB twin. */
+  private[graft] def withinCellDrops(assigned: DataFrame, tau: Double): DataFrame =
+    assigned.as("a").join(assigned.as("b"),
         col("a.c_id") === col("b.c_id") && col("a.vec_id") > col("b.vec_id"))
       .filter(cosineFast(col("a.embedding"), col("b.embedding"),
         col("a.nrm"), col("b.nrm")) >= tau)
       .select(col("a.vec_id").as("vec_id"))
       .distinct()
-    (assigned, drops, k)
-  }
+
+  /** SemDeDup's result rows: every assigned vector the prune did not
+    * drop, with its cell and `kept = 1`. */
+  private def semanticKept(assigned: DataFrame, drops: DataFrame): DataFrame =
+    assigned
+      .join(drops, Seq("vec_id"), "left_anti")
+      .select(col("vec_id"), col("c_id"))
+      .withColumn("kept", lit(1L))
+
+  /** The first `k` vectors of `corpus` (vec_id, embedding, nrm) as
+    * (c_id, c_emb, c_nrm) centroids — the exact stand-in the IVF and
+    * frozen SemDeDup queries share, so DuckDB reproduces every
+    * assignment bit for bit. */
+  private[queries] def centroids(corpus: DataFrame, k: Int): DataFrame =
+    corpus.filter(col("vec_id") < k)
+      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
+        col("nrm").as("c_nrm"))
+
+  /** Every vector of `v` (vec_id, embedding, nrm) scored against every
+    * broadcast centroid of `cents`: one row per (vector, c_id) with its
+    * cosine `cos_c`. */
+  private def centroidCosines(v: DataFrame, cents: DataFrame): DataFrame =
+    v.crossJoin(broadcast(cents))
+      .withColumn("cos_c",
+        cosineFast(col("embedding"), col("c_emb"), col("nrm"), col("c_nrm")))
+
+  /** Centroid ranking: [[centroidCosines]] numbered `rk` per vector by
+    * cosine desc with a c_id tiebreak — `rk = 1` is the vector's cell,
+    * `rk <= n` its n-probe list. The window partitions by vec_id, so one
+    * vector's ranking never depends on another's: a query set ranks its
+    * own |Q|×k rows rather than filtering the corpus-wide ranking.
+    * [[centroidRanksSql]] is the DuckDB twin. */
+  private[queries] def centroidRanks(v: DataFrame, cents: DataFrame): DataFrame =
+    centroidCosines(v, cents)
+      .withColumn("rk", row_number().over(Window.partitionBy(col("vec_id"))
+        .orderBy(col("cos_c").desc, col("c_id"))))
 
   /** The frozen-centroid cell assignment shared by the SemDeDup prune
     * ([[semanticDropsFrozen]]) and the k-NN graph build
@@ -2337,12 +2361,7 @@ object DedupQueries {
     require(rows > 0, s"semantic dedup: embeddings table at $dir is empty")
     val k = cellCountRows(rows, targetRows)
     val e = emb.withColumn("nrm", sqrt(dotFast(col("embedding"), col("embedding"))))
-    val cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .withColumn("cos_c",
-        cosineFast(col("embedding"), col("c_emb"), col("nrm"), col("c_nrm")))
+    val assigned = centroidCosines(e, centroids(e, k))
       .groupBy(col("vec_id"))
       .agg(
         min_by(col("c_id"), struct((-col("cos_c")).as("nc"), col("c_id"))).as("c_id"),
@@ -2374,23 +2393,27 @@ object DedupQueries {
 
   /** Shared machinery for the TRAINED SemDeDup path and its brute-force test:
     * returns (assigned = vec_id→cell, drops = vec_ids with a lower-id
-    * cell-mate at cosine ≥ tau). `assigned` is persisted — it feeds
-    * both self-join sides and the final anti-join; the caller's
-    * clearCache sweep releases it (Bench/Verify contract). */
+    * cell-mate at cosine ≥ tau), `assigned` from [[trainedCells]]. */
   private[graft] def semanticDrops(s: SparkSession, dir: String,
       k: Int, iters: Int, tau: Double): (DataFrame, DataFrame) = {
-    val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val cents = graft.operators.KMeans.train(emb, k, iters)
-    val assigned = graft.operators.KMeans.assign(emb, cents)
+    val assigned = trainedCells(
+      Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")), k, iters)
+    (assigned, withinCellDrops(assigned, tau))
+  }
+
+  /** Trained-centroid cells: `k` Lloyd centroids over `emb` (vec_id,
+    * embedding), every vector assigned and normed, persisted and eagerly
+    * counted. The persist has three consumers (both prune self-join
+    * sides and the kept anti-join) that would otherwise race to fill
+    * the cache under AQE (the shingleSet contract); the caller's
+    * clearCache sweep releases it (Bench/Verify contract). */
+  private def trainedCells(emb: DataFrame, k: Int, iters: Int): DataFrame = {
+    val assigned = graft.operators.KMeans
+      .assign(emb, graft.operators.KMeans.train(emb, k, iters))
       .withColumn("nrm", sqrt(dotFast(col("embedding"), col("embedding"))))
       .persist()
-    val drops = assigned.as("a").join(assigned.as("b"),
-        col("a.c_id") === col("b.c_id") && col("a.vec_id") > col("b.vec_id"))
-      .filter(cosineFast(col("a.embedding"), col("b.embedding"),
-        col("a.nrm"), col("b.nrm")) >= tau)
-      .select(col("a.vec_id").as("vec_id"))
-      .distinct()
-    (assigned, drops)
+    assigned.count()
+    assigned
   }
 
   private lazy val queriesByName: Map[String, (SparkSession, String) => DataFrame] =

@@ -2,24 +2,34 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.queries.DedupQueries.{centroidRanks, centroidRanksSql, centroids}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor search over the `embeddings` table
-  * (`embedding: array<float>`).
+/** Vector queries over the `embeddings` table (`embedding:
+  * array<float>`): nearest-neighbor search, its recall audits, and the
+  * embedding-space statistics and graphs built beside it.
   *
-  * Two strategies:
-  *  - brute force: query-set × corpus cross join, exact cosine, window
-  *    top-k. Exact; cost = |Q|·|C|. The right answer when |Q| is small
-  *    (the broadcast side) — at 100 TB the corpus scan is
-  *    embarrassingly parallel and the top-k is a per-partition heap
-  *    (Spark's WindowExec after a hash partition on q_id).
-  *  - sign-LSH buckets: an 8-bit random-hyperplane signature (here: the
-  *    signs of the first 8 dimensions — deterministic, and for unit-ish
-  *    random embeddings equivalent to 8 fixed axis-aligned hyperplanes).
-  *    Bucket join reduces candidates ~256×; recall trades off with
-  *    bucket count. The IVF analog: signature = coarse quantizer cell.
+  *  - exact and approximate search: brute force (`ann_bruteforce`, the
+  *    shared ground truth), sign-LSH buckets (`ann_lsh`), IVF cells with
+  *    1 or [[NProbe]] probes (`ann_ivf`, `ann_ivf_nprobe`), PQ/ADC and
+  *    IVF-PQ (`ann_pq`, `ann_ivfpq`), SQ8, binary and Matryoshka tiers
+  *    (`ann_sq8`, `ann_binary`, `ann_adaptive`), hybrid RRF and MMR.
+  *  - recall audits: `ann_recall_eval`, `ann_sq8`, `ann_binary`,
+  *    `ann_adaptive`, `embedding_matryoshka`, each against the one
+  *    [[bruteTopK]] truth.
+  *  - embedding statistics: per-dim moments, health, Gram/PCA/ABTT,
+  *    quantization error, class separation.
+  *  - k-NN graphs over frozen cells: edges, hubness, multi-probe,
+  *    PageRank, triangles; and bitext margin mining.
+  *
+  * The search queries are built from a few shared stages: centroid
+  * ranking ([[DedupQueries.centroidRanks]]), the cosine top-k
+  * ([[cosineTopK]]) and the recall fold ([[recallAtK]]), each with its
+  * DuckDB twin. The query side (|Q| = [[NQueries]]) is the broadcast
+  * side, the corpus streams, and every top-k window pre-trims per
+  * partition before its exchange.
   *
   * Cosine arithmetic is the strict left fold from
   * [[graft.functions.TextFunctions]] so DuckDB oracles match exactly.
@@ -82,44 +92,25 @@ object SimilarityQueries {
     // nprobe rows) is the broadcast build side of the cell join.
     QueryDef("ann_ivf_nprobe",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"),
-            sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
-        val cents = e.filter(col("vec_id") < NCentroids)
-          .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-            col("nrm").as("c_nrm"))
-        val aw = Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos_c").desc, col("c_id"))
         // same single-corpus-pass structure as ann_ivf: the probe list
         // ranks only the |Q| query vectors against the centroids, so
         // the corpus-wide assignment feeds the join exactly once
-        def assignRanked(v: org.apache.spark.sql.DataFrame) =
-          v.crossJoin(broadcast(cents))
-            .withColumn("cos_c",
-              cosineFast(col("embedding"), col("c_emb"), col("nrm"), col("c_nrm")))
-            .withColumn("rk", row_number().over(aw))
-        val cells = assignRanked(e).filter(col("rk") === 1)
+        val e = vecs(s, dir)
+        val cents = centroids(e, NCentroids)
+        val cells = centroidRanks(e, cents).filter(col("rk") === 1)
           .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id").as("cell"))
-        val probes = assignRanked(e.filter(col("vec_id") < NQueries))
+        val probes = centroidRanks(e.filter(col("vec_id") < NQueries), cents)
           .filter(col("rk") <= NProbe)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
             col("nrm").as("q_nrm"), col("c_id").as("cell"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-        broadcast(probes).join(cells.as("c"),
-            probes("cell") === col("c.cell") && col("q_id") =!= col("c.vec_id"))
-          .select(col("q_id"), col("c.vec_id").as("n_id"),
-            cosineFast(col("q_emb"), col("c.embedding"),
-              col("q_nrm"), col("c.nrm")).as("cos"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
+        cosineTopK(broadcast(probes).join(cells.as("c"),
+            probes("cell") === col("c.cell") && col("q_id") =!= col("c.vec_id")),
+          col("q_id"), col("c.vec_id").as("n_id"),
+          cosineFast(col("q_emb"), col("c.embedding"), col("q_nrm"), col("c.nrm")), TopK)
       },
       Some(s"""WITH cents AS (
               |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings WHERE vec_id < $NCentroids),
-              |ranked AS (
-              |  SELECT vec_id, embedding, c_id,
-              |    row_number() OVER (PARTITION BY vec_id
-              |      ORDER BY ${cosineSql("e.embedding", "c_emb")} DESC, c_id) AS rk
-              |  FROM embeddings e CROSS JOIN cents),
+              |ranked AS $centroidRanksSql,
               |cells AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rk = 1),
               |probes AS (
               |  SELECT vec_id AS q_id, embedding AS q_emb, c_id AS cell
@@ -177,22 +168,11 @@ object SimilarityQueries {
     // same order-insensitive conditional sums as ann_pq.
     QueryDef("ann_ivfpq",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"),
-            sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
-        val cents = e.filter(col("vec_id") < NCentroids)
-          .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-            col("nrm").as("c_nrm"))
-        val aw = Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos_c").desc, col("c_id"))
-        def assignRanked(v: DataFrame) =
-          v.crossJoin(broadcast(cents))
-            .withColumn("cos_c",
-              cosineFast(col("embedding"), col("c_emb"), col("nrm"), col("c_nrm")))
-            .withColumn("rk", row_number().over(aw))
-        val cells = assignRanked(e).filter(col("rk") === 1)
+        val e = vecs(s, dir)
+        val cents = centroids(e, NCentroids)
+        val cells = centroidRanks(e, cents).filter(col("rk") === 1)
           .select(col("vec_id"), col("c_id").as("cell"))
-        val probes = assignRanked(e.filter(col("vec_id") < NQueries))
+        val probes = centroidRanks(e.filter(col("vec_id") < NQueries), cents)
           .filter(col("rk") <= NProbe)
           .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
         val cand = probes.join(cells, Seq("cell"))
@@ -256,31 +236,10 @@ object SimilarityQueries {
     // intersection is a semi join on (q_id, n_id) and the rollup is
     // |anchors| rows.
     QueryDef("ann_recall_eval",
-      (s, dir) => {
-        val truth = bruteTopK(s, dir).select(col("q_id"), col("n_id"))
-        val got = ivfTopK(s, dir).select(col("q_id"), col("n_id"))
-        val h = truth.join(got, Seq("q_id", "n_id"), "left_semi")
-          .groupBy(col("q_id")).agg(count(lit(1)).as("k_found"))
-        val k = truth.groupBy(col("q_id")).agg(count(lit(1)).as("k_true"))
-        k.join(h, Seq("q_id"), "left_outer")
-          .select(col("q_id"), col("k_true"),
-            coalesce(col("k_found"), lit(0L)).as("k_found"),
-            QueryDef.microPoints(
-              coalesce(col("k_found"), lit(0L)).cast("double") /
-                col("k_true").cast("double")).as("recall_micro"))
-      },
+      (s, dir) => recallAtK(bruteTopK(s, dir), ivfTopK(s, dir)),
       Some(s"""WITH $ivfCellsCteSql,
               |got AS (SELECT q_id, n_id FROM ($ivfTopKSql) gv),
-              |truth AS (SELECT q_id, n_id FROM ($bruteTopKSql) tv),
-              |h AS (
-              |  SELECT t.q_id, COUNT(*) AS k_found
-              |  FROM truth t JOIN got g ON t.q_id = g.q_id AND t.n_id = g.n_id
-              |  GROUP BY 1),
-              |k AS (SELECT q_id, COUNT(*) AS k_true FROM truth GROUP BY 1)
-              |SELECT k.q_id, k.k_true, COALESCE(h.k_found, 0) AS k_found,
-              |  ${QueryDef.microPointsSql(
-                   "CAST(COALESCE(h.k_found, 0) AS DOUBLE) / CAST(k.k_true AS DOUBLE)")} AS recall_micro
-              |FROM k LEFT JOIN h USING (q_id)""".stripMargin)),
+              |$recallAtKSql""".stripMargin)),
 
     // NEGATIVE sampling for contrastive training (InfoNCE/triplet
     // mining): per anchor, [[NNeg]] deterministic uniform negatives
@@ -303,9 +262,7 @@ object SimilarityQueries {
     // scan, no cos arithmetic at all.
     QueryDef("negative_sample",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"),
-            sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
+        val e = vecs(s, dir)
         val q = e.filter(col("vec_id") < NQueries)
         val wPos = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
         val wNeg = Window.partitionBy(col("q_id")).orderBy(col("h"), col("n_id"))
@@ -626,27 +583,16 @@ object SimilarityQueries {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"), sigCol.as("bucket"),
             sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
-        val q = e.filter(col("vec_id") < NQueries)
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-        broadcast(q.as("q")).join(e.as("c"),
-            col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id"))
-          .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
-            col("q.bucket").as("bucket"),
-            cosineFast(col("q.embedding"), col("c.embedding"),
-              col("q.nrm"), col("c.nrm")).as("cos"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
+        cosineTopK(broadcast(e.filter(col("vec_id") < NQueries).as("q")).join(e.as("c"),
+            col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id")),
+          col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
+          cosineFast(col("q.embedding"), col("c.embedding"), col("q.nrm"), col("c.nrm")),
+          TopK, col("q.bucket").as("bucket"))
       },
       Some(s"""WITH sig AS (
               |  SELECT vec_id, embedding, CAST($sigSql AS BIGINT) AS bucket FROM embeddings)
-              |SELECT * FROM (
-              |  SELECT q.vec_id AS q_id, c.vec_id AS n_id, q.bucket AS bucket,
-              |    ${cosineSql("q.embedding", "c.embedding")} AS cos,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${cosineSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS rank
-              |  FROM sig q JOIN sig c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-              |  WHERE q.vec_id < $NQueries) t
-              |WHERE rank <= $TopK""".stripMargin)),
+              |${queryTopKSql("sig q JOIN sig c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id",
+                   "q.bucket AS bucket")}""".stripMargin)),
 
     // hybrid dense+sparse retrieval with reciprocal-rank fusion
     // (Cormack, Clarke & Buettcher, SIGIR 2009), query-by-example: for
@@ -670,9 +616,7 @@ object SimilarityQueries {
     QueryDef("hybrid_search",
       (s, dir) => {
         // dense leg: exact cosine, query side broadcast
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"),
-            sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
+        val e = vecs(s, dir)
         val qd = e.filter(col("vec_id") < NQueries)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
             col("nrm").as("q_nrm"))
@@ -787,9 +731,7 @@ object SimilarityQueries {
     QueryDef("mmr_rerank",
       (s, dir) => {
         import s.implicits._
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"),
-            sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
+        val e = vecs(s, dir)
         val qs = e.filter(col("vec_id") < NQueries)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
             col("nrm").as("q_nrm"))
@@ -804,7 +746,7 @@ object SimilarityQueries {
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"), col("embedding"),
             col("nrm"),
-            microPoints(cosineFast(col("embedding"), col("q_emb"),
+            QueryDef.microPoints(cosineFast(col("embedding"), col("q_emb"),
               col("nrm"), col("q_nrm"))).as("rel_u"))
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= MmrCandK)
@@ -821,7 +763,7 @@ object SimilarityQueries {
             col("a.q_id") === col("b.q_id") && col("a.n_id") =!= col("b.n_id"))
           .select(col("a.q_id").as("q_id"), col("a.n_id").as("i"),
             col("a.rel_u").as("rel_u"), col("b.n_id").as("j"),
-            microPoints(cosineFast(col("a.embedding"), col("b.embedding"),
+            QueryDef.microPoints(cosineFast(col("a.embedding"), col("b.embedding"),
               col("a.nrm"), col("b.nrm"))).as("sim_u"))
           .unionByName(markers)
           .as[(Long, Long, Long, Long, Long)]
@@ -864,15 +806,15 @@ object SimilarityQueries {
         s"""WITH RECURSIVE cand AS (
            |  SELECT q_id, n_id, rel_u FROM (
            |    SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-           |      ${microSql(cosineSql("q.embedding", "c.embedding"))} AS rel_u,
+           |      ${QueryDef.microPointsSql(cosineSql("q.embedding", "c.embedding"))} AS rel_u,
            |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY ${microSql(cosineSql("q.embedding", "c.embedding"))} DESC, c.vec_id) AS rk
+           |        ORDER BY ${QueryDef.microPointsSql(cosineSql("q.embedding", "c.embedding"))} DESC, c.vec_id) AS rk
            |    FROM embeddings q JOIN embeddings c
            |      ON q.vec_id < $NQueries AND q.vec_id <> c.vec_id) t
            |  WHERE rk <= $MmrCandK),
            |sims AS (
            |  SELECT a.q_id, a.n_id AS i, b.n_id AS j,
-           |    ${microSql(cosineSql("ea.embedding", "eb.embedding"))} AS sim_u
+           |    ${QueryDef.microPointsSql(cosineSql("ea.embedding", "eb.embedding"))} AS sim_u
            |  FROM cand a JOIN cand b ON a.q_id = b.q_id AND a.n_id <> b.n_id
            |  JOIN embeddings ea ON ea.vec_id = a.n_id
            |  JOIN embeddings eb ON eb.vec_id = b.n_id),
@@ -978,28 +920,16 @@ object SimilarityQueries {
     QueryDef("knn_graph_nprobe",
       (s, dir) => {
         val (cells, k) = DedupQueries.frozenCells(s, dir)
-        val cents = cells.filter(col("vec_id") < k)
-          .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-            col("nrm").as("c_nrm"))
-        val aw = Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos_c").desc, col("c_id"))
-        val probes = cells
-          .select(col("vec_id"), col("embedding"), col("nrm"))
-          .crossJoin(broadcast(cents))
-          .withColumn("cos_c",
-            cosineFast(col("embedding"), col("c_emb"), col("nrm"), col("c_nrm")))
-          .withColumn("rk", row_number().over(aw))
+        val probes = centroidRanks(cells.select(col("vec_id"), col("embedding"), col("nrm")),
+            centroids(cells, k))
           .filter(col("rk") <= GraphNProbe)
           .select(col("vec_id").as("src"), col("embedding").as("s_emb"),
             col("nrm").as("s_nrm"), col("c_id").as("cell"))
-        val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
-        probes.join(cells.as("b"),
-            col("cell") === col("b.c_id") && col("src") =!= col("b.vec_id"))
-          .select(col("src"), col("b.vec_id").as("dst"),
-            cosineFast(col("s_emb"), col("b.embedding"),
-              col("s_nrm"), col("b.nrm")).as("cos"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= KnnGraphK)
+        cosineTopK(probes.join(cells.as("b"),
+            col("cell") === col("b.c_id") && col("src") =!= col("b.vec_id")),
+          col("src"), col("b.vec_id").as("dst"),
+          cosineFast(col("s_emb"), col("b.embedding"), col("s_nrm"), col("b.nrm")),
+          KnnGraphK)
       },
       Some(s"""${DedupQueries.frozenCellsCteSql(DedupQueries.CellTargetRows)},
               |probes AS (
@@ -1147,25 +1077,11 @@ object SimilarityQueries {
                 .otherwise(floor((x - mn) * (lit(255.0) / (mx - mn)) + lit(0.5)))
               mn + qv * ((mx - mn) / lit(255.0))
             }).as("dq"))
-        val q = dq.filter(col("vec_id") < NQueries)
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-        val got = broadcast(q.as("q")).join(dq.as("c"),
-            col("q.vec_id") =!= col("c.vec_id"))
-          .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
-            cosine(col("q.dq"), col("c.dq")).as("cos"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
-          .select(col("q_id"), col("n_id"))
-        val truth = bruteTopK(s, dir).select(col("q_id"), col("n_id"))
-        val h = truth.join(got, Seq("q_id", "n_id"), "left_semi")
-          .groupBy(col("q_id")).agg(count(lit(1)).as("k_found"))
-        val k = truth.groupBy(col("q_id")).agg(count(lit(1)).as("k_true"))
-        k.join(h, Seq("q_id"), "left_outer")
-          .select(col("q_id"), col("k_true"),
-            coalesce(col("k_found"), lit(0L)).as("k_found"),
-            QueryDef.microPoints(
-              coalesce(col("k_found"), lit(0L)).cast("double") /
-                col("k_true").cast("double")).as("recall_micro"))
+        val got = cosineTopK(broadcast(dq.filter(col("vec_id") < NQueries).as("q"))
+            .join(dq.as("c"), col("q.vec_id") =!= col("c.vec_id")),
+          col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
+          cosine(col("q.dq"), col("c.dq")), TopK)
+        recallAtK(bruteTopK(s, dir), got)
       },
       Some {
         val cosDq = graft.functions.TextFunctions.cosineSql("q.dq", "c.dq")
@@ -1191,16 +1107,7 @@ object SimilarityQueries {
            |      row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
            |    FROM scored) t
            |  WHERE rank <= $TopK),
-           |truth AS (SELECT q_id, n_id FROM ($bruteTopKSql) tv),
-           |h AS (
-           |  SELECT t.q_id, COUNT(*) AS k_found
-           |  FROM truth t JOIN got g ON t.q_id = g.q_id AND t.n_id = g.n_id
-           |  GROUP BY 1),
-           |k AS (SELECT q_id, COUNT(*) AS k_true FROM truth GROUP BY 1)
-           |SELECT k.q_id, k.k_true, COALESCE(h.k_found, 0) AS k_found,
-           |  ${QueryDef.microPointsSql(
-              "CAST(COALESCE(h.k_found, 0) AS DOUBLE) / CAST(k.k_true AS DOUBLE)")} AS recall_micro
-           |FROM k LEFT JOIN h USING (q_id)""".stripMargin
+           |$recallAtKSql""".stripMargin
       }),
 
     // BINARY (sign-bit) quantized ANN + exact rerank — the 1-bit/dim
@@ -1408,7 +1315,7 @@ object SimilarityQueries {
         val wA = Window.partitionBy(col("a_id")).orderBy(col("c").desc, col("b_id"))
         val topA = broadcast(anchors.as("a")).join(sideB.as("b"), lit(true))
           .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
-            microPoints(cosineFast(col("a.embedding"), col("b.embedding"),
+            QueryDef.microPoints(cosineFast(col("a.embedding"), col("b.embedding"),
               col("a.nrm"), col("b.nrm"))).as("c"))
           .withColumn("rk", row_number().over(wA))
           .filter(col("rk") <= K)
@@ -1421,7 +1328,7 @@ object SimilarityQueries {
         val bAgg = broadcast(sideB.join(bSet, Seq("vec_id")).as("bb"))
           .join(sideA.as("a2"), lit(true))
           .select(col("bb.vec_id").as("bb_id"), col("a2.vec_id").as("a2_id"),
-            microPoints(cosineFast(col("bb.embedding"), col("a2.embedding"),
+            QueryDef.microPoints(cosineFast(col("bb.embedding"), col("a2.embedding"),
               col("bb.nrm"), col("a2.nrm"))).as("c"))
           .withColumn("rk", row_number().over(wB))
           .filter(col("rk") <= K)
@@ -1429,7 +1336,7 @@ object SimilarityQueries {
         aAgg.join(bAgg, col("b_id") === col("bb_id"))
           .withColumn("margin_micro",
             when(col("s_a") + col("s_b") > 0,
-              microPoints(col("c_best") * lit(2.0 * K) / (col("s_a") + col("s_b")))))
+              QueryDef.microPoints(col("c_best") * lit(2.0 * K) / (col("s_a") + col("s_b")))))
           .select(col("a_id"), col("b_id"), col("c_best"), col("margin_micro"),
             when(col("margin_micro") > MarginAcceptMicro, 1L).otherwise(0L).as("accepted"))
       },
@@ -1662,26 +1569,46 @@ object SimilarityQueries {
     val e = vecs(s, dir)
     val qv = broadcast(e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qv_id"), col("embedding").as("qe"), col("nrm").as("qn")))
-    val wCos = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    val got = cand
-      .join(e.as("cv"), col("n_id") === col("cv.vec_id"))
-      .join(qv, col("q_id") === col("qv_id"))
-      .select(col("q_id"), col("n_id"),
-        cosineFast(col("qe"), col("cv.embedding"), col("qn"), col("cv.nrm")).as("cos"))
-      .withColumn("rank", row_number().over(wCos).cast("long"))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("n_id"))
-    val truth = bruteTopK(s, dir).select(col("q_id"), col("n_id"))
-    val h = truth.join(got, Seq("q_id", "n_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("k_found"))
-    val k = truth.groupBy(col("q_id")).agg(count(lit(1)).as("k_true"))
-    k.join(h, Seq("q_id"), "left_outer")
-      .select(col("q_id"), col("k_true"),
-        coalesce(col("k_found"), lit(0L)).as("k_found"),
-        QueryDef.microPoints(
-          coalesce(col("k_found"), lit(0L)).cast("double") /
-            col("k_true").cast("double")).as("recall_micro"))
+    val got = cosineTopK(cand
+        .join(e.as("cv"), col("n_id") === col("cv.vec_id"))
+        .join(qv, col("q_id") === col("qv_id")),
+      col("q_id"), col("n_id"),
+      cosineFast(col("qe"), col("cv.embedding"), col("qn"), col("cv.nrm")), TopK)
+    recallAtK(bruteTopK(s, dir), got)
   }
+
+  /** Recall@k of `got` against `truth`, both (q_id, n_id) neighbor
+    * lists (other columns are dropped): per truth query, k_true = its
+    * truth size, k_found = how many of those `got` also lists (0 when
+    * none, or when `got` lacks the query), and recall as ONE ieee
+    * division in micro-points. A query only in `got` emits no row. The
+    * overlap is a semi join on (q_id, n_id) and the rollup is
+    * |queries| rows. [[recallAtKSql]] is the DuckDB twin. */
+  private[graft] def recallAtK(truth: DataFrame, got: DataFrame): DataFrame = {
+    val t = truth.select(col("q_id"), col("n_id"))
+    val h = t.join(got.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"), "left_semi")
+      .groupBy(col("q_id")).agg(count(lit(1)).as("k_found"))
+    val k = t.groupBy(col("q_id")).agg(count(lit(1)).as("k_true"))
+    val found = coalesce(col("k_found"), lit(0L))
+    k.join(h, Seq("q_id"), "left_outer")
+      .select(col("q_id"), col("k_true"), found.as("k_found"),
+        QueryDef.microPoints(found.cast("double") / col("k_true").cast("double"))
+          .as("recall_micro"))
+  }
+
+  /** DuckDB twin of [[recallAtK]] against the [[bruteTopKSql]] truth:
+    * the WITH-list tail after a `got(q_id, n_id)` CTE. */
+  private def recallAtKSql: String =
+    s"""truth AS (SELECT q_id, n_id FROM ($bruteTopKSql) tv),
+       |h AS (
+       |  SELECT t.q_id, COUNT(*) AS k_found
+       |  FROM truth t JOIN got g ON t.q_id = g.q_id AND t.n_id = g.n_id
+       |  GROUP BY 1),
+       |k AS (SELECT q_id, COUNT(*) AS k_true FROM truth GROUP BY 1)
+       |SELECT k.q_id, k.k_true, COALESCE(h.k_found, 0) AS k_found,
+       |  ${QueryDef.microPointsSql(
+          "CAST(COALESCE(h.k_found, 0) AS DOUBLE) / CAST(k.k_true AS DOUBLE)")} AS recall_micro
+       |FROM k LEFT JOIN h USING (q_id)""".stripMargin
 
   /** DuckDB twin of [[rerankRecall]]: given WITH-clauses ending in
     * `cand(q_id, n_id)`, appends the exact rerank + recall tail. */
@@ -1697,16 +1624,7 @@ object SimilarityQueries {
        |    JOIN embeddings qe ON qe.vec_id = cand.q_id
        |    JOIN embeddings ce ON ce.vec_id = cand.n_id) t
        |  WHERE rank <= $TopK),
-       |truth AS (SELECT q_id, n_id FROM ($bruteTopKSql) tv),
-       |h AS (
-       |  SELECT t.q_id, COUNT(*) AS k_found
-       |  FROM truth t JOIN got g ON t.q_id = g.q_id AND t.n_id = g.n_id
-       |  GROUP BY 1),
-       |k AS (SELECT q_id, COUNT(*) AS k_true FROM truth GROUP BY 1)
-       |SELECT k.q_id, k.k_true, COALESCE(h.k_found, 0) AS k_found,
-       |  ${QueryDef.microPointsSql(
-          "CAST(COALESCE(h.k_found, 0) AS DOUBLE) / CAST(k.k_true AS DOUBLE)")} AS recall_micro
-       |FROM k LEFT JOIN h USING (q_id)""".stripMargin
+       |$recallAtKSql""".stripMargin
 
   /** `embedding_matryoshka` truncation dims: 64 = the full width, a
     * built-in tautology row (hits must equal [[TopK]], loss must be 0 —
@@ -1742,7 +1660,7 @@ object SimilarityQueries {
   }
 
   /** (vec_id, embedding, nrm) corpus projection — norms computed once
-    * per vector, shared by the brute-force and IVF search paths. */
+    * per vector, shared by the exact-cosine queries here. */
   private def vecs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
@@ -1754,83 +1672,81 @@ object SimilarityQueries {
     * ground truth — an eval that reimplements its subject can drift. */
   private[graft] def bruteTopK(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir)
-    val q = e.filter(col("vec_id") < NQueries)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    broadcast(q.as("q")).join(e.as("c"), col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
-        cosineFast(col("q.embedding"), col("c.embedding"),
-          col("q.nrm"), col("c.nrm")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
+    cosineTopK(broadcast(e.filter(col("vec_id") < NQueries).as("q"))
+        .join(e.as("c"), col("q.vec_id") =!= col("c.vec_id")),
+      col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
+      cosineFast(col("q.embedding"), col("c.embedding"), col("q.nrm"), col("c.nrm")),
+      TopK)
+  }
+
+  /** Cosine top-k, the ranking tail the brute-force, LSH, IVF, SQ8,
+    * rerank and k-NN graph searches share: the probe × candidate rows
+    * of `pairs` projected to (probe id, candidate id, `carry`..., cos),
+    * numbered `rank` per probe by cos desc with a candidate-id
+    * tiebreak, cut at `k`. `probe`/`cand` carry their output names;
+    * `cos` is the pair's score. The rank filter lowers to a
+    * WindowGroupLimit, so each input partition is pre-trimmed to k rows
+    * per probe before the probe-keyed exchange. */
+  private[graft] def cosineTopK(pairs: DataFrame, probe: Column, cand: Column,
+      cos: Column, k: Int, carry: Column*): DataFrame = {
+    val scored = pairs.select((Seq(probe, cand) ++ carry :+ cos.as("cos")): _*)
+    val Array(p, c) = scored.columns.take(2)
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col(p)).orderBy(col("cos").desc, col(c))).cast("long"))
+      .filter(col("rank") <= k)
   }
 
   /** IVF nprobe=1 top-[[TopK]]: nearest-cell assignment + cell-local
     * search. Shared by `ann_ivf` and `ann_recall_eval`'s candidate
-    * side. Per-vector centroid ranking is independent of every other
-    * vector (window partitions by vec_id), so the QUERY side runs its
-    * own |Q|×k assignment instead of filtering the corpus-wide one —
-    * the expensive corpus assignment subplan is consumed exactly ONCE
-    * (the join's probe side), not twice, with no persist needed. */
+    * side. The QUERY side runs its own |Q|×k [[centroidRanks]] instead
+    * of filtering the corpus-wide one, so the expensive corpus
+    * assignment subplan is consumed exactly ONCE (the join's probe
+    * side), not twice, with no persist needed (pinned in PlanAuditSpec
+    * for every IVF query). */
   private[graft] def ivfTopK(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir)
-    val cents = e.filter(col("vec_id") < NCentroids)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
-    val aw = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_c").desc, col("c_id"))
-    def assignRanked(v: DataFrame) =
-      v.crossJoin(broadcast(cents))
-        .withColumn("cos_c",
-          cosineFast(col("embedding"), col("c_emb"), col("nrm"), col("c_nrm")))
-        .withColumn("rk", row_number().over(aw))
-    val cells = assignRanked(e).filter(col("rk") === 1)
+    val cents = centroids(e, NCentroids)
+    val cells = centroidRanks(e, cents).filter(col("rk") === 1)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id").as("cell"))
-    val q = assignRanked(e.filter(col("vec_id") < NQueries))
+    val q = centroidRanks(e.filter(col("vec_id") < NQueries), cents)
       .filter(col("rk") === 1)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"), col("c_id").as("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    broadcast(q).join(cells.as("c"),
-        q("cell") === col("c.cell") && col("q_id") =!= col("c.vec_id"))
-      .select(col("q_id"), col("c.vec_id").as("n_id"),
-        q("cell").as("cell"),
-        cosineFast(col("q_emb"), col("c.embedding"),
-          col("q_nrm"), col("c.nrm")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
+    cosineTopK(broadcast(q).join(cells.as("c"),
+        q("cell") === col("c.cell") && col("q_id") =!= col("c.vec_id")),
+      col("q_id"), col("c.vec_id").as("n_id"),
+      cosineFast(col("q_emb"), col("c.embedding"), col("q_nrm"), col("c.nrm")),
+      TopK, q("cell").as("cell"))
   }
 
   /** Shared cents/assign/cells CTE text of the IVF oracles. */
   private def ivfCellsCteSql: String =
     s"""cents AS (
        |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings WHERE vec_id < $NCentroids),
-       |assign AS (
-       |  SELECT vec_id, embedding, c_id,
-       |    row_number() OVER (PARTITION BY vec_id
-       |      ORDER BY ${cosineSql("e.embedding", "c_emb")} DESC, c_id) AS rk
-       |  FROM embeddings e CROSS JOIN cents),
+       |assign AS $centroidRanksSql,
        |cells AS (SELECT vec_id, embedding, c_id AS cell FROM assign WHERE rk = 1)""".stripMargin
 
   /** DuckDB twin of [[ivfTopK]]'s final search (expects
     * [[ivfCellsCteSql]] in scope). */
   private def ivfTopKSql: String =
-    s"""SELECT * FROM (
-       |  SELECT q.vec_id AS q_id, c.vec_id AS n_id, q.cell AS cell,
-       |    ${cosineSql("q.embedding", "c.embedding")} AS cos,
-       |    row_number() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${cosineSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS rank
-       |  FROM cells q JOIN cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id < $NQueries) t
-       |WHERE rank <= $TopK""".stripMargin
+    queryTopKSql("cells q JOIN cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id",
+      "q.cell AS cell")
 
   /** DuckDB twin of [[bruteTopK]]. */
   private def bruteTopKSql: String =
+    queryTopKSql("embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id")
+
+  /** DuckDB twin of [[cosineTopK]] for the query set: `join` pairs the
+    * query vectors `q` with candidates `c` (both with vec_id and
+    * embedding); `carry` columns ride between n_id and cos. */
+  private def queryTopKSql(join: String, carry: String*): String =
     s"""SELECT * FROM (
-       |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
+       |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,${carry.map(" " + _ + ",").mkString}
        |    ${cosineSql("q.embedding", "c.embedding")} AS cos,
        |    row_number() OVER (PARTITION BY q.vec_id
        |      ORDER BY ${cosineSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS rank
-       |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+       |  FROM $join
        |  WHERE q.vec_id < $NQueries) t
        |WHERE rank <= $TopK""".stripMargin
 
@@ -1868,16 +1784,12 @@ object SimilarityQueries {
     * (and persisted) cells frame — split from [[knnEdges]] so callers
     * that need the vector frame too (`hubness_indegree`'s zero-degree
     * restore) pay frozenCells' assignment pass exactly once. */
-  private def knnEdgesFrom(cells: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
-    cells.as("a").join(cells.as("b"),
-        col("a.c_id") === col("b.c_id") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        cosineFast(col("a.embedding"), col("b.embedding"),
-          col("a.nrm"), col("b.nrm")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= KnnGraphK)
-  }
+  private def knnEdgesFrom(cells: DataFrame): DataFrame =
+    cosineTopK(cells.as("a").join(cells.as("b"),
+        col("a.c_id") === col("b.c_id") && col("a.vec_id") =!= col("b.vec_id")),
+      col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
+      cosineFast(col("a.embedding"), col("b.embedding"), col("a.nrm"), col("b.nrm")),
+      KnnGraphK)
 
   /** `embedding_pca_top` power-iteration superstep count. Convergence
     * quality is eigen-gap dependent; cross-engine EXACTNESS is not —
@@ -2140,12 +2052,6 @@ object SimilarityQueries {
     * ≤ 1e16). TextDedupSpec asserts the id bound against the corpus. */
   private def MmrCandK = 20
   private def MmrK = 8
-
-  /** 6-dp cosine → exact integer micro-points — the shared
-    * [[QueryDef.microPoints]] contract. */
-  private def microPoints(c: Column): Column = QueryDef.microPoints(c)
-
-  private def microSql(expr: String): String = QueryDef.microPointsSql(expr)
 
   /** RRF constant k=60 (the SIGIR'09 default) and pool/output sizes
     * for `hybrid_search`: each leg contributes its top-[[RrfPoolK]];

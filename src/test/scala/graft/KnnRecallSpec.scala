@@ -127,4 +127,20 @@ class KnnRecallSpec extends SparkSuite {
     spark.catalog.clearCache()
     assert(single.subsetOf(bySrc.keySet))
   }
+
+  test("recall fold: no overlap and a query missing from got both score 0; got-only queries emit no row") {
+    import spark.implicits._
+    // truth q1 {10, 11}, q2 {20, 21, 22}, q3 {30}; got q1 {10, 99} (one
+    // hit), q2 {23, 24} (no overlap), q3 absent, q4 {40} (not in truth).
+    // Extra columns on either side (cos, rank) are ignored.
+    val truth = Seq((1L, 10L, 1L), (1L, 11L, 2L), (2L, 20L, 1L), (2L, 21L, 2L),
+      (2L, 22L, 3L), (3L, 30L, 1L)).toDF("q_id", "n_id", "rank")
+    val got = Seq((1L, 10L, 0.9), (1L, 99L, 0.8), (2L, 23L, 0.7), (2L, 24L, 0.6),
+      (4L, 40L, 0.5)).toDF("q_id", "n_id", "cos")
+    val out = graft.queries.SimilarityQueries.recallAtK(truth, got)
+    assert(out.columns.toSeq == Seq("q_id", "k_true", "k_found", "recall_micro"))
+    val rows = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(rows == Set((1L, 2L, 1L, 500000L), (2L, 3L, 0L, 0L), (3L, 1L, 0L, 0L)))
+  }
 }

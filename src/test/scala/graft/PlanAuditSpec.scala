@@ -1164,4 +1164,49 @@ class PlanAuditSpec extends SparkSuite {
       spark.catalog.clearCache()
     }
   }
+
+  test("IVF queries: one corpus-wide centroid assignment, built and planned once, no persist") {
+    // ivfTopK's contract: the query side ranks its own |Q|×k rows against
+    // the centroids instead of filtering the corpus-wide ranking, so the
+    // corpus assignment (a window partitioned by vec_id alone over an
+    // embeddings input with no vec_id range filter) occurs once and needs
+    // no cache to be shared. Both plans are checked: the analyzed plan
+    // pins the construction (Catalyst would push a query filter on the
+    // corpus ranking below the window, so the physical plan alone cannot
+    // tell the two constructions apart), the physical plan what runs.
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, IsNotNull}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, ResolvedHint, Window}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def byVecId(spec: Seq[Expression]): Boolean = spec match {
+      case Seq(a: AttributeReference) => a.name == "vec_id"
+      case _ => false
+    }
+    // the streamed input of a node: its subtree minus broadcast-hinted sides
+    def streamed(p: LogicalPlan): Seq[LogicalPlan] = p match {
+      case _: ResolvedHint => Nil
+      case _ => p +: p.children.flatMap(streamed)
+    }
+    spark.catalog.clearCache()
+    for (q <- Seq("ann_ivf", "ann_ivf_nprobe", "ann_ivfpq", "ann_recall_eval")) {
+      val qe = SparkEntry.queries(q)(spark, dir).queryExecution
+      val built = qe.analyzed.collect {
+        case w: Window if byVecId(w.partitionSpec) &&
+          !streamed(w.child).exists(_.isInstanceOf[Filter]) => w
+      }
+      assert(built.size == 1, s"$q builds ${built.size} corpus-wide assignments\n${qe.analyzed}")
+      val sp = qe.sparkPlan
+      val planned = sp.collect {
+        case w: WindowExec if byVecId(w.partitionSpec) && w.child.exists {
+            case f: FileSourceScanExec =>
+              f.relation.location.rootPaths.exists(_.getName == "embeddings.parquet") &&
+                f.dataFilters.forall(_.isInstanceOf[IsNotNull])
+            case _ => false
+          } => w
+      }
+      assert(planned.size == 1, s"$q plans ${planned.size} corpus-wide assignments\n$sp")
+      assert(sp.collect { case m: InMemoryTableScanExec => m }.isEmpty, s"$q persists\n$sp")
+    }
+  }
 }

@@ -117,6 +117,20 @@ class SemDedupSpec extends SparkSuite {
     spark.catalog.clearCache()              // release semanticDrops' persist
   }
 
+  test("semanticDrops returns its cells ALREADY materialized (AQE race guard)") {
+    // both prune self-join sides and the kept anti-join read `assigned`;
+    // a persist that is only registered lets their stages race to fill it
+    spark.catalog.clearCache()
+    val (assigned, _) = graft.queries.DedupQueries.semanticDrops(
+      spark, dir, k = 8, iters = 3, tau = 0.4)
+    val ds = assigned.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val cached = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+    assert(cached.nonEmpty, "semanticDrops' cells are not persisted")
+    assert(cached.get.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded,
+      "semanticDrops' cells are persisted but not yet populated")
+    spark.catalog.clearCache()
+  }
+
   test("trained drop set agrees with the frozen-centroid drop set (behavioral anchor)") {
     // The driver-gated queries run frozen stand-in centroids (bit-exact
     // cross-engine); production runs KMeans.train. Each path is already

@@ -1,0 +1,114 @@
+#!/usr/bin/env python3
+"""Before/after check for a refactor that must not change plans or oracles.
+
+Usage:
+  python3 tools/plan_diff.py <before.txt> <after.txt>
+  python3 tools/plan_diff.py --oracle <before/oracle_sql.json> <after/oracle_sql.json>
+
+Plan mode takes two stdout captures of `graft.Explain <q>[,<q>...] <sfDir> 0`,
+splits each at the `==== <query> (` headers, and keeps every query's
+formatted plan from `== Physical Plan ==` on. Ids that move between runs
+or with unrelated code are replaced by placeholders before comparing:
+expression ids (#123), plan_id=, RDD ids with their callsite line, and
+JVM identity hashes (Foo@1a2b3c, $Lambda$5669/0x...). It prints one
+`identical` / `different` / `missing` line per query, a short unified
+diff under each difference, and exits 1 if any query is not identical.
+
+Oracle mode compares two `oracle_sql.json` files (written by graft.Verify)
+key by key, byte for byte, and exits 1 on any difference.
+"""
+import difflib
+import json
+import re
+import sys
+
+HEADER = re.compile(r"^==== (\S+) \(")
+# lines that end a plan: the next rep's timing table or sbt's own output
+PLAN_END = re.compile(r"^\[(explain|info|success|warn|error)\]")
+NORMALISE = [
+    (re.compile(r"#[0-9]+"), "#N"),
+    (re.compile(r"plan_id=[0-9]+"), "plan_id=N"),
+    (re.compile(r"RDD\[[0-9]+\] at (\w+) at (\w+)\.scala:[0-9]+"),
+     r"RDD[N] at \1 at \2.scala:N"),
+    (re.compile(r"\$Lambda\$[0-9]+/0x[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"(\w)@[0-9a-f]{4,8}\b"), r"\1@H"),
+]
+DIFF_LINES = 20
+
+
+def normalise(line):
+    for pattern, repl in NORMALISE:
+        line = pattern.sub(repl, line)
+    return line
+
+
+def plans(path):
+    """{query: [normalised plan lines]} in file order."""
+    out = {}
+    query, keep = None, False
+    with open(path, encoding="utf-8") as f:
+        for raw in f:
+            line = raw.rstrip("\n")
+            m = HEADER.match(line)
+            if m:
+                query, keep = m.group(1), False
+                out[query] = []
+            elif query is None:
+                continue
+            elif line.startswith("== Physical Plan =="):
+                keep = True
+                out[query].append(line)
+            elif keep and PLAN_END.match(line):
+                keep = False
+            elif keep:
+                out[query].append(normalise(line))
+    for q, lines in out.items():
+        while lines and not lines[-1].strip():
+            lines.pop()
+    return out
+
+
+def report(before, after, label):
+    """Print one line per key; return the number of keys not identical."""
+    bad = 0
+    for key in list(before) + [k for k in after if k not in before]:
+        if key not in before or key not in after:
+            side = "after" if key not in after else "before"
+            print(f"missing    {key} (not in {side})")
+            bad += 1
+        elif before[key] == after[key]:
+            print(f"identical  {key}")
+        else:
+            print(f"different  {key}")
+            bad += 1
+            a, b = before[key], after[key]
+            if isinstance(a, str):
+                a, b = a.splitlines(), b.splitlines()
+            diff = list(difflib.unified_diff(a, b, "before", "after", lineterm=""))
+            for d in diff[:DIFF_LINES]:
+                print(f"    {d}")
+            if len(diff) > DIFF_LINES:
+                print(f"    ... {len(diff) - DIFF_LINES} more diff lines")
+    print(f"{label}: {len(set(before) | set(after)) - bad} identical, {bad} not")
+    return bad
+
+
+def main(argv):
+    if len(argv) == 4 and argv[1] == "--oracle":
+        with open(argv[2], encoding="utf-8") as f:
+            before = json.load(f)
+        with open(argv[3], encoding="utf-8") as f:
+            after = json.load(f)
+        return 1 if report(before, after, "oracle keys") else 0
+    if len(argv) == 3:
+        before, after = plans(argv[1]), plans(argv[2])
+        if not before or not after:
+            print("no `==== <query> (` headers found", file=sys.stderr)
+            return 2
+        return 1 if report(before, after, "plans") else 0
+    print(__doc__, file=sys.stderr)
+    return 2
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
