@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,7 +54,7 @@ object EventQueries {
           date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),
           QueryDef.cents(col("value")).as("vc"),
           col("event_id"))
-        def agg(df: org.apache.spark.sql.DataFrame) = df
+        def agg(df: DataFrame) = df
           .groupBy(col("event_type"), col("hour"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("vc")).as("sum_value_cents"),
@@ -273,12 +274,10 @@ object EventQueries {
         val st = h.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
             sum(col("c").cast("decimal(38,0)") * col("c")).as("ss"))
-        val dev = col("n").cast("decimal(38,0)") * col("c") - col("s")
+        val (spike, tail) = rateSpike(col("c"))
         h.join(broadcast(st), Seq("event_type"))
-          .filter(dev * dev >
-            lit(9L) * (col("n") * col("ss") - col("s").cast("decimal(38,0)") * col("s")))
-          .select(col("event_type"), col("hour"), col("c").as("n_events"),
-            when(dev > 0, lit("high")).otherwise(lit("low")).as("tail"))
+          .filter(spike)
+          .select(col("event_type"), col("hour"), col("c").as("n_events"), tail)
       },
       Some("""WITH h AS (
              |  SELECT event_type,
@@ -295,20 +294,14 @@ object EventQueries {
              |WHERE (CAST(st.n AS HUGEINT) * h.c - st.s) * (CAST(st.n AS HUGEINT) * h.c - st.s)
              |      > 9 * (st.n * st.ss - CAST(st.s AS HUGEINT) * st.s)""".stripMargin)),
 
-    // sliding-window aggregation (1 h window, 15 min slide): the
-    // window() generator fans each event into its 4 containing windows
-    // BEFORE the aggregation — batch twin of
-    // [[graft.streaming.EventStreams.slidingCounts]]. Shuffle payload
-    // is 4× events_hourly's (the overlap factor), still partial-agg'd
-    // map-side. Oracle reproduces the fan-out with an explicit
-    // unnest(range(0,4)) over 15-minute epoch buckets (Spark aligns
-    // window starts to the epoch, so bucket arithmetic matches).
+    // sliding-window aggregation ([[slidingAgg]], shared with the
+    // streaming twin). Shuffle payload is 4× events_hourly's (the
+    // overlap factor), still partial-agg'd map-side. Oracle reproduces
+    // the fan-out with an explicit unnest(range(0,4)) over 15-minute
+    // epoch buckets (Spark aligns window starts to the epoch, so bucket
+    // arithmetic matches).
     QueryDef("events_sliding",
-      (s, dir) => Tables.events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(QueryDef.cents(col("value"))).as("sum_value_cents"))
+      (s, dir) => slidingAgg(Tables.events(s, dir))
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
           col("event_type"), col("n_events"), col("sum_value_cents")),
@@ -1338,6 +1331,32 @@ object EventQueries {
               |  ON r.event_id = p.event_id""".stripMargin))
   ) :+ conversionLatencyDef
 
+  /** Sliding-window counts (1 h window every 15 min) per event type,
+    * ONE stage for `events_sliding` and its streaming twin
+    * [[graft.streaming.EventStreams.slidingCounts]] (which adds only a
+    * watermark): the window() generator fans each event into its 4
+    * containing windows BEFORE the aggregation. */
+  private[graft] def slidingAgg(ev: DataFrame): DataFrame =
+    ev.groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
+      .agg(
+        count(lit(1)).as("n_events"),
+        sum(QueryDef.cents(col("value"))).as("sum_value_cents"))
+
+  /** The float-free 3-sigma rate test, ONE definition for `rate_anomaly`
+    * and its streaming twin [[graft.streaming.EventStreams.rateAnomalyStream]]:
+    * count column `c` against its type's moments `n`, `s`, `ss` in
+    * scope. Returns the spike predicate (n·c − S)² > 9·(n·SS − S²) and
+    * the `tail` column. Every product runs in DECIMAL(38,0): c² alone
+    * saturates a BIGINT at c ≈ 3e9 events/hour (the cast on `ss` is a
+    * no-op for the batch query's decimal sum and widens the stream
+    * baseline's BIGINT). */
+  private[graft] def rateSpike(c: Column): (Column, Column) = {
+    val dev = col("n").cast("decimal(38,0)") * c - col("s")
+    (dev * dev > lit(9L) * (col("n") * col("ss").cast("decimal(38,0)") -
+        col("s").cast("decimal(38,0)") * col("s")),
+      when(dev > 0, lit("high")).otherwise(lit("low")).as("tail"))
+  }
+
   /** THE 30-minute-gap sessionization contract — ONE definition
     * (lag → new-session flag → running sum over the (ts, event_id)
     * user window) shared by `sessionize`, `session_concurrency`, and
@@ -1345,8 +1364,7 @@ object EventQueries {
     * diverge from the sessions it claims to explain. Adds `session_seq`
     * (1-based per user) and carries every input column. One shuffle on
     * user_id; keep [[sessCteSql]] in lockstep term-for-term. */
-  private[graft] def sessionized(
-      ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def sessionized(ev: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     ev.withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byUser))
       .withColumn("new_session",

@@ -7,10 +7,23 @@ import org.apache.spark.sql.types._
 
 /** Structured Streaming surface of the engine — a deliberate extension:
   * the reference is strictly batch/pull-based (SURVEY §2.8, `exec()`
-  * runs to completion). The batch queries in
-  * [[graft.queries.EventQueries]] are the oracle-checked twins of these
-  * streaming plans; the transformations are the same Catalyst operators,
-  * so a pipeline can move batch → streaming without rewriting logic.
+  * runs to completion). Most operators have an oracle-checked batch
+  * twin, in one of two forms:
+  *  - Column twins run the same Catalyst operators after a
+  *    `withWatermark` ([[hourlyCounts]] ↔ `events_hourly`);
+  *    [[slidingCounts]] and [[rateAnomalyStream]] call their batch
+  *    query's own stage, `EventQueries.slidingAgg` and `rateSpike`.
+  *  - JVM-fold twins re-state a batch Column query as a per-key state
+  *    function, and StreamingSpec checks them against the batch rows.
+  *    Their batch twins live in EventQueries (sessionize, funnel_steps,
+  *    the as-of attributions, event_transitions, session_gap_dist,
+  *    rate_mosum, drift_psi), ProfilingQueries (distinct_kmv,
+  *    distinct_hll, quantile_sketch), TextQueries (heavy_hitters,
+  *    freq_cm_sketch), CurationQueries (weighted_sample) and
+  *    DedupQueries (dedup_bloom_probe).
+  * The four operators that keep whole per-user state under an
+  * event-time timeout share one fold and one expiry rule
+  * ([[eventTimeFold]]); the (ts, event_id) order is [[before]].
   *
   * Scale notes: all stateful operators here key their state by
   * `user_id`/window — state is hash-partitioned across executors and
@@ -119,24 +132,19 @@ object EventStreams {
         approx_count_distinct(col("user_id")).as("approx_users"))
 
   /** Watermarked SLIDING-window aggregation (1 h window every 15 min):
-    * each event contributes to window-length/slide = 4 overlapping
-    * windows — the window() generator fans the row out before the agg,
-    * so state holds 4 open windows per key instead of 1; eviction is
-    * still watermark-driven. Batch twin: `events_sliding`. */
+    * `events_sliding`'s own stage ([[graft.queries.EventQueries.slidingAgg]])
+    * after a watermark. Each event lands in window-length/slide = 4
+    * windows, so state holds 4 open windows per key instead of 1;
+    * eviction is still watermark-driven. */
   def slidingCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(graft.queries.QueryDef.cents(col("value"))).as("sum_value_cents"))
+    graft.queries.EventQueries.slidingAgg(events.withWatermark("ts", watermark))
 
   /** Streaming twin of the batch `rate_anomaly` query: live hourly
     * counts flagged against a FROZEN per-type baseline of historical
     * count moments (event_type, n, s, ss) — the production shape,
     * where the control chart's limits come from yesterday's batch job
-    * and the stream only compares. Same float-free 3-sigma contract:
-    * (n·c − S)² > 9·(n·SS − S²), every term BIGINT-exact.
+    * and the stream only compares. The 3-sigma test and the tail are
+    * the batch query's own ([[graft.queries.EventQueries.rateSpike]]).
     *
     * Structure note: the static baseline joins BEFORE the windowed
     * aggregation (carried through via min(), constant per type) —
@@ -145,10 +153,7 @@ object EventStreams {
     * plan anyway. */
   def rateAnomalyStream(events: DataFrame, baseline: DataFrame,
       watermark: String = "2 hours"): DataFrame = {
-    // decimal cross products — the batch rate_anomaly discipline: c²
-    // saturates a BIGINT at c ≈ 3e9 events/hour, exactly live-stream
-    // scale, so dev², n·SS and S² all run in DECIMAL(38,0)
-    val dev = col("n").cast("decimal(38,0)") * col("n_events") - col("s")
+    val (spike, tail) = graft.queries.EventQueries.rateSpike(col("n_events"))
     events
       .withWatermark("ts", watermark)
       .join(broadcast(baseline), Seq("event_type"))
@@ -156,11 +161,7 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"),
         min(col("n")).as("n"), min(col("s")).as("s"), min(col("ss")).as("ss"))
       .select(col("window"), col("event_type"), col("n_events"),
-        when(dev * dev > lit(9L) *
-            (col("n") * col("ss").cast("decimal(38,0)") -
-              col("s").cast("decimal(38,0)") * col("s")), 1L)
-          .otherwise(0L).as("is_spike"),
-        when(dev > 0, lit("high")).otherwise(lit("low")).as("tail"))
+        when(spike, 1L).otherwise(0L).as("is_spike"), tail)
   }
 
   /** [[rateMosumStream]] state per event type: the OPEN hour being
@@ -198,7 +199,6 @@ object EventStreams {
       moments: Map[String, (Long, Long, Long)], w: Int = 6,
       watermark: String = "2 hours"): Dataset[MosumOut] = {
     import events.sparkSession.implicits._
-    def ms(t: java.sql.Timestamp): Long = t.getTime
     val hourMs = 3600000L
     val none = Long.MinValue
 
@@ -227,8 +227,8 @@ object EventStreams {
             st = MosumState(none, 0L, hist.takeRight(w - 1))
           }
           if (!state.hasTimedOut) {
-            rows.toSeq.sortBy(e => (ms(e.ts), e.event_id)).foreach { e =>
-              val hr = ms(e.ts) / hourMs
+            byTime(rows).foreach { e =>
+              val hr = e.ts.getTime / hourMs
               if (st.openHr == none) st = st.copy(openHr = hr, openC = 1L)
               else if (hr == st.openHr || hr < st.openHr)
                 // late-behind-open rows fold in (documented divergence)
@@ -247,68 +247,13 @@ object EventStreams {
       }
   }
 
-  /** Session windows via the built-in `session_window` (30-minute gap)
-    * — the declarative path, preferred when the semantics fit. */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("session_value"))
-
-  /** Streaming exactly-once-per-key dedup: drops events whose `event_id`
-    * was already seen, keeping state only within the watermark horizon
-    * (the streaming twin of the batch `dedup_exact` operator — and the
-    * ingest-side guard every training-data pipeline needs against
-    * at-least-once sources). */
-  def dedupStream(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-stream inner join: clicks enriched with the purchase that
-    * followed within an hour, both sides watermarked so join state is
-    * evicted (unbounded state = the classic stream-join failure at
-    * scale; the time-range condition is what bounds it). */
-  def clickToPurchase(events: DataFrame, watermark: String = "2 hours"): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
-      .withWatermark("click_ts", watermark)
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", watermark)
-    clicks.join(purchases,
-      expr("""user_id = p_user_id AND
-              purchase_ts >= click_ts AND
-              purchase_ts <= click_ts + INTERVAL 1 HOUR"""))
-      .select(col("user_id"), col("click_id"), col("click_ts"),
-        col("purchase_ts"), col("purchase_value"))
-  }
-
-  /** Stream-STATIC join: each streaming event enriched against a batch
-    * dimension table — the lookup-enrichment shape (user → segment,
-    * doc → source metadata) every ingest pipeline runs before its
-    * stateful stages. No watermark is needed and NO state accretes:
-    * the static side is just a batch plan re-bound per micro-batch, so
-    * a small dim rides a broadcast hash join (the planner sees its
-    * size) and a huge dim degrades to a per-batch shuffle join — the
-    * same policy as batch. Dim UPDATES between micro-batches are
-    * visible only for re-scanned sources (file-source static sides
-    * cache their file listing; a Delta/JDBC dim re-reads). */
-  def enrichWithDim(events: DataFrame, dim: DataFrame,
-      key: String = "user_id"): DataFrame =
-    events.join(dim, Seq(key), "left_outer")
-
-  /** Stream-stream LEFT OUTER join: every click, enriched with its
-    * following purchase when one exists, or NULL purchase columns once
-    * the watermark proves none can arrive. Outer stream joins are the
-    * harder state problem: the engine must hold an unmatched left row
-    * until the watermark passes the end of its join window before it
-    * may emit the NULL-padded result — so the same watermark + time-
-    * range bounds that evict inner-join state are what make the outer
-    * result *correct*, not just space-bounded. */
-  def clickToPurchaseOuter(events: DataFrame, watermark: String = "2 hours"): DataFrame = {
+  /** The click→purchase interval join, one body for the inner, LEFT
+    * OUTER and FULL OUTER forms: clicks joined to the same user's
+    * purchases within the hour that follows, both sides watermarked so
+    * join state is evicted (unbounded state = the classic stream-join
+    * failure at scale; the time-range condition is what bounds it). */
+  private def clickPurchaseJoin(events: DataFrame, watermark: String,
+      joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
       .withWatermark("click_ts", watermark)
@@ -320,10 +265,28 @@ object EventStreams {
       expr("""user_id = p_user_id AND
               purchase_ts >= click_ts AND
               purchase_ts <= click_ts + INTERVAL 1 HOUR"""),
-      "left_outer")
+      joinType)
+  }
+
+  /** Stream-stream inner join: clicks enriched with the purchase that
+    * followed within an hour ([[clickPurchaseJoin]]). */
+  def clickToPurchase(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+    clickPurchaseJoin(events, watermark, "inner")
       .select(col("user_id"), col("click_id"), col("click_ts"),
         col("purchase_ts"), col("purchase_value"))
-  }
+
+  /** Stream-stream LEFT OUTER join: every click, enriched with its
+    * following purchase when one exists, or NULL purchase columns once
+    * the watermark proves none can arrive. Outer stream joins are the
+    * harder state problem: the engine must hold an unmatched left row
+    * until the watermark passes the end of its join window before it
+    * may emit the NULL-padded result — so the same watermark + time-
+    * range bounds that evict inner-join state are what make the outer
+    * result *correct*, not just space-bounded. */
+  def clickToPurchaseOuter(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+    clickPurchaseJoin(events, watermark, "left_outer")
+      .select(col("user_id"), col("click_id"), col("click_ts"),
+        col("purchase_ts"), col("purchase_value"))
 
   /** Stream-stream FULL OUTER join: every click AND every purchase
     * survives — matched pairs emit immediately; each side's unmatched
@@ -335,21 +298,74 @@ object EventStreams {
     * watermark is tracked per input and advances on the SLOWEST side,
     * one stalled side delays the other side's NULL emission too — the
     * correctness property StreamingSpec pins per side. */
-  def clickToPurchaseFullOuter(events: DataFrame, watermark: String = "2 hours"): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
-      .withWatermark("click_ts", watermark)
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", watermark)
-    clicks.join(purchases,
-      expr("""user_id = p_user_id AND
-              purchase_ts >= click_ts AND
-              purchase_ts <= click_ts + INTERVAL 1 HOUR"""),
-      "full_outer")
+  def clickToPurchaseFullOuter(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+    clickPurchaseJoin(events, watermark, "full_outer")
       .select(col("user_id").as("click_user"), col("click_id"), col("click_ts"),
         col("p_user_id").as("purchase_user"), col("purchase_ts"), col("purchase_value"))
+
+  /** The (ts, event_id) event-time order every twin here folds in —
+    * the batch windows' sort: `a` before `b`. */
+  private def before(aMs: Long, aId: Long, bMs: Long, bId: Long): Boolean =
+    aMs < bMs || (aMs == bMs && aId < bId)
+
+  /** One micro-batch's rows for a key, sorted by [[before]]. */
+  private def byTime(rows: Iterator[Event]): Seq[Event] =
+    rows.toSeq.sortWith((a, b) => before(a.ts.getTime, a.event_id, b.ts.getTime, b.event_id))
+
+  /** The per-key event-time fold, ONE definition for both state APIs:
+    * rows fold in [[before]] order through `step`, from the carried
+    * state. Returns the new state and the rows the steps emitted. */
+  private def foldByTime[S, O](key: Long, init: Option[S], rows: Iterator[Event])(
+      step: (Long, Option[S], Event) => (Option[S], Option[O])): (Option[S], Seq[O]) = {
+    val out = Seq.newBuilder[O]
+    var cur = init
+    byTime(rows).foreach { e =>
+      val (next, o) = step(key, cur, e)
+      cur = next
+      out ++= o
+    }
+    (cur, out.result())
+  }
+
+  /** THE event-time-timeout rule, one definition for every operator
+    * that keeps whole per-user state under `flatMapGroupsWithState`
+    * ([[attributeStateful]], [[successorStateful]],
+    * [[sessionizeStateful]], [[funnelStateful]]): the user's rows fold
+    * through `step` ([[foldByTime]]). Then, on a timeout OR when the
+    * folded state's `expiryMs` is already at or behind the current
+    * watermark, the state expires NOW — `expire` emits its closing
+    * row and the state is removed; otherwise the state is stored and
+    * its timer armed at `expiryMs`.
+    *
+    * The inline expiry is what keeps the query alive, not a shortcut:
+    * `setTimeoutTimestamp` throws for a timestamp behind the current
+    * watermark, and a backlog batch can hand the function exactly such
+    * rows — Spark drops late rows against the PREVIOUS batch's
+    * watermark, while the timer check uses the current one
+    * (StreamingSpec's backlog-drain case). */
+  private def eventTimeFold[S: Encoder, O: Encoder](events: Dataset[Event],
+      watermark: String)(expiryMs: S => Long, expire: (Long, S) => Option[O])(
+      step: (Long, Option[S], Event) => (Option[S], Option[O])): Dataset[O] = {
+    import events.sparkSession.implicits._
+    events
+      .withWatermark("ts", watermark)
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (userId: Long, rows: Iterator[Event], state: GroupState[S]) =>
+          val (cur, out) = foldByTime(userId, state.getOption, rows)(step)
+          cur match {
+            case Some(s) if !state.hasTimedOut &&
+                expiryMs(s) > state.getCurrentWatermarkMs() =>
+              state.update(s)
+              state.setTimeoutTimestamp(expiryMs(s))
+              out.iterator
+            case Some(s) =>
+              state.remove()
+              (out ++ expire(userId, s)).iterator
+            case None => out.iterator
+          }
+      }
   }
 
   final case class ClickState(clickMs: Long, clickId: Long)
@@ -363,10 +379,11 @@ object EventStreams {
     *
     * State is ONE (clickMs, clickId) pair per user — the as-of join's
     * "carry the latest left row forward" made explicit — keyed by
-    * user_id so it hash-partitions across executors, and evicted by an
-    * event-time timeout `ttlMs` past the last click (an attribution
-    * window: a click older than the TTL no longer attributes, which is
-    * both the business rule and what bounds state).
+    * user_id so it hash-partitions across executors, and expired by
+    * [[eventTimeFold]] `ttlMs` past the last click, emitting nothing
+    * (an attribution window: a click older than the TTL no longer
+    * attributes, which is both the business rule and what bounds
+    * state).
     *
     * Streaming divergence from the batch twin, by construction: a
     * purchase is attributed against the clicks SEEN when its
@@ -378,58 +395,27 @@ object EventStreams {
       ttlMs: Long = 24L * 3600 * 1000,
       watermark: String = "2 hours"): Dataset[AttributionOut] = {
     import events.sparkSession.implicits._
-    def ms(t: java.sql.Timestamp): Long = t.getTime
-    def before(aMs: Long, aId: Long, bMs: Long, bId: Long): Boolean =
-      aMs < bMs || (aMs == bMs && aId < bId)
-
-    events
-      .filter(e => e.event_type == "click" || e.event_type == "purchase")
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ClickState, AttributionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[ClickState]) =>
-          if (state.hasTimedOut) {
-            // attribution window expired: forget the click, emit nothing
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (ms(e.ts), e.event_id))
-            val out = Seq.newBuilder[AttributionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = ms(e.ts)
-              if (e.event_type == "click") {
-                // keep the MAX (ts, id) click — a late click within the
-                // watermark must not regress the carried state
-                if (cur.forall(c => before(c.clickMs, c.clickId, t, e.event_id)))
-                  cur = Some(ClickState(t, e.event_id))
-              } else {
-                // the TTL is enforced HERE, in event time, not only via
-                // state-timeout eviction: eviction is micro-batch-
-                // granular, so a purchase can race an expired click into
-                // the same batch — without this check the attribution
-                // would depend on batch boundaries
-                val att = cur.filter(c =>
-                  before(c.clickMs, c.clickId, t, e.event_id) && t - c.clickMs <= ttlMs)
-                out += AttributionOut(e.event_id, userId, t,
-                  att.map(_.clickId), att.map(_.clickMs))
-              }
-            }
-            cur match {
-              // re-arming a timeout at-or-before the current watermark
-              // throws (and would crash the whole query) — a click whose
-              // window the watermark already passed attributes nothing
-              // ever again, so drop the state instead
-              case Some(c) if c.clickMs + ttlMs > state.getCurrentWatermarkMs() =>
-                state.update(c)
-                state.setTimeoutTimestamp(c.clickMs + ttlMs)
-              case Some(_) => state.remove()
-              case None => ()
-            }
-            out.result().iterator
-          }
+    eventTimeFold[ClickState, AttributionOut](
+        events.filter(e => e.event_type == "click" || e.event_type == "purchase"),
+        watermark)(c => c.clickMs + ttlMs, (_, _) => None) { (userId, cur, e) =>
+      val t = e.ts.getTime
+      if (e.event_type == "click")
+        // keep the MAX (ts, id) click — a late click within the
+        // watermark must not regress the carried state
+        (if (cur.forall(c => before(c.clickMs, c.clickId, t, e.event_id)))
+          Some(ClickState(t, e.event_id)) else cur, None)
+      else {
+        // the TTL is enforced HERE, in event time, not only via
+        // state-timeout eviction: eviction is micro-batch-granular, so
+        // a purchase can race an expired click into the same batch —
+        // without this check the attribution would depend on batch
+        // boundaries
+        val att = cur.filter(c =>
+          before(c.clickMs, c.clickId, t, e.event_id) && t - c.clickMs <= ttlMs)
+        (cur, Some(AttributionOut(e.event_id, userId, t,
+          att.map(_.clickId), att.map(_.clickMs))))
       }
+    }
   }
 
   /** Pending clicks awaiting their first following purchase, for
@@ -452,10 +438,12 @@ object EventStreams {
     * flushes every pending click before it in one pass, and the
     * event-time timeout (armed at the EARLIEST pending click's expiry)
     * sweeps the rest, so state per user never exceeds one horizon's
-    * worth of unconverted clicks. The horizon is enforced in EVENT
-    * time at match point too, not only via timeout eviction — eviction
-    * is micro-batch-granular, and a purchase can race an expired click
-    * into the same batch (same guard as [[attributeStateful]]).
+    * worth of unconverted clicks. It expires PART of its state, so it
+    * keeps its own sweep instead of [[eventTimeFold]]'s whole-state
+    * rule. The horizon is enforced in EVENT time at match point too,
+    * not only via timeout eviction — eviction is micro-batch-granular,
+    * and a purchase can race an expired click into the same batch
+    * (same guard as [[attributeStateful]]).
     *
     * Streaming divergence from the batch twin, by construction: a
     * purchase arriving LATE (within the watermark but after a later
@@ -467,10 +455,6 @@ object EventStreams {
       horizonMs: Long = 24L * 3600 * 1000,
       watermark: String = "2 hours"): Dataset[ForwardAttributionOut] = {
     import events.sparkSession.implicits._
-    def ms(t: java.sql.Timestamp): Long = t.getTime
-    def before(aMs: Long, aId: Long, bMs: Long, bId: Long): Boolean =
-      aMs < bMs || (aMs == bMs && aId < bId)
-
     events
       .filter(e => e.event_type == "click" || e.event_type == "purchase")
       .withWatermark("ts", watermark)
@@ -480,27 +464,25 @@ object EventStreams {
         (userId: Long, rows: Iterator[Event], state: GroupState[PendingClicks]) =>
           val out = Seq.newBuilder[ForwardAttributionOut]
           var pending = state.getOption.map(_.clicks.toVector).getOrElse(Vector.empty)
-          if (!state.hasTimedOut) {
-            rows.toSeq.sortBy(e => (ms(e.ts), e.event_id)).foreach { e =>
-              val t = ms(e.ts)
-              if (e.event_type == "click")
-                pending :+= ClickState(t, e.event_id)
-              else {
-                // this purchase is the first-following for every pending
-                // click strictly before it; clicks past the horizon NULL
-                // out here rather than wait for the timeout sweep
-                val (flushed, waiting) = pending.partition(c =>
-                  before(c.clickMs, c.clickId, t, e.event_id))
-                flushed.foreach { c =>
-                  if (t - c.clickMs <= horizonMs)
-                    out += ForwardAttributionOut(c.clickId, userId, c.clickMs,
-                      Some(e.event_id), Some(t), Some(t - c.clickMs))
-                  else
-                    out += ForwardAttributionOut(c.clickId, userId, c.clickMs,
-                      None, None, None)
-                }
-                pending = waiting
+          byTime(rows).foreach { e =>
+            val t = e.ts.getTime
+            if (e.event_type == "click")
+              pending :+= ClickState(t, e.event_id)
+            else {
+              // this purchase is the first-following for every pending
+              // click strictly before it; clicks past the horizon NULL
+              // out here rather than wait for the timeout sweep
+              val (flushed, waiting) = pending.partition(c =>
+                before(c.clickMs, c.clickId, t, e.event_id))
+              flushed.foreach { c =>
+                if (t - c.clickMs <= horizonMs)
+                  out += ForwardAttributionOut(c.clickId, userId, c.clickMs,
+                    Some(e.event_id), Some(t), Some(t - c.clickMs))
+                else
+                  out += ForwardAttributionOut(c.clickId, userId, c.clickMs,
+                    None, None, None)
               }
+              pending = waiting
             }
           }
           // unified expiry sweep (timeout fire AND inline): emit NULL
@@ -509,7 +491,7 @@ object EventStreams {
           // the current watermark (re-arming at-or-before it throws)
           val wm = state.getCurrentWatermarkMs()
           val (expired, live) = pending.partition(c => c.clickMs + horizonMs <= wm)
-          expired.sortBy(c => (c.clickMs, c.clickId)).foreach(c =>
+          expired.sortWith((a, b) => before(a.clickMs, a.clickId, b.clickMs, b.clickId)).foreach(c =>
             out += ForwardAttributionOut(c.clickId, userId, c.clickMs, None, None, None))
           if (live.nonEmpty) {
             state.update(PendingClicks(live))
@@ -525,62 +507,33 @@ object EventStreams {
     * event consumed. */
   final case class LastEvent(ms: Long, id: Long, tpe: String)
 
-  /** The per-user successor fold, ONE definition for both state APIs:
-    * rows fold in (ts, event_id) order — matching the batch window's
-    * sort — and each pairs with the carried last event through `pair`.
-    * An out-of-order row at-or-before the carried event (same-batch
-    * rows are sorted, so only cross-batch late data hits this) still
-    * pairs — in arrival order, per the documented divergence — but
-    * must not REGRESS the carried (ms, id) clock. Returns the new
-    * carried event and the emitted rows. */
-  private def successorFold[O](last: Option[LastEvent], rows: Iterator[Event])(
-      pair: (LastEvent, Event) => O): (Option[LastEvent], Seq[O]) = {
-    val out = Seq.newBuilder[O]
-    var cur = last
-    rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-      val t = e.ts.getTime
-      cur.foreach(p => out += pair(p, e))
-      if (cur.forall(p => p.ms < t || (p.ms == t && p.id < e.event_id)))
-        cur = Some(LastEvent(t, e.event_id, e.event_type))
-    }
-    (cur, out.result())
+  /** The successor step, ONE definition for both state APIs: each row
+    * pairs with the carried last event through `pair`. An out-of-order
+    * row at-or-before the carried event (same-batch rows are sorted,
+    * so only cross-batch late data hits this) still pairs — in arrival
+    * order, per the documented divergence — but must not REGRESS the
+    * carried (ms, id) clock. */
+  private def successorStep[O](pair: (Long, LastEvent, Event) => O)(userId: Long,
+      last: Option[LastEvent], e: Event): (Option[LastEvent], Option[O]) = {
+    val t = e.ts.getTime
+    (if (last.forall(p => before(p.ms, p.id, t, e.event_id)))
+      Some(LastEvent(t, e.event_id, e.event_type)) else last,
+      last.map(pair(userId, _, e)))
   }
 
-  /** [[successorFold]] under state API v1 (`flatMapGroupsWithState`):
+  /** [[successorStep]] under state API v1 (`flatMapGroupsWithState`):
     * ONE [[LastEvent]] per user — O(1) per key, hash-partitioned on
-    * user_id — evicted once the watermark passes `last + idleMs`
-    * (nothing to emit at timeout: rows emit inline as their successor
-    * arrives, so eviction is purely a state bound). */
+    * user_id — expired by [[eventTimeFold]] once the watermark passes
+    * `last + idleMs` (nothing to emit at expiry: rows emit inline as
+    * their successor arrives, so eviction is purely a state bound). */
   private def successorStateful[O: Encoder](events: Dataset[Event], idleMs: Long,
       watermark: String)(pair: (Long, LastEvent, Event) => O): Dataset[O] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, O](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[LastEvent]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (cur, out) = successorFold(state.getOption, rows)(pair(userId, _, _))
-            cur match {
-              // the attributeStateful arming guard: a timeout at-or-
-              // before the current watermark throws — an idle user the
-              // watermark already passed just drops state now
-              case Some(c) if c.ms + idleMs > state.getCurrentWatermarkMs() =>
-                state.update(c)
-                state.setTimeoutTimestamp(c.ms + idleMs)
-              case Some(_) => state.remove()
-              case None => ()
-            }
-            out.iterator
-          }
-      }
+    eventTimeFold[LastEvent, O](events, watermark)(_.ms + idleMs, (_, _) => None)(
+      successorStep(pair))
   }
 
-  /** [[successorFold]] under state API v2 (`transformWithState`), for
+  /** [[successorStep]] under state API v2 (`transformWithState`), for
     * the two operators that chain an aggregation after it: run with the
     * output's `ts` DECLARED as its event-time column, the emitted rows
     * may feed a downstream stateful aggregation (the v1 API cannot
@@ -610,7 +563,7 @@ object EventStreams {
     override def handleInputRows(userId: Long, rows: Iterator[Event],
         tv: TimerValues): Iterator[O] = {
       val prior = if (last.exists()) Some(last.get()) else None
-      val (cur, out) = successorFold(prior, rows)(pair(userId, _, _))
+      val (cur, out) = foldByTime(userId, prior, rows)(successorStep(pair))
       cur.foreach { c =>
         last.update(c)
         val expiryMs = c.ms + idleMs
@@ -781,52 +734,29 @@ object EventStreams {
     * A session closes either when a later event for the same user
     * arrives more than `gapMs` after the previous one (emitted
     * immediately) or when the event-time watermark passes
-    * `last + gapMs` (timeout path — this is what bounds state). */
+    * `last + gapMs` ([[eventTimeFold]]'s expiry — this is what bounds
+    * state). */
   def sessionizeStateful(events: Dataset[Event],
       gapMs: Long = 30L * 60 * 1000,
       watermark: String = "2 hours"): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-
-    // epoch MILLIseconds (Timestamp.getTime) — field names say so
-    def ms(t: java.sql.Timestamp): Long = t.getTime
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(userId, s.startMs, s.lastMs, s.n, s.total))
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (ms(e.ts), e.event_id))
-            val closed = Seq.newBuilder[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = ms(e.ts)
-              cur match {
-                case Some(s) if t - s.lastMs > gapMs =>
-                  closed += SessionOut(userId, s.startMs, s.lastMs, s.n, s.total)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case Some(s) =>
-                  // min/max, not overwrite: a late-but-in-watermark
-                  // event from a previous micro-batch may precede the
-                  // session's current bounds — never regress them
-                  cur = Some(SessionState(math.min(s.startMs, t),
-                    math.max(s.lastMs, t), s.n + 1, s.total + e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastMs + gapMs)
-            }
-            closed.result().iterator
-          }
+    def closed(userId: Long, s: SessionState): SessionOut =
+      SessionOut(userId, s.startMs, s.lastMs, s.n, s.total)
+    eventTimeFold[SessionState, SessionOut](events, watermark)(
+        _.lastMs + gapMs, (userId, s) => Some(closed(userId, s))) { (userId, cur, e) =>
+      val t = e.ts.getTime
+      cur match {
+        case Some(s) if t - s.lastMs > gapMs =>
+          (Some(SessionState(t, t, 1, e.value)), Some(closed(userId, s)))
+        case Some(s) =>
+          // min/max, not overwrite: a late-but-in-watermark event from
+          // a previous micro-batch may precede the session's current
+          // bounds — never regress them
+          (Some(SessionState(math.min(s.startMs, t), math.max(s.lastMs, t),
+            s.n + 1, s.total + e.value)), None)
+        case None => (Some(SessionState(t, t, 1, e.value)), None)
       }
+    }
   }
 
   /** Per-user funnel state: min event-time (ms) per step, MaxValue =
@@ -849,14 +779,11 @@ object EventStreams {
     * O(1) per key, hash-partitioned on user_id — and min is a
     * monotone merge, so late-but-in-watermark events fold in
     * order-independently. A user's funnel row is emitted ONCE, when
-    * the event-time watermark passes `lastMs + idleMs` (the funnel
-    * report on inactivity; the batch twin reports at corpus end).
-    * The same timeout-arming guard as [[attributeStateful]]: a user
-    * whose idle horizon the watermark already passed emits inline
-    * instead of arming an un-armable timeout. Divergence by
-    * construction: an event arriving after its user's report emitted
-    * starts a NEW funnel (the old state is gone) — the cost of
-    * bounded state on an unbounded stream.
+    * [[eventTimeFold]] expires the state at `lastMs + idleMs` (the
+    * funnel report on inactivity; the batch twin reports at corpus
+    * end). Divergence by construction: an event arriving after its
+    * user's report emitted starts a NEW funnel (the old state is
+    * gone) — the cost of bounded state on an unbounded stream.
     *
     * Downstream `groupBy(step).count()` (or a conditional sum) gives
     * the batch query's step counts; StreamingSpec pins the per-user
@@ -865,7 +792,6 @@ object EventStreams {
       idleMs: Long = 2L * 3600 * 1000,
       watermark: String = "2 hours"): Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
-    def ms(t: java.sql.Timestamp): Long = t.getTime
     val Unseen = Long.MaxValue
     def emit(userId: Long, s: FunnelState): FunnelOut = {
       val step1 = s.clickMs != Unseen
@@ -875,43 +801,19 @@ object EventStreams {
       def opt(v: Long) = if (v == Unseen) None else Some(v)
       FunnelOut(userId, step, opt(s.clickMs), opt(s.viewMs), opt(s.purchaseMs))
     }
-
-    events
-      .filter(e => e.event_type == "click" || e.event_type == "view" ||
-        e.event_type == "purchase")
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(emit(userId, s))
-          } else {
-            var s = state.getOption
-              .getOrElse(FunnelState(Unseen, Unseen, Unseen, Long.MinValue))
-            rows.foreach { e =>
-              val t = ms(e.ts)
-              s = e.event_type match {
-                case "click"    => s.copy(clickMs = math.min(s.clickMs, t))
-                case "view"     => s.copy(viewMs = math.min(s.viewMs, t))
-                case _          => s.copy(purchaseMs = math.min(s.purchaseMs, t))
-              }
-              s = s.copy(lastMs = math.max(s.lastMs, t))
-            }
-            if (s.lastMs + idleMs > state.getCurrentWatermarkMs()) {
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastMs + idleMs)
-              Iterator.empty
-            } else {
-              // idle horizon already behind the watermark — the
-              // timeout could never arm; report inline
-              state.remove()
-              Iterator.single(emit(userId, s))
-            }
-          }
+    eventTimeFold[FunnelState, FunnelOut](
+        events.filter(e => e.event_type == "click" || e.event_type == "view" ||
+          e.event_type == "purchase"),
+        watermark)(_.lastMs + idleMs, (userId, s) => Some(emit(userId, s))) { (_, cur, e) =>
+      val s = cur.getOrElse(FunnelState(Unseen, Unseen, Unseen, Long.MinValue))
+      val t = e.ts.getTime
+      val stepped = e.event_type match {
+        case "click" => s.copy(clickMs = math.min(s.clickMs, t))
+        case "view"  => s.copy(viewMs = math.min(s.viewMs, t))
+        case _       => s.copy(purchaseMs = math.min(s.purchaseMs, t))
       }
+      (Some(stepped.copy(lastMs = math.max(s.lastMs, t))), None)
+    }
   }
 
   final case class HeavyUser(event_type: String, user_id: String, est: Long, n: Long)

@@ -3,7 +3,7 @@ package graft
 import graft.core.{JoinSpec, Pipeline, PipelineStatus}
 import graft.operators.{Qualifiers, Transformers}
 import graft.sinks.ParquetSink
-import graft.sources.{ParquetSource, RangeSource}
+import graft.sources.{ParquetSource, RangeSource, SeqSource}
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSuite {
@@ -348,6 +348,31 @@ class PipelineSpec extends SparkSuite {
     val all = spark.read.parquet(sf("orders")).orderBy("o_orderkey")
       .collect().map(_.getLong(0)).slice(10, 30)
     assert(keys.toSeq == all.toSeq)
+  }
+
+  test("SeqSource: in-memory rows keep their schema and honour the source limit through a join to a sink") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false), StructField("label", StringType)))
+    val rows = Seq(Row(0L, "a"), Row(1L, "b"), Row(2L, "c"), Row(3L, "d"))
+    val out = tmpDir("pipe_seq")
+    val report = Pipeline
+      .from(SeqSource(rows, schema, limit = Some(2)))
+      .join(JoinSpec(ParquetSource(sf("nation")), "k", "n_nationkey"))
+      .to(ParquetSink(s"$out/res"))
+      .exec(spark)
+    assert(report.status == PipelineStatus.Clean)
+    val res = spark.read.parquet(s"$out/res")
+    // the declared columns lead the joined record with their types
+    assert(res.schema.fields.take(2).map(f => f.name -> f.dataType).toSeq ==
+      Seq("k" -> LongType, "label" -> StringType), res.schema.treeString)
+    assert(res.columns.contains("n_name"))
+    val got = res.select("k", "label").collect().map(r => r.getLong(0) -> r.getString(1))
+    assert(got.length == 2, got.mkString(","))
+    assert(got.toSet.subsetOf(Set(0L -> "a", 1L -> "b", 2L -> "c", 3L -> "d")))
+    assert(report.counters.exists { case (k, v) => k.startsWith("extract_") && v == 2 },
+      report.counters.toString)
   }
 
   test("chained loaders: ids generated before the first sink are pinned for the second") {

@@ -70,7 +70,10 @@ class StreamingSpec extends SparkSuite {
     val ms = MemoryStream[Event]
     // session_window aggregations only support append mode: rows emit
     // once the watermark passes session end + gap
-    val q = EventStreams.sessionWindows(ms.toDF())
+    val q = ms.toDF()
+      .withWatermark("ts", "2 hours")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("session_value"))
       .writeStream.format("memory").queryName("sessions").outputMode("append").start()
     try {
       // user 1: two events 10 min apart (one session), then one 60 min later
@@ -170,7 +173,7 @@ class StreamingSpec extends SparkSuite {
     import spark.implicits._
     val dim = Seq((1L, "gold"), (2L, "trial")).toDF("user_id", "segment")
     val ms = MemoryStream[Event]
-    val enriched = EventStreams.enrichWithDim(ms.toDF(), dim)
+    val enriched = ms.toDF().join(dim, Seq("user_id"), "left_outer")
     val q = enriched.writeStream.format("memory").queryName("enriched")
       .outputMode("append").start()
     try {
@@ -408,8 +411,9 @@ class StreamingSpec extends SparkSuite {
     implicit val sql = spark.sqlContext
     import spark.implicits._
     val ms = MemoryStream[Event]
-    val q = graft.streaming.EventStreams.dedupStream(
-        ms.toDF().withColumn("props", org.apache.spark.sql.functions.lit("{}")))
+    val q = ms.toDF().withColumn("props", org.apache.spark.sql.functions.lit("{}"))
+      .withWatermark("ts", "2 hours")
+      .dropDuplicatesWithinWatermark("event_id")
       .writeStream.format("memory").queryName("deduped").outputMode("append").start()
     try {
       ms.addData(Event(1, ts(0), 1, "click", 1.0), Event(1, ts(0), 1, "click", 1.0))
@@ -525,9 +529,9 @@ class StreamingSpec extends SparkSuite {
     implicit val sql = spark.sqlContext
     import spark.implicits._
     val ms = MemoryStream[Event]
-    val q = graft.streaming.EventStreams.dedupStream(
-        ms.toDF().withColumn("props", org.apache.spark.sql.functions.lit("{}")),
-        watermark = "10 minutes")
+    val q = ms.toDF().withColumn("props", org.apache.spark.sql.functions.lit("{}"))
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark("event_id")
       .writeStream.format("memory").queryName("deduped_horizon").outputMode("append").start()
     try {
       ms.addData(Event(1, ts(0), 1, "click", 1.0))
@@ -997,6 +1001,48 @@ class StreamingSpec extends SparkSuite {
           r.getAs[Double]("total_value")))
       assert(closed.toSeq == Seq((7L, 2L, 3.0)))
     } finally q.stop()
+  }
+
+  test("event-time-timeout operators survive a backlog drain whose rows are already behind the watermark") {
+    // Spark drops late rows against the PREVIOUS batch's watermark but
+    // checks setTimeoutTimestamp against the CURRENT one. Draining two
+    // files one per trigger, batch 1 (file B) runs at watermark 03:00
+    // (file A's 05:00 minus the 2 h delay) and still hands user 3's
+    // 01:00 row to the state function: its 01:30 expiry can arm no timer
+    import spark.implicits._
+    val src = tmpDir("backlog_drain")
+    def parquetFiles: Set[java.io.File] =
+      new java.io.File(src).listFiles().filter(_.getName.endsWith(".parquet")).toSet
+    def writeFile(events: Event*): Unit =
+      events.toDF().withColumn("props", lit("{}"))
+        .repartition(1).write.mode("append").parquet(src)
+    writeFile(Event(1, ts(0), 1, "click", 1.0), Event(2, ts(300), 2, "click", 2.0))
+    val fileA = parquetFiles
+    writeFile(Event(3, ts(60), 3, "click", 4.0))
+    // file B must be the second trigger: the source orders by mtime
+    (parquetFiles -- fileA).foreach(_.setLastModified(fileA.map(_.lastModified).max + 60000L))
+    val halfHour = 30L * 60 * 1000
+    def drain(name: String)(op: org.apache.spark.sql.Dataset[Event] =>
+        org.apache.spark.sql.Dataset[_]): Array[org.apache.spark.sql.Row] = {
+      val ds = EventStreams
+        .readEventStream(spark, src, maxFilesPerTrigger = 1, nanosTs = Some(false))
+        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
+      val q = op(ds).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table(name).collect()
+    }
+    drain("backlog_attribute")(EventStreams.attributeStateful(_, ttlMs = halfHour))
+    drain("backlog_forward")(EventStreams.attributeForwardStateful(_, horizonMs = halfHour))
+    drain("backlog_transitions")(EventStreams.transitionsStateful(_, idleMs = halfHour))
+    drain("backlog_gaps")(EventStreams.sessionGapsStream(_, idleMs = halfHour))
+    drain("backlog_funnel")(EventStreams.funnelStateful(_, idleMs = halfHour))
+    // user 3's session closes inline, user 1's by timeout; user 2's
+    // (05:00, expiry 05:30) is still open
+    val sessions = drain("backlog_sessions")(EventStreams.sessionizeStateful(_, gapMs = halfHour))
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("start_ms"), r.getAs[Long]("n_events")))
+    assert(sessions.sorted.toSeq == Seq((1L, ts(0).getTime, 1L), (3L, ts(60).getTime, 1L)),
+      sessions.mkString(","))
   }
 
   test("rateAnomalyStream: live hours flagged against a frozen batch baseline") {
