@@ -24,9 +24,7 @@ import org.apache.spark.sql.functions._
   */
 object CurationQueries {
 
-  /** Oracle-side tokenized view (same contract as TextQueries). */
-  private val toksCte =
-    "WITH toks AS (SELECT doc_id, text, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents)"
+  import TextQueries.toksCte
 
   /** DuckDB n-gram list matching [[graft.functions.TextFunctions.shingles]]:
     * empty below n tokens, positions 1..len-n+1 joined by one space. */
@@ -101,8 +99,10 @@ object CurationQueries {
   /** The BM25 ranking frame (query, rank, doc_id, score_micro) —
     * ONE definition serving `bm25_search` AND `retrieval_mrr`'s
     * served-list side. Rational idf (see the BM25 contract note above),
-    * integer micro-point scores, two-level top-k (per-(query, shard)
-    * pre-trim before the final per-query window). */
+    * integer micro-point scores. tf and doc-length are narrow per-doc
+    * expressions (the query terms are fixed, so NO token explode);
+    * corpus stats (N, Σdl, per-term df) are ONE 1-row aggregate
+    * broadcast back; the top-k is [[ProfilingQueries.shardedTopK]]. */
   private def bmRanked(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val terms = BmQueries.flatMap(_._2).distinct
@@ -129,20 +129,11 @@ object CurationQueries {
         ts.map(contribMicro).reduce(_ + _).as(s"s_$qn")
       }: _*)
     val stackExpr = BmQueries.map { case (qn, _) => s"'$qn', s_$qn" }.mkString(", ")
-    val nShards = ProfilingQueries.shardCount(
-      ProfilingQueries.inputBytes(Tables(s, dir, "documents")))
-    val w1 = Window.partitionBy(col("query"), col("shard"))
-      .orderBy(col("score_micro").desc, col("doc_id"))
-    val w2 = Window.partitionBy(col("query"))
-      .orderBy(col("score_micro").desc, col("doc_id"))
-    scored
+    val hits = scored
       .selectExpr("doc_id", s"stack(${BmQueries.size}, $stackExpr) AS (query, score_micro)")
       .filter(col("score_micro") > 0)
-      .withColumn("shard", ProfilingQueries.shardCol(nShards))
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= BmTopK)
-      .withColumn("rank", row_number().over(w2).cast("long"))
-      .filter(col("rank") <= BmTopK)
+    ProfilingQueries.shardedTopK(hits, "query",
+        Seq(col("score_micro").desc, col("doc_id")), BmTopK, Tables(s, dir, "documents"))
       .select(col("query"), col("rank"), col("doc_id"), col("score_micro"))
   }
 
@@ -639,18 +630,6 @@ object CurationQueries {
              |  round(CAST(SUM(oov) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS oov_rate
              |FROM j GROUP BY lang""".stripMargin)),
 
-    // lexical retrieval: BM25-shaped top-k per query over the corpus —
-    // the term-based complement of the embedding ANN family. tf and
-    // doc-length are narrow per-doc expressions (the query terms are
-    // fixed, so NO token explode); corpus stats (N, Σdl, per-term df)
-    // are ONE 1-row aggregate broadcast back; scores are integer
-    // micro-points (see BmQueries note). The top-k is TWO-LEVEL —
-    // row_number per (query, content-hash shard) prunes to ≤k·shards
-    // rows, then the final per-query window ranks that bounded set —
-    // because a single window partitioned by `query` alone is the
-    // bounded-cardinality funnel (|queries| tasks own the whole
-    // score-positive corpus at 100 TB). Per-shard top-k is a superset
-    // of global top-k, so the oracle mirrors only the final ranking.
     // quality-score CALIBRATION against duplication — "does the cheap
     // quality signal predict the expensive dedup label?", the check
     // run before trusting a scalar filter to gate a 100 TB corpus.
@@ -710,15 +689,14 @@ object CurationQueries {
     // posBelow counts DUP docs scoring strictly below each clean doc,
     // so AUC → 1 means dups score BELOW clean docs (the "low quality
     // predicts duplication" hypothesis holds); ½ = no signal.
-    // posBelow is the vocab_top_p tier-then-bucket decomposition: a
-    // serial cumulative over the ≤ 101 coarse buckets (score div
-    // 10000) plus a bucket-PARTITIONED cumulative within — no global
+    // posBelow is a serial cumulative over the ≤ 101 coarse buckets
+    // (score div 10000, [[ProfilingQueries.bucketOffsets]]) plus a
+    // bucket-PARTITIONED cumulative within — no global
     // single-partition window at any cardinality. Scale: the score
     // scan + the 16-byte fp dup join (quality_calibration's shapes),
     // then everything runs on the |distinct score| histogram.
     QueryDef("quality_auc",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val docs = Tables(s, dir, "documents")
           .select(col("doc_id"),
             md5(regexp_replace(lower(nfcNormalize(col("text"))), "\\s+", " ")).as("fp"),
@@ -730,15 +708,12 @@ object CurationQueries {
           .agg(count(lit(1)).as("n_all"), sum(col("d")).as("n_pos"))
           .withColumn("n_neg", col("n_all") - col("n_pos"))
           .withColumn("b", expr("u div 10000"))
-        val bkt = hist.groupBy(col("b")).agg(sum(col("n_pos")).as("bn"))
-          .withColumn("bkt_below", coalesce(sum(col("bn")).over(
-            Window.orderBy(col("b")).rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)))
+        val bkt = ProfilingQueries.bucketOffsets(hist, Nil, "b", weight = sum(col("n_pos")))
         val wIn = Window.partitionBy(col("b")).orderBy(col("u"))
           .rowsBetween(Window.unboundedPreceding, -1)
         val terms = hist
           .withColumn("in_below", coalesce(sum(col("n_pos")).over(wIn), lit(0L)))
-          .join(broadcast(bkt.select(col("b"), col("bkt_below"))), Seq("b"))
+          .join(broadcast(bkt.select(col("b"), col("off"))), Seq("b"))
           .select(col("n_pos"), col("n_neg"),
             // the term and everything downstream in DECIMAL(38,0):
             // n_neg·(2·posBelow+n_pos) wraps BIGINT silently (non-ANSI)
@@ -749,7 +724,7 @@ object CurationQueries {
             // at 100 TB; the quotient is cast back to BIGINT (auc is
             // ≤ 10^6 micro-points, always representable).
             (col("n_neg").cast("decimal(38,0)") *
-              (lit(2L) * (col("bkt_below") + col("in_below")) +
+              (lit(2L) * (col("off") + col("in_below")) +
               col("n_pos"))).as("t"))
         terms.agg(sum(col("n_pos")).as("n_pos"), sum(col("n_neg")).as("n_neg"),
             sum(col("t")).as("u2"))
@@ -887,6 +862,9 @@ object CurationQueries {
              |  CAST(ps[1] AS BIGINT) AS first_pos
              |FROM m WHERE len(ps) > 0""".stripMargin)),
 
+    // lexical retrieval: BM25-shaped top-k per query over the corpus
+    // ([[bmRanked]]) — the term-based complement of the embedding ANN
+    // family. The oracle is the single per-query window.
     QueryDef("bm25_search",
       (s, dir) => bmRanked(s, dir),
       Some(bmRankedSql)),
@@ -970,45 +948,23 @@ object CurationQueries {
     // Per-domain quality quota — "keep the best ⌈25%⌉ of each
     // language", the selection step a curation pipeline runs after
     // scoring. The obvious window (row_number PARTITION BY lang) puts
-    // an entire language in ONE task — a handful of partitions for a
-    // 100 TB corpus. Instead this reuses the histogram-offset pattern
-    // of rank_global_bucketed PER GROUP: (1) band the score into fixed
-    // buckets (micro-points div 50k — monotone in the sort key) and
-    // count per (lang, bucket) — map-side combinable, ≤ |langs|·21
-    // rows; (2) per lang, turn bucket counts into descending
-    // cumulative offsets and the group total n (a window over the tiny
-    // counts frame — the only serial step, and it is O(buckets), not
-    // O(rows)); (3) broadcast the offsets back and row_number within
-    // (lang, bucket): exact per-lang rank = offset + local rank.
-    // Parallelism is |langs|·|buckets| (the knob: finer buckets →
-    // wider); the quota cut 4·rank ≤ n+3 (⟺ rank ≤ ⌈n/4⌉) is pure
-    // BIGINT arithmetic, deterministic under the (qm desc, doc_id)
-    // total order on both engines.
+    // an entire language in ONE task; this ranks by
+    // [[ProfilingQueries.bucketedRank]] over descending score bands
+    // (micro-points div 50k). The quota cut 4·rank ≤ n+3 (⟺ rank ≤
+    // ⌈n/4⌉) is pure BIGINT arithmetic, deterministic under the
+    // (qm desc, doc_id) total order on both engines.
     QueryDef("curation_quota",
       (s, dir) => {
         val qm = QueryDef.microPoints(
           graft.queries.TextQueries.qualityScore(col("text")))
-        // eager like shingleSet (SCALE.md: shared cached frames): the
-        // scored frame feeds the offsets aggregation AND the main
-        // join/window — unpersisted, the per-row qualityScore text pass
-        // (the expensive stage) would run twice
-        val scored = ProfilingQueries.widened(Tables(s, dir, "documents"))
+        // eager: the scored frame feeds the offsets aggregation AND the
+        // main join/window, and its qualityScore text pass is the
+        // expensive stage
+        val scored = QueryDef.eager(ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), col("lang"), qm.as("qm"))
-          .withColumn("bkt", floor(col("qm") / lit(50000.0)).cast("long"))
-          .persist()
-        scored.count()
-        val wOff = Window.partitionBy(col("lang")).orderBy(col("bkt").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val wAll = Window.partitionBy(col("lang"))
-        val offsets = scored.groupBy(col("lang"), col("bkt"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("off", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-          .withColumn("n", sum(col("cnt")).over(wAll))
-          .select(col("lang"), col("bkt"), col("off"), col("n"))
-        val wIn = Window.partitionBy(col("lang"), col("bkt"))
-          .orderBy(col("qm").desc, col("doc_id"))
-        scored.join(broadcast(offsets), Seq("lang", "bkt"))
-          .withColumn("rnk", (col("off") + row_number().over(wIn)).cast("long"))
+          .withColumn("bkt", floor(col("qm") / lit(50000.0)).cast("long")))
+        ProfilingQueries.bucketedRank(scored, Seq("lang"), "bkt",
+            Seq(col("qm").desc, col("doc_id")), descending = true, withTotal = true)
           .filter(col("rnk") * 4 <= col("n") + 3)
           .select(col("doc_id"), col("lang"), col("qm"))
       },
@@ -1042,21 +998,19 @@ object CurationQueries {
     // score join, per-doc rollup); the vocabulary-size scalar is the
     // BM25 1-row-broadcast pattern; zero windows, zero driver data.
     // The shared doc-bigram frame feeds three concurrent subtrees of
-    // one plan → eager persist (the AQE cache contract).
+    // one plan → [[QueryDef.eager]].
     QueryDef("lm_perplexity_filter",
       (s, dir) => {
         val t = tokens(col("text"))
         val docs = ProfilingQueries.widened(Tables(s, dir, "documents"))
-        val bigrams = docs.select(col("doc_id"),
+        val bigrams = QueryDef.eager(docs.select(col("doc_id"),
             explode(when(size(t) >= 2,
               transform(sequence(lit(1), size(t) - 1),
                 i => struct(element_at(t, i).as("w1"),
                   element_at(t, i + 1).as("w2"))))
               .otherwise(array().cast("array<struct<w1:string,w2:string>>")))
               .as("b"))
-          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-          .persist()
-        bigrams.count() // eager: model build + scoring race on this cache
+          .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2")))
         val cab = bigrams.groupBy(col("w1"), col("w2"))
           .agg(count(lit(1)).as("c_ab"))
         val ca = bigrams.groupBy(col("w1")).agg(count(lit(1)).as("c_a"))
@@ -1449,29 +1403,20 @@ object CurationQueries {
     * "long" doc from a books source live on different raw scales;
     * their PERCENTILES are comparable). pct_ppm = (#strictly-smaller
     * in source)·1e6 div (n_source − 1), min-rank ties, pure BIGINT.
-    * Plan: the per-source (value → count) histogram + one cumulative
-    * window over the TINY histogram frame (|distinct values| rows per
-    * source), joined back to the scan — the curation_quota /
-    * rank_global_bucketed discipline; the obvious per-source
-    * row_number window would funnel whole sources into single tasks.
-    * Single-doc sources pin to 0 (greatest guard, not a div-0). */
+    * Plan: the per-source (value → count) histogram's offsets
+    * ([[ProfilingQueries.bucketOffsets]], every distinct value its own
+    * bucket) joined back to the scan. Single-doc sources pin to 0
+    * (greatest guard, not a div-0). */
   private[graft] def rankNormalizeDef: QueryDef =
     QueryDef("score_rank_normalize",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val docs = Tables(s, dir, "documents")
-        val hist = docs.groupBy(col("source"), col("n_chars"))
-          .agg(count(lit(1)).as("c"))
-        val wCum = Window.partitionBy(col("source")).orderBy(col("n_chars"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val wAll = Window.partitionBy(col("source"))
-        val offsets = hist
-          .withColumn("below", coalesce(sum(col("c")).over(wCum), lit(0L)))
-          .withColumn("n_src", sum(col("c")).over(wAll))
+        val offsets = ProfilingQueries.bucketOffsets(docs, Seq("source"), "n_chars",
+          withTotal = true)
         docs.select(col("doc_id"), col("source"), col("n_chars"))
           .join(offsets, Seq("source", "n_chars"))
           .select(col("doc_id"), col("source"), col("n_chars"),
-            expr("(below * 1000000) div greatest(n_src - 1, 1)").as("pct_ppm"))
+            expr("(off * 1000000) div greatest(n - 1, 1)").as("pct_ppm"))
       },
       Some("""WITH hist AS (
              |  SELECT source, n_chars, COUNT(*) AS c

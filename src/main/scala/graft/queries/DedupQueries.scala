@@ -42,11 +42,12 @@ import org.apache.spark.sql.functions._
   * on the same bucketed algorithm", with recall vs ground truth pinned
   * separately in TextDedupSpec.
   *
-  * Caching contract: queries that `persist()` a shared intermediate
-  * (the shingle set feeds signature build AND both verification join
-  * sides) rely on the caller clearing the cache after materializing
-  * each query — Bench and Verify call `spark.catalog.clearCache()`
-  * between queries; compose these defs yourself and you own that.
+  * Caching contract: queries that cache a shared intermediate
+  * ([[QueryDef.eager]]: the shingle set feeds signature build AND both
+  * verification join sides) rely on the caller clearing the cache
+  * after materializing each query — Bench and Verify call
+  * `spark.catalog.clearCache()` between queries; compose these defs
+  * yourself and you own that.
   */
 object DedupQueries {
 
@@ -144,16 +145,10 @@ object DedupQueries {
     maxDfFrac match {
       case None => sh
       case Some(f) =>
-        // The CAPPED frame is EAGERLY MATERIALIZED, not just
-        // persist()ed: it feeds 3-5 concurrent subtrees (sizes, both
-        // verify sides, signature build), and under AQE those stages
-        // materialize in parallel — a not-yet-populated cache lets each
-        // stage recompute the whole chain including its exchange
-        // (measured: the same query shuffled 5 MB or 26 MB at sf0.1
-        // depending on who won the race). count() forces the cache
-        // once, making both the work and the shuffle-bytes gate
-        // deterministic. Callers get an already-cached frame and must
-        // NOT re-persist it.
+        // The CAPPED frame is [[QueryDef.eager]]: it feeds 3-5
+        // concurrent subtrees (sizes, both verify sides, signature
+        // build). Callers get an already-cached frame and must NOT
+        // re-persist it.
         //
         // The RAW frame is deliberately NOT persisted (r17; it was
         // until then): dfCap consumes it three times (doc count, hot
@@ -173,9 +168,7 @@ object DedupQueries {
         // over partition-by-shingle — consumes raw once but sorts the
         // full shingle set by the shingle STRING, ~2× the whole
         // hash-agg+anti-join path: 6.7 s vs 2.6 s at sf0.1.)
-        val capped = dfCap(sh, f).persist()
-        capped.count()
-        capped
+        QueryDef.eager(dfCap(sh, f))
     }
   }
 
@@ -408,11 +401,8 @@ object DedupQueries {
     * — measured ~1 s per re-run at sf0.1. Released by the caller's
     * clearCache sweep like every other shared intermediate here. */
   private[graft] def lshCandidates(sh: DataFrame): DataFrame = {
-    // eager like shingleSet: the self-join consumes bands on BOTH sides
-    // concurrently; an unmaterialized cache re-runs the 16-min
-    // signature aggregation (and its exchange) per side
-    val bands = minhashBands(sh).persist()
-    bands.count()
+    // eager: the self-join consumes bands on BOTH sides concurrently
+    val bands = QueryDef.eager(minhashBands(sh))
     bands.as("x").join(bands.as("y"), Seq("band", "sig"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -446,8 +436,7 @@ object DedupQueries {
     * Output is (doc_a = probe id, doc_b = partner id), NOT id-ordered:
     * the caller's drop rule decides which orientation matters. */
   private[queries] def lshCandidatesProbe(sh: DataFrame, probe: DataFrame): DataFrame = {
-    val bands = minhashBands(sh).persist()
-    bands.count()
+    val bands = QueryDef.eager(minhashBands(sh))
     val pb = bands.join(probe, Seq("doc_id"), "left_semi")
     pb.as("x").join(bands.as("y"), Seq("band", "sig"))
       .filter(col("x.doc_id") =!= col("y.doc_id"))
@@ -1122,14 +1111,12 @@ object DedupQueries {
     QueryDef("dedup_semantic_trained",
       (s, dir) => {
         // reps is consumed TrainedIters+2 times (init take-k, one
-        // assign per Lloyd iteration, the final assignment) — eagerly
-        // persisted (r18) so the quantize-collapse aggregation runs
-        // once, not once per consumer (measured 4 evaluations of the
-        // chain per run at sf0.1). Released by the caller's clearCache
-        // sweep; at scale this is the standard cache-the-training-set
-        // shape for iterative ML (guide §5: reused AND expensive).
-        val reps = quantizedReps(s, dir).persist()
-        reps.count()
+        // assign per Lloyd iteration, the final assignment) — eager
+        // (r18) so the quantize-collapse aggregation runs once, not
+        // once per consumer (measured 4 evaluations of the chain per
+        // run at sf0.1); the standard cache-the-training-set shape for
+        // iterative ML (guide §5: reused AND expensive).
+        val reps = QueryDef.eager(quantizedReps(s, dir))
         val assigned = trainedCells(reps, TrainedK, TrainedIters)
         semanticKept(assigned, withinCellDrops(assigned, 0.4))
       },
@@ -1218,9 +1205,8 @@ object DedupQueries {
     // CollapseProject leaves them apart, verified on the optimized plan,
     // so the gram array is built once per row, not once per window) and
     // the ONLY shuffled data is the fingerprint set, ~0.2 rows per gram
-    // after windowing dedup. fp is eagerly persisted: it feeds the
-    // cross-doc dup count AND the per-doc rollup join (the AQE contract,
-    // see object scaladoc).
+    // after windowing dedup. fp is [[QueryDef.eager]]: it feeds the
+    // cross-doc dup count AND the per-doc rollup join.
     // CONTENT-DEFINED CHUNKING dedup — the storage-dedup complement of
     // the similarity family: variable-size chunks whose boundaries are
     // anchor tokens (hash ≡ 0 mod CdcMask, the CDC trick from
@@ -1916,8 +1902,7 @@ object DedupQueries {
     * it on constructed corpora (the ≥ K+W−1 guarantee needs docs with
     * planted shared spans at controlled offsets). */
   private[graft] def winnowingAudit(docs: DataFrame): DataFrame = {
-    val fp = winnowingFingerprints(docs).persist()
-    fp.count()
+    val fp = QueryDef.eager(winnowingFingerprints(docs))
     val dup = fp.groupBy(col("h")).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1).select(col("h"), lit(1L).as("d"))
     val per = fp.join(dup, Seq("h"), "left_outer")
@@ -1968,8 +1953,7 @@ object DedupQueries {
     * most W ≤ K apart, so the islands chain). Factored off the
     * QueryDef so WinnowingSpec can plant spans at known offsets. */
   private[graft] def winnowingSpans(docs: DataFrame): DataFrame = {
-    val fp = winnowingFingerprintsPos(docs).persist()
-    fp.count()
+    val fp = QueryDef.eager(winnowingFingerprintsPos(docs))
     // df cap before the pair join — tiny hot set by construction, AQE
     // broadcasts the anti-join build side (the dfCap discipline)
     val hot = fp.groupBy(col("h"))
@@ -1982,19 +1966,30 @@ object DedupQueries {
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"), col("a_pos"))
       .distinct()
-    val wOrd = Window.partitionBy(col("doc_a"), col("doc_b")).orderBy(col("a_pos"))
-    val prevEnd = max(col("a_pos") + lit(WinnowK - 1))
+    islandSpans(m, Seq("doc_a", "doc_b"), "a_pos", WinnowK, "n_fp")
+  }
+
+  /** THE gaps-and-islands span merge shared by the winnowing and
+    * exact-substring span queries: per `parts`, positions sorted by
+    * `pos` join one span while each starts at or before the running
+    * max of the earlier positions' ends (pos + width − 1); a position
+    * past it opens the next island. Output per island: `parts`,
+    * `span_start`, `span_end` (last position + width − 1) and the
+    * position count as `nAs`. */
+  private def islandSpans(df: DataFrame, parts: Seq[String], pos: String,
+      width: Int, nAs: String): DataFrame = {
+    val wOrd = Window.partitionBy(parts.map(col): _*).orderBy(col(pos))
+    val prevEnd = max(col(pos) + lit(width - 1))
       .over(wOrd.rowsBetween(Window.unboundedPreceding, -1))
-    m.withColumn("brk",
-        when(col("a_pos") > coalesce(prevEnd, lit(-1L)), 1L).otherwise(0L))
+    df.withColumn("brk",
+        when(col(pos) > coalesce(prevEnd, lit(-1L)), 1L).otherwise(0L))
       .withColumn("gi", sum(col("brk"))
         .over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("doc_a"), col("doc_b"), col("gi"))
-      .agg(min(col("a_pos")).as("span_start"),
-        (max(col("a_pos")) + lit(WinnowK.toLong - 1)).as("span_end"),
-        count(lit(1)).as("n_fp"))
-      .select(col("doc_a"), col("doc_b"),
-        col("span_start"), col("span_end"), col("n_fp"))
+      .groupBy((parts :+ "gi").map(col): _*)
+      .agg(min(col(pos)).as("span_start"),
+        (max(col(pos)) + lit(width.toLong - 1)).as("span_end"),
+        count(lit(1)).as(nAs))
+      .select((parts ++ Seq("span_start", "span_end", nAs)).map(col): _*)
   }
 
   /** Exact-substring gram width (chars): the minimum duplicated region
@@ -2031,36 +2026,22 @@ object DedupQueries {
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("h"))
 
   private[graft] def substringSpans(docs: DataFrame): DataFrame = {
-    val p = gramPositions(docs).persist()
-    p.count()
+    val p = QueryDef.eager(gramPositions(docs))
     val dup = p.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)
       .select(col("h"))
-    val d = p.join(dup, Seq("h"), "left_semi")
-    val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val prevEnd = max(col("pos") + lit(SubstrK - 1))
-      .over(wOrd.rowsBetween(Window.unboundedPreceding, -1))
-    d.withColumn("brk",
-        when(col("pos") > coalesce(prevEnd, lit(-1L)), 1L).otherwise(0L))
-      .withColumn("gi", sum(col("brk"))
-        .over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("doc_id"), col("gi"))
-      .agg(min(col("pos")).as("span_start"),
-        (max(col("pos")) + lit(SubstrK.toLong - 1)).as("span_end"),
-        count(lit(1)).as("n_grams"))
-      .select(col("doc_id"), col("span_start"), col("span_end"), col("n_grams"))
+    islandSpans(p.join(dup, Seq("h"), "left_semi"), Seq("doc_id"), "pos", SubstrK, "n_grams")
   }
 
   /** Keep-one-copy exact-substring cleaning over a (doc_id, text,
     * n_chars) frame: per-hash min doc_id survives, later docs' cut
-    * positions merge into spans (same islands arithmetic as
-    * [[substringSpans]]) and roll up to per-doc char accounting. All
-    * docs are reported (LEFT join), cut-free docs with zeros —
-    * the cleaner's report covers the corpus, not just the damage. */
+    * positions merge into spans ([[islandSpans]]) and roll up to
+    * per-doc char accounting. All docs are reported (LEFT join),
+    * cut-free docs with zeros — the cleaner's report covers the
+    * corpus, not just the damage. */
   private[graft] def substringCleaned(docs: DataFrame): DataFrame = {
-    val p = gramPositions(docs).persist()
-    p.count()
+    val p = QueryDef.eager(gramPositions(docs))
     val dup = p.groupBy(col("h"))
       .agg(min(col("doc_id")).as("min_doc"),
         countDistinct(col("doc_id")).as("df"))
@@ -2069,19 +2050,9 @@ object DedupQueries {
     val cut = p.join(dup, Seq("h"))
       .filter(col("doc_id") > col("min_doc"))
       .select(col("doc_id"), col("pos"))
-    val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val prevEnd = max(col("pos") + lit(SubstrK - 1))
-      .over(wOrd.rowsBetween(Window.unboundedPreceding, -1))
-    val spans = cut
-      .withColumn("brk",
-        when(col("pos") > coalesce(prevEnd, lit(-1L)), 1L).otherwise(0L))
-      .withColumn("gi", sum(col("brk"))
-        .over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("doc_id"), col("gi"))
-      .agg(min(col("pos")).as("s"),
-        (max(col("pos")) + lit(SubstrK.toLong - 1)).as("e"))
-    val perDoc = spans.groupBy(col("doc_id"))
-      .agg(sum(col("e") - col("s") + 1).as("cut_chars"),
+    val perDoc = islandSpans(cut, Seq("doc_id"), "pos", SubstrK, "n_grams")
+      .groupBy(col("doc_id"))
+      .agg(sum(col("span_end") - col("span_start") + 1).as("cut_chars"),
         count(lit(1)).as("n_spans"))
     docs.select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
       .join(perDoc, Seq("doc_id"), "left_outer")
@@ -2402,19 +2373,13 @@ object DedupQueries {
   }
 
   /** Trained-centroid cells: `k` Lloyd centroids over `emb` (vec_id,
-    * embedding), every vector assigned and normed, persisted and eagerly
-    * counted. The persist has three consumers (both prune self-join
-    * sides and the kept anti-join) that would otherwise race to fill
-    * the cache under AQE (the shingleSet contract); the caller's
-    * clearCache sweep releases it (Bench/Verify contract). */
-  private def trainedCells(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val assigned = graft.operators.KMeans
+    * embedding), every vector assigned and normed, [[QueryDef.eager]]
+    * for its three consumers (both prune self-join sides and the kept
+    * anti-join). */
+  private def trainedCells(emb: DataFrame, k: Int, iters: Int): DataFrame =
+    QueryDef.eager(graft.operators.KMeans
       .assign(emb, graft.operators.KMeans.train(emb, k, iters))
-      .withColumn("nrm", sqrt(dotFast(col("embedding"), col("embedding"))))
-      .persist()
-    assigned.count()
-    assigned
-  }
+      .withColumn("nrm", sqrt(dotFast(col("embedding"), col("embedding")))))
 
   private lazy val queriesByName: Map[String, (SparkSession, String) => DataFrame] =
     defs.map(d => d.name -> d.fn).toMap

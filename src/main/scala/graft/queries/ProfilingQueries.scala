@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Tables
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Data profiling and data-quality expectations — the validation layer
@@ -45,7 +47,7 @@ object ProfilingQueries {
     * scales with the corpus, and sharing the function means a doc's
     * shard is the same everywhere it matters. Keep [[shardSql]] in
     * lockstep term-for-term. */
-  private[queries] def shardCol(n: Long): org.apache.spark.sql.Column = {
+  private[graft] def shardCol(n: Long): org.apache.spark.sql.Column = {
     import graft.functions.TextFunctions.portableHash
     pmod(portableHash(col("doc_id").cast("string"), 7), lit(n))
   }
@@ -118,6 +120,67 @@ object ProfilingQueries {
     if (isNarrow(sizedBy.getOrElse(df)))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
     else df
+
+  /** THE histogram-offset exact rank: `row_number() OVER (PARTITION BY
+    * groups ORDER BY order)` without the window funnel (a global or
+    * few-group window puts a whole group in ONE task). Rows are counted
+    * per (groups, bucket) ([[bucketOffsets]]: the only serial window runs
+    * over that |groups|·|buckets|-row frame), the offsets are broadcast
+    * back, and `rnk = off + row_number()` within (groups, bucket), so
+    * every per-row window task is one bucket. Contract: `bucket` must be
+    * monotone in `order`'s leading key — ascending, or descending with
+    * `descending` — and `order` a total order; then `rnk` is the naive
+    * window's rank exactly, and bucket edges move load balance, never a
+    * rank. Output: `df`'s columns plus `off`, the group size `n` with
+    * `withTotal`, and the BIGINT `rnk`. */
+  private[graft] def bucketedRank(df: DataFrame, groups: Seq[String],
+      bucket: String, order: Seq[Column], descending: Boolean = false,
+      withTotal: Boolean = false): DataFrame = {
+    val keys = groups :+ bucket
+    val offsets = bucketOffsets(df, groups, bucket, descending, withTotal = withTotal)
+      .drop("cnt")
+    df.join(broadcast(offsets), keys)
+      .withColumn("rnk", (col("off") + row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(order: _*))).cast("long"))
+  }
+
+  /** The offsets half of [[bucketedRank]], for callers that need only
+    * the rows strictly before a bucket: per (groups, bucket) the
+    * bucket's `weight` as `cnt` (default its row count), the exclusive
+    * running sum `off` of the weights before it in its group (bucket
+    * order, descending with `descending`) and, with `withTotal`, the
+    * group total `n`. */
+  private[queries] def bucketOffsets(df: DataFrame, groups: Seq[String],
+      bucket: String, descending: Boolean = false,
+      weight: Column = count(lit(1)), withTotal: Boolean = false): DataFrame = {
+    val g = groups.map(col)
+    val b = if (descending) col(bucket).desc else col(bucket).asc
+    val offsets = df.groupBy(g :+ col(bucket): _*).agg(weight.as("cnt"))
+      .withColumn("off", coalesce(sum(col("cnt")).over(Window.partitionBy(g: _*)
+        .orderBy(b).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    if (withTotal) offsets.withColumn("n", sum(col("cnt")).over(Window.partitionBy(g: _*)))
+    else offsets
+  }
+
+  /** THE two-level top-k: the `k` best rows per `key` under `order`,
+    * ranked 1..k in the BIGINT column `rank`. A window partitioned by
+    * `key` alone is the bounded-cardinality funnel (|keys| tasks own
+    * every row); here a `row_number` per (key, content-hash `shard`,
+    * [[shardCol]] over `doc_id`) first keeps ≤ k rows per shard, and the
+    * per-key window ranks only that ≤ k·shards set. Exact because the
+    * per-shard top-k is a superset of the global top-k (`order` must be
+    * a total order). The shard count is [[shardCount]] of `sizedBy`'s
+    * input bytes. Output: `df`'s columns plus `shard`, `r1` and `rank`. */
+  private[graft] def shardedTopK(df: DataFrame, key: String,
+      order: Seq[Column], k: Int, sizedBy: DataFrame,
+      rank: String = "rank"): DataFrame =
+    df.withColumn("shard", shardCol(shardCount(inputBytes(sizedBy))))
+      .withColumn("r1", row_number().over(
+        Window.partitionBy(col(key), col("shard")).orderBy(order: _*)))
+      .filter(col("r1") <= k)
+      .withColumn(rank, row_number().over(
+        Window.partitionBy(col(key)).orderBy(order: _*)).cast("long"))
+      .filter(col(rank) <= k)
 
   /** `k_anonymity` class-size threshold: classes below K members are
     * re-identification risks. Def, not val (defs-init-order contract). */
@@ -210,7 +273,6 @@ object ProfilingQueries {
     QueryDef("shuffle_shards",
       (s, dir) => {
         import graft.functions.TextFunctions.portableHash
-        import org.apache.spark.sql.expressions.Window
         val docs = Tables(s, dir, "documents")
         val n = shardCount(inputBytes(docs))
         warnIfOracleUnpinned("shuffle_shards", n)
@@ -249,43 +311,31 @@ object ProfilingQueries {
     // 80/10/10 targets EXACTLY (a 500-doc eval set that is actually
     // 500, per stratum). Targets per language come from Hamilton's
     // largest-remainder method over the three weights (integers
-    // summing to n_l by construction — `token_budget_apportion`'s
+    // summing to n by construction — `token_budget_apportion`'s
     // algorithm at 3 seats); membership comes from each doc's rank in
     // a deterministic content-hash order within its language, so the
-    // split is reproducible and stable under partitioning. Ranking
-    // avoids the per-language window funnel via the engine's
-    // histogram-offset discipline: docs land in 1024 hash buckets,
-    // per-(lang, bucket) counts build cumulative offsets over a TINY
-    // frame, and row_number runs per (lang, bucket) — parallelism
-    // scales with corpus size, never capped at |languages|. Output is
-    // the per-(lang, split) accounting the gate can hash.
+    // split is reproducible and stable under partitioning. Ranked by
+    // [[bucketedRank]] over 1024 hash buckets. Output is the
+    // per-(lang, split) accounting the gate can hash.
     QueryDef("split_stratified_exact",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val h = graft.functions.TextFunctions
           .portableHash(col("doc_id").cast("string"), 53)
         val docs = Tables(s, dir, "documents")
           .select(col("doc_id"), col("lang"), h.as("h"))
           .withColumn("b", expr("h div 1125899906842624")) // 2^50 → 1024 buckets
-        val offsets = docs.groupBy(col("lang"), col("b")).agg(count(lit(1)).as("c"))
-          .withColumn("off", coalesce(sum(col("c")).over(
-            Window.partitionBy(col("lang")).orderBy(col("b"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .withColumn("n_l", sum(col("c")).over(Window.partitionBy(col("lang"))))
-        val ranked = docs.join(offsets, Seq("lang", "b"))
-          .withColumn("rk", col("off") + row_number().over(
-            Window.partitionBy(col("lang"), col("b")).orderBy(col("h"), col("doc_id"))))
         // Hamilton at 3 parts with weights 80/10/10: bases, then the
-        // r = n_l - Σbase leftover seats (0..2) go by remainder rank
+        // r = n - Σbase leftover seats (0..2) go by remainder rank
         // with the deterministic tie order train > val > test
-        ranked
-          .withColumn("base_tr", expr("(n_l * 80) div 100"))
-          .withColumn("base_va", expr("(n_l * 10) div 100"))
-          .withColumn("base_te", expr("(n_l * 10) div 100"))
-          .withColumn("r", col("n_l") - col("base_tr") - col("base_va") - col("base_te"))
-          .withColumn("rem_tr", expr("(n_l * 80) % 100"))
-          .withColumn("rem_va", expr("(n_l * 10) % 100"))
-          .withColumn("rem_te", expr("(n_l * 10) % 100"))
+        bucketedRank(docs, Seq("lang"), "b", Seq(col("h"), col("doc_id")),
+            withTotal = true)
+          .withColumn("base_tr", expr("(n * 80) div 100"))
+          .withColumn("base_va", expr("(n * 10) div 100"))
+          .withColumn("base_te", expr("(n * 10) div 100"))
+          .withColumn("r", col("n") - col("base_tr") - col("base_va") - col("base_te"))
+          .withColumn("rem_tr", expr("(n * 80) % 100"))
+          .withColumn("rem_va", expr("(n * 10) % 100"))
+          .withColumn("rem_te", expr("(n * 10) % 100"))
           // seat ranks: train first on ties (rem_tr >= others), then val, then test
           .withColumn("seat_tr", expr(
             "CASE WHEN r >= 1 + (CASE WHEN rem_va > rem_tr THEN 1 ELSE 0 END) + (CASE WHEN rem_te > rem_tr THEN 1 ELSE 0 END) THEN 1 ELSE 0 END"))
@@ -294,8 +344,8 @@ object ProfilingQueries {
           .withColumn("n_tr", col("base_tr") + col("seat_tr"))
           .withColumn("n_va", col("base_va") + col("seat_va"))
           .withColumn("split",
-            when(col("rk") <= col("n_tr"), "train")
-              .when(col("rk") <= col("n_tr") + col("n_va"), "val")
+            when(col("rnk") <= col("n_tr"), "train")
+              .when(col("rnk") <= col("n_tr") + col("n_va"), "val")
               .otherwise("test"))
           .groupBy(col("lang"), col("split"))
           .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"))
@@ -393,29 +443,18 @@ object ProfilingQueries {
 
     // Equi-depth (equal-height) histogram — the optimizer-statistics /
     // data-profiling staple. ntile over a global order is the naive
-    // form (one task owns the table); this reuses the histogram-offset
-    // rank (value-band bucket counts → cumulative offsets → broadcast
-    // + per-band row_number), then maps exact global rank to its depth
+    // form (one task owns the table); this ranks by [[bucketedRank]]
+    // over value bands, then maps exact global rank to its depth
     // bucket with pure BIGINT arithmetic ((rank−1)·8 div n — identical
     // `div`/`//` semantics on both engines). Output: 8 buckets with
     // exact boundaries and counts.
     QueryDef("histogram_equidepth",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val b = Tables(s, dir, "orders")
           .select(col("o_orderkey"), QueryDef.cents(col("o_totalprice")).as("cents"))
           .withColumn("bkt", floor(col("cents") / lit(2500000.0)).cast("long"))
-        val wOff = Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = b.groupBy(col("bkt")).agg(count(lit(1)).as("cnt"))
-          .withColumn("off", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-          .select(col("bkt"), col("off"))
-        val total = b.agg(count(lit(1)).as("n"))
-        val wIn = Window.partitionBy(col("bkt"))
-          .orderBy(col("cents"), col("o_orderkey"))
-        b.join(broadcast(offsets), Seq("bkt"))
-          .crossJoin(broadcast(total))
-          .withColumn("rnk", col("off") + row_number().over(wIn))
+        bucketedRank(b, Nil, "bkt", Seq(col("cents"), col("o_orderkey")),
+            withTotal = true)
           .withColumn("eq_bucket", expr("((rnk - 1) * 8) div n"))
           .groupBy(col("eq_bucket"))
           .agg(count(lit(1)).as("n_rows"),
@@ -1109,7 +1148,6 @@ object ProfilingQueries {
     * are pure integer ops (no float rank positions to drift). */
   private[graft] def histMedian(hist: org.apache.spark.sql.DataFrame,
       g: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val wcum = Window.partitionBy(col(g)).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wall = Window.partitionBy(col(g))

@@ -195,38 +195,18 @@ object SetRollupQueries {
               |  CAST(SUM(cents) AS BIGINT) AS total_cents
               |FROM q GROUP BY quartile""".stripMargin)),
 
-    // GLOBAL rank without a global window — the range-partitioned
-    // two-pass pattern: (1) bucket every row by a monotone function of
-    // the sort key and count per bucket (map-side combinable, tiny
-    // result); (2) turn bucket counts into cumulative START OFFSETS
-    // (a window over #buckets rows — the only serial step, and it
-    // shrinks from |rows| to |buckets|); (3) broadcast the offsets
-    // back and row_number WITHIN each bucket: global_rank = offset +
-    // local rank, exact because bucketing is monotone in the sort key.
-    // A naive row_number() OVER (ORDER BY …) funnels all 100 TB
-    // through ONE task; here every per-row stage distributes over the
-    // bucket count. Fixed-width buckets keep the demo deterministic;
-    // production sizing would derive boundaries from approx_percentile
-    // so buckets stay balanced under skew — boundaries only affect
-    // load balance, never the ranks. Oracle: the naive single-window
-    // form — a different algorithm, same ranks.
+    // GLOBAL rank without a global window: [[ProfilingQueries.bucketedRank]]
+    // over fixed-width price buckets. A naive row_number() OVER (ORDER
+    // BY …) funnels the whole table through ONE task. Oracle: the naive
+    // single-window form — a different algorithm, same ranks.
     QueryDef("rank_global_bucketed",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val bucketed = Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
           .withColumn("bkt", floor(col("o_totalprice") / lit(25000.0)).cast("long"))
-        val wOff = Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offsets = bucketed.groupBy(col("bkt"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("off", coalesce(sum(col("n")).over(wOff), lit(0L)))
-          .select(col("bkt"), col("off"))
-        val wIn = Window.partitionBy(col("bkt"))
-          .orderBy(col("o_totalprice"), col("o_orderkey"))
-        bucketed.join(broadcast(offsets), Seq("bkt"))
-          .select(col("o_orderkey"),
-            (col("off") + row_number().over(wIn)).cast("long").as("rnk"))
+        ProfilingQueries.bucketedRank(bucketed, Nil, "bkt",
+            Seq(col("o_totalprice"), col("o_orderkey")))
+          .select(col("o_orderkey"), col("rnk"))
       },
       Some("""SELECT o_orderkey,
              |  CAST(row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS rnk

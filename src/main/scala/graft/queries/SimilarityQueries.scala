@@ -605,14 +605,11 @@ object SimilarityQueries {
     // arithmetic on ranks — no float score mixing, which is the whole
     // point of RRF.
     //
-    // Scale shape: both legs broadcast the |Q|-sized query side and
-    // stream the corpus; both rank through the bm25-style TWO-LEVEL
-    // top-k (per-(q, content-hash-shard) prune to ≤ pool·shards rows,
-    // then the final per-q window over that bounded set) so no window
-    // task ever owns a corpus-sized partition; fusion then full-outer
-    // joins two ≤ |Q|·pool-row lists — driver-scale small regardless
-    // of corpus size. Per-shard top-pool is a superset of global
-    // top-pool, so the oracle mirrors only the final ranking.
+    // Scale shape: both legs broadcast the |Q|-sized query side,
+    // stream the corpus and rank through
+    // [[ProfilingQueries.shardedTopK]]; fusion then full-outer joins
+    // two ≤ |Q|·pool-row lists — driver-scale small regardless of
+    // corpus size. The oracle mirrors only the final ranking.
     QueryDef("hybrid_search",
       (s, dir) => {
         // dense leg: exact cosine, query side broadcast
@@ -620,38 +617,22 @@ object SimilarityQueries {
         val qd = e.filter(col("vec_id") < NQueries)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
             col("nrm").as("q_nrm"))
-        val nShardsD = ProfilingQueries.shardCount(
-          ProfilingQueries.inputBytes(Tables(s, dir, "embeddings")))
-        val dW1 = Window.partitionBy(col("q_id"), col("shard"))
-          .orderBy(col("cos").desc, col("doc_id"))
-        val dW2 = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("doc_id"))
-        val dense = broadcast(qd).join(e, col("q_id") =!= col("vec_id"))
+        val cos = broadcast(qd).join(e, col("q_id") =!= col("vec_id"))
           .select(col("q_id"), col("vec_id").as("doc_id"),
             cosineFast(col("q_emb"), col("embedding"),
               col("q_nrm"), col("nrm")).as("cos"))
-          .withColumn("shard", ProfilingQueries.shardCol(nShardsD))
-          .withColumn("r1", row_number().over(dW1)).filter(col("r1") <= RrfPoolK)
-          .withColumn("rank_d", row_number().over(dW2).cast("long"))
-          .filter(col("rank_d") <= RrfPoolK)
+        val dense = ProfilingQueries.shardedTopK(cos, "q_id",
+            Seq(col("cos").desc, col("doc_id")), RrfPoolK,
+            Tables(s, dir, "embeddings"), rank = "rank_d")
           .select(col("q_id"), col("doc_id"), col("rank_d"))
         // sparse leg: shingle-set Jaccard, query shingles broadcast.
-        // The shingle set feeds the probe join AND both size lookups —
-        // persisted AND eagerly materialized (same AQE unpopulated-
-        // cache race as shingleSet's capped path, see DedupQueries);
-        // the caller's clearCache sweep releases it.
-        val sh = DedupQueries.shingleSet(s, dir, None).persist()
-        sh.count()
+        // The shingle set feeds the probe join AND both size lookups
+        // → [[QueryDef.eager]].
+        val sh = QueryDef.eager(DedupQueries.shingleSet(s, dir, None))
         val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val qsh = sh.filter(col("doc_id") < NQueries)
           .select(col("doc_id").as("q_id"), col("s"))
-        val nShardsS = ProfilingQueries.shardCount(
-          ProfilingQueries.inputBytes(Tables(s, dir, "documents")))
-        val sW1 = Window.partitionBy(col("q_id"), col("shard"))
-          .orderBy(col("jac").desc, col("doc_id"))
-        val sW2 = Window.partitionBy(col("q_id"))
-          .orderBy(col("jac").desc, col("doc_id"))
-        val sparse = broadcast(qsh).join(sh, Seq("s"))
+        val jac = broadcast(qsh).join(sh, Seq("s"))
           .filter(col("doc_id") =!= col("q_id"))
           .groupBy(col("q_id"), col("doc_id")).agg(count(lit(1)).as("inter"))
           .join(broadcast(sizes.filter(col("doc_id") < NQueries)
@@ -659,10 +640,9 @@ object SimilarityQueries {
           .join(sizes.select(col("doc_id"), col("n").as("nb")), Seq("doc_id"))
           .withColumn("jac",
             DedupQueries.jaccard(col("inter"), col("na"), col("nb")))
-          .withColumn("shard", ProfilingQueries.shardCol(nShardsS))
-          .withColumn("r1", row_number().over(sW1)).filter(col("r1") <= RrfPoolK)
-          .withColumn("rank_s", row_number().over(sW2).cast("long"))
-          .filter(col("rank_s") <= RrfPoolK)
+        val sparse = ProfilingQueries.shardedTopK(jac, "q_id",
+            Seq(col("jac").desc, col("doc_id")), RrfPoolK,
+            Tables(s, dir, "documents"), rank = "rank_s")
           .select(col("q_id"), col("doc_id"), col("rank_s"))
         // fusion: a doc missing from one leg's pool contributes 0 from
         // that leg (the standard RRF treatment of unranked documents)
@@ -737,21 +717,17 @@ object SimilarityQueries {
             col("nrm").as("q_nrm"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("rel_u").desc, col("n_id"))
-        // eager persist (the shared-cache contract, SCALE.md): the
-        // corpus-wide relevance scan + rank window runs ONCE; both
-        // sides of the candidate self-join read the ≤|Q|·CandK cached
-        // rows. Lazy, the dominant stage would execute twice (and race
-        // under AQE).
-        val cand = e.crossJoin(broadcast(qs))
+        // [[QueryDef.eager]]: the corpus-wide relevance scan + rank
+        // window runs ONCE; both sides of the candidate self-join read
+        // the ≤|Q|·CandK cached rows.
+        val cand = QueryDef.eager(e.crossJoin(broadcast(qs))
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"), col("embedding"),
             col("nrm"),
             QueryDef.microPoints(cosineFast(col("embedding"), col("q_emb"),
               col("nrm"), col("q_nrm"))).as("rel_u"))
           .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= MmrCandK)
-          .persist()
-        cand.count()
+          .filter(col("rk") <= MmrCandK))
         // one marker row per candidate (j = -1) so a query whose pool
         // has a single member still forms a group — the pairwise join
         // alone would drop it while the oracle's base case keeps it

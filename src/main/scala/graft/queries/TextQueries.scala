@@ -17,8 +17,8 @@ import org.apache.spark.sql.graft.SessionScope
   */
 object TextQueries {
 
-  /** Oracle-side tokenized view of documents. */
-  private val toksCte =
+  /** Oracle-side tokenized view of documents (also CurationQueries'). */
+  private[queries] val toksCte =
     "WITH toks AS (SELECT doc_id, text, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents)"
 
   import org.apache.spark.sql.Column
@@ -357,27 +357,17 @@ object TextQueries {
     // on the same corpus (batch size [[PadBatch]]): batches, used,
     // paid, waste, waste ppm — the measured saving of a sorted loader.
     //
-    // Scale shape: global ranks ride the rank_global_bucketed two-pass
-    // (monotone bucket → tiny offsets frame → per-bucket row_number) —
-    // no all-corpus window funnel for either ordering; the per-batch
-    // rollup and the two-row report are map-side-combinable counters.
+    // Scale shape: global ranks come from
+    // [[ProfilingQueries.bucketedRank]] for either ordering; the
+    // per-batch rollup and the two-row report are map-side-combinable
+    // counters.
     QueryDef("padding_waste",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val lens = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("len"))
-        def strategyWaste(name: String, bucket: org.apache.spark.sql.Column,
-            s1: org.apache.spark.sql.Column, s2: org.apache.spark.sql.Column) = {
-          val b = lens.withColumn("bkt", bucket)
-          val wOff = Window.orderBy(col("bkt"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-          val offsets = b.groupBy(col("bkt")).agg(count(lit(1)).as("n"))
-            .withColumn("off", coalesce(sum(col("n")).over(wOff), lit(0L)))
-            .select(col("bkt"), col("off"))
-          val wIn = Window.partitionBy(col("bkt")).orderBy(s1, s2)
-          b.join(broadcast(offsets), Seq("bkt"))
-            .select(col("len"),
-              (col("off") + row_number().over(wIn)).cast("long").as("rnk"))
+        def strategyWaste(name: String, bucket: Column, s1: Column, s2: Column) =
+          ProfilingQueries.bucketedRank(lens.withColumn("bkt", bucket), Nil, "bkt",
+              Seq(s1, s2))
             // integer div, NOT `/` (Column./ is double division)
             .withColumn("batch", expr(s"(rnk - 1) div $PadBatch"))
             .groupBy(col("batch"))
@@ -391,7 +381,6 @@ object TextQueries {
               (col("tokens_paid") - col("tokens_used")).as("waste"),
               expr("((tokens_paid - tokens_used) * 1000000) div tokens_paid")
                 .as("waste_ppm"))
-        }
         strategyWaste("arrival",
             expr("doc_id div 4096"), col("doc_id"), col("doc_id"))
           .unionByName(strategyWaste("length_grouped",
@@ -576,18 +565,17 @@ object TextQueries {
     // The textbook form is a global running sum over the vocab sorted
     // by (freq DESC, tk) — one serial window over EVERY distinct
     // token, unacceptable at a 1e9-entry web-corpus vocab. Decomposed
-    // exactly, tier-then-bucket (the rank_global_bucketed pattern
-    // applied twice):
+    // exactly, tier-then-bucket:
     //  1. collapse the vocab to frequency TIERS (freq, n_tk, mass) —
     //     the only serial window runs over this |distinct-freq| frame
     //     (Zipf: tiny), producing each tier's carried-in mass;
     //  2. tiers fully under the mass threshold keep ALL their tokens
     //     via one semi join — no per-token ranking at all;
     //  3. only the single BOUNDARY tier (first tier crossing the
-    //     threshold) ranks its tokens: first-character buckets give
-    //     counts → cumulative offsets (serial over ≤36 rows) → per-
-    //     bucket row_number, so even a freq=1 boundary tier with most
-    //     of the vocab in it never funnels through one task.
+    //     threshold) ranks its tokens by
+    //     [[ProfilingQueries.bucketedRank]] over first-character
+    //     buckets, so even a freq=1 boundary tier with most of the
+    //     vocab in it never funnels through one task.
     // All mass arithmetic is exact BIGINT cross-multiplication
     // (20·prev_cum < 19·total) — no float share ever materializes.
     // Oracle: the serial global-window formulation, independently.
@@ -598,15 +586,12 @@ object TextQueries {
         // is WIDENED (the narrow single-split corpus scan serialized
         // the tokenize+gram chain on one core — measured 18 s of a
         // 27 s run in one single-task job), and the vocab cache is
-        // EAGERLY materialized like shingleSet: nucleusCut consumes it
-        // from 4 concurrent subtrees, and an unmaterialized persist
-        // let AQE race them into recomputing the corpus-sized gram
-        // chain per subtree (measured: two concurrent 17 s jobs).
-        val vocab = ProfilingQueries.widened(Tables(s, dir, "documents"))
+        // EAGER ([[QueryDef.eager]]): nucleusCut consumes it from 4
+        // concurrent subtrees (measured without: two concurrent 17 s
+        // jobs recomputing the gram chain).
+        val vocab = QueryDef.eager(ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(explode(shingles(tokens(col("text")), 2)).as("tk"))
-          .groupBy(col("tk")).agg(count(lit(1)).as("freq"))
-          .persist()
-        vocab.count()
+          .groupBy(col("tk")).agg(count(lit(1)).as("freq")))
         nucleusCut(vocab, pNum = 19L, pDen = 20L)
       },
       Some("""WITH tl AS (
@@ -1067,16 +1052,14 @@ object TextQueries {
     QueryDef("ngram_novelty",
       (s, dir) => {
         // r17: widened scan (the narrow single-split read serialized
-        // tokenize+shingle+hash on one core) + EAGER materialization —
-        // the lazy persist let the df count and the join probe race
-        // into recomputing the chain concurrently (measured: two
-        // parallel ~6 s single-stage jobs for one 4 s query).
-        val sh = ProfilingQueries.widened(Tables(s, dir, "documents"))
+        // tokenize+shingle+hash on one core) + [[QueryDef.eager]] — the
+        // df count and the join probe both read it (measured with a
+        // lazy persist: two parallel ~6 s single-stage jobs for one
+        // 4 s query).
+        val sh = QueryDef.eager(ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"),
             explode(array_distinct(shingles(tokens(col("text"))))).as("sng"))
-          .select(col("doc_id"), portableHash(col("sng"), 0).as("h"))
-          .persist()
-        sh.count()
+          .select(col("doc_id"), portableHash(col("sng"), 0).as("h")))
         val dfs = sh.groupBy(col("h")).agg(count(lit(1)).as("df"))
         sh.join(dfs, Seq("h"))
           .groupBy(col("doc_id"))
@@ -1213,16 +1196,8 @@ object TextQueries {
       .select(col("freq"), col("cum_higher"), col("total"))
     val btoks = vocab.join(broadcast(boundary), Seq("freq"))
       .withColumn("bkt", substring(col("tk"), 1, 1))
-    val wOff = w.partitionBy(col("freq")).orderBy(col("bkt"))
-      .rowsBetween(w.unboundedPreceding, -1)
-    val bOff = btoks.groupBy(col("freq"), col("bkt"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(sum(col("n")).over(wOff), lit(0L)))
-      .select(col("freq"), col("bkt"), col("off"))
-    val wIn = w.partitionBy(col("freq"), col("bkt")).orderBy(col("tk"))
-    val keptBoundary = btoks.join(broadcast(bOff), Seq("freq", "bkt"))
-      .withColumn("r", col("off") + row_number().over(wIn))
-      .filter(lit(pDen) * (col("cum_higher") + (col("r") - 1) * col("freq"))
+    val keptBoundary = ProfilingQueries.bucketedRank(btoks, Seq("freq"), "bkt", Seq(col("tk")))
+      .filter(lit(pDen) * (col("cum_higher") + (col("rnk") - 1) * col("freq"))
         < lit(pNum) * col("total"))
       .select(col("tk"), col("freq"))
     keptFull.select(col("tk"), col("freq")).unionByName(keptBoundary)
@@ -1311,8 +1286,7 @@ object TextQueries {
     val roundParts = math.min(
       math.max(4L, nVocab / 250000L),
       s.sparkContext.defaultParallelism.toLong * 4L).toInt
-    vocab = built.coalesce(roundParts).persist()
-    vocab.count()
+    vocab = QueryDef.eager(built.coalesce(roundParts))
     built.unpersist()
     // The loop runs in its own child session: the vocab-scaled width
     // and AQE-off below are ITS conf, so the caller's session (and

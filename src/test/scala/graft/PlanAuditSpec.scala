@@ -636,6 +636,13 @@ class PlanAuditSpec extends SparkSuite {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
+  test("hybrid_search: both legs' two-level top-k is shard-partitioned") {
+    val p = plan(SparkEntry.queries("hybrid_search")(spark, dir))
+    // the dense and the sparse leg each rank per (q_id, shard) first: a
+    // window partitioned by q_id alone gives |Q| tasks the whole corpus
+    assert("hashpartitioning\\(q_id[^,]*, shard".r.findAllIn(p).size >= 2, p)
+  }
+
   test("ngram_decontamination: gram join is an equi-join, rollup is partial-agged") {
     val p = plan(SparkEntry.queries("ngram_decontamination")(spark, dir))
     // candidate discovery must be hash-partitioned on the gram — a
