@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.FooterSchema
 
 /** Loaders for the driver-generated testdata tables (see TESTDATA.md).
   *
@@ -14,8 +15,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** One table, its schema read from its footer on the driver
+    * ([[FooterSchema]]), so constructing a query starts no Spark job. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    FooterSchema.read(spark, Seq(s"$dir/$name.parquet"))
 
   /** The events table's `ts` has shipped with different physical
     * encodings across testdata generations (int64 nanoseconds, then
@@ -23,11 +26,12 @@ object Tables {
     * yields rather than hard-code one width (the reference's extractors
     * are likewise encoding-agnostic — `src/Extractors/PdoExtractor.php:66`
     * passes rows through as the driver delivers them). So: read with
-    * `nanosAsLong` enabled (a no-op for non-nano files), then normalize
-    * with [[eventTs]]. */
+    * the footer converter's `nanosAsLong` on (a no-op for non-nano
+    * files; the session's conf is not touched), then normalize with
+    * [[eventTs]]. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    eventTs(apply(spark, dir, "events"), s"$dir/events.parquet")
+    val path = s"$dir/events.parquet"
+    eventTs(FooterSchema.read(spark, Seq(path), nanosAsLong = true), path)
   }
 
   /** The ONE rule for the events `ts` encodings, shared by [[events]]

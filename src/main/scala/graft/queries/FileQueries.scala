@@ -1,9 +1,11 @@
 package graft.queries
 
+import graft.Tables
 import graft.core.Pipeline
 import graft.sinks.{ArrowSink, AvroSink, CsvSink, FixedWidthSink, JsonlSink, OrcSink, ParquetSink, XmlSink}
 import graft.sources.{ArrowSource, AvroSource, CsvSource, FixedWidthSource, JsonlSource, LineSource, OrcSource, ParquetSource, XmlSource}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** File/sink operators driven through the ORACLE gate, not just unit
@@ -51,7 +53,7 @@ object FileQueries {
       (s, dir) => {
         val out = scratch(dir, "csv_rt")
         CsvSink(out, header = true, sep = ";", writeBom = true, writeSepLine = true)
-          .write(s.read.parquet(s"$dir/nation.parquet")
+          .write(Tables(s, dir, "nation")
             .select(col("n_nationkey"), col("n_name"), col("n_regionkey")))
         // no explicit sep passed: CsvSource must detect it from the prolog
         CsvSource(out).load(s)
@@ -69,7 +71,7 @@ object FileQueries {
     QueryDef("orc_roundtrip",
       (s, dir) => {
         val out = scratch(dir, "orc_rt")
-        OrcSink(out).write(s.read.parquet(s"$dir/orders.parquet")
+        OrcSink(out).write(Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"), col("o_orderdate")))
         OrcSource(out).load(s)
@@ -94,7 +96,7 @@ object FileQueries {
     QueryDef("xml_roundtrip",
       (s, dir) => {
         val out = scratch(dir, "xml_rt")
-        XmlSink(out).write(s.read.parquet(s"$dir/supplier.parquet")
+        XmlSink(out).write(Tables(s, dir, "supplier")
           .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
             col("s_acctbal")))
         XmlSource(out, schema = Some(StructType(Seq(
@@ -125,7 +127,7 @@ object FileQueries {
         val layout = Seq("c_custkey" -> 12, "c_name" -> 25,
           "c_nationkey" -> 4, "c_acctbal" -> 24, "c_mktsegment" -> 12)
         FixedWidthSink(out, layout).write(
-          s.read.parquet(s"$dir/customer.parquet")
+          Tables(s, dir, "customer")
             .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
               col("c_acctbal"), col("c_mktsegment")))
         FixedWidthSource(out, layout, types = Map(
@@ -151,7 +153,7 @@ object FileQueries {
     QueryDef("avro_roundtrip",
       (s, dir) => {
         val out = scratch(dir, "avro_rt")
-        AvroSink(out).write(s.read.parquet(s"$dir/part.parquet")
+        AvroSink(out).write(Tables(s, dir, "part")
           .select(col("p_partkey"), col("p_name"), col("p_brand"),
             col("p_size"), col("p_retailprice")))
         AvroSource(out).load(s)
@@ -174,7 +176,7 @@ object FileQueries {
     QueryDef("arrow_roundtrip",
       (s, dir) => {
         val out = scratch(dir, "arrow_rt")
-        ArrowSink(out).write(s.read.parquet(s"$dir/supplier.parquet")
+        ArrowSink(out).write(Tables(s, dir, "supplier")
           .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
             col("s_acctbal")))
         ArrowSource(out).load(s)
@@ -203,7 +205,7 @@ object FileQueries {
       (s, dir) => {
         val out = scratch(dir, "csv_gz")
         CsvSink(out, compression = Some("gzip")).write(
-          s.read.parquet(s"$dir/orders.parquet")
+          Tables(s, dir, "orders")
             .select(col("o_orderkey"), col("o_custkey"),
               col("o_orderstatus"), col("o_totalprice")))
         CsvSource(out, multiLine = false).load(s)
@@ -257,7 +259,7 @@ object FileQueries {
         // stream + the 500-record roll; the r17 ingest-distribution win
         // was measured with this form and the downstream work is I/O,
         // not per-row CPU.
-        val ev = graft.Tables.events(s, dir)
+        val ev = Tables.events(s, dir)
         val staged =
           if (ProfilingQueries.isNarrow(ev)) ev.repartition(col("event_id"))
           else ev
@@ -289,7 +291,7 @@ object FileQueries {
     QueryDef("line_source",
       (s, dir) => {
         val out = scratch(dir, "lines")
-        s.read.parquet(s"$dir/nation.parquet")
+        Tables(s, dir, "nation")
           .select(col("n_name")).write.mode("overwrite").text(out)
         LineSource(out).load(s)
       },
@@ -305,7 +307,7 @@ object FileQueries {
         import org.apache.spark.sql.types._
         val out = scratch(dir, "jsonl_rt")
         JsonlSink(out).write(
-          s.read.parquet(s"$dir/documents.parquet")
+          Tables(s, dir, "documents")
             .select(col("doc_id"), col("text"), col("lang"), col("n_chars")))
         JsonlSource(out, schema = Some(StructType(Seq(
           StructField("doc_id", LongType),
@@ -328,13 +330,14 @@ object FileQueries {
     QueryDef("schema_evolution",
       (s, dir) => {
         val out = scratch(dir, "evolve")
-        val docs = s.read.parquet(s"$dir/documents.parquet")
+        val docs = Tables(s, dir, "documents")
         docs.filter(col("doc_id") % 2 === 0)
           .select(col("doc_id"), col("lang"))
           .write.mode("overwrite").parquet(s"$out/batch1")
         docs.filter(col("doc_id") % 2 =!= 0)
           .select(col("doc_id"), col("lang"), col("n_chars"))
           .write.mode("overwrite").parquet(s"$out/batch2")
+        // Spark's own read: the merged schema needs every file's footer
         s.read.option("mergeSchema", "true")
           .parquet(s"$out/batch1", s"$out/batch2")
           .groupBy(col("lang"))
@@ -361,9 +364,9 @@ object FileQueries {
           .branch(_.qualify(col("o_orderstatus") =!= "F")
             .to(ParquetSink(s"$out/rest")))
           .exec(s)
-        s.read.parquet(s"$out/f")
+        FooterSchema.read(s, Seq(s"$out/f"))
           .select(col("o_orderkey"), lit("f").as("branch"))
-          .unionByName(s.read.parquet(s"$out/rest")
+          .unionByName(FooterSchema.read(s, Seq(s"$out/rest"))
             .select(col("o_orderkey"), lit("rest").as("branch")))
       },
       Some("""SELECT o_orderkey, 'f' AS branch FROM orders WHERE o_orderstatus = 'F'

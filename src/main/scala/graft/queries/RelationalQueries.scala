@@ -69,7 +69,7 @@ object RelationalQueries {
         .from(src(dir, "customer"))
         .join(JoinSpec(
           graft.sources.CallableSource(sp =>
-            sp.read.parquet(s"$dir/nation.parquet").filter(col("n_regionkey") < 2)),
+            Tables(sp, dir, "nation").filter(col("n_regionkey") < 2)),
           "c_nationkey", "n_nationkey",
           leftJoin = true, defaults = Map("n_name" -> "unknown")))
         .toDF(s)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.types.StructType
 
 /** A source of records: the Spark-native analog of the reference's
@@ -74,7 +75,7 @@ final case class ParquetSource(
     override val limit: Option[Long] = None,
     override val offset: Long = 0L,
     override val orderedBy: Seq[String] = Nil) extends Source {
-  protected def scan(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  protected def scan(spark: SparkSession): DataFrame = FooterSchema.read(spark, Seq(path))
 }
 
 /** ORC scan (engine extension — the other columnar format a Spark

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
@@ -52,8 +53,8 @@ object EventStreams {
     * shipped with different physical encodings across generations
     * (int64 nanos, `timestamp[us]` NTZ, session-zoned TIMESTAMP). By
     * default (`nanosTs = None`) the encoding is DETECTED from the
-    * directory's parquet footers with a one-time batch schema probe —
-    * a driver-side metadata read, no data scan — and normalized to a
+    * directory's parquet footer on the driver ([[FooterSchema.infer]]
+    * with `nanosAsLong`, no Spark job, no data scan) and normalized to a
     * microsecond `TimestampType` column, matching the batch path
     * ([[graft.Tables.events]]). Pass `Some(true)` to force the legacy
     * nanos-as-long decode, `Some(false)` to skip the probe for ordinary
@@ -64,47 +65,16 @@ object EventStreams {
     * to the standard `TimestampType` schema and letting the stream
     * wait for files — a legacy nanos producer that starts AFTER the
     * consumer must state `Some(true)` explicitly, since no footer
-    * existed to detect it from. The `nanosAsLong` session conf is set
-    * only on the paths that read nano footers (probe and forced-nanos)
-    * — never as a side effect of an ordinary timestamp stream. */
+    * existed to detect it from. The session's conf is never written:
+    * the stream's micro-batch scans read INT64 nanos into the supplied
+    * `LongType` column without `spark.sql.legacy.parquet.nanosAsLong`. */
   def readEventStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 4, nanosTs: Option[Boolean] = None): DataFrame = {
-    def enableNanosDecode(): Unit =
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType: DataType = nanosTs match {
-      case Some(true) =>
-        enableNanosDecode()
-        LongType
+      case Some(true) => LongType
       case Some(false) => TimestampType
-      case None =>
-        // the probe itself must survive nano footers, so the decode
-        // conf is enabled for its duration — but it must not LEAK: if
-        // the footer turns out to be an ordinary TIMESTAMP (or the
-        // directory is missing), restore the prior value, else later
-        // unrelated batch reads of nanos-footer parquet in this session
-        // would silently decode as LongType instead of failing loudly.
-        // It stays enabled ONLY when the probe actually finds INT64
-        // nanos (the stream's own micro-batch reads then need it).
-        val key = "spark.sql.legacy.parquet.nanosAsLong"
-        val prior = spark.conf.getOption(key)
-        def restore(): Unit = prior match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-        enableNanosDecode()
-        val probed =
-          try {
-            try spark.read.parquet(dir).schema("ts").dataType
-            catch {
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getErrorClass != null &&
-                    (e.getErrorClass.startsWith("PATH_NOT_FOUND") ||
-                      e.getErrorClass.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-                TimestampType
-            }
-          } catch { case e: Throwable => restore(); throw e }
-        if (probed != LongType) restore()
-        probed
+      case None => FooterSchema.infer(spark, Seq(dir), nanosAsLong = true)
+        .fold[DataType](TimestampType)(_("ts").dataType)
     }
     val stream = spark.readStream
       .schema(StructType(eventSchema.map {

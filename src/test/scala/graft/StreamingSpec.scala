@@ -1443,8 +1443,8 @@ class StreamingSpec extends SparkSuite {
     val saved = spark.conf.getOption(key)
     spark.conf.unset(key)
     try {
-      // ordinary TIMESTAMP footer: the probe enables the conf for its
-      // own metadata read, then must restore it
+      // ordinary TIMESTAMP footer: the probe decodes nanos with its own
+      // footer converter and must leave the conf as it found it
       val dir = tmpDir("stream_conf_probe")
       spark.range(1).selectExpr("id AS event_id", "current_timestamp() AS ts",
           "id AS user_id", "'click' AS event_type", "0.0 AS value", "'{}' AS props")

@@ -10,7 +10,14 @@ splits each at the `==== <query> (` headers, and keeps every query's
 formatted plan from `== Physical Plan ==` on. Ids that move between runs
 or with unrelated code are replaced by placeholders before comparing:
 expression ids (#123), plan_id=, RDD ids with their callsite line, and
-JVM identity hashes (Foo@1a2b3c, $Lambda$5669/0x...). It prints one
+JVM identity hashes (Foo@1a2b3c, $Lambda$5669/0x...). One order is also
+made canonical: the order of the distinct groups in the Expand that
+Catalyst's RewriteDistinctAggregates plans for two or more distinct
+aggregates over different columns (profile_stats' three
+`count_distinct`s). Catalyst keeps those groups in a hash map keyed by
+expression ids, so their order moves between runs of the same code. The
+groups are sorted by column name, and their gid numbers and the
+`<columns>, gid` lists of the operators above follow. It prints one
 `identical` / `different` / `missing` line per query, a short unified
 diff under each difference, and exits 1 if any query is not identical.
 
@@ -42,6 +49,72 @@ def normalise(line):
     return line
 
 
+def split_top(s):
+    """Split `s` at the commas outside any bracket or parenthesis."""
+    items, depth, start = [], 0, 0
+    for i, c in enumerate(s):
+        if c in "([":
+            depth += 1
+        elif c in ")]":
+            depth -= 1
+        elif c == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    items.append(s[start:].strip())
+    return items
+
+
+EXPAND_ARGS = re.compile(r"^Arguments: \[(\[.*\])\], \[(.*)\]$")
+GID = re.compile(r"^gid#N$")
+
+
+def canonical_distinct_groups(lines):
+    """Sort the distinct groups of every distinct-aggregate Expand by
+    column name. Such an Expand outputs `c1, ..., cK, gid, ...`; its
+    projection j (gid j, 1 <= j <= K) carries cj alone in the first K
+    slots. Each group moves to its sorted slot and takes that slot's gid;
+    the `c1, ..., cK, gid` lists (Input, Keys, Sort order, partitioning)
+    and `(gid = j)` filters above it are rewritten to match."""
+    lines = list(lines)
+    for n, line in enumerate(lines):
+        m = EXPAND_ARGS.match(line)
+        if not m:
+            continue
+        out = split_top(m.group(2))
+        k = next((i for i, c in enumerate(out) if GID.match(c)), -1)
+        projs = [split_top(p.strip()[1:-1]) for p in split_top(m.group(1))]
+        if k < 2 or len(projs) != k + 1:
+            continue
+        order = sorted(range(k), key=lambda i: out[i])
+        slot = {old: new for new, old in enumerate(order)}
+        new_projs = [projs[0]] + [None] * k
+        for j in range(1, k + 1):
+            p = projs[j]
+            if len(p) != len(out) or p[k] != str(j):
+                break
+            q = [p[i] for i in order] + [str(slot[j - 1] + 1)] + p[k + 1:]
+            new_projs[slot[j - 1] + 1] = q
+        else:
+            new_out = [out[i] for i in order] + out[k:]
+            body = ", ".join("[" + ", ".join(p) + "]" for p in new_projs)
+            lines[n] = f"Arguments: [{body}], [{', '.join(new_out)}]"
+            gid = out[k]
+            swaps = [(", ".join(x + suffix for x in out[:k + 1]),
+                      ", ".join(x + suffix for x in new_out[:k + 1]))
+                     for suffix in (" ASC NULLS FIRST", "")]
+            filt = re.compile(r"\(" + re.escape(gid) + r" = (\d+)\)")
+
+            def renumber(f, gid=gid, slot=slot, k=k):
+                j = int(f.group(1))
+                return f"({gid} = {slot[j - 1] + 1 if 0 < j <= k else j})"
+
+            for i in range(n + 1, len(lines)):
+                for a, b in swaps:
+                    lines[i] = lines[i].replace(a, b)
+                lines[i] = filt.sub(renumber, lines[i])
+    return lines
+
+
 def plans(path):
     """{query: [normalised plan lines]} in file order."""
     out = {}
@@ -65,6 +138,7 @@ def plans(path):
     for q, lines in out.items():
         while lines and not lines[-1].strip():
             lines.pop()
+        out[q] = canonical_distinct_groups(lines)
     return out
 
 
