@@ -440,18 +440,17 @@ object SimilarityQueries {
     // (vᵀv·trace), the Rayleigh estimate of PC1's explained-variance
     // share (PSD ⇒ every term ≥ 0). Scale: the corpus is touched ONCE
     // (the gram fold, partial-triangle shuffle independent of corpus
-    // size); the [[PcaIters]] supersteps run entirely on persisted
-    // D-row/D²-cell frames — at 100 TB the iteration cost is noise.
-    // Oracle: the recurrence UNROLLED as a CTE chain (the
-    // graph_pagerank pattern), one block per superstep.
+    // size); the [[PcaIters]] steps are one array fold over the
+    // one-row D²-cell gram ([[pcaVector]]) — at 100 TB the iteration
+    // cost is noise. Oracle: the recurrence UNROLLED as a CTE chain
+    // (the graph_pagerank pattern), one block per step.
     QueryDef("embedding_pca_top",
       (s, dir) => {
-        // eager localCheckpoint, not persist+count: the triangle feeds
-        // 2·PcaIters+3 tiny downstream jobs, and with a bare persist
-        // every one of them still carries (and re-optimizes,
-        // re-serializes) the full corpus-scan lineage — the supersteps'
-        // task binaries were ~1.5 MB each. Checkpointing makes the
-        // D²-cell frame a leaf.
+        // eager localCheckpoint: the final plan reads the triangle
+        // several times (v's fold, vᵀGv, the trace), and each read
+        // would otherwise re-run the corpus scan and gram fold.
+        // Checkpointing makes the D²-cell frame a leaf, so the corpus
+        // is touched once.
         val tri = gramTriangle(s, dir).localCheckpoint()
         val gfull = gramFull(tri)
         val v = pcaVector(gfull)
@@ -506,8 +505,8 @@ object SimilarityQueries {
     // so at 100 TB this is scan-speed with 64-counter partials.
     QueryDef("embedding_abtt",
       (s, dir) => {
-        // checkpointed for the same reason as embedding_pca_top's: the
-        // supersteps must not re-carry the corpus lineage
+        // checkpointed for the same reason as embedding_pca_top's: v's
+        // fold must not re-run the corpus scan behind the gram
         val tri = gramTriangle(s, dir).localCheckpoint()
         val v = pcaVector(gramFull(tri))
         val u = Tables(s, dir, "embeddings")
@@ -1767,7 +1766,7 @@ object SimilarityQueries {
       cosineFast(col("a.embedding"), col("b.embedding"), col("a.nrm"), col("b.nrm")),
       KnnGraphK)
 
-  /** `embedding_pca_top` power-iteration superstep count. Convergence
+  /** `embedding_pca_top` power-iteration step count. Convergence
     * quality is eigen-gap dependent; cross-engine EXACTNESS is not —
     * the arithmetic is deterministic at any count. A def
     * (defs-init-order contract). */
@@ -1785,50 +1784,37 @@ object SimilarityQueries {
       tri.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("gram_u2")))
 
-  /** The [[PcaIters]]-superstep exact-integer power iteration: v ← G·v
+  /** The [[PcaIters]]-step exact-integer power iteration: v ← G·v
     * from the ones vector, renormalized each step onto the
     * [[PcaVScale]] grid by portable floor division (the +2·scale·m
     * offset makes Spark's truncating `div` and DuckDB's flooring `//`
-    * agree on negatives). ONE definition shared by `embedding_pca_top`
-    * and `embedding_abtt` — a corrected-embedding query whose v drifted
-    * from the reported PC would silently subtract the wrong direction.
-    * Keep [[pcaVCteSql]] in lockstep term-for-term. */
+    * agree on negatives). Neither the state (D components) nor the
+    * input (D² cells) grows with the corpus, so the recurrence is ONE
+    * expression, not a loop of supersteps: `gfull` collects into one
+    * row (its sorted `i` keys and the gram as rows in key order) and
+    * `aggregate(sequence(1, PcaIters), v0, …)` folds the steps. Lazy:
+    * building it starts no job. ONE definition shared by
+    * `embedding_pca_top` and `embedding_abtt` — a corrected-embedding
+    * query whose v drifted from the reported PC would silently
+    * subtract the wrong direction. Keep [[pcaVCteSql]] in lockstep
+    * term-for-term. */
   private[graft] def pcaVector(gfull: DataFrame): DataFrame = {
-    var v = gfull.select(col("i")).distinct()
-      .select(col("i"), lit(PcaVScale).as("v"))
-    for (_ <- 1 to PcaIters) {
-      val p = gfull.as("g").join(broadcast(v.as("vv")),
-          col("vv.i") === col("g.j"))
-        .groupBy(col("g.i"))
-        .agg(sum(col("g.gram_u2").cast("decimal(38,0)") * col("vv.v")).as("p"))
-      // eager localCheckpoint EVERY step, the propagateMinLabels
-      // superstep contract: un-truncated, the lineage deepens per
-      // iteration — 2^PcaIters copies of the gram subtree OOMed the
-      // driver just RENDERING the plan string, and even a 5-step
-      // cadence (2^4 copies) blew Catalyst planning time and task
-      // binaries up ~10× (measured: 9 s → 87 s at sf0.1). Per-step
-      // truncation keeps every plan one step deep; the caller keeps
-      // the per-step job small by feeding a checkpointed gram (leaf
-      // scan, not the corpus lineage).
-      //
-      // r17: the step max rides an UNPARTITIONED WINDOW over p (a ≤D
-      // = 64-row frame — the documented shrink-then-serial shape)
-      // instead of crossJoin(broadcast(p.agg(max))): the broadcast
-      // form built a separate subquery JOB per step just to ship one
-      // number, and evaluated p twice; the window folds max and
-      // renormalize into the checkpoint's own job — one job per
-      // superstep instead of two, same exact arithmetic.
-      val wAll = org.apache.spark.sql.expressions.Window
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      v = p.withColumn("m", max(abs(col("p"))).over(wAll))
-        .select(col("i"),
-          when(col("m") === 0, lit(0L)).otherwise(expr(
-            s"CAST((p * $PcaVScale + ${2 * PcaVScale} * m) div m - ${2 * PcaVScale} AS BIGINT)"))
-            .as("v"))
-        .localCheckpoint()
-    }
-    v
+    // f(e) with e evaluated once: higher-order SQL has no `let`
+    def let(e: Column)(f: Column => Column): Column = transform(array(e), f).getItem(0)
+    def matvec(g: Column, v: Column): Column = transform(g, r =>
+      aggregate(zip_with(r, v, (a, b) => a.cast("decimal(38,0)") * b), lit(0).cast("decimal(38,0)"), _ + _))
+    // floor(p·scale / m) made portable; m = 0 (an all-zero p) gives 0
+    def renorm(p: Column, m: Column): Column = transform(p, x => when(m === 0, 0L).otherwise(
+      (call_function("div", x * PcaVScale + m * (2 * PcaVScale), m) - 2 * PcaVScale).cast("bigint")))
+    // one step, with p = G·v and its max |p| each computed once
+    def step(g: Column, v: Column): Column =
+      let(matvec(g, v))(p => let(array_max(transform(p, abs(_))))(m => renorm(p, m)))
+    // one row: g = the gram's rows sorted by i, each row's cells sorted by j
+    gfull.groupBy(col("i"))
+      .agg(sort_array(collect_list(struct(col("j"), col("gram_u2")))).getField("gram_u2").as("row"))
+      .agg(sort_array(collect_list(struct(col("i"), col("row")))).as("g"))
+      .select(inline(arrays_zip(col("g.i").as("i"), aggregate(sequence(lit(1), lit(PcaIters)),
+        array_repeat(lit(PcaVScale), size(col("g"))), (v, _) => step(col("g.row"), v)).as("v"))))
   }
 
   /** DuckDB twin of [[pcaVector]]: CTE chain `gfull, v0 .. v{PcaIters}`

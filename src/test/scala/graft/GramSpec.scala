@@ -172,6 +172,25 @@ class GramSpec extends SparkSuite {
     assert(math.abs(top._2) == 1048576L)
   }
 
+  test("embedding_pca_top on an all-zero corpus: every component and the share are 0") {
+    import spark.implicits._
+    // the degenerate path: G = 0 makes every step's max |p| zero, and
+    // only the m = 0 guard stands between the fold and a divide by zero
+    val d = tmpDir("pca_zero")
+    val vecs = Array.fill(20)(Array.fill(8)(0.0))
+    vecs.toSeq.zipWithIndex.map { case (v, id) => (id.toLong, v.toSeq) }
+      .toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    val (expV, expShare) = driverPca(vecs, 10)
+    val rows = SimilarityQueries.defs.find(_.name == "embedding_pca_top").get
+      .fn(spark, d).collect()
+    spark.catalog.clearCache()
+    val gotV = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(gotV == expV, s"$gotV != $expV")
+    assert(gotV.size == 8 && gotV.values.forall(_ == 0L), gotV.toString)
+    assert(expShare == 0L && rows.forall(_.getLong(2) == 0L), rows.toSeq.toString)
+  }
+
   /** Mathematical floor division for BigInt (BigInt./ truncates). */
   private def bfloor(x: BigInt, m: BigInt): BigInt = {
     val q = x / m

@@ -128,38 +128,49 @@ class JdbcIntegrationSpec extends SparkSuite {
       val c = java.sql.DriverManager.getConnection(duckUrl)
       try f(c) finally c.close()
     }
-    withDuck { c =>
-      val st = c.createStatement()
-      st.execute("CREATE TABLE dst_pg (k BIGINT, grp VARCHAR, v DOUBLE, " +
-        "PRIMARY KEY (k, grp))")
-      st.execute("INSERT INTO dst_pg VALUES (1, 'a', 0.0)")
-      st.execute("INSERT INTO dst_pg VALUES (1, 'b', 0.0)")
-      st.execute("INSERT INTO dst_pg VALUES (3, 'a', 3.0)")
-    }
-    // (1,a) and (1,b) collide → DO UPDATE; (10..12,a) are new → insert;
-    // (3,a) untouched. 2 partitions → two concurrent connections to the
-    // same database file (distinct rows, so optimistic MVCC never
-    // conflicts — the same property a sharded upsert relies on).
-    val incoming = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        Seq(Row(1L, "a", 1.0), Row(1L, "b", 2.0)) ++
-          (10L until 13L).map(i => Row(i, "a", i * 1.0)), 2),
-      new org.apache.spark.sql.types.StructType()
-        .add("k", "long").add("grp", "string").add("v", "double"))
-    val sink = JdbcUpsertSink(duckUrl, "dst_pg", keyCols = Seq("k", "grp"),
-      batchSize = 2, dialect = "postgresql")
-    sink.write(incoming)
-    // idempotency: a task retry replays its rows — same end state
-    sink.write(incoming)
-    val got = withDuck { c =>
-      val rs = c.createStatement()
-        .executeQuery("SELECT k, grp, v FROM dst_pg ORDER BY k, grp")
-      Iterator.continually(rs).takeWhile(_.next())
-        .map(r => (r.getLong(1), r.getString(2), r.getDouble(3))).toList
-    }
-    assert(got === List(
-      (1L, "a", 1.0), (1L, "b", 2.0), (3L, "a", 3.0),
-      (10L, "a", 10.0), (11L, "a", 11.0), (12L, "a", 12.0)))
+    // One keeper connection holds the database instance open from setup
+    // to read-back. Every connection to a file shares one DuckDB
+    // instance, which closes (checkpointing the file) with its last
+    // connection; without the keeper each task's connection can reopen
+    // the file while another closes it, and duckdb_jdbc 1.0.0 then
+    // intermittently fails the read-back (a WAL replay error, "Invalid
+    // bitpacking mode", or rows lost). The two task connections stay
+    // concurrent: the keeper only stops the instance from cycling.
+    val keeper = java.sql.DriverManager.getConnection(duckUrl)
+    try {
+      withDuck { c =>
+        val st = c.createStatement()
+        st.execute("CREATE TABLE dst_pg (k BIGINT, grp VARCHAR, v DOUBLE, " +
+          "PRIMARY KEY (k, grp))")
+        st.execute("INSERT INTO dst_pg VALUES (1, 'a', 0.0)")
+        st.execute("INSERT INTO dst_pg VALUES (1, 'b', 0.0)")
+        st.execute("INSERT INTO dst_pg VALUES (3, 'a', 3.0)")
+      }
+      // (1,a) and (1,b) collide → DO UPDATE; (10..12,a) are new → insert;
+      // (3,a) untouched. 2 partitions → two concurrent connections to the
+      // same database file (distinct rows, so optimistic MVCC never
+      // conflicts — the same property a sharded upsert relies on).
+      val incoming = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          Seq(Row(1L, "a", 1.0), Row(1L, "b", 2.0)) ++
+            (10L until 13L).map(i => Row(i, "a", i * 1.0)), 2),
+        new org.apache.spark.sql.types.StructType()
+          .add("k", "long").add("grp", "string").add("v", "double"))
+      val sink = JdbcUpsertSink(duckUrl, "dst_pg", keyCols = Seq("k", "grp"),
+        batchSize = 2, dialect = "postgresql")
+      sink.write(incoming)
+      // idempotency: a task retry replays its rows — same end state
+      sink.write(incoming)
+      val got = withDuck { c =>
+        val rs = c.createStatement()
+          .executeQuery("SELECT k, grp, v FROM dst_pg ORDER BY k, grp")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (r.getLong(1), r.getString(2), r.getDouble(3))).toList
+      }
+      assert(got === List(
+        (1L, "a", 1.0), (1L, "b", 2.0), (3L, "a", 3.0),
+        (10L, "a", 10.0), (11L, "a", 11.0), (12L, "a", 12.0)))
+    } finally keeper.close()
   }
 
   test("streaming upsert: foreachBatch drives JdbcUpsertSink(ansi) into Derby") {

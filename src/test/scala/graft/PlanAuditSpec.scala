@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{JoinSpec, Pipeline}
+import graft.core.{JobMetrics, JoinSpec, Pipeline}
 import graft.sources.ParquetSource
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -1075,26 +1075,28 @@ class PlanAuditSpec extends SparkSuite {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("pca superstep's unpartitioned window rides a bounded (≤D-row) frame") {
-    // The two board funnel sweeps audit FINAL query plans, but the r17
-    // pca fold's unpartitioned max-window lives inside CONSTRUCTION-time
-    // supersteps (each step is checkpointed before the query's own plan
-    // exists), so it can never appear there — the allow-list argument
-    // "the frame is ≤D rows by construction" lived in comments only
-    // (r17 verdict, what's-wrong #4). Pin it executably: every step's
-    // window input is the per-dim grouped frame p = gfull.groupBy(g.i),
-    // whose cardinality is bounded by |distinct i| — the embedding
-    // dimension count, NOT the corpus — and the returned v (same
-    // cardinality) must be a checkpoint leaf, i.e. the supersteps
-    // really did run shrink-then-serial on a bounded frame.
+  test("pcaVector is one lazy fold: no job to build, no Window, ≤D rows") {
+    // The PcaIters power-iteration steps run over state and input that
+    // do not grow with the corpus (D components, D² gram cells), so
+    // pcaVector is one array fold over a one-row gram, not a loop of
+    // checkpointed supersteps. Pin that shape: building it starts no
+    // job (a superstep loop is eager), its plan holds no Window (each
+    // step's max is an array_max, not a serial window) and no corpus
+    // scan (the gram it folds is the caller's checkpoint leaf), and it
+    // returns at most one row per embedding dimension.
     val tri = queries.SimilarityQueries.gramTriangle(spark, dir).localCheckpoint()
     val gfull = queries.SimilarityQueries.gramFull(tri)
     val dims = gfull.select(col("i")).distinct().count()
-    assert(dims <= 64, s"gram dim domain is $dims — the ≤D window-frame bound broke")
-    val v = queries.SimilarityQueries.pcaVector(gfull)
-    assert(v.count() <= dims, "superstep output exceeds the dim-bounded frame")
-    // a checkpoint leaf: no corpus scan survives in the superstep result
+    assert(dims <= 64, s"gram dim domain is $dims, expected at most D = 64")
+    val (v, built) = JobMetrics.tagged(spark.sparkContext) { m =>
+      val v = queries.SimilarityQueries.pcaVector(gfull)
+      assert(m.quiesce())
+      (v, m.totals.jobs)
+    }
+    assert(built == 0, s"building pcaVector started $built jobs")
+    assert(v.count() <= dims, "pcaVector returned more rows than the gram has dimensions")
     val vPlan = plan(v)
+    assert(!vPlan.contains("Window"), vPlan)
     assert(!vPlan.contains("Scan parquet"), vPlan)
     spark.catalog.clearCache()
   }

@@ -9,8 +9,11 @@ Plan mode takes two stdout captures of `graft.Explain <q>[,<q>...] <sfDir> 0`,
 splits each at the `==== <query> (` headers, and keeps every query's
 formatted plan from `== Physical Plan ==` on. Ids that move between runs
 or with unrelated code are replaced by placeholders before comparing:
-expression ids (#123), plan_id=, RDD ids with their callsite line, and
-JVM identity hashes (Foo@1a2b3c, $Lambda$5669/0x...). One order is also
+expression ids (#123), plan_id=, RDD ids with their callsite line, JVM
+identity hashes (Foo@1a2b3c, $Lambda$5669/0x...), and the numbers of
+lambda variables built through the Scala functions API (`lambda x_60`,
+a process-wide counter, so a lambda added to one query renames those of
+every query planned after it). One order is also
 made canonical: the order of the distinct groups in the Expand that
 Catalyst's RewriteDistinctAggregates plans for two or more distinct
 aggregates over different columns (profile_stats' three
@@ -38,6 +41,7 @@ NORMALISE = [
     (re.compile(r"RDD\[[0-9]+\] at (\w+) at (\w+)\.scala:[0-9]+"),
      r"RDD[N] at \1 at \2.scala:N"),
     (re.compile(r"\$Lambda\$[0-9]+/0x[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"\blambda (\w+?)_[0-9]+\b"), r"lambda \1_N"),
     (re.compile(r"(\w)@[0-9a-f]{4,8}\b"), r"\1@H"),
 ]
 DIFF_LINES = 20
