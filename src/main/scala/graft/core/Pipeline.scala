@@ -5,6 +5,7 @@ import graft.sinks.{NoOpSink, Sink}
 import graft.sources.Source
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ListBuffer
 
@@ -197,8 +198,11 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
   }
 
   /** Compile the flow to a DataFrame without running it (the reference's
-    * documented standalone/partial-flow reuse, `docs/reusability.md:3-34`). */
-  def toDF(spark: SparkSession): DataFrame = compile(spark, forExec = false).df
+    * documented standalone/partial-flow reuse, `docs/reusability.md:3-34`).
+    * Only the stream is folded: no sink write is built and nothing is
+    * pinned, so every observation the result carries completes when a
+    * query over it runs. */
+  def toDF(spark: SparkSession): DataFrame = compile(spark, pins = None).df
 
   /** Run the flow: execute every sink write, gather counters, report —
     * `exec()` in the reference (`tests/YaEtlTest.php:40`), repeatable.
@@ -224,14 +228,16 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
       metrics: JobMetrics): PipelineReport = {
     val t0 = System.nanoTime()
     events.onStart()
+    // every frame the flow persists, released on every way out: a
+    // failure in compile or in any sink must not leave a cache entry
+    // per attempt in a long-lived session
+    val persisted = ListBuffer.empty[DataFrame]
     try {
-      val c = compile(spark, forExec = true)
-      try {
-        c.writes.zipWithIndex.foreach { case ((d, sink), i) =>
-          sink.write(d)
-          events.onFlush(i)
-        }
-      } finally c.persisted.foreach(_.unpersist(blocking = false))
+      val c = compile(spark, Some(persisted))
+      c.writes.zipWithIndex.foreach { case ((d, sink), i) =>
+        sink.write(d)
+        events.onFlush(i)
+      }
       // every progress tick of this flow's own jobs lands before success
       metrics.quiesce()
       val counters = c.observations.flatMap { case (name, obs) =>
@@ -263,31 +269,37 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
       case e: Throwable =>
         events.onFail(e)
         PipelineReport(PipelineStatus.Failed(e), Map.empty, (System.nanoTime() - t0) / 1000000)
-    }
+    } finally persisted.foreach(_.unpersist(blocking = false))
   }
 
-  /** Fold the step list into lineage.
+  /** Fold the step list into lineage, in one pass: a branch re-enters
+    * the fold over its own steps, based on the stream at the branch
+    * point, with the flow's accumulators and the parent's modes OR its
+    * own.
     *
-    * Fan-out handling (`forExec` only): when a `to`/`branch` is not the
-    * last step, the DataFrame at that point is consumed more than once
-    * (this sink AND the continuation), so it is persisted there — the
-    * shared *prefix* is cached exactly once and every consumer's plan
-    * contains the same cached node. (Persisting each sink's final
-    * DataFrame instead would cache rows nothing ever re-reads.)
+    * `pins` is [[exec]]'s list of persisted frames; without it
+    * ([[toDF]]) only the stream is folded — no sink or NoOp write is
+    * built, nothing is pinned, and a branch contributes only the steps
+    * up to its last root-targeted break (all a branch can do to the
+    * stream).
     *
-    * Every observation is guaranteed to sit inside some executed write:
-    * if steps after the last sink changed the stream (`dirtyTail`), a
-    * terminal NoOp write drives them — otherwise `Observation.get`
-    * would block forever on a plan that never ran. */
-  private def compile(spark: SparkSession, forExec: Boolean): Compiled = {
-    var df: DataFrame = null
+    * Fan-out handling: when a `to`/`branch` is not the last step, the
+    * DataFrame at that point is consumed more than once (this sink AND
+    * the continuation), so it is pinned there — the shared *prefix* is
+    * evaluated exactly once and every consumer's plan contains the same
+    * pinned node. (Pinning each sink's final DataFrame instead would
+    * cache rows nothing ever re-reads.)
+    *
+    * Every observation of an exec is guaranteed to sit inside some
+    * executed write: if steps after the last sink changed the stream
+    * (`dirtyTail`), a terminal NoOp write drives them — otherwise
+    * `Observation.get` would block forever on a plan that never ran. */
+  private def compile(spark: SparkSession, pins: Option[ListBuffer[DataFrame]]): Compiled = {
     val writes = ListBuffer.empty[(DataFrame, Sink)]
     val observations = ListBuffer.empty[(String, Observation)]
-    val persisted = ListBuffer.empty[DataFrame]
     val breakSignals = ListBuffer.empty[DataFrame]
+    val checkpointed = ListBuffer.empty[DataFrame]
     var truncated = false
-    var dirtyTail = false // df changed since the last sink/branch
-    var i = 0
 
     /** Interrupt gate: keep `d`'s rows only while `signal` (≤ 1 row) is
       * empty — a broadcast anti-join, no driver round-trip. */
@@ -298,8 +310,8 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
       * bookkeeping columns dropped — applied per SINK write and to the
       * [[toDF]] result, never to the flowing stream (a mid-flow sink's
       * continuation keeps the tags). */
-    def emitForm(d: DataFrame): DataFrame =
-      if (orderedConcat && d.columns.contains(SrcSeqCol))
+    def emitForm(d: DataFrame, ordered: Boolean): DataFrame =
+      if (ordered && d.columns.contains(SrcSeqCol))
         d.orderBy(col(SrcSeqCol), col(SrcOrdCol)).drop(SrcSeqCol, SrcOrdCol)
       else d
 
@@ -313,152 +325,127 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
       d.observe(obs, count(lit(1)).as("records"))
     }
 
-    /** Pin one evaluation of the shared prefix at a fan-out point:
-      * best-effort `persist()` by default, reliable `checkpoint()` in
-      * [[durable]] mode (survives executor loss — nondeterministic ids
-      * can never be recomputed into divergence). */
-    var checkpointed: DataFrame = null
-    def persistIfShared(last: Boolean): Unit =
-      if (forExec && !last) {
-        if (durableFanout) {
-          if (!(df eq checkpointed)) {
-            require(spark.sparkContext.getCheckpointDir.isDefined,
-              "durable() fan-out needs spark.sparkContext.setCheckpointDir " +
-                "(a reliable store every executor can read)")
-            df = df.checkpoint() // eager + reliable
-            checkpointed = df
-          }
-        } else if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-          df = df.persist()
-          persisted += df
+    /** Pin one evaluation of `d` (exec only): best-effort `persist()` by
+      * default, reliable `checkpoint()` in [[durable]] mode (survives
+      * executor loss — nondeterministic ids can never be recomputed into
+      * divergence). A frame already pinned stays as it is. */
+    def pin(d: DataFrame, durable: Boolean): DataFrame = pins.fold(d) { persisted =>
+      if (!durable) {
+        if (d.storageLevel != StorageLevel.NONE) d
+        else { val p = d.persist(); persisted += p; p }
+      } else if (checkpointed.exists(_ eq d)) d
+      else {
+        // without it Spark fails with its raw "checkpoint directory has
+        // not been set"
+        require(spark.sparkContext.getCheckpointDir.isDefined,
+          "durable() needs spark.sparkContext.setCheckpointDir " +
+            "(a reliable store every executor can read)")
+        val c = d.checkpoint() // eager + reliable
+        checkpointed += c
+        c
+      }
+    }
+
+    /** One flow level: `steps` in the given modes; returns its stream. */
+    def fold(steps: Vector[Step], durable: Boolean, ordered: Boolean): DataFrame = {
+      var df: DataFrame = null
+      var dirtyTail = false // df changed since the last sink/branch
+      val writesBefore = writes.size
+      steps.zipWithIndex.foreach { case (step, idx) =>
+        val i = idx + 1
+        // a sink or branch that is not the last step fans the stream out
+        def pinShared(): Unit = if (i < steps.length) df = pin(df, durable)
+        step match {
+          case Label(_)     => () // position marker for sendTo, no lineage
+          case BaseDf(base) => df = base
+          case From(src, agg) =>
+            // ordered mode: tag source sequence + within-source ordinal.
+            // The seq comes from a process-global counter so branch
+            // sources slot in after their parent's in declaration order;
+            // only RELATIVE order within one compiled plan matters.
+            def tag(d: DataFrame): DataFrame =
+              if (!ordered) d
+              else d.withColumn(SrcSeqCol, lit(srcSeqCounter.incrementAndGet()))
+                .withColumn(SrcOrdCol, monotonically_increasing_id())
+            val loaded = observed(tag(src.load(spark)), s"extract_$i")
+            df = if (df == null) loaded
+            else if (agg) df.unionByName(loaded, allowMissingColumns = false)
+            else throw new IllegalStateException(
+              "second non-aggregated from(): use fromPerRecord (per-record semantics) or aggregate = true (concat)")
+            dirtyTail = true
+          case FromPerRecord(src, on) =>
+            require(df != null, "fromPerRecord needs an upstream source")
+            val right = src.load(spark)
+            df = on match {
+              case Some((l, r)) =>
+                val joined = df.join(right, df(l) === right(r))
+                if (l == r) joined.drop(right(r)) else joined
+              case None => df.crossJoin(right)
+            }
+            dirtyTail = true
+          case Join(spec)    => df = spec(spark, df); dirtyTail = true
+          case AsOfStep(src, lk, rk, lt, rt, lid, rid, fwd) =>
+            require(df != null, "asOf needs an upstream source")
+            df = graft.plans.AsOf.join(df, src.load(spark), lk, rk, lt, rt, lid, rid, fwd)
+            dirtyTail = true
+          case Qualify(q) =>
+            // non-truncating (continue-semantics) qualifiers get in/out
+            // observations so exec can report the skipped-record total as
+            // the reference's flow.continue event — two CollectMetrics
+            // nodes, zero extra passes. Truncating qualifiers are covered
+            // by the dirty status + flow.break instead.
+            if (!q.truncates) {
+              df = observed(df, s"skip_in_$i")
+              df = q(df)
+              df = observed(df, s"skip_out_$i")
+            } else df = q(df)
+            truncated ||= q.truncates; dirtyTail = true
+          case Transform(t)  => df = t(df); dirtyTail = true
+          case RootBreak(cond) =>
+            require(df != null, "interruptRootOn needs an upstream source")
+            // ≤1-row firing evidence; pinned so the observe node runs
+            // once even though every downstream write's anti-join reads it
+            val signal = pin(observed(
+              df.filter(cond).select(lit(1).as("__graft_break")).limit(1),
+              s"break_$i"), durable)
+            breakSignals += signal
+            // this flow's own continuation past the break point is gated
+            // too (the reference stops the current stream as well)
+            df = gate(df, signal)
+            dirtyTail = true
+          case To(sink) =>
+            if (pins.isDefined) {
+              pinShared()
+              writes += ((observed(emitForm(df, ordered), s"load_$i"), sink))
+              dirtyTail = false
+            }
+          case Branch(sub) =>
+            pinShared()
+            val raisedBefore = breakSignals.size
+            val body = if (pins.isDefined) sub.steps
+              else sub.steps.take(sub.steps.lastIndexWhere(raises) + 1)
+            fold(BaseDf(df) +: body, durable || sub.durableFanout, ordered || sub.orderedConcat)
+            // root-targeted breaks inside the branch gate THIS flow's
+            // continuation and keep propagating to every ancestor
+            val raised = breakSignals.drop(raisedBefore)
+            raised.foreach(sig => df = gate(df, sig))
+            dirtyTail = raised.nonEmpty
         }
       }
+      require(df != null, "pipeline has no source (from)")
+      // a flow without an explicit sink — or with nodes after the last
+      // sink — still executes fully (reference exec() semantics): drive
+      // the tail through a NoOp write so counters materialize. It stays
+      // UN-ordered: it exists to run counters, and a range sort no sink
+      // observes would be a wasted exchange.
+      if (pins.isDefined && (writes.size == writesBefore || dirtyTail))
+        writes += ((observed(df, s"load_${steps.length + 1}"), NoOpSink))
+      df
+    }
 
-    val n = steps.length
-    // a compile failure AFTER a persistIfShared (e.g. the second-
-    // non-aggregated-from error below) must release what it cached:
-    // exec's unpersist runs only on the successfully returned Compiled,
-    // so without this a repeatedly-failing exec leaks a cache entry per
-    // attempt in a long-lived session
-    try {
-    steps.zipWithIndex.foreach { case (step, idx) =>
-      i += 1
-      step match {
-        case Label(_)     => () // position marker for sendTo, no lineage
-        case BaseDf(base) => df = base
-        case From(src, agg) =>
-          // ordered mode: tag source sequence + within-source ordinal.
-          // The seq comes from a process-global counter so branch
-          // sub-flow sources slot in after their parent's in declaration
-          // order; only RELATIVE order within one compiled plan matters.
-          def tag(d: DataFrame): DataFrame =
-            if (!orderedConcat) d
-            else d.withColumn(SrcSeqCol, lit(srcSeqCounter.incrementAndGet()))
-              .withColumn(SrcOrdCol, monotonically_increasing_id())
-          val loaded = observed(tag(src.load(spark)), s"extract_$i")
-          df = if (df == null) loaded
-          else if (agg) df.unionByName(loaded, allowMissingColumns = false)
-          else throw new IllegalStateException(
-            "second non-aggregated from(): use fromPerRecord (per-record semantics) or aggregate = true (concat)")
-          dirtyTail = true
-        case FromPerRecord(src, on) =>
-          require(df != null, "fromPerRecord needs an upstream source")
-          val right = src.load(spark)
-          df = on match {
-            case Some((l, r)) =>
-              val joined = df.join(right, df(l) === right(r))
-              if (l == r) joined.drop(right(r)) else joined
-            case None => df.crossJoin(right)
-          }
-          dirtyTail = true
-        case Join(spec)    => df = spec(spark, df); dirtyTail = true
-        case AsOfStep(src, lk, rk, lt, rt, lid, rid, fwd) =>
-          require(df != null, "asOf needs an upstream source")
-          df = graft.plans.AsOf.join(df, src.load(spark), lk, rk, lt, rt, lid, rid, fwd)
-          dirtyTail = true
-        case Qualify(q) =>
-          // non-truncating (continue-semantics) qualifiers get in/out
-          // observations so exec can report the skipped-record total as
-          // the reference's flow.continue event — two CollectMetrics
-          // nodes, zero extra passes. Truncating qualifiers are covered
-          // by the dirty status + flow.break instead.
-          if (!q.truncates) {
-            df = observed(df, s"skip_in_$i")
-            df = q(df)
-            df = observed(df, s"skip_out_$i")
-          } else df = q(df)
-          truncated ||= q.truncates; dirtyTail = true
-        case Transform(t)  => df = t(df); dirtyTail = true
-        case RootBreak(cond) =>
-          require(df != null, "interruptRootOn needs an upstream source")
-          // ≤1-row firing evidence; persisted so the observe node runs
-          // once even though every downstream write's anti-join reads it
-          var signal = observed(
-            df.filter(cond).select(lit(1).as("__graft_break")).limit(1),
-            s"break_$i")
-          if (forExec) {
-            if (durableFanout) {
-              // same precondition as the fan-out checkpoint: without it
-              // a durable pipeline whose ONLY durable node is a break
-              // signal would fail with Spark's raw "checkpoint
-              // directory has not been set" instead of this message
-              require(spark.sparkContext.getCheckpointDir.isDefined,
-                "durable() break signal needs spark.sparkContext.setCheckpointDir " +
-                  "(a reliable store every executor can read)")
-              signal = signal.checkpoint() // ≤1 row, eager
-            } else { signal = signal.persist(); persisted += signal }
-          }
-          breakSignals += signal
-          // this flow's own continuation past the break point is gated
-          // too (the reference stops the current stream as well)
-          df = gate(df, signal)
-          dirtyTail = true
-        case To(sink) =>
-          persistIfShared(last = idx == n - 1)
-          writes += ((observed(emitForm(df), s"load_$i"), sink))
-          dirtyTail = false
-        case Branch(sub) =>
-          persistIfShared(last = idx == n - 1)
-          val b = sub.withDurable(durableFanout).withOrdered(orderedConcat)
-            .withBase(df).compile(spark, forExec)
-          writes ++= b.writes
-          observations ++= b.observations
-          persisted ++= b.persisted
-          truncated ||= b.truncated
-          // root-targeted breaks inside the branch gate THIS flow's
-          // continuation and keep propagating to every ancestor
-          b.breakSignals.foreach(sig => df = gate(df, sig))
-          breakSignals ++= b.breakSignals
-          dirtyTail = b.breakSignals.nonEmpty
-      }
-    }
-    require(df != null, "pipeline has no source (from)")
-    // a flow without an explicit sink — or with nodes after the last
-    // sink — still executes fully (reference exec() semantics): drive
-    // the tail through a NoOp write so counters materialize
-    if (writes.isEmpty || dirtyTail)
-      // the NoOp drive stays UN-ordered: it exists to run counters, and
-      // a range sort no sink observes would be a wasted exchange
-      writes += ((observed(df, s"load_${i + 1}"), NoOpSink))
-    Compiled(emitForm(df), writes.toSeq, observations.toSeq, truncated,
-      persisted.toSeq, breakSignals.toSeq)
-    } catch {
-      case e: Throwable =>
-        persisted.foreach(_.unpersist(blocking = false))
-        throw e
-    }
+    val df = fold(steps, durableFanout, orderedConcat)
+    Compiled(emitForm(df, orderedConcat), writes.toSeq, observations.toSeq, truncated)
   }
-
-  private def withBase(base: DataFrame): Pipeline =
-    new Pipeline(Pipeline.BaseDf(base) +: steps, durableFanout, orderedConcat)
-
-  private def withDurable(d: Boolean): Pipeline =
-    if (d && !durableFanout) new Pipeline(steps, durableFanout = true, orderedConcat)
-    else this
-
-  private def withOrdered(o: Boolean): Pipeline =
-    if (o && !orderedConcat) new Pipeline(steps, durableFanout, orderedConcat = true)
-    else this
 }
 
 object Pipeline {
@@ -477,9 +464,15 @@ object Pipeline {
       df: DataFrame,
       writes: Seq[(DataFrame, Sink)],
       observations: Seq[(String, Observation)],
-      truncated: Boolean,
-      persisted: Seq[DataFrame],
-      breakSignals: Seq[DataFrame] = Seq.empty)
+      truncated: Boolean)
+
+  /** Can this step gate its flow's stream (a root-targeted break, here
+    * or in a nested branch)? */
+  private def raises(s: Step): Boolean = s match {
+    case RootBreak(_) => true
+    case Branch(sub)  => sub.steps.exists(raises)
+    case _            => false
+  }
 
   sealed private trait Step
   private final case class From(src: Source, aggregate: Boolean) extends Step

@@ -57,19 +57,13 @@ object Qualifiers {
     * later in the joint stream survives. Aim the break at an INNER
     * per-record source instead with [[TakeWhileGrouped]].
     *
-    * Implemented as one window pass: running count of failures up to and
-    * including each row; rows with zero failures so far pass. Global
-    * order ⇒ single-partition window; this is the documented cost of
-    * exact sequential semantics on a distributed engine. */
+    * Implemented as [[TakeWhileGrouped]] with no group: one window pass
+    * over the whole stream. Global order ⇒ single-partition window; this
+    * is the documented cost of exact sequential semantics on a
+    * distributed engine. */
   final case class TakeWhileOrdered(pred: Column, order: Seq[Column]) extends Qualifier {
     override def truncates: Boolean = true
-    def apply(df: DataFrame): DataFrame = {
-      val w = Window.orderBy(order: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      df.withColumn("__graft_breaks", sum(when(pred, 0L).otherwise(1L)).over(w))
-        .filter(col("__graft_breaks") === 0L)
-        .drop("__graft_breaks")
-    }
+    def apply(df: DataFrame): DataFrame = TakeWhileGrouped(pred, order, Nil)(df)
   }
 
   /** Targeted break aimed at an INNER per-record source: the inner
@@ -86,7 +80,10 @@ object Qualifiers {
     * break the outermost source; window partitioned by the outer keys
     * (this class) ≡ break the inner source only. The per-group window
     * is also the scalable one: work stays within each group's
-    * partition, no global sort boundary. */
+    * partition, no global sort boundary.
+    *
+    * One window pass: a running count of failures up to and including
+    * each row; rows with zero failures so far pass. */
   final case class TakeWhileGrouped(pred: Column, order: Seq[Column],
       group: Seq[Column]) extends Qualifier {
     override def truncates: Boolean = true

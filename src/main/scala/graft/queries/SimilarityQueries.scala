@@ -441,30 +441,24 @@ object SimilarityQueries {
     // share (PSD ⇒ every term ≥ 0). Scale: the corpus is touched ONCE
     // (the gram fold, partial-triangle shuffle independent of corpus
     // size); the [[PcaIters]] steps are one array fold over the
-    // one-row D²-cell gram ([[pcaVector]]) — at 100 TB the iteration
+    // one-row D²-cell gram ([[pcaFold]]) — at 100 TB the iteration
     // cost is noise. Oracle: the recurrence UNROLLED as a CTE chain
     // (the graph_pagerank pattern), one block per step.
     QueryDef("embedding_pca_top",
       (s, dir) => {
         // eager localCheckpoint: the final plan reads the triangle
-        // several times (v's fold, vᵀGv, the trace), and each read
-        // would otherwise re-run the corpus scan and gram fold.
+        // three times (both halves of gramFull, the trace), and each
+        // read would otherwise re-run the corpus scan and gram fold.
         // Checkpointing makes the D²-cell frame a leaf, so the corpus
         // is touched once.
         val tri = gramTriangle(s, dir).localCheckpoint()
-        val gfull = gramFull(tri)
-        val v = pcaVector(gfull)
-        val vgv = gfull.as("g")
-          .join(broadcast(v.as("a")), col("a.i") === col("g.i"))
-          .join(broadcast(v.as("b")), col("b.i") === col("g.j"))
-          .agg(sum(col("g.gram_u2").cast("decimal(38,0)") *
-            col("a.v") * col("b.v")).as("vgv"))
-        val vtv = v.agg(sum(col("v").cast("decimal(38,0)") * col("v")).as("vtv"))
         val tr = tri.filter(col("i") === col("j"))
           .agg(sum(col("gram_u2").cast("decimal(38,0)")).as("tr"))
-        v.crossJoin(broadcast(vgv)).crossJoin(broadcast(vtv))
-          .crossJoin(broadcast(tr))
-          .select(col("i"), col("v").as("pc1_u20"),
+        // vᵀGv, vᵀv and the output rows all read the ONE folded row
+        pcaFold(gramFull(tri)).crossJoin(broadcast(tr))
+          .select(col("g.i").as("i"), col("v"), col("tr"),
+            dot(col("v"), matvec(col("g.row"), col("v"))).as("vgv"), dot(col("v"), col("v")).as("vtv"))
+          .select(inline(arrays_zip(col("i"), col("v").as("pc1_u20"))),
             when(col("vtv") === 0 || col("tr") === 0, lit(0L))
               .otherwise(expr("CAST((vgv * 1000000) div (vtv * tr) AS BIGINT)"))
               .as("share_micro"))
@@ -497,7 +491,7 @@ object SimilarityQueries {
     // [[Pc1FloorOffset]]), resid²·(vᵀv) expansion avoided by reporting
     // resid2_u2 = cᵀc − p² div vᵀv (p² in DECIMAL/HUGEINT, quotient
     // non-negative so floor = truncate). v and μ̃ come from the SHARED
-    // [[pcaVector]]/dims definitions — this query cannot drift from
+    // [[pcaFold]]/dims definitions — this query cannot drift from
     // the PC it claims to remove. Scale: the corpus is touched by the
     // gram fold + per-dim sums (both counter-shaped shuffles) + ONE
     // map pass against a broadcast 1-row (varr, muarr, vtv) frame —
@@ -508,7 +502,6 @@ object SimilarityQueries {
         // checkpointed for the same reason as embedding_pca_top's: v's
         // fold must not re-run the corpus scan behind the gram
         val tri = gramTriangle(s, dir).localCheckpoint()
-        val v = pcaVector(gramFull(tri))
         val u = Tables(s, dir, "embeddings")
           .select(col("vec_id"),
             transform(col("embedding").cast("array<double>"),
@@ -523,14 +516,12 @@ object SimilarityQueries {
             // scale the offset's headroom claim is about
             expr(s"CAST((CAST(su AS DECIMAL(38,0)) + CAST(${MuOffset} AS DECIMAL(38,0)) * n) div n - ${MuOffset}L AS BIGINT)")
               .as("mu"))
-        val vm = v.join(dims, Seq("i"))
-          .agg(
-            sort_array(collect_list(struct(col("i"), col("v"), col("mu")))).as("a"),
-            sum(col("v").cast("decimal(38,0)") * col("v")).as("vtv"))
-          .select(
-            transform(col("a"), e => e.getField("v")).as("varr"),
-            transform(col("a"), e => e.getField("mu")).as("muarr"),
-            col("vtv"))
+        // varr and vtv straight off the folded row; μ̃ collected in the
+        // same key order (both are dims 1..D sorted)
+        val vm = pcaFold(gramFull(tri))
+          .crossJoin(broadcast(dims.agg(sort_array(collect_list(struct(col("i"), col("mu")))).as("d"))))
+          .select(col("v").as("varr"), col("d.mu").as("muarr"),
+            dot(col("v"), col("v")).as("vtv"))
         u.crossJoin(broadcast(vm))
           .select(col("vec_id"),
             expr("zip_with(u, muarr, (a, b) -> a - b)").as("c"),
@@ -1784,6 +1775,13 @@ object SimilarityQueries {
       tri.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("gram_u2")))
 
+  /** p = G·v with DECIMAL(38,0) products and sums, `g` the gram as rows. */
+  private def matvec(g: Column, v: Column): Column = transform(g, r => dot(r, v))
+
+  /** Σ aᵢ·bᵢ with DECIMAL(38,0) products and sum. */
+  private def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("decimal(38,0)") * y), lit(0).cast("decimal(38,0)"), _ + _)
+
   /** The [[PcaIters]]-step exact-integer power iteration: v ← G·v
     * from the ones vector, renormalized each step onto the
     * [[PcaVScale]] grid by portable floor division (the +2·scale·m
@@ -1792,17 +1790,19 @@ object SimilarityQueries {
     * input (D² cells) grows with the corpus, so the recurrence is ONE
     * expression, not a loop of supersteps: `gfull` collects into one
     * row (its sorted `i` keys and the gram as rows in key order) and
-    * `aggregate(sequence(1, PcaIters), v0, …)` folds the steps. Lazy:
+    * `aggregate(sequence(1, PcaIters), v0, …)` folds the steps. The
+    * result is that one row — `g` (the keys `g.i` and the gram rows
+    * `g.row`) and `v` (the component, aligned with `g.i`) — so a caller
+    * derives vᵀGv, vᵀv and its output rows from one evaluation of the
+    * fold. Lazy:
     * building it starts no job. ONE definition shared by
     * `embedding_pca_top` and `embedding_abtt` — a corrected-embedding
     * query whose v drifted from the reported PC would silently
     * subtract the wrong direction. Keep [[pcaVCteSql]] in lockstep
     * term-for-term. */
-  private[graft] def pcaVector(gfull: DataFrame): DataFrame = {
+  private[graft] def pcaFold(gfull: DataFrame): DataFrame = {
     // f(e) with e evaluated once: higher-order SQL has no `let`
     def let(e: Column)(f: Column => Column): Column = transform(array(e), f).getItem(0)
-    def matvec(g: Column, v: Column): Column = transform(g, r =>
-      aggregate(zip_with(r, v, (a, b) => a.cast("decimal(38,0)") * b), lit(0).cast("decimal(38,0)"), _ + _))
     // floor(p·scale / m) made portable; m = 0 (an all-zero p) gives 0
     def renorm(p: Column, m: Column): Column = transform(p, x => when(m === 0, 0L).otherwise(
       (call_function("div", x * PcaVScale + m * (2 * PcaVScale), m) - 2 * PcaVScale).cast("bigint")))
@@ -1813,11 +1813,15 @@ object SimilarityQueries {
     gfull.groupBy(col("i"))
       .agg(sort_array(collect_list(struct(col("j"), col("gram_u2")))).getField("gram_u2").as("row"))
       .agg(sort_array(collect_list(struct(col("i"), col("row")))).as("g"))
-      .select(inline(arrays_zip(col("g.i").as("i"), aggregate(sequence(lit(1), lit(PcaIters)),
-        array_repeat(lit(PcaVScale), size(col("g"))), (v, _) => step(col("g.row"), v)).as("v"))))
+      .select(col("g"), aggregate(sequence(lit(1), lit(PcaIters)),
+        array_repeat(lit(PcaVScale), size(col("g"))), (v, _) => step(col("g.row"), v)).as("v"))
   }
 
-  /** DuckDB twin of [[pcaVector]]: CTE chain `gfull, v0 .. v{PcaIters}`
+  /** [[pcaFold]] as `(i, v)` rows, one per dimension. */
+  private[graft] def pcaVector(gfull: DataFrame): DataFrame =
+    pcaFold(gfull).select(inline(arrays_zip(col("g.i").as("i"), col("v"))))
+
+  /** DuckDB twin of [[pcaFold]]: CTE chain `gfull, v0 .. v{PcaIters}`
     * appended after [[gramCteSql]]. Every recurrence CTE is MATERIALIZED
     * (the graph_pagerank oracle pattern): DuckDB INLINES plain CTEs per
     * reference, and v_k is referenced twice by step k+1 —

@@ -1,7 +1,8 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.util.SerializableConfiguration
 
 /** A record sink — the reference's `LoaderInterface`
   * (`src/Loaders/LoaderInterface.php:18-33`). The per-record `exec` +
@@ -252,15 +253,10 @@ final case class ArrowSink(path: String, batchRows: Int = 4096) extends Sink {
   def write(df: DataFrame): Unit = {
     val spark = df.sparkSession
     val st = df.schema
-    // Configuration is not serializable — ship its entries and rebuild
-    // per partition, so DFS credentials/settings reach the tasks
-    val confSer = spark.sparkContext.broadcast {
-      val c = spark.sparkContext.hadoopConfiguration
-      val it = c.iterator()
-      val m = scala.collection.mutable.Map.empty[String, String]
-      while (it.hasNext) { val e = it.next(); m += e.getKey -> e.getValue }
-      m.toMap
-    }
+    // Configuration is not serializable — broadcast Spark's serializable
+    // wrapper, so DFS credentials/settings reach the tasks
+    val confSer = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val out = path
     val nBatch = batchRows
     val fs0 = new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -268,8 +264,7 @@ final case class ArrowSink(path: String, batchRows: Int = 4096) extends Sink {
     fs0.mkdirs(new HPath(path))
     df.rdd.foreachPartition { rows =>
       if (rows.hasNext) {
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confSer.value.foreach { case (k, v) => conf.set(k, v) }
+        val conf = confSer.value.value
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val file = new HPath(out, f"part-$pid%05d.arrow")
         val fs = file.getFileSystem(conf)
@@ -397,47 +392,51 @@ final case class JdbcUpsertSink(
     // columns must bind by keyCols position, not column position)
     val updIdx = (cols.indices.filterNot(i => keyCols.contains(cols(i))) ++
       keyCols.map(k => cols.indexOf(k))).toArray
-    val (u, props, bs) = (url, properties, batchSize)
-    df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      val p = new java.util.Properties()
-      props.foreach { case (k, v) => p.setProperty(k, v) }
-      val conn = java.sql.DriverManager.getConnection(u, p)
-      try {
-        conn.setAutoCommit(false)
-        val upd = conn.prepareStatement(updSql)
-        val ins = conn.prepareStatement(insSql)
-        var n = 0
-        rows.foreach { r =>
-          updIdx.zipWithIndex.foreach { case (ri, pi) => upd.setObject(pi + 1, r.get(ri)) }
-          if (upd.executeUpdate() == 0) {
-            (0 until r.length).foreach(i => ins.setObject(i + 1, r.get(i)))
-            ins.executeUpdate()
-          }
-          n += 1
-          if (n % bs == 0) conn.commit()
+    writePartitions(df) { conn =>
+      val upd = conn.prepareStatement(updSql)
+      val ins = conn.prepareStatement(insSql)
+      val put: Row => Unit = r => {
+        updIdx.zipWithIndex.foreach { case (ri, pi) => upd.setObject(pi + 1, r.get(ri)) }
+        if (upd.executeUpdate() == 0) {
+          (0 until r.length).foreach(i => ins.setObject(i + 1, r.get(i)))
+          ins.executeUpdate()
         }
-        conn.commit()
-      } finally conn.close()
+      }
+      (put, () => ())
     }
   }
 
   private def writeSingleStatement(df: DataFrame): Unit = {
     val sqlTemplate = JdbcUpsertSink.upsertSql(dialect, table, df.columns.toSeq, keyCols)
+    writePartitions(df) { conn =>
+      val st = conn.prepareStatement(sqlTemplate)
+      val put: Row => Unit = r => {
+        (0 until r.length).foreach(i => st.setObject(i + 1, r.get(i)))
+        st.addBatch()
+      }
+      (put, () => { st.executeBatch(); () })
+    }
+  }
+
+  /** Each partition on its own connection: auto-commit off, `open`'s
+    * `put` per row, and its `flush` then a commit every `batchSize` rows
+    * and at the end; the connection closes whatever happens. */
+  private def writePartitions(df: DataFrame)(
+      open: java.sql.Connection => (Row => Unit, () => Unit)): Unit = {
     val (u, props, bs) = (url, properties, batchSize)
-    df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+    df.foreachPartition { rows: Iterator[Row] =>
       val p = new java.util.Properties()
       props.foreach { case (k, v) => p.setProperty(k, v) }
       val conn = java.sql.DriverManager.getConnection(u, p)
       try {
         conn.setAutoCommit(false)
-        val st = conn.prepareStatement(sqlTemplate)
+        val (put, flush) = open(conn)
         var n = 0
         rows.foreach { r =>
-          (0 until r.length).foreach(i => st.setObject(i + 1, r.get(i)))
-          st.addBatch(); n += 1
-          if (n % bs == 0) { st.executeBatch(); conn.commit() }
+          put(r); n += 1
+          if (n % bs == 0) { flush(); conn.commit() }
         }
-        st.executeBatch(); conn.commit()
+        flush(); conn.commit()
       } finally conn.close()
     }
   }

@@ -185,25 +185,17 @@ final case class CsvSource(
             .warn(s"CsvSource($path): non-UTF-8/sep-prolog route cannot honor " +
               "multiLine — quoted fields with embedded newlines will split; " +
               "pass multiLine = false to acknowledge")
-        import spark.implicits._
         val prolog = pre.prologLine
-        val charset = if (pre.bomEncoding.isDefined) Bom.bomConsumingCharset(enc) else enc
-        val lines = spark.read.format("binaryFile").load(path)
-          .select(col("content")).as[Array[Byte]]
-          .flatMap { bytes =>
-            val text = new String(bytes, java.nio.charset.Charset.forName(charset))
-            val it = CsvSource.stripBomLine0(text.linesIterator)
-            // drop the prolog only as LINE 0 of this file — a data line
-            // textually equal to it elsewhere is real data
-            val body = prolog match {
-              case Some(pl) if it.hasNext =>
-                val first = it.next()
-                if (first == pl) it else Iterator.single(first) ++ it
-              case _ => it
-            }
-            body
+        val lines = CsvSource.decodedLines(spark, path, pre, enc) { it =>
+          // drop the prolog only as LINE 0 of this file — a data line
+          // textually equal to it elsewhere is real data
+          prolog match {
+            case Some(pl) if it.hasNext =>
+              val first = it.next()
+              if (first == pl) it else Iterator.single(first) ++ it
+            case _ => it
           }
-          .filter(_.nonEmpty)
+        }.filter(_.nonEmpty)
         spark.read.options(base).csv(lines)
       } else {
         val bomOpt = if (pre.bomEncoding.isDefined) Map("encoding" -> "UTF-8") else Map.empty[String, String]
@@ -234,6 +226,21 @@ object CsvSource {
     * keeps the per-line strip as a documented divergence. */
   private[sources] def stripBomLine0(lines: Iterator[String]): Iterator[String] =
     if (lines.hasNext) Iterator.single(stripBom(lines.next())) ++ lines else lines
+
+  /** The per-file decode of the non-UTF-8 routes (CsvSource's, and
+    * LineSource's): each file under `path` read whole (binaryFile),
+    * decoded in `enc` — its BOM-consuming form when the pre-scan found a
+    * BOM — with a leading BOM stripped from line 0 only, then `perFile`
+    * applied to that file's lines. Parallel across files. */
+  private[sources] def decodedLines(spark: SparkSession, path: String, pre: PreScan,
+      enc: String)(perFile: Iterator[String] => Iterator[String]): Dataset[String] = {
+    import spark.implicits._
+    val charset = if (pre.bomEncoding.isDefined) Bom.bomConsumingCharset(enc) else enc
+    spark.read.format("binaryFile").load(path)
+      .select(col("content")).as[Array[Byte]]
+      .flatMap(bytes => perFile(stripBomLine0(
+        new String(bytes, java.nio.charset.Charset.forName(charset)).linesIterator)))
+  }
 
   /** Read the first bytes of (one file under) `path` through the Hadoop
     * FS API — works for local paths, globs, and any DFS; costs one tiny
@@ -296,18 +303,9 @@ final case class LineSource(
         .map(s => CsvSource.stripBom(s).trim)
         .filter(_.nonEmpty)
         .toDF("value")
-    else {
-      val charset =
-        if (pre.bomEncoding.isDefined) Bom.bomConsumingCharset(enc) else enc
-      spark.read.format("binaryFile").load(path)
-        .select(col("content")).as[Array[Byte]]
-        .flatMap { bytes =>
-          val text = new String(bytes, java.nio.charset.Charset.forName(charset))
-          CsvSource.stripBomLine0(text.linesIterator)
-            .map(_.trim).filter(_.nonEmpty)
-        }
+    else
+      CsvSource.decodedLines(spark, path, pre, enc)(_.map(_.trim).filter(_.nonEmpty))
         .toDF("value")
-    }
   }
 }
 

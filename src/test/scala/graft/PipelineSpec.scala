@@ -234,6 +234,63 @@ class PipelineSpec extends SparkSuite {
     assert(report.counters.count { case (k, v) => k.startsWith("load_") && v == 50 } == 2)
   }
 
+  test("toDF leaves no observation registered once its query has run") {
+    // toDF folds only the stream: a sink write or NoOp tail built with an
+    // observe node no query ever runs would stay registered in the
+    // session for good, one per call
+    import org.apache.spark.sql.graft.SessionProbe
+    val out = tmpDir("todf_obs")
+    val flow = Pipeline
+      .from(RangeSource(10))
+      .qualify(col("id") < 8)
+      .to(ParquetSink(s"$out/mid"))
+      .branch(_.qualify(col("id") > 2)
+        .interruptRootOn(col("id") === 99)
+        .qualify(col("id") > 5)
+        .to(ParquetSink(s"$out/branch")))
+      .transform(Transformers.Replace(overrides = Map("tail" -> "x")))
+    val before = SessionProbe.pendingObservations(spark)
+    (1 to 5).foreach(_ => assert(flow.toDF(spark).collect().length == 8))
+    assert(SessionProbe.pendingObservations(spark) == before)
+  }
+
+  test("a flow that fails after pinning a frame leaves nothing cached") {
+    import graft.sinks.Sink
+    import org.apache.spark.sql.graft.SessionProbe
+    val out = tmpDir("fail_pinned")
+    val before = SessionProbe.cachedEntries(spark)
+    // a compile error after the fan-out pin at the first `to`
+    val compileFail = Pipeline
+      .from(ParquetSource(sf("nation")))
+      .to(ParquetSink(s"$out/mid"))
+      .from(ParquetSource(sf("region")))
+      .exec(spark)
+    assert(compileFail.status.isInstanceOf[PipelineStatus.Failed])
+    assert(SessionProbe.cachedEntries(spark) == before)
+    // a sink that throws on the second write, with the shared prefix and
+    // a break signal pinned
+    var cachedAtFailure = -1
+    val boom = new Sink {
+      def write(df: org.apache.spark.sql.DataFrame): Unit = {
+        cachedAtFailure = SessionProbe.cachedEntries(df.sparkSession)
+        throw new IllegalStateException("sink down")
+      }
+    }
+    val sinkFail = Pipeline
+      .from(ParquetSource(sf("nation")))
+      .interruptRootOn(col("n_nationkey") < 0)
+      .to(ParquetSink(s"$out/first"))
+      .to(boom)
+      .exec(spark)
+    sinkFail.status match {
+      case PipelineStatus.Failed(e) => assert(e.getMessage == "sink down")
+      case other                    => fail(s"expected Failed(sink down), got $other")
+    }
+    assert(spark.read.parquet(s"$out/first").count() == 25)
+    assert(cachedAtFailure == before + 2, "the prefix and the break signal were pinned")
+    assert(SessionProbe.cachedEntries(spark) == before)
+  }
+
   test("multi-sink exec persists the shared prefix exactly once") {
     val out = tmpDir("fanout2")
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size

@@ -13,7 +13,11 @@ expression ids (#123), plan_id=, RDD ids with their callsite line, JVM
 identity hashes (Foo@1a2b3c, $Lambda$5669/0x...), and the numbers of
 lambda variables built through the Scala functions API (`lambda x_60`,
 a process-wide counter, so a lambda added to one query renames those of
-every query planned after it). One order is also
+every query planned after it), and the uid suffix of Pipeline
+observation names (`graft_load_3_17` -> `graft_load_3_N`: one more
+process-wide counter, which a Pipeline that allocates one observation
+more or less moves for every Pipeline-built query planned after it; the
+step name and index stay). One order is also
 made canonical: the order of the distinct groups in the Expand that
 Catalyst's RewriteDistinctAggregates plans for two or more distinct
 aggregates over different columns (profile_stats' three
@@ -42,6 +46,7 @@ NORMALISE = [
      r"RDD[N] at \1 at \2.scala:N"),
     (re.compile(r"\$Lambda\$[0-9]+/0x[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"\blambda (\w+?)_[0-9]+\b"), r"lambda \1_N"),
+    (re.compile(r"\bgraft_(\w+?_[0-9]+)_[0-9]+\b"), r"graft_\1_N"),
     (re.compile(r"(\w)@[0-9a-f]{4,8}\b"), r"\1@H"),
 ]
 DIFF_LINES = 20
