@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -70,39 +69,10 @@ object SparkEntry {
 
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.map(d => d.name -> d.fn).toMap ++ Map(
-    // §2.8 extension: hash aggregation (TPC-H Q1 shape). Reference has no
-    // group-by node (SURVEY §2.8) — users push aggregation to source SQL;
-    // here it is native: partial (map-side) agg + single shuffle on the
-    // 6-value grouping key, filter pushed to the parquet scan.
-    "q1_agg" -> ((s, dir) => {
-      import graft.queries.QueryDef.cents
-      Tables(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(cents(col("l_quantity"))).as("sum_qty_cents"),
-          sum(cents(col("l_extendedprice"))).as("sum_base_price_cents"),
-          sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .as("sum_disc_price_cents"),
-          count(lit(1)).as("count_order"))
-    })
-  )
+    allDefs.map(d => d.name -> d.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    allDefs.flatMap(d => d.oracle.map(d.name -> _)).toMap ++ Map(
-    "q1_agg" -> {
-      import graft.queries.QueryDef.centsSql
-      s"""SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(${centsSql("l_quantity")}) AS BIGINT) AS sum_qty_cents,
-        |  CAST(SUM(${centsSql("l_extendedprice")}) AS BIGINT) AS sum_base_price_cents,
-        |  CAST(SUM(${centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT) AS sum_disc_price_cents,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin
-    }
-  )
+    allDefs.flatMap(d => d.oracle.map(d.name -> _)).toMap
 }

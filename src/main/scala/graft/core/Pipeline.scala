@@ -199,9 +199,9 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
 
   /** Compile the flow to a DataFrame without running it (the reference's
     * documented standalone/partial-flow reuse, `docs/reusability.md:3-34`).
-    * Only the stream is folded: no sink write is built and nothing is
-    * pinned, so every observation the result carries completes when a
-    * query over it runs. */
+    * Only the stream is folded: no sink write is built, nothing is
+    * pinned and nothing is observed, so the result's plan carries no
+    * counter and the session no observation. */
   def toDF(spark: SparkSession): DataFrame = compile(spark, pins = None).df
 
   /** Run the flow: execute every sink write, gather counters, report —
@@ -279,9 +279,9 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
     *
     * `pins` is [[exec]]'s list of persisted frames; without it
     * ([[toDF]]) only the stream is folded — no sink or NoOp write is
-    * built, nothing is pinned, and a branch contributes only the steps
-    * up to its last root-targeted break (all a branch can do to the
-    * stream).
+    * built, nothing is pinned or observed, and a branch contributes
+    * only the steps up to its last root-targeted break (all a branch
+    * can do to the stream).
     *
     * Fan-out handling: when a `to`/`branch` is not the last step, the
     * DataFrame at that point is consumed more than once (this sink AND
@@ -315,15 +315,20 @@ final class Pipeline private (private val steps: Vector[Pipeline.Step],
         d.orderBy(col(SrcSeqCol), col(SrcOrdCol)).drop(SrcSeqCol, SrcOrdCol)
       else d
 
-    def observed(d: DataFrame, name: String): DataFrame = {
-      // globally unique observation AND report key: branch sub-flows
-      // reuse step indices, so a bare "load_3" would collide both in
-      // Spark's observed-metrics registry and in the counters map
-      val uid = Pipeline.obsCounter.incrementAndGet()
-      val obs = new Observation(s"graft_${name}_$uid")
-      observations += s"${name}_$uid" -> obs
-      d.observe(obs, count(lit(1)).as("records"))
-    }
+    /** Count `d`'s rows into the report (exec only: no [[toDF]] caller
+      * can read a counter, and an observation no write runs would stay
+      * registered in the session). */
+    def observed(d: DataFrame, name: String): DataFrame =
+      if (pins.isEmpty) d
+      else {
+        // globally unique observation AND report key: branch sub-flows
+        // reuse step indices, so a bare "load_3" would collide both in
+        // Spark's observed-metrics registry and in the counters map
+        val uid = Pipeline.obsCounter.incrementAndGet()
+        val obs = new Observation(s"graft_${name}_$uid")
+        observations += s"${name}_$uid" -> obs
+        d.observe(obs, count(lit(1)).as("records"))
+      }
 
     /** Pin one evaluation of `d` (exec only): best-effort `persist()` by
       * default, reliable `checkpoint()` in [[durable]] mode (survives

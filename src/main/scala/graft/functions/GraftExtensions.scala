@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
+import scala.reflect.{ClassTag, classTag}
+
 /** SparkSessionExtensions integration — the production path for making
   * the engine's native expressions available to plain SQL users on a
   * cluster:
@@ -24,10 +26,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.dotFunction)
-    ext.injectFunction(GraftExtensions.nfcFunction)
-    ext.injectFunction(GraftExtensions.phashFunction)
-    ext.injectFunction(GraftExtensions.repStatsFunction)
+    GraftExtensions.scalarFunctions.foreach(ext.injectFunction)
     // whole-operator extension: lowers the custom AsOfJoinPlan node
     // (graft.plans.AsOf) during optimization; the table function is the
     // SQL surface constructing that node, so spark.sql(...) users get
@@ -43,56 +42,32 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private val dotInfo = new ExpressionInfo(
-    classOf[DotProductExpr].getCanonicalName, "graft_dot")
-
-  private def build(children: Seq[Expression]): Expression = {
-    require(children.size == 2, s"graft_dot expects 2 arguments, got ${children.size}")
-    DotProductExpr(children.head, children(1))
+  /** One scalar SQL function: its registry name and info, and a builder
+    * that checks the argument count before `build` runs. */
+  private def scalar[E <: Expression: ClassTag](name: String, arity: Int)(
+      build: Seq[Expression] => E) = {
+    val info = new ExpressionInfo(classTag[E].runtimeClass.getCanonicalName, name)
+    (FunctionIdentifier(name), info, (children: Seq[Expression]) => {
+      require(children.size == arity,
+        s"$name expects $arity argument${if (arity == 1) "" else "s"}, got ${children.size}")
+      build(children): Expression
+    })
   }
 
-  private[graft] val dotFunction =
-    (FunctionIdentifier("graft_dot"), dotInfo, (children: Seq[Expression]) => build(children))
-
-  private val nfcInfo = new ExpressionInfo(
-    classOf[NfcNormalizeExpr].getCanonicalName, "graft_nfc")
-
-  private def buildNfc(children: Seq[Expression]): Expression = {
-    require(children.size == 1, s"graft_nfc expects 1 argument, got ${children.size}")
-    NfcNormalizeExpr(children.head)
-  }
-
-  private[graft] val nfcFunction =
-    (FunctionIdentifier("graft_nfc"), nfcInfo, (children: Seq[Expression]) => buildNfc(children))
-
-  private val phashInfo = new ExpressionInfo(
-    classOf[PortableHashExpr].getCanonicalName, "graft_phash")
-
-  private def buildPhash(children: Seq[Expression]): Expression = {
-    require(children.size == 2, s"graft_phash expects 2 arguments, got ${children.size}")
-    val salt = children(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_phash salt must be an integer literal, got $other")
-    }
-    PortableHashExpr(children.head, salt)
-  }
-
-  private[graft] val phashFunction =
-    (FunctionIdentifier("graft_phash"), phashInfo, (children: Seq[Expression]) => buildPhash(children))
-
-  private val repStatsInfo = new ExpressionInfo(
-    classOf[RepetitionStatsExpr].getCanonicalName, "graft_repetition_stats")
-
-  private def buildRepStats(children: Seq[Expression]): Expression = {
-    require(children.size == 1,
-      s"graft_repetition_stats expects 1 argument, got ${children.size}")
-    RepetitionStatsExpr(children.head)
-  }
-
-  private[graft] val repStatsFunction =
-    (FunctionIdentifier("graft_repetition_stats"), repStatsInfo,
-      (children: Seq[Expression]) => buildRepStats(children))
+  /** The engine's native scalar SQL functions — the one list both
+    * [[GraftExtensions.apply]] and [[register]] install. */
+  private[graft] val scalarFunctions = Seq(
+    scalar[DotProductExpr]("graft_dot", 2)(c => DotProductExpr(c.head, c(1))),
+    scalar[NfcNormalizeExpr]("graft_nfc", 1)(c => NfcNormalizeExpr(c.head)),
+    scalar[PortableHashExpr]("graft_phash", 2) { c =>
+      val salt = c(1) match {
+        case Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"graft_phash salt must be an integer literal, got $other")
+      }
+      PortableHashExpr(c.head, salt)
+    },
+    scalar[RepetitionStatsExpr]("graft_repetition_stats", 1)(c => RepetitionStatsExpr(c.head)))
 
   private val asofInfo = new ExpressionInfo(
     classOf[AsOfJoinPlan].getCanonicalName, "asof_join")
@@ -135,14 +110,10 @@ object GraftExtensions {
 
   /** Register the engine's SQL functions into an existing session. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_dot", build, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_nfc", buildNfc, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_phash", buildPhash, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_repetition_stats", buildRepStats, "built-in")
+    scalarFunctions.foreach { case (id, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(id.funcName, build, "built-in")
+    }
     spark.sessionState.tableFunctionRegistry
       .createOrReplaceTempFunction("asof_join", buildAsOf, "built-in")
     // the SQL surface needs the lowering rule too (cluster deployments

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Event-stream analytics over the `events` table — batch expressions of
@@ -271,23 +271,18 @@ object EventQueries {
           .groupBy(col("event_type"),
             date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"))
           .agg(count(lit(1)).as("c"))
-        val st = h.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
-            sum(col("c").cast("decimal(38,0)") * col("c")).as("ss"))
+        val st = countMoments(h)
         val (spike, tail) = rateSpike(col("c"))
         h.join(broadcast(st), Seq("event_type"))
           .filter(spike)
           .select(col("event_type"), col("hour"), col("c").as("n_events"), tail)
       },
-      Some("""WITH h AS (
+      Some(s"""WITH h AS (
              |  SELECT event_type,
              |    strftime(date_trunc('hour', CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:%M:%S') AS hour,
              |    COUNT(*) AS c
              |  FROM events GROUP BY 1, 2),
-             |st AS (
-             |  SELECT event_type, COUNT(*) AS n, SUM(c) AS s,
-             |    SUM(CAST(c AS HUGEINT) * c) AS ss
-             |  FROM h GROUP BY 1)
+             |${momentsSql("st", "h")}
              |SELECT h.event_type, h.hour, h.c AS n_events,
              |  CASE WHEN CAST(st.n AS HUGEINT) * h.c - st.s > 0 THEN 'high' ELSE 'low' END AS tail
              |FROM h JOIN st USING (event_type)
@@ -391,22 +386,7 @@ object EventQueries {
             col("click_src.c_id").as("click_event_id"),
             col("click_src.c_us").as("click_us"))
       },
-      Some("""WITH p AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'purchase'),
-             |c AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'click'),
-             |ranked AS (
-             |  SELECT p.event_id, c.event_id AS c_id, c.ts AS c_ts,
-             |    row_number() OVER (PARTITION BY p.event_id
-             |      ORDER BY c.ts DESC, c.event_id DESC) AS rn
-             |  FROM p JOIN c ON c.user_id = p.user_id
-             |    AND (c.ts < p.ts OR (c.ts = p.ts AND c.event_id < p.event_id)))
-             |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS purchase_us,
-             |  r.c_id AS click_event_id, epoch_us(r.c_ts) AS click_us
-             |FROM p LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r
-             |  ON r.event_id = p.event_id""".stripMargin)),
+      Some(asofBackSql)),
 
     // rolling time-window aggregates via a RANGE frame: at every event,
     // the count/value of the SAME USER's events in the trailing hour —
@@ -479,15 +459,8 @@ object EventQueries {
     // this costs a single fact-table shuffle.
     QueryDef("scd2_history",
       (s, dir) => {
-        val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-        val runSum = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val byVersion = Window.partitionBy(col("user_id")).orderBy(col("version"))
-        Tables.events(s, dir)
-          .withColumn("chg",
-            when(lag(col("event_type"), 1).over(byUser).isNull ||
-              lag(col("event_type"), 1).over(byUser) =!= col("event_type"), 1L)
-              .otherwise(0L))
-          .withColumn("version", sum(col("chg")).over(runSum))
+        runVersioned(Tables.events(s, dir))
           .groupBy(col("user_id"), col("version"))
           .agg(
             min(col("event_type")).as("event_type"), // constant within a run
@@ -560,10 +533,7 @@ object EventQueries {
     // BIGINT epoch-day arithmetic on both engines.
     QueryDef("events_retention",
       (s, dir) => {
-        val ed = datediff(col("ts").cast("date"),
-          lit("1970-01-01").cast("date")).cast("long")
-        val act = Tables.events(s, dir)
-          .select(col("user_id"), ed.as("day")).distinct()
+        val act = activeDays(Tables.events(s, dir))
         val cohort = act.groupBy(col("user_id"))
           .agg(min(col("day")).as("cohort_day"))
         act.join(cohort, Seq("user_id"))
@@ -571,11 +541,7 @@ object EventQueries {
             (col("day") - col("cohort_day")).as("offset_days"))
           .agg(countDistinct(col("user_id")).as("n_users"))
       },
-      Some("""WITH act AS (
-             |  SELECT DISTINCT user_id,
-             |    date_diff('day', DATE '1970-01-01',
-             |      CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS day
-             |  FROM events),
+      Some(s"""WITH $activeDaysSql,
              |cohort AS (
              |  SELECT user_id, min(day) AS cohort_day FROM act GROUP BY user_id)
              |SELECT c.cohort_day, a.day - c.cohort_day AS offset_days,
@@ -596,10 +562,7 @@ object EventQueries {
     // the funnel sweep).
     QueryDef("users_cumulative",
       (s, dir) => {
-        val ed = datediff(col("ts").cast("date"),
-          lit("1970-01-01").cast("date")).cast("long")
-        val act = Tables.events(s, dir)
-          .select(col("user_id"), ed.as("day")).distinct()
+        val act = activeDays(Tables.events(s, dir))
         val dau = act.groupBy(col("day")).agg(count(lit(1)).as("dau"))
         val firstSeen = act.groupBy(col("user_id")).agg(min(col("day")).as("day"))
           .groupBy(col("day")).agg(count(lit(1)).as("n_new"))
@@ -610,11 +573,7 @@ object EventQueries {
           .withColumn("cum_users", sum(col("n_new")).over(w))
           .select(col("day"), col("dau"), col("n_new"), col("cum_users"))
       },
-      Some("""WITH act AS (
-             |  SELECT DISTINCT user_id,
-             |    date_diff('day', DATE '1970-01-01',
-             |      CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS day
-             |  FROM events),
+      Some(s"""WITH $activeDaysSql,
              |dau AS (SELECT day, COUNT(*) AS dau FROM act GROUP BY day),
              |fs AS (
              |  SELECT min_day AS day, COUNT(*) AS n_new FROM (
@@ -890,59 +849,28 @@ object EventQueries {
     // conversion latency. The canonical "event → next outcome" shape
     // (trade → next quote, exposure → next conversion, error → next
     // recovery). Same plan discipline as the backward form: ONE
-    // user-keyed window (no join), the forward neighbor read from a
-    // (1 FOLLOWING, UNBOUNDED FOLLOWING) frame with ignoreNulls first —
-    // clicks with no later purchase NULL out instead of dropping, so
-    // the result accounts for every click. Oracle: rank-1 purchase
-    // after each click via a windowed join — a different mechanism
-    // agreeing on the same neighbor.
+    // user-keyed window (no join), the forward neighbor read as the
+    // last non-null of [[reversedPrefix]] (the (1 FOLLOWING, UNBOUNDED
+    // FOLLOWING) frame's first non-null, in O(n)) — clicks with no
+    // later purchase NULL out instead of dropping, so the result
+    // accounts for every click. Oracle: rank-1 purchase after each
+    // click via a windowed join — a different mechanism agreeing on
+    // the same neighbor.
     QueryDef("asof_forward",
-      (s, dir) => {
-        // forward neighbor via the REVERSED sort: "first non-null in
-        // the (1 FOLLOWING, UNBOUNDED FOLLOWING) suffix" under asc
-        // (ts, id) ≡ "last non-null in the (UNBOUNDED PRECEDING, −1)
-        // prefix" under desc — identical rows, but Spark's unbounded-
-        // PRECEDING frame streams in O(n) while the unbounded-FOLLOWING
-        // frame RECOMPUTES its aggregate per row, O(|partition|²): at
-        // the skewed-sf1 hot user (108 886 click/purchase events in
-        // ONE partition) that is ~5.9e9 frame evaluations ≈ 20 min on
-        // one core, and unbounded at 100 TB (r17 skew-sweep finding,
-        // SCALE.md)
-        val byUserDesc = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        Tables.events(s, dir)
-          .filter(col("event_type").isin("click", "purchase"))
-          .withColumn("next_p",
-            last(
-              when(col("event_type") === "purchase",
-                struct(unix_micros(col("ts")).as("p_us"), col("event_id").as("p_id"))),
-              ignoreNulls = true).over(byUserDesc))
-          .filter(col("event_type") === "click")
-          .select(col("event_id").as("click_event_id"), col("user_id"),
-            unix_micros(col("ts")).as("click_us"),
-            col("next_p.p_id").as("purchase_event_id"),
-            col("next_p.p_us").as("purchase_us"),
-            (col("next_p.p_us") - unix_micros(col("ts"))).as("latency_us"))
-      },
-      Some("""WITH c AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'click'),
-             |p AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'purchase'),
-             |ranked AS (
-             |  SELECT c.event_id, p.event_id AS p_id, p.ts AS p_ts,
-             |    row_number() OVER (PARTITION BY c.event_id
-             |      ORDER BY p.ts, p.event_id) AS rn
-             |  FROM c JOIN p ON p.user_id = c.user_id
-             |    AND (p.ts > c.ts OR (p.ts = c.ts AND p.event_id > c.event_id)))
-             |SELECT c.event_id AS click_event_id, c.user_id,
-             |  epoch_us(c.ts) AS click_us,
-             |  r.p_id AS purchase_event_id, epoch_us(r.p_ts) AS purchase_us,
-             |  epoch_us(r.p_ts) - epoch_us(c.ts) AS latency_us
-             |FROM c LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r
-             |  ON r.event_id = c.event_id""".stripMargin)),
+      (s, dir) => Tables.events(s, dir)
+        .filter(col("event_type").isin("click", "purchase"))
+        .withColumn("next_p",
+          last(
+            when(col("event_type") === "purchase",
+              struct(unix_micros(col("ts")).as("p_us"), col("event_id").as("p_id"))),
+            ignoreNulls = true).over(reversedPrefix(-1)))
+        .filter(col("event_type") === "click")
+        .select(col("event_id").as("click_event_id"), col("user_id"),
+          unix_micros(col("ts")).as("click_us"),
+          col("next_p.p_id").as("purchase_event_id"),
+          col("next_p.p_us").as("purchase_us"),
+          (col("next_p.p_us") - unix_micros(col("ts"))).as("latency_us")),
+      Some(asofFwdSql)),
 
     // NEAREST as-of join — the bidirectional completion of the as-of
     // family (backward `asof_attribution`, forward `asof_forward`):
@@ -969,15 +897,9 @@ object EventQueries {
         val ord = Window.partitionBy(col("user_id"))
           .orderBy(col("ts"), col("event_id"))
         val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        // the forward neighbor reads from the REVERSED sort's streaming
-        // prefix frame instead of (CURRENT ROW, UNBOUNDED FOLLOWING):
-        // same rows, O(n) instead of the following-frame's per-row
-        // recompute, O(n²) on the skewed hot-user partition (see
-        // asof_forward's note; both windows share one Exchange — only
-        // a second in-partition sort is added)
-        val fwdDesc = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        // both windows share one Exchange; the reversed one adds only
+        // a second in-partition sort
+        val fwdDesc = reversedPrefix(Window.currentRow)
         val withN = Tables.events(s, dir)
           .filter(col("event_type").isin("click", "purchase"))
           .withColumn("cs",
@@ -1001,18 +923,9 @@ object EventQueries {
             .when(useF, lit("fwd")).otherwise(lit("back")).as("direction"),
           when(useF, dF).otherwise(dB).as("dist_us"))
       },
-      Some("""WITH p AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'purchase'),
-             |c AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'click'),
-             |bk AS (
-             |  SELECT p.event_id, c.event_id AS c_id, c.ts AS c_ts,
-             |    row_number() OVER (PARTITION BY p.event_id
-             |      ORDER BY c.ts DESC, c.event_id DESC) AS rn
-             |  FROM p JOIN c ON c.user_id = p.user_id
-             |    AND (c.ts < p.ts OR (c.ts = p.ts AND c.event_id < p.event_id))),
+      Some(s"""WITH ${asofCteSql("p", "purchase")},
+             |${asofCteSql("c", "click")},
+             |${backRankSql("bk")},
              |fw AS (
              |  SELECT p.event_id, c.event_id AS c_id, c.ts AS c_ts,
              |    row_number() OVER (PARTITION BY p.event_id
@@ -1107,11 +1020,7 @@ object EventQueries {
           .groupBy(col("event_type"),
             expr("unix_micros(ts) div 3600000000").as("hr"))
           .agg(count(lit(1)).as("c"))
-        val mom = hourly.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
-            // c² in decimal from the start: a single 3e9-count hour
-            // already saturates a BIGINT square (rate_anomaly's rule)
-            sum(col("c").cast("decimal(38,0)") * col("c")).as("ss"))
+        val mom = countMoments(hourly)
         val wTrail = Window.partitionBy(col("event_type")).orderBy(col("hr"))
           .rowsBetween(-(W - 1).toLong, Window.currentRow)
         val wSeq = Window.partitionBy(col("event_type")).orderBy(col("hr"))
@@ -1135,14 +1044,11 @@ object EventQueries {
                 s"9 * $W * (CAST(n AS DECIMAL(38,0)) * ss - CAST(s AS DECIMAL(38,0)) * s)"),
               1L).otherwise(0L).as("shifted"))
       },
-      Some("""WITH hourly AS (
+      Some(s"""WITH hourly AS (
              |  SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hr,
              |    COUNT(*) AS c
              |  FROM events GROUP BY 1, 2),
-             |mom AS (
-             |  SELECT event_type, COUNT(*) AS n, SUM(c) AS s,
-             |    SUM(CAST(c AS HUGEINT) * c) AS ss
-             |  FROM hourly GROUP BY 1),
+             |${momentsSql("mom", "hourly")},
              |tr AS (
              |  SELECT event_type, hr,
              |    SUM(c) OVER (PARTITION BY event_type ORDER BY hr
@@ -1183,22 +1089,7 @@ object EventQueries {
           .select(col("event_id"), col("user_id"), col("purchase_us"),
             col("click_event_id"), col("click_us"))
       },
-      Some("""WITH p AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'purchase'),
-             |c AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'click'),
-             |ranked AS (
-             |  SELECT p.event_id, c.event_id AS c_id, c.ts AS c_ts,
-             |    row_number() OVER (PARTITION BY p.event_id
-             |      ORDER BY c.ts DESC, c.event_id DESC) AS rn
-             |  FROM p JOIN c ON c.user_id = p.user_id
-             |    AND (c.ts < p.ts OR (c.ts = p.ts AND c.event_id < p.event_id)))
-             |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS purchase_us,
-             |  r.c_id AS click_event_id, epoch_us(r.c_ts) AS click_us
-             |FROM p LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r
-             |  ON r.event_id = p.event_id""".stripMargin)),
+      Some(asofBackSql)),
 
     // FORWARD direction of the custom-plan as-of join — the mirror of
     // `asof_plan_node`, sharing `asof_forward`'s oracle so the driver
@@ -1224,24 +1115,7 @@ object EventQueries {
             col("purchase_event_id"), col("purchase_us"),
             (col("purchase_us") - col("click_us")).as("latency_us"))
       },
-      Some("""WITH c AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'click'),
-             |p AS (
-             |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-             |  FROM events WHERE event_type = 'purchase'),
-             |ranked AS (
-             |  SELECT c.event_id, p.event_id AS p_id, p.ts AS p_ts,
-             |    row_number() OVER (PARTITION BY c.event_id
-             |      ORDER BY p.ts, p.event_id) AS rn
-             |  FROM c JOIN p ON p.user_id = c.user_id
-             |    AND (p.ts > c.ts OR (p.ts = c.ts AND p.event_id > c.event_id)))
-             |SELECT c.event_id AS click_event_id, c.user_id,
-             |  epoch_us(c.ts) AS click_us,
-             |  r.p_id AS purchase_event_id, epoch_us(r.p_ts) AS purchase_us,
-             |  epoch_us(r.p_ts) - epoch_us(c.ts) AS latency_us
-             |FROM c LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r
-             |  ON r.event_id = c.event_id""".stripMargin)),
+      Some(asofFwdSql)),
 
     // Point-in-time feature join — the feature-store correctness
     // operator: each fact row (purchase) reads the dimension VERSION
@@ -1272,15 +1146,7 @@ object EventQueries {
     QueryDef("pit_feature_join",
       (s, dir) => {
         val ev = Tables.events(s, dir)
-        val byUser = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val versions = ev.filter(col("event_type") =!= "purchase")
-          .withColumn("chg",
-            when(lag(col("event_type"), 1).over(byUser).isNull ||
-              lag(col("event_type"), 1).over(byUser) =!= col("event_type"), 1L)
-              .otherwise(0L))
-          .withColumn("version", sum(col("chg")).over(
-            byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        val versions = runVersioned(ev.filter(col("event_type") =!= "purchase"))
           .groupBy(col("user_id"), col("version"))
           .agg(min(col("event_type")).as("tier"),
             min(unix_micros(col("ts"))).as("valid_from_us"))
@@ -1342,6 +1208,40 @@ object EventQueries {
         count(lit(1)).as("n_events"),
         sum(QueryDef.cents(col("value"))).as("sum_value_cents"))
 
+  /** Distinct (user_id, day) activity, `day` the BIGINT epoch day —
+    * ONE frame for `events_retention` and `users_cumulative`; keep
+    * [[activeDaysSql]] in lockstep. */
+  private[graft] def activeDays(ev: DataFrame): DataFrame =
+    ev.select(col("user_id"),
+      datediff(col("ts").cast("date"), lit("1970-01-01").cast("date")).cast("long")
+        .as("day")).distinct()
+
+  /** DuckDB twin of [[activeDays]]: the `act` CTE. */
+  private[graft] def activeDaysSql: String =
+    """act AS (
+      |  SELECT DISTINCT user_id,
+      |    date_diff('day', DATE '1970-01-01',
+      |      CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS day
+      |  FROM events)""".stripMargin
+
+  /** Per event type, the moments of count column `c` — `n` rows, sum
+    * `s`, square sum `ss` — ONE stage for `rate_anomaly` (read by
+    * [[rateSpike]]) and `rate_mosum`. `ss` is DECIMAL(38,0) from the
+    * first product: a single 3e9-count hour already saturates a BIGINT
+    * square. */
+  private[graft] def countMoments(counts: DataFrame): DataFrame =
+    counts.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
+        sum(col("c").cast("decimal(38,0)") * col("c")).as("ss"))
+
+  /** DuckDB twin of [[countMoments]]: CTE `name` over the CTE `from`,
+    * `ss` in HUGEINT. */
+  private[graft] def momentsSql(name: String, from: String): String =
+    s"""$name AS (
+       |  SELECT event_type, COUNT(*) AS n, SUM(c) AS s,
+       |    SUM(CAST(c AS HUGEINT) * c) AS ss
+       |  FROM $from GROUP BY 1)""".stripMargin
+
   /** The float-free 3-sigma rate test, ONE definition for `rate_anomaly`
     * and its streaming twin [[graft.streaming.EventStreams.rateAnomalyStream]]:
     * count column `c` against its type's moments `n`, `s`, `ss` in
@@ -1377,6 +1277,36 @@ object EventQueries {
 
   private[graft] def SessionGapUs: Long = 1800000000L
 
+  /** The run-version flag of `scd2_history` and `pit_feature_join`:
+    * per user in (ts, event_id) order, `chg` = 1 where event_type
+    * differs from the previous row's (or there is none), and `version`
+    * its running sum — one number per run of equal event types. */
+  private[graft] def runVersioned(ev: DataFrame): DataFrame = {
+    val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    ev.withColumn("chg",
+        when(lag(col("event_type"), 1).over(byUser).isNull ||
+          lag(col("event_type"), 1).over(byUser) =!= col("event_type"), 1L)
+          .otherwise(0L))
+      .withColumn("version", sum(col("chg")).over(
+        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** Per user, the (UNBOUNDED PRECEDING, `upTo`) frame of the REVERSED
+    * (ts, event_id) order: where the forward as-of queries read the
+    * next event. "First non-null in the (1 FOLLOWING, UNBOUNDED
+    * FOLLOWING) suffix" under asc ≡ "last non-null in the (UNBOUNDED
+    * PRECEDING, −1) prefix" under desc — identical rows, but Spark's
+    * unbounded-PRECEDING frame streams in O(n) while the
+    * unbounded-FOLLOWING frame RECOMPUTES its aggregate per row,
+    * O(|partition|²): at the skewed-sf1 hot user (108 886
+    * click/purchase events in ONE partition) that is ~5.9e9 frame
+    * evaluations ≈ 20 min on one core, and unbounded at 100 TB (r17
+    * skew-sweep finding, SCALE.md). */
+  private[graft] def reversedPrefix(upTo: Long): WindowSpec =
+    Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").desc, col("event_id").desc)
+      .rowsBetween(Window.unboundedPreceding, upTo)
+
   /** DuckDB twin of [[sessionized]]: CTE list ending in `sess`
     * (user_id, event_id, ts TIMESTAMP, event_type, value, us,
     * session_seq). A def, not a val: it is interpolated into oracle
@@ -1396,6 +1326,57 @@ object EventQueries {
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
       |  FROM flagged)""".stripMargin
 
+  /** DuckDB side of the as-of family: `name` holds the events of one
+    * type as (event_id, user_id, ts TIMESTAMP). These oracle fragments
+    * are defs for the reason given at [[sessCteSql]]. */
+  private[graft] def asofCteSql(name: String, eventType: String): String =
+    s"""$name AS (
+       |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
+       |  FROM events WHERE event_type = '$eventType')""".stripMargin
+
+  /** Each purchase of `p` with its clicks of `c` strictly before it in
+    * (ts, event_id) order, ranked latest first (`rn` = 1 is the
+    * backward as-of neighbour). */
+  private[graft] def backRankSql(name: String): String =
+    s"""$name AS (
+       |  SELECT p.event_id, c.event_id AS c_id, c.ts AS c_ts,
+       |    row_number() OVER (PARTITION BY p.event_id
+       |      ORDER BY c.ts DESC, c.event_id DESC) AS rn
+       |  FROM p JOIN c ON c.user_id = p.user_id
+       |    AND (c.ts < p.ts OR (c.ts = p.ts AND c.event_id < p.event_id)))""".stripMargin
+
+  /** The backward as-of oracle, ONE text for `asof_attribution` and
+    * `asof_plan_node`: the ranked range join (quadratic per user, fine
+    * at oracle scale), so the window form, the plan-node lowering and
+    * DuckDB must land on the same rows. */
+  private[graft] def asofBackSql: String =
+    s"""WITH ${asofCteSql("p", "purchase")},
+       |${asofCteSql("c", "click")},
+       |${backRankSql("ranked")}
+       |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS purchase_us,
+       |  r.c_id AS click_event_id, epoch_us(r.c_ts) AS click_us
+       |FROM p LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r
+       |  ON r.event_id = p.event_id""".stripMargin
+
+  /** The forward as-of oracle, ONE text for `asof_forward` and
+    * `asof_plan_forward`: each click's rank-1 purchase strictly after
+    * it, with the latency. */
+  private[graft] def asofFwdSql: String =
+    s"""WITH ${asofCteSql("c", "click")},
+       |${asofCteSql("p", "purchase")},
+       |ranked AS (
+       |  SELECT c.event_id, p.event_id AS p_id, p.ts AS p_ts,
+       |    row_number() OVER (PARTITION BY c.event_id
+       |      ORDER BY p.ts, p.event_id) AS rn
+       |  FROM c JOIN p ON p.user_id = c.user_id
+       |    AND (p.ts > c.ts OR (p.ts = c.ts AND p.event_id > c.event_id)))
+       |SELECT c.event_id AS click_event_id, c.user_id,
+       |  epoch_us(c.ts) AS click_us,
+       |  r.p_id AS purchase_event_id, epoch_us(r.p_ts) AS purchase_us,
+       |  epoch_us(r.p_ts) - epoch_us(c.ts) AS latency_us
+       |FROM c LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r
+       |  ON r.event_id = c.event_id""".stripMargin
+
   /** `attribution_linear` lookback window: 7 days in epoch micros. */
   private[graft] def AttrWindowUs: Long = 7L * 86400L * 1000000L
 
@@ -1413,32 +1394,25 @@ object EventQueries {
     * aggregate. */
   private[graft] def conversionLatencyDef: QueryDef =
     QueryDef("conversion_latency",
-      (s, dir) => {
-        // reversed-sort streaming frame, not (1 FOLLOWING, UNBOUNDED
-        // FOLLOWING) — see asof_forward's O(n) vs O(n²) note
-        val byUserDesc = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        Tables.events(s, dir)
-          .filter(col("event_type").isin("click", "purchase"))
-          .withColumn("next_us",
-            last(when(col("event_type") === "purchase", unix_micros(col("ts"))),
-              ignoreNulls = true).over(byUserDesc))
-          .filter(col("event_type") === "click" && col("next_us").isNotNull)
-          .select(
-            expr("((unix_micros(ts) div 86400000000) + 4) % 7").as("dow"),
-            // WHOLE SECONDS before the percentile: quantile interpolation
-            // on epoch-micro magnitudes (~1e11) differs between engines
-            // in the last ulp, which round-6 cannot absorb — the sf0.01
-            // gate caught a .49994-vs-.5 boundary on dow=5. Seconds keep
-            // values ≤ ~1e6 where the round-6 contract provably holds
-            // (quantile_stats).
-            expr("(next_us - unix_micros(ts)) div 1000000").as("lat_s"))
-          .groupBy(col("dow"))
-          .agg(count(lit(1)).as("n"),
-            round(expr("percentile(lat_s, 0.5)"), 6).as("median_lat_s"),
-            round(expr("percentile(lat_s, 0.9)"), 6).as("p90_lat_s"))
-      },
+      (s, dir) => Tables.events(s, dir)
+        .filter(col("event_type").isin("click", "purchase"))
+        .withColumn("next_us",
+          last(when(col("event_type") === "purchase", unix_micros(col("ts"))),
+            ignoreNulls = true).over(reversedPrefix(-1)))
+        .filter(col("event_type") === "click" && col("next_us").isNotNull)
+        .select(
+          expr("((unix_micros(ts) div 86400000000) + 4) % 7").as("dow"),
+          // WHOLE SECONDS before the percentile: quantile interpolation
+          // on epoch-micro magnitudes (~1e11) differs between engines
+          // in the last ulp, which round-6 cannot absorb — the sf0.01
+          // gate caught a .49994-vs-.5 boundary on dow=5. Seconds keep
+          // values ≤ ~1e6 where the round-6 contract provably holds
+          // (quantile_stats).
+          expr("(next_us - unix_micros(ts)) div 1000000").as("lat_s"))
+        .groupBy(col("dow"))
+        .agg(count(lit(1)).as("n"),
+          round(expr("percentile(lat_s, 0.5)"), 6).as("median_lat_s"),
+          round(expr("percentile(lat_s, 0.9)"), 6).as("p90_lat_s")),
       Some("""WITH c AS (
              |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
              |  FROM events WHERE event_type = 'click'),

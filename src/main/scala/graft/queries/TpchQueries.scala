@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** TPC-H-shaped analytical queries over the star schema — breadth
@@ -25,6 +26,29 @@ object TpchQueries {
     col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
   private val revenueSql =
     s"CAST(SUM(${QueryDef.centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT)"
+
+  /** TPC-H Q1's pricing summary of lineitem shipped by 1998-09-02, per
+    * (returnflag, linestatus): quantity, base-price and discounted-price
+    * sums in cents, then `extra`, then count_order — `q1_agg` as is,
+    * `tpch_q1_full` with its charge and discount sums. */
+  private def pricingSummary(s: SparkSession, dir: String, extra: Column*): DataFrame =
+    Tables(s, dir, "lineitem")
+      .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
+      .groupBy(col("l_returnflag"), col("l_linestatus"))
+      .agg(sum(QueryDef.cents(col("l_quantity"))).as("sum_qty_cents"),
+        (Seq(sum(QueryDef.cents(col("l_extendedprice"))).as("sum_base_price_cents"),
+          revenue.as("sum_disc_price_cents")) ++ extra :+ count(lit(1)).as("count_order")): _*)
+
+  /** DuckDB twin of [[pricingSummary]], one select line per `extra`. */
+  private def pricingSummarySql(extra: String*): String =
+    s"""SELECT l_returnflag, l_linestatus,
+       |  CAST(SUM(${QueryDef.centsSql("l_quantity")}) AS BIGINT) AS sum_qty_cents,
+       |  CAST(SUM(${QueryDef.centsSql("l_extendedprice")}) AS BIGINT) AS sum_base_price_cents,
+       |  $revenueSql AS sum_disc_price_cents,
+       |${extra.map(e => s"  $e,\n").mkString}  COUNT(*) AS count_order
+       |FROM lineitem
+       |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+       |GROUP BY l_returnflag, l_linestatus""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -117,33 +141,22 @@ object TpchQueries {
     // integer sums never do — the reader divides). One partial agg +
     // one shuffle on the 6-value grouping key; filter pushed to scan.
     QueryDef("tpch_q1_full",
-      (s, dir) => {
-        import QueryDef.cents
-        Tables(s, dir, "lineitem")
-          .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-          .groupBy(col("l_returnflag"), col("l_linestatus"))
-          .agg(
-            sum(cents(col("l_quantity"))).as("sum_qty_cents"),
-            sum(cents(col("l_extendedprice"))).as("sum_base_price_cents"),
-            sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-              .as("sum_disc_price_cents"),
-            sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-              * (lit(1.0) + col("l_tax")))).as("sum_charge_cents"),
-            sum(cents(col("l_discount"))).as("sum_disc_cents"),
-            count(lit(1)).as("count_order"))
-          .orderBy(col("l_returnflag"), col("l_linestatus"))
-      },
-      Some(s"""SELECT l_returnflag, l_linestatus,
-              |  CAST(SUM(${QueryDef.centsSql("l_quantity")}) AS BIGINT) AS sum_qty_cents,
-              |  CAST(SUM(${QueryDef.centsSql("l_extendedprice")}) AS BIGINT) AS sum_base_price_cents,
-              |  CAST(SUM(${QueryDef.centsSql("l_extendedprice * (1.0 - l_discount)")}) AS BIGINT) AS sum_disc_price_cents,
-              |  CAST(SUM(${QueryDef.centsSql("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)")}) AS BIGINT) AS sum_charge_cents,
-              |  CAST(SUM(${QueryDef.centsSql("l_discount")}) AS BIGINT) AS sum_disc_cents,
-              |  COUNT(*) AS count_order
-              |FROM lineitem
-              |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-              |GROUP BY l_returnflag, l_linestatus
-              |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+      (s, dir) => pricingSummary(s, dir,
+        sum(QueryDef.cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+          * (lit(1.0) + col("l_tax")))).as("sum_charge_cents"),
+        sum(QueryDef.cents(col("l_discount"))).as("sum_disc_cents"))
+        .orderBy(col("l_returnflag"), col("l_linestatus")),
+      Some(pricingSummarySql(
+        s"CAST(SUM(${QueryDef.centsSql("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)")}) AS BIGINT) AS sum_charge_cents",
+        s"CAST(SUM(${QueryDef.centsSql("l_discount")}) AS BIGINT) AS sum_disc_cents") +
+        "\nORDER BY l_returnflag, l_linestatus")),
+
+    // The flagship, and the §2.8 extension: hash aggregation. The
+    // reference has no group-by node (SURVEY §2.8) — users push
+    // aggregation to source SQL; here it is native: partial (map-side)
+    // agg + single shuffle on the 6-value grouping key, filter pushed
+    // to the parquet scan.
+    QueryDef("q1_agg", (s, dir) => pricingSummary(s, dir), Some(pricingSummarySql())),
 
     // Q7 shape: volume shipping between two nations — lineitem joined
     // to BOTH its supplier's and its customer's nation, filtered to the

@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.util.SerializableConfiguration
 
 /** A record sink — the reference's `LoaderInterface`
@@ -216,20 +218,29 @@ final case class AvroSink(path: String, recordName: String = "graft_record")
     AvroJob.setOutputKeySchema(job, new Schema.Parser().parse(schemaJson))
     val fs = new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new HPath(path), true)
-    df.rdd.mapPartitions { rows =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      rows.map { r =>
-        val rec = new GenericData.Record(schema)
-        var i = 0
-        while (i < nFields) {
-          rec.put(i, graft.sources.AvroConv.toAvro(r.get(i)))
-          i += 1
+    // the job runs as one SQL execution of the frame's OWN plan: `df.rdd`
+    // would run a second plan outside any execution, and the flow's
+    // observations on this frame would complete with zero rows
+    val st = df.schema
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("AvroSink")) {
+      qe.toRdd.mapPartitions { rows =>
+        val schema = new Schema.Parser().parse(schemaJson)
+        val toRow = CatalystTypeConverters.createToScalaConverter(st)
+        rows.map { ir =>
+          val r = toRow(ir).asInstanceOf[Row]
+          val rec = new GenericData.Record(schema)
+          var i = 0
+          while (i < nFields) {
+            rec.put(i, graft.sources.AvroConv.toAvro(r.get(i)))
+            i += 1
+          }
+          (new AvroKey[GenericRecord](rec), NullWritable.get())
         }
-        (new AvroKey[GenericRecord](rec), NullWritable.get())
-      }
-    }.saveAsNewAPIHadoopFile(path,
-      classOf[AvroKey[GenericRecord]], classOf[NullWritable],
-      classOf[AvroKeyOutputFormat[GenericRecord]], job.getConfiguration)
+      }.saveAsNewAPIHadoopFile(path,
+        classOf[AvroKey[GenericRecord]], classOf[NullWritable],
+        classOf[AvroKeyOutputFormat[GenericRecord]], job.getConfiguration)
+    }
   }
 }
 
@@ -262,7 +273,8 @@ final case class ArrowSink(path: String, batchRows: Int = 4096) extends Sink {
     val fs0 = new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs0.delete(new HPath(path), true)
     fs0.mkdirs(new HPath(path))
-    df.rdd.foreachPartition { rows =>
+    // a Dataset action, so the flow's observations on `df` count its rows
+    df.foreachPartition { rows: Iterator[Row] =>
       if (rows.hasNext) {
         val conf = confSer.value.value
         val pid = org.apache.spark.TaskContext.getPartitionId()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -24,7 +24,9 @@ import org.apache.spark.sql.types._
   *    DedupQueries (dedup_bloom_probe).
   * The four operators that keep whole per-user state under an
   * event-time timeout share one fold and one expiry rule
-  * ([[eventTimeFold]]); the (ts, event_id) order is [[before]].
+  * ([[eventTimeFold]]); the (ts, event_id) order is [[before]]. The
+  * eight sketch twins, whose state never expires, share one state
+  * fold ([[sketchFold]]).
   *
   * Scale notes: all stateful operators here key their state by
   * `user_id`/window — state is hash-partitioned across executors and
@@ -786,6 +788,20 @@ object EventStreams {
     }
   }
 
+  /** The one state rule of the no-timeout sketch twins below: per key,
+    * `step` folds the group's rows into the stored state (`zero` for a
+    * key not seen yet) and returns the state to keep and the rows to
+    * emit, in Update mode. A sketch never expires, so there is no
+    * timeout; each twin keeps its own fold and arithmetic. */
+  private def sketchFold[K, V, S: Encoder, O: Encoder](grouped: KeyValueGroupedDataset[K, V],
+      zero: => S)(step: (K, Iterator[V], S) => (S, Iterator[O])): Dataset[O] =
+    grouped.flatMapGroupsWithState[S, O](OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+      (key: K, rows: Iterator[V], state: GroupState[S]) =>
+        val (next, out) = step(key, rows, state.getOption.getOrElse(zero))
+        state.update(next)
+        out
+    }
+
   final case class HeavyUser(event_type: String, user_id: String, est: Long, n: Long)
   final case class HhState(entries: List[(String, Long)], n: Long)
 
@@ -807,23 +823,17 @@ object EventStreams {
   def heavyHittersStream(events: Dataset[Event], capacity: Int = 64,
       perMille: Long = 100): Dataset[HeavyUser] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[HhState, HeavyUser](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (tpe: String, rows: Iterator[Event], state: GroupState[HhState]) =>
-          val prev = state.getOption.getOrElse(HhState(Nil, 0L))
-          val ss = new graft.operators.HeavyHitters.SpaceSaving(capacity)
-          prev.entries.foreach { case (k, c) => ss.offerWeighted(k, c) }
-          var n = prev.n
-          rows.foreach { e => ss.offer(e.user_id.toString); n += 1 }
-          state.update(HhState(ss.entries.toList.sorted, n))
-          val total = n
-          ss.entries.collect {
-            case (u, est) if 1000L * est >= perMille * total =>
-              HeavyUser(tpe, u, est, total)
-          }.toList.sortBy(_.user_id).iterator
-      }
+    sketchFold(events.groupByKey(_.event_type), HhState(Nil, 0L)) { (tpe, rows, prev) =>
+      val ss = new graft.operators.HeavyHitters.SpaceSaving(capacity)
+      prev.entries.foreach { case (k, c) => ss.offerWeighted(k, c) }
+      var n = prev.n
+      rows.foreach { e => ss.offer(e.user_id.toString); n += 1 }
+      val total = n
+      (HhState(ss.entries.toList.sorted, n), ss.entries.collect {
+        case (u, est) if 1000L * est >= perMille * total =>
+          HeavyUser(tpe, u, est, total)
+      }.toList.sortBy(_.user_id).iterator)
+    }
   }
 
   final case class DistinctEst(event_type: String, n_est: Long, sketch_size: Int)
@@ -843,18 +853,14 @@ object EventStreams {
   def distinctSketchStream(events: Dataset[Event], k: Int = 64): Dataset[DistinctEst] = {
     import events.sparkSession.implicits._
     val sketch = new graft.operators.Aggregators.Kmv(k)
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[List[Long], DistinctEst](GroupStateTimeout.NoTimeout()) {
-        (eventType: String, rows: Iterator[Event], state: GroupState[List[Long]]) =>
-          val s = rows.foldLeft(state.getOption.getOrElse(sketch.zero)) { (b, e) =>
-            sketch.reduce(b,
-              graft.functions.TextFunctions.portableHashJvm(e.user_id.toString, 71))
-          }
-          state.update(s)
-          DistinctEst(eventType,
-            graft.operators.Aggregators.kmvEstimateJvm(s, k), s.size)
+    sketchFold(events.groupByKey(_.event_type), sketch.zero) { (eventType, rows, prev) =>
+      val s = rows.foldLeft(prev) { (b, e) =>
+        sketch.reduce(b,
+          graft.functions.TextFunctions.portableHashJvm(e.user_id.toString, 71))
       }
+      (s, Iterator.single(DistinctEst(eventType,
+        graft.operators.Aggregators.kmvEstimateJvm(s, k), s.size)))
+    }
   }
 
   final case class Doc(doc_id: Long, text: String)
@@ -883,27 +889,23 @@ object EventStreams {
     import docs.sparkSession.implicits._
     require(Integer.bitCount(bitsPerGroup) == 1 && bitsPerGroup >= 64,
       s"bitsPerGroup must be a power of two >= 64: $bitsPerGroup")
-    docs
+    val fps = docs
       .map(d => (d.doc_id, graft.functions.TextFunctions.portableHashJvm(d.text, 31)))
       .groupByKey { case (_, fp) => (fp % groups).toInt }
-      .flatMapGroupsWithState[Array[Byte], BloomFlag](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: Int, rows: Iterator[(Long, Long)], state: GroupState[Array[Byte]]) =>
-          val bm = state.getOption.map(_.clone())
-            .getOrElse(new Array[Byte](bitsPerGroup / 8))
-          // each fingerprint probes k positions; a duplicate = all
-          // probed bits already set (the fold mutates `bm` in place)
-          val out = rows.toSeq.sortBy(_._1).map { case (id, fp) =>
-            val pos = (0 until k).map(i =>
-              (graft.functions.TextFunctions.portableHashJvm(fp.toString, 131 + i)
-                % bitsPerGroup).toInt)
-            val dup = pos.forall(p => (bm(p >> 3) & (1 << (p & 7))) != 0)
-            pos.foreach(p => bm(p >> 3) = (bm(p >> 3) | (1 << (p & 7))).toByte)
-            BloomFlag(id, fp, dup)
-          }
-          state.update(bm)
-          out.iterator
+    sketchFold(fps, new Array[Byte](bitsPerGroup / 8)) { (_, rows, prev) =>
+      val bm = prev.clone()
+      // each fingerprint probes k positions; a duplicate = all
+      // probed bits already set (the fold mutates `bm` in place)
+      val out = rows.toSeq.sortBy(_._1).map { case (id, fp) =>
+        val pos = (0 until k).map(i =>
+          (graft.functions.TextFunctions.portableHashJvm(fp.toString, 131 + i)
+            % bitsPerGroup).toInt)
+        val dup = pos.forall(p => (bm(p >> 3) & (1 << (p & 7))) != 0)
+        pos.foreach(p => bm(p >> 3) = (bm(p >> 3) | (1 << (p & 7))).toByte)
+        BloomFlag(id, fp, dup)
       }
+      (bm, out.iterator)
+    }
   }
 
   final case class CmEst(event_type: String, user_id: Long, cm_est: Long, n: Long)
@@ -926,26 +928,21 @@ object EventStreams {
     import events.sparkSession.implicits._
     def bucket(key: String, row: Int): Int =
       (graft.functions.TextFunctions.portableHashJvm(key, row) % w).toInt
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[(Long, Array[Long]), CmEst](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (tpe: String, rows: Iterator[Event], state: GroupState[(Long, Array[Long])]) =>
-          val (n0, cells0) = state.getOption.getOrElse((0L, new Array[Long](d * w)))
-          val cells = cells0.clone()
-          var n = n0
-          rows.foreach { e =>
-            n += 1
-            var i = 0
-            while (i < d) { cells(i * w + bucket(e.user_id.toString, i)) += 1; i += 1 }
-          }
-          state.update((n, cells))
-          probes.iterator.map { uid =>
-            val est = (0 until d)
-              .map(i => cells(i * w + bucket(uid.toString, i))).min
-            CmEst(tpe, uid, est, n)
-          }
-      }
+    sketchFold(events.groupByKey(_.event_type), (0L, new Array[Long](d * w))) {
+      case (tpe, rows, (n0, cells0)) =>
+        val cells = cells0.clone()
+        var n = n0
+        rows.foreach { e =>
+          n += 1
+          var i = 0
+          while (i < d) { cells(i * w + bucket(e.user_id.toString, i)) += 1; i += 1 }
+        }
+        ((n, cells), probes.iterator.map { uid =>
+          val est = (0 until d)
+            .map(i => cells(i * w + bucket(uid.toString, i))).min
+          CmEst(tpe, uid, est, n)
+        })
+    }
   }
 
   final case class QuantileEst(event_type: String, n: Long,
@@ -966,24 +963,18 @@ object EventStreams {
   def quantileSketchStream(events: Dataset[Event], k: Int = 256): Dataset[QuantileEst] = {
     import events.sparkSession.implicits._
     val sampler = new graft.operators.Aggregators.StableSample(k)
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[(Long, List[(Long, Long)]), QuantileEst](
-        GroupStateTimeout.NoTimeout()) {
-        (eventType: String, rows: Iterator[Event],
-            state: GroupState[(Long, List[(Long, Long)])]) =>
-          var (n, buf) = state.getOption.getOrElse((0L, sampler.zero))
-          rows.foreach { e =>
-            n += 1
-            buf = sampler.reduce(buf, (
-              graft.functions.TextFunctions.portableHashJvm(e.event_id.toString, 71),
-              math.floor(e.value * 100.0 + 0.5).toLong)) // QueryDef.cents, JVM form
-          }
-          state.update((n, buf))
-          val sv = buf.map(_._2).sorted.toIndexedSeq
-          def pos(q: Int): Long = sv(((sv.size * q + 99) / 100 - 1).max(0))
-          QuantileEst(eventType, n, pos(50), pos(95), sv.size)
+    sketchFold(events.groupByKey(_.event_type), (0L, sampler.zero)) { (eventType, rows, prev) =>
+      var (n, buf) = prev
+      rows.foreach { e =>
+        n += 1
+        buf = sampler.reduce(buf, (
+          graft.functions.TextFunctions.portableHashJvm(e.event_id.toString, 71),
+          math.floor(e.value * 100.0 + 0.5).toLong)) // QueryDef.cents, JVM form
       }
+      val sv = buf.map(_._2).sorted.toIndexedSeq
+      def pos(q: Int): Long = sv(((sv.size * q + 99) / 100 - 1).max(0))
+      ((n, buf), Iterator.single(QuantileEst(eventType, n, pos(50), pos(95), sv.size)))
+    }
   }
 
   final case class PsiEst(event_type: String, n_base: Long, n_cur: Long,
@@ -1015,37 +1006,32 @@ object EventStreams {
   def psiDriftStream(events: Dataset[Event], d0Day: Long): Dataset[PsiEst] = {
     import events.sparkSession.implicits._
     val B = 24
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[Array[Long], PsiEst](GroupStateTimeout.NoTimeout()) {
-        (tpe: String, rows: Iterator[Event], state: GroupState[Array[Long]]) =>
-          val g = state.getOption.map(_.clone())
-            .getOrElse(new Array[Long](2 * B))
-          rows.foreach { e =>
-            val msEpoch = e.ts.getTime
-            val cur = if (Math.floorDiv(msEpoch, 86400000L) >= d0Day + 15) 1 else 0
-            val hr = Math.floorMod(Math.floorDiv(msEpoch, 3600000L), 24L).toInt
-            g(cur * B + hr) += 1
-          }
-          state.update(g)
-          var n0 = 0L; var n1 = 0L
-          var i = 0
-          while (i < B) { n0 += g(i); n1 += g(B + i); i += 1 }
-          var sm = BigInt(0)
-          i = 0
-          while (i < B) {
-            // BigInt cross products — the JVM twin of the batch
-            // query's DECIMAL(38,0): a Long (count+1)·(total+24) wraps
-            // past ~3e9-count grids, silently
-            val pn = BigInt(g(B + i) + 1L) * (n0 + B)
-            val qn = BigInt(g(i) + 1L) * (n1 + B)
-            val t = math.floor(math.log(pn.toDouble / qn.toDouble) * 1e6 + 0.5).toLong
-            sm += (pn - qn) * BigInt(t)
-            i += 1
-          }
-          val psi = (sm / (BigInt(n1 + B) * BigInt(n0 + B))).toLong
-          PsiEst(tpe, n0, n1, psi, if (psi > 200000L) 1L else 0L)
+    sketchFold(events.groupByKey(_.event_type), new Array[Long](2 * B)) { (tpe, rows, prev) =>
+      val g = prev.clone()
+      rows.foreach { e =>
+        val msEpoch = e.ts.getTime
+        val cur = if (Math.floorDiv(msEpoch, 86400000L) >= d0Day + 15) 1 else 0
+        val hr = Math.floorMod(Math.floorDiv(msEpoch, 3600000L), 24L).toInt
+        g(cur * B + hr) += 1
       }
+      var n0 = 0L; var n1 = 0L
+      var i = 0
+      while (i < B) { n0 += g(i); n1 += g(B + i); i += 1 }
+      var sm = BigInt(0)
+      i = 0
+      while (i < B) {
+        // BigInt cross products — the JVM twin of the batch
+        // query's DECIMAL(38,0): a Long (count+1)·(total+24) wraps
+        // past ~3e9-count grids, silently
+        val pn = BigInt(g(B + i) + 1L) * (n0 + B)
+        val qn = BigInt(g(i) + 1L) * (n1 + B)
+        val t = math.floor(math.log(pn.toDouble / qn.toDouble) * 1e6 + 0.5).toLong
+        sm += (pn - qn) * BigInt(t)
+        i += 1
+      }
+      val psi = (sm / (BigInt(n1 + B) * BigInt(n0 + B))).toLong
+      (g, Iterator.single(PsiEst(tpe, n0, n1, psi, if (psi > 200000L) 1L else 0L)))
+    }
   }
 
   final case class DocMeta(doc_id: Long, lang: String, n_chars: Long)
@@ -1072,27 +1058,24 @@ object EventStreams {
   def weightedSampleStream(docs: Dataset[DocMeta], k: Int = 8)
       : Dataset[WeightedSampleOut] = {
     import docs.sparkSession.implicits._
-    docs.groupByKey(_.lang)
-      .flatMapGroupsWithState[(Long, List[(Long, Long, Double)]), WeightedSampleOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (lang, rows, state) =>
-          var (n, top) = state.getOption.getOrElse((0L, Nil))
-          rows.foreach { d =>
-            n += 1
-            val u = java.lang.Math.floorMod(
-              graft.functions.TextFunctions.portableHashJvm(
-                d.doc_id.toString, 37), 1073741824L) + 1L
-            val p = d.n_chars.toDouble / u.toDouble
-            top = ((d.doc_id, d.n_chars, p) ::
-              top.filterNot(_._1 == d.doc_id))
-              .sortBy(t => (-t._3, t._1)).take(k)
-          }
-          state.update((n, top))
-          top.zipWithIndex.iterator.map { case ((id, w, p), i) =>
-            WeightedSampleOut(lang, n, id, w,
-              math.floor(p * 1e6 + 0.5).toLong, (i + 1).toLong)
-          }
-      }
+    sketchFold(docs.groupByKey(_.lang), (0L, List.empty[(Long, Long, Double)])) {
+      (lang, rows, prev) =>
+        var (n, top) = prev
+        rows.foreach { d =>
+          n += 1
+          val u = java.lang.Math.floorMod(
+            graft.functions.TextFunctions.portableHashJvm(
+              d.doc_id.toString, 37), 1073741824L) + 1L
+          val p = d.n_chars.toDouble / u.toDouble
+          top = ((d.doc_id, d.n_chars, p) ::
+            top.filterNot(_._1 == d.doc_id))
+            .sortBy(t => (-t._3, t._1)).take(k)
+        }
+        ((n, top), top.zipWithIndex.iterator.map { case ((id, w, p), i) =>
+          WeightedSampleOut(lang, n, id, w,
+            math.floor(p * 1e6 + 0.5).toLong, (i + 1).toLong)
+        })
+    }
   }
 
   final case class HllEst(event_type: String, n_seen: Long, n_est: Long)
@@ -1114,41 +1097,35 @@ object EventStreams {
   def hllDistinctStream(events: Dataset[Event]): Dataset[HllEst] = {
     import events.sparkSession.implicits._
     val AlphaNum = BigInt("104680255103913656422760448")
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[(Long, Array[Long]), HllEst](GroupStateTimeout.NoTimeout()) {
-        (tpe: String, rows: Iterator[Event], state: GroupState[(Long, Array[Long])]) =>
-          val (n0, regs0) = state.getOption match {
-            case Some((n, r)) => (n, r.clone())
-            case None => (0L, new Array[Long](64))
-          }
-          var n = n0
-          rows.foreach { e =>
-            n += 1
-            val h = graft.functions.TextFunctions
-              .portableHashJvm(e.user_id.toString, 83)
-            val j = (h % 64).toInt
-            val w = h / 64
-            val rho =
-              if (w == 0L) 55L
-              else 55L - (64 - java.lang.Long.numberOfLeadingZeros(w))
-            if (rho > regs0(j)) regs0(j) = rho
-          }
-          state.update((n, regs0))
-          var s = BigInt(0); var v = 0L
-          var i = 0
-          while (i < 64) {
-            if (regs0(i) == 0L) v += 1
-            s += BigInt(1) << (55 - regs0(i).toInt)
-            i += 1
-          }
-          val nRaw = (AlphaNum / (s * 1000000)).toLong
-          val nEst =
-            if (v > 0 && nRaw <= 160L) {
-              val tMicro = math.floor(math.log(64.0 / v) * 1e6 + 0.5).toLong
-              (64L * tMicro) / 1000000L
-            } else nRaw
-          HllEst(tpe, n, nEst)
-      }
+    sketchFold(events.groupByKey(_.event_type), (0L, new Array[Long](64))) {
+      case (tpe, rows, (n0, regs)) =>
+        val regs0 = regs.clone()
+        var n = n0
+        rows.foreach { e =>
+          n += 1
+          val h = graft.functions.TextFunctions
+            .portableHashJvm(e.user_id.toString, 83)
+          val j = (h % 64).toInt
+          val w = h / 64
+          val rho =
+            if (w == 0L) 55L
+            else 55L - (64 - java.lang.Long.numberOfLeadingZeros(w))
+          if (rho > regs0(j)) regs0(j) = rho
+        }
+        var s = BigInt(0); var v = 0L
+        var i = 0
+        while (i < 64) {
+          if (regs0(i) == 0L) v += 1
+          s += BigInt(1) << (55 - regs0(i).toInt)
+          i += 1
+        }
+        val nRaw = (AlphaNum / (s * 1000000)).toLong
+        val nEst =
+          if (v > 0 && nRaw <= 160L) {
+            val tMicro = math.floor(math.log(64.0 / v) * 1e6 + 0.5).toLong
+            (64L * tMicro) / 1000000L
+          } else nRaw
+        ((n, regs0), Iterator.single(HllEst(tpe, n, nEst)))
+    }
   }
 }

@@ -49,4 +49,31 @@ class ExtensionsWiringSpec extends graft.SparkSuite {
     assert(plan.isInstanceOf[AsOfJoinPlan], plan)
     assert(plan.asInstanceOf[AsOfJoinPlan].forward)
   }
+
+  test("register installs every native SQL function and asof_join in the session") {
+    GraftExtensions.register(spark)
+    Seq("graft_dot", "graft_nfc", "graft_phash", "graft_repetition_stats")
+      .foreach { f =>
+        assert(spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(f)),
+          s"$f not registered")
+      }
+    assert(spark.sessionState.tableFunctionRegistry
+      .functionExists(FunctionIdentifier("asof_join")), "asof_join not registered")
+    // each scalar function resolves through SQL
+    val row = spark.sql(
+      """SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)),
+        |  graft_nfc('abc'), graft_phash('abc', 7),
+        |  graft_repetition_stats(array('a', 'b', 'a', 'b'))""".stripMargin).head()
+    assert(row.getDouble(0) == 11.0)
+    assert(row.getString(1) == "abc")
+    assert(!row.isNullAt(2) && !row.isNullAt(3))
+    // the arity and literal-salt checks hold on this path too
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val arity = messages(intercept[Exception](spark.sql("SELECT graft_nfc('a', 'b')")))
+    assert(arity.contains("graft_nfc expects 1 argument, got 2"), arity)
+    val salt = messages(intercept[Exception](
+      spark.sql("SELECT graft_phash('a', CAST(rand() AS INT))")))
+    assert(salt.contains("graft_phash salt must be an integer literal"), salt)
+  }
 }

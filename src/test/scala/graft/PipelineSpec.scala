@@ -254,6 +254,42 @@ class PipelineSpec extends SparkSuite {
     assert(SessionProbe.pendingObservations(spark) == before)
   }
 
+  test("toDF observes nothing: no pending observation without an action, no CollectMetrics in its plan") {
+    import org.apache.spark.sql.graft.SessionProbe
+    val out = tmpDir("todf_lazy")
+    val flow = Pipeline
+      .from(RangeSource(10))
+      .qualify(col("id") < 8)
+      .to(ParquetSink(s"$out/mid"))
+      .branch(_.interruptRootOn(col("id") === 99))
+    val before = SessionProbe.pendingObservations(spark)
+    val dfs = (1 to 5).map(_ => flow.toDF(spark))
+    assert(SessionProbe.pendingObservations(spark) == before)
+    dfs.foreach { df =>
+      val plan = df.queryExecution.optimizedPlan.treeString
+      assert(!plan.contains("CollectMetrics"), plan)
+    }
+  }
+
+  test("ArrowSink and AvroSink loads report every record they write") {
+    import graft.sinks.{ArrowSink, AvroSink}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val n = 1000
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false), StructField("label", StringType)))
+    val rows = (0 until n).map(i => Row(i.toLong, s"r$i"))
+    val out = tmpDir("pipe_arrow_avro")
+    Seq(ArrowSink(s"$out/arrow"), AvroSink(s"$out/avro")).foreach { sink =>
+      val report = Pipeline.from(SeqSource(rows, schema)).to(sink).exec(spark)
+      assert(report.status == PipelineStatus.Clean, report.status.toString)
+      Seq("extract_", "load_").foreach { prefix =>
+        val got = report.counters.collect { case (k, v) if k.startsWith(prefix) => v }
+        assert(got.toSeq == Seq(n.toLong), s"$sink $prefix: ${report.counters}")
+      }
+    }
+  }
+
   test("a flow that fails after pinning a frame leaves nothing cached") {
     import graft.sinks.Sink
     import org.apache.spark.sql.graft.SessionProbe
