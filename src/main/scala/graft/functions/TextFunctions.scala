@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
 object TextFunctions {
 
   /** Lower-cased alphanumeric tokens. The cross-engine contract is the
-    * regex form — DuckDB side:
-    * `regexp_extract_all(lower(text), '[a-z0-9]+')` — and the Spark
+    * regex form — DuckDB side [[tokensSql]] — and the Spark
     * side evaluates it with the native byte scanner
     * [[org.apache.spark.sql.graft.AsciiTokensExpr]]: the token class is
     * pure ASCII and UTF-8 multi-byte code points never contain ASCII
@@ -31,11 +30,19 @@ object TextFunctions {
   def tokens(text: Column): Column =
     org.apache.spark.sql.graft.ScanExpressions.asciiTokens(lower(text))
 
+  /** DuckDB twin of [[tokens]] over the SQL expression `textSql`. */
+  private[graft] def tokensSql(textSql: String): String =
+    s"regexp_extract_all(lower($textSql), '[a-z0-9]+')"
+
   /** BPE-ish sub-word segmentation regex: words, digits, or single
     * punctuation marks — the standard pre-tokenizer shape. */
   val bpeTokenPattern = "[a-z]+|[0-9]|[^a-z0-9\\s]"
   def bpeTokens(text: Column): Column =
     regexp_extract_all(lower(text), lit(bpeTokenPattern), lit(0))
+
+  /** DuckDB twin of [[bpeTokens]]. */
+  private[graft] def bpeTokensSql(textSql: String): String =
+    s"regexp_extract_all(lower($textSql), '$bpeTokenPattern')"
 
   /** Deterministic 60-bit hash usable identically from any engine with
     * md5: interpret the first 15 hex chars of md5(salt ++ ":" ++ value)
@@ -140,6 +147,21 @@ object TextFunctions {
     * `nfc_normalize`. */
   def nfcNormalize(c: Column): Column =
     org.apache.spark.sql.graft.VectorExpressions.nfcNative(c)
+
+  /** The exact-dedup text normalisation: NFC → lower → every whitespace
+    * run collapsed to one space. [[normTextSql]] is its DuckDB twin. */
+  private[graft] def normText(text: Column): Column =
+    regexp_replace(lower(nfcNormalize(text)), "\\s+", " ")
+
+  private[graft] def normTextSql(textSql: String): String =
+    s"regexp_replace(lower(nfc_normalize($textSql)), '\\s+', ' ', 'g')"
+
+  /** Exact-dup fingerprint: md5 of [[normText]], a 16-byte group key
+    * instead of the document. [[exactFpSql]] is its DuckDB twin. */
+  private[graft] def exactFp(text: Column): Column = md5(normText(text))
+
+  private[graft] def exactFpSql(textSql: String): String =
+    s"md5(${normTextSql(textSql)})"
 
   /** Cosine from precomputed norms (`nrm = sqrt(dotFast(e, e))`
     * projected once per vector before the pairwise join): identical

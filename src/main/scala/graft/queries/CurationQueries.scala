@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object CurationQueries {
 
-  import TextQueries.toksCte
+  import TextQueries.{punctRatio, punctRatioSql, stopRatio, stopRatioSql, toksCte}
 
   /** DuckDB n-gram list matching [[graft.functions.TextFunctions.shingles]]:
     * empty below n tokens, positions 1..len-n+1 joined by one space. */
@@ -59,16 +60,11 @@ object CurationQueries {
     * (keep [[classifierLogitSql]] in lockstep term for term). */
   private def classifierLogit: org.apache.spark.sql.Column = {
     val t = tokens(col("text"))
-    val nTok = size(t).cast("long")
     val nChars = greatest(length(col("text")).cast("long"), lit(1L))
     val f1 = QueryDef.microPoints(
-      least(nTok.cast("double") / lit(200.0), lit(1.0)))
-    val f2 = QueryDef.microPoints(
-      size(regexp_extract_all(col("text"), lit("[^a-zA-Z0-9\\s]"), lit(0)))
-        .cast("long").cast("double") / nChars.cast("double"))
-    val f3 = QueryDef.microPoints(
-      stopwordHits(t, stopwords.head._2).cast("double") /
-        greatest(nTok, lit(1L)).cast("double"))
+      least(size(t).cast("long").cast("double") / lit(200.0), lit(1.0)))
+    val f2 = QueryDef.microPoints(punctRatio(col("text")))
+    val f3 = QueryDef.microPoints(stopRatio(t))
     val f4 = QueryDef.microPoints(
       size(regexp_extract_all(col("text"), lit("[0-9]"), lit(0)))
         .cast("long").cast("double") / nChars.cast("double"))
@@ -80,14 +76,71 @@ object CurationQueries {
     * (text, t) columns in scope. */
   private def classifierLogitSql: String = {
     val f1 = QueryDef.microPointsSql("least(CAST(len(t) AS DOUBLE) / 200.0, 1.0)")
-    val f2 = QueryDef.microPointsSql(
-      "CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE)")
-    val f3 = QueryDef.microPointsSql(
-      s"CAST(${stopwordHitsSql("t", stopwords.head._2)} AS DOUBLE) / CAST(greatest(len(t), 1) AS DOUBLE)")
+    val f2 = QueryDef.microPointsSql(punctRatioSql("text"))
+    val f3 = QueryDef.microPointsSql(stopRatioSql("t"))
     val f4 = QueryDef.microPointsSql(
       "CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE)")
     s"$f1 * $QcWTok + $f2 * $QcWPunct + $f3 * $QcWStop + $f4 * $QcWDigit + $QcBias"
   }
+
+  /** text_repetition's per-doc counters struct over `text`'s tokens. A
+    * null text counts as no tokens (zero counters, as the oracle's
+    * `CASE WHEN len(t)… ELSE []` gives) — a NULL-in-NULL-out
+    * expression would diverge on the degenerate docs CurationPropsSpec
+    * generates. */
+  private def repetitionStatsOf(text: Column): Column =
+    repetitionStats(coalesce(tokens(text), array().cast("array<string>")))
+
+  /** The duplicate-trigram and top-bigram fractions of a
+    * [[repetitionStatsOf]] struct, rounded to 6 places — text_repetition's
+    * columns and quality_ensemble's repetition voter.
+    * [[dup3FracSql]]/[[top2FracSql]] are the DuckDB twins over the
+    * `tg`/`bg` gram lists. */
+  private def repetitionFracs(st: Column): (Column, Column) = {
+    val nTg = st.getField("n_tg")
+    (round((nTg - st.getField("n_dist_tg")).cast("double") /
+      greatest(nTg, lit(1L)).cast("double"), 6),
+      round(st.getField("top_bg").cast("double") /
+        greatest(st.getField("n_bg"), lit(1L)).cast("double"), 6))
+  }
+
+  private def dup3FracSql: String =
+    "round(CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / CAST(greatest(len(tg), 1) AS DOUBLE), 6)"
+  private def top2FracSql: String =
+    "round(CAST(coalesce(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))), 0) AS DOUBLE) / CAST(greatest(len(bg), 1) AS DOUBLE), 6)"
+
+  /** The repetition flag over the two fractions; [[isRepetitiveSql]] is
+    * its DuckDB twin (`or` only sets the oracle text's layout). */
+  private def isRepetitive(dup3: Column, top2: Column): Column =
+    dup3 > 0.01 || top2 > 0.07
+  private def isRepetitiveSql(dup3: String, top2: String, or: String = " OR "): String =
+    s"$dup3 > 0.01${or}$top2 > 0.07"
+
+  /** Each document's `score` column next to the size `grp_n` of its
+    * exact-dup group (the dedup_exact fingerprint) — the dup-labelled
+    * frame of quality_calibration and quality_auc;
+    * [[dupLabelledCteSql]] is its DuckDB twin. */
+  private def dupLabelled(s: SparkSession, dir: String, score: Column): DataFrame = {
+    val docs = Tables(s, dir, "documents")
+      .select(col("doc_id"), exactFp(col("text")).as("fp"), score)
+    docs.join(docs.groupBy(col("fp")).agg(count(lit(1)).as("grp_n")), Seq("fp"))
+  }
+
+  /** `d`: 1 for a document in an exact-dup group of two or more. */
+  private def isDup: Column = when(col("grp_n") > 1, 1L).otherwise(0L).as("d")
+
+  /** The `d` (doc_id, fp, `score`) and `g` (fp, grp_n) CTEs behind
+    * [[dupLabelled]]'s oracles, after the toks CTE. */
+  private def dupLabelledCteSql(score: String): String =
+    s"""$toksCte,
+       |d AS (
+       |  SELECT doc_id,
+       |    ${exactFpSql("text")} AS fp,
+       |    $score
+       |  FROM toks),
+       |g AS (SELECT fp, COUNT(*) AS grp_n FROM d GROUP BY 1)""".stripMargin
+
+  private def isDupSql: String = "CASE WHEN g.grp_n > 1 THEN 1 ELSE 0 END"
 
   /** `retrieval_mrr` phrase-relevance regex, shared Spark/DuckDB
     * character for character: terms separated by ≥1 non-token chars,
@@ -246,24 +299,15 @@ object CurationQueries {
     // same oracle, 2.4× faster calm (0.50 s vs 1.2) and load-robust.
     QueryDef("text_repetition",
       (s, dir) => {
-        // null text → zero counters (the oracle's CASE WHEN len(t)…
-        // ELSE [] path yields 0, and the old plan's left-join+coalesce
-        // did too — a NULL-in-NULL-out expression would diverge on the
-        // degenerate docs CurationPropsSpec generates)
         val docs = ProfilingQueries.widened(Tables(s, dir, "documents"))
-          .select(col("doc_id"), repetitionStats(
-            coalesce(tokens(col("text")), array().cast("array<string>"))).as("st"))
-        val nTg = col("st.n_tg")
-        val dup3 = round((nTg - col("st.n_dist_tg")).cast("double") /
-          greatest(nTg, lit(1L)).cast("double"), 6)
-        val top2 = round(col("st.top_bg").cast("double") /
-          greatest(col("st.n_bg"), lit(1L)).cast("double"), 6)
+          .select(col("doc_id"), repetitionStatsOf(col("text")).as("st"))
+        val (dup3, top2) = repetitionFracs(col("st"))
         docs.select(
           col("doc_id"),
-          nTg.as("n_3grams"),
+          col("st.n_tg").as("n_3grams"),
           dup3.as("dup3_frac"),
           top2.as("top2_frac"),
-          when(dup3 > 0.01 || top2 > 0.07, 1L).otherwise(0L).as("is_repetitive"))
+          when(isRepetitive(dup3, top2), 1L).otherwise(0L).as("is_repetitive"))
       },
       Some(s"""$toksCte,
              |g AS (SELECT doc_id,
@@ -271,11 +315,11 @@ object CurationQueries {
              |    ${gramsSql("t", 3)} AS tg
              |  FROM toks),
              |m AS (SELECT doc_id, len(tg) AS n_3grams,
-             |    round(CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / CAST(greatest(len(tg), 1) AS DOUBLE), 6) AS dup3_frac,
-             |    round(CAST(coalesce(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))), 0) AS DOUBLE) / CAST(greatest(len(bg), 1) AS DOUBLE), 6) AS top2_frac
+             |    $dup3FracSql AS dup3_frac,
+             |    $top2FracSql AS top2_frac
              |  FROM g)
              |SELECT doc_id, n_3grams, dup3_frac, top2_frac,
-             |  CASE WHEN dup3_frac > 0.01 OR top2_frac > 0.07 THEN 1 ELSE 0 END AS is_repetitive
+             |  CASE WHEN ${isRepetitiveSql("dup3_frac", "top2_frac")} THEN 1 ELSE 0 END AS is_repetitive
              |FROM m""".stripMargin)),
 
     // exact n-gram train/eval decontamination (the GPT-3-style audit):
@@ -312,7 +356,7 @@ object CurationQueries {
           .agg(count(lit(1)).as("n_shared_grams"), min(col("g")).as("sample_gram"))
       },
       Some(s"""WITH toks AS (SELECT doc_id,
-             |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t,
+             |    ${tokensSql("text")} AS t,
              |    ${ProfilingQueries.splitSql} AS split
              |  FROM documents),
              |g AS (SELECT doc_id, split, list_distinct(${gramsSql("t", 8)}) AS grams FROM toks),
@@ -358,7 +402,7 @@ object CurationQueries {
     // or strict intersections): three voters — the Gopher rule battery
     // (shared [[gopherFlags]] frame), the frozen linear classifier
     // (shared [[classifierLogit]]), and NON-repetitiveness
-    // (text_repetition's flag, lockstep-duplicated thresholds) — then
+    // (text_repetition's shared [[repetitionFracs]]/[[isRepetitive]]) — then
     // vote-count distribution, majority/strict keep counts, and
     // pairwise agreement in exact ppm. Disagreement rates are the
     // actionable output: a pair agreeing at ~50% is measuring
@@ -374,18 +418,10 @@ object CurationQueries {
         val g = gopherFlags(s, dir).select(col("doc_id"), col("keep").as("kg"))
         val c = Tables(s, dir, "documents").select(col("doc_id"),
           (classifierLogit > lit(QcKeepAt)).cast("long").as("kc"))
-        // text_repetition's flag, thresholds in lockstep with its
-        // QueryDef (dup3 > 0.01 || top2 > 0.07 → repetitive)
-        val st = repetitionStats(
-          coalesce(tokens(col("text")), array().cast("array<string>")))
-        val nTg = st.getField("n_tg")
-        val dup3 = round((nTg - st.getField("n_dist_tg")).cast("double") /
-          greatest(nTg, lit(1L)).cast("double"), 6)
-        val top2 = round(st.getField("top_bg").cast("double") /
-          greatest(st.getField("n_bg"), lit(1L)).cast("double"), 6)
+        val (dup3, top2) = repetitionFracs(repetitionStatsOf(col("text")))
         val r = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"),
-            when(dup3 > 0.01 || top2 > 0.07, 0L).otherwise(1L).as("kr"))
+            when(isRepetitive(dup3, top2), 0L).otherwise(1L).as("kr"))
         val j = g.join(c, Seq("doc_id")).join(r, Seq("doc_id"))
           .withColumn("votes", col("kg") + col("kc") + col("kr"))
         val byVotes = j.groupBy(col("votes")).agg(count(lit(1)).as("v"))
@@ -409,7 +445,7 @@ object CurationQueries {
       Some(s"""$gopherFlagsCteSql,
               |tk AS (
               |  SELECT doc_id, text,
-              |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+              |    ${tokensSql("text")} AS t
               |  FROM documents),
               |cls AS (
               |  SELECT doc_id,
@@ -420,8 +456,7 @@ object CurationQueries {
               |    ${gramsSql("t", 3)} AS tg FROM tk),
               |rp AS (
               |  SELECT doc_id, CAST(CASE WHEN
-              |    round(CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / CAST(greatest(len(tg), 1) AS DOUBLE), 6) > 0.01
-              |    OR round(CAST(coalesce(list_max(list_transform(list_distinct(bg), x -> len(list_filter(bg, y -> y = x)))), 0) AS DOUBLE) / CAST(greatest(len(bg), 1) AS DOUBLE), 6) > 0.07
+              |    ${isRepetitiveSql(dup3FracSql, top2FracSql, "\n    OR ")}
               |    THEN 0 ELSE 1 END AS BIGINT) AS kr
               |  FROM gr),
               |j AS (
@@ -603,8 +638,7 @@ object CurationQueries {
       (s, dir) => {
         val toks = Tables(s, dir, "documents")
           .select(col("lang"), explode(tokens(col("text"))).as("tk"))
-        val vocab = toks.groupBy(col("tk")).agg(count(lit(1)).as("freq"))
-          .orderBy(col("freq").desc, col("tk")).limit(100)
+        val vocab = TextQueries.topVocab(toks, 100)
           .select(col("tk"), lit(1L).as("in_vocab"))
         toks.join(broadcast(vocab), Seq("tk"), "left_outer")
           .groupBy(col("lang"))
@@ -614,13 +648,13 @@ object CurationQueries {
           .withColumn("oov_rate",
             round(col("n_oov").cast("double") / col("n_tokens").cast("double"), 6))
       },
-      Some("""WITH tk_stream AS (
-             |  SELECT lang, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tk
+      Some(s"""WITH tk_stream AS (
+             |  SELECT lang, unnest(${tokensSql("text")}) AS tk
              |  FROM documents),
              |vocab AS (
              |  SELECT tk FROM (
              |    SELECT tk, count(*) AS freq FROM tk_stream
-             |    GROUP BY tk ORDER BY freq DESC, tk LIMIT 100)),
+             |    GROUP BY tk ${TextQueries.vocabOrderSql} LIMIT 100)),
              |j AS (
              |  SELECT lang,
              |    CASE WHEN tk IN (SELECT tk FROM vocab) THEN 0 ELSE 1 END AS oov
@@ -648,28 +682,15 @@ object CurationQueries {
     // shuffle key); the final rollup is 10 bins of map-side-combined
     // counters.
     QueryDef("quality_calibration",
-      (s, dir) => {
-        val docs = Tables(s, dir, "documents")
-          .select(col("doc_id"),
-            md5(regexp_replace(lower(nfcNormalize(col("text"))), "\\s+", " ")).as("fp"),
-            TextQueries.qualityScore(col("text")).as("q"))
-        val groups = docs.groupBy(col("fp")).agg(count(lit(1)).as("grp_n"))
-        docs.join(groups, Seq("fp"))
-          .select(least(floor(col("q") * 10), lit(9.0)).cast("long").as("bin"),
-            when(col("grp_n") > 1, 1L).otherwise(0L).as("d"))
+      (s, dir) =>
+        dupLabelled(s, dir, TextQueries.qualityScore(col("text")).as("q"))
+          .select(least(floor(col("q") * 10), lit(9.0)).cast("long").as("bin"), isDup)
           .groupBy(col("bin"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("d")).as("n_dup"))
-      },
-      Some(s"""$toksCte,
-             |d AS (
-             |  SELECT doc_id,
-             |    md5(regexp_replace(lower(nfc_normalize(text)), '\\s+', ' ', 'g')) AS fp,
-             |    ${TextQueries.qualityScoreSql("text", "t")} AS q
-             |  FROM toks),
-             |g AS (SELECT fp, COUNT(*) AS grp_n FROM d GROUP BY 1)
+          .agg(count(lit(1)).as("n_docs"), sum(col("d")).as("n_dup")),
+      Some(s"""${dupLabelledCteSql(s"${TextQueries.qualityScoreSql("text", "t")} AS q")}
              |SELECT CAST(least(floor(d.q * 10), 9.0) AS BIGINT) AS bin,
              |  COUNT(*) AS n_docs,
-             |  CAST(SUM(CASE WHEN g.grp_n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
+             |  CAST(SUM($isDupSql) AS BIGINT) AS n_dup
              |FROM d JOIN g USING (fp) GROUP BY 1""".stripMargin)),
 
     // Exact ROC AUC of the quality score against the exact-dup label —
@@ -697,13 +718,9 @@ object CurationQueries {
     // then everything runs on the |distinct score| histogram.
     QueryDef("quality_auc",
       (s, dir) => {
-        val docs = Tables(s, dir, "documents")
-          .select(col("doc_id"),
-            md5(regexp_replace(lower(nfcNormalize(col("text"))), "\\s+", " ")).as("fp"),
+        val hist = dupLabelled(s, dir,
             QueryDef.microPoints(TextQueries.qualityScore(col("text"))).as("u"))
-        val groups = docs.groupBy(col("fp")).agg(count(lit(1)).as("grp_n"))
-        val hist = docs.join(groups, Seq("fp"))
-          .select(col("u"), when(col("grp_n") > 1, 1L).otherwise(0L).as("d"))
+          .select(col("u"), isDup)
           .groupBy(col("u"))
           .agg(count(lit(1)).as("n_all"), sum(col("d")).as("n_pos"))
           .withColumn("n_neg", col("n_all") - col("n_pos"))
@@ -735,16 +752,11 @@ object CurationQueries {
                   "(CAST(n_pos AS DECIMAL(38,0)) * n_neg) AS BIGINT)"))
               .as("auc_micro"))
       },
-      Some(s"""$toksCte,
-             |d AS (
-             |  SELECT doc_id,
-             |    md5(regexp_replace(lower(nfc_normalize(text)), '\\s+', ' ', 'g')) AS fp,
-             |    ${QueryDef.microPointsSql(TextQueries.qualityScoreSql("text", "t"))} AS u
-             |  FROM toks),
-             |g AS (SELECT fp, COUNT(*) AS grp_n FROM d GROUP BY 1),
+      Some(s"""${dupLabelledCteSql(
+                   s"${QueryDef.microPointsSql(TextQueries.qualityScoreSql("text", "t"))} AS u")},
              |hist AS (
              |  SELECT u, COUNT(*) AS n_all,
-             |    CAST(SUM(CASE WHEN g.grp_n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
+             |    CAST(SUM($isDupSql) AS BIGINT) AS n_pos
              |  FROM d JOIN g USING (fp) GROUP BY 1),
              |h2 AS (
              |  SELECT u, n_pos, n_all - n_pos AS n_neg, u // 10000 AS b FROM hist),
@@ -808,7 +820,7 @@ object CurationQueries {
               .as("chi2_micro"))
       },
       Some(s"""WITH tok AS (
-             |  SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
+             |  SELECT source, unnest(${tokensSql("text")}) AS token
              |  FROM documents),
              |o AS (SELECT source, token, COUNT(*) AS o FROM tok GROUP BY 1, 2),
              |g AS (SELECT token, COUNT(*) AS g FROM tok GROUP BY 1),
@@ -1171,7 +1183,7 @@ object CurationQueries {
         val h = portableHashSql("tok", 97)
         s"""WITH tk AS (
            |  SELECT doc_id, lang,
-           |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+           |    unnest(${tokensSql("text")}) AS tok
            |  FROM documents),
            |bk AS (SELECT doc_id, lang, $h % $DsirBuckets AS b FROM tk),
            |raw AS (SELECT b, count(*) AS raw FROM bk GROUP BY 1),
@@ -1377,7 +1389,7 @@ object CurationQueries {
           .withColumn("alloc", col("base_quota") + col("extra"))
       },
       Some(s"""WITH tk AS (
-              |  SELECT lang, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+              |  SELECT lang, unnest(${tokensSql("text")}) AS tok
               |  FROM documents),
               |counts AS (SELECT lang, COUNT(*) AS n_tokens FROM tk GROUP BY 1),
               |tot AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS t FROM counts),
@@ -1482,7 +1494,7 @@ object CurationQueries {
        |  FROM documents),
        |f AS (
        |  SELECT doc_id,
-       |    regexp_extract_all(lower(a), '[a-z0-9]+') AS t,
+       |    ${tokensSql("a")} AS t,
        |    CAST(len(regexp_extract_all(a, '#')) +
        |         len(regexp_extract_all(a, '\\.\\.\\.')) AS BIGINT) AS n_sym
        |  FROM aug),

@@ -56,10 +56,14 @@ object DedupQueries {
     * (`hybrid_search`, `ngram_novelty`). Capped dedup queries use
     * [[shCappedCte]]. */
   private[queries] val shCte =
-    """WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents),
-      |sh AS (SELECT DISTINCT doc_id, unnest([array_to_string(t[i:i+2], ' ') for i in range(1, greatest(len(t)-1, 1))]) AS s FROM toks),
+    s"""${shinglesCteSql("sh")},
       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)""".stripMargin
 
+  /** The oracle `toks` CTE and the distinct (doc_id, s) word-3-gram CTE
+    * `name` — the head of both [[shCte]] and [[shCappedCte]]. */
+  private def shinglesCteSql(name: String): String =
+    s"""WITH toks AS (SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
+       |$name AS (SELECT DISTINCT doc_id, unnest([array_to_string(t[i:i+2], ' ') for i in range(1, greatest(len(t)-1, 1))]) AS s FROM toks)""".stripMargin
 
   /** Document-frequency cap floor: a shingle is "hot" only when its df
     * exceeds BOTH maxDfFrac·n_docs and this absolute floor. The floor
@@ -89,8 +93,7 @@ object DedupQueries {
     * the "same bucketed algorithm" contract holds at EVERY scale
     * instead of resting on a small-corpus premise. */
   private[queries] val shCappedCte =
-    s"""WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents),
-       |sh0 AS (SELECT DISTINCT doc_id, unnest([array_to_string(t[i:i+2], ' ') for i in range(1, greatest(len(t)-1, 1))]) AS s FROM toks),
+    s"""${shinglesCteSql("sh0")},
        |thr AS (SELECT greatest(CAST(ceil(count(DISTINCT doc_id) * $DriverMaxDfFrac) AS BIGINT), $MinDfFloor) AS thr FROM sh0),
        |hot AS (SELECT s FROM (SELECT s, count(*) AS df FROM sh0 GROUP BY 1) d, thr WHERE d.df > thr.thr),
        |sh AS (SELECT sh0.* FROM sh0 ANTI JOIN hot USING (s)),
@@ -548,8 +551,7 @@ object DedupQueries {
     * member count. */
   private val rankedCteSql =
     s"""qual AS (
-       |  SELECT doc_id, ${TextQueries.qualityScoreSql("text",
-            "regexp_extract_all(lower(text), '[a-z0-9]+')")} AS q
+       |  SELECT doc_id, ${TextQueries.qualityScoreSql("text", tokensSql("text"))} AS q
        |  FROM documents),
        |ranked AS (
        |  SELECT l.cluster_id, l.doc_id, q.q,
@@ -625,6 +627,25 @@ object DedupQueries {
             x => x.getField("tok"))).as("chunk"))
   }
 
+  /** The dedup_simhash and simhash_pairs oracles' vote CTEs (toks,
+    * hashed, votes: one 32-bit vote column `v<j>` per bit per doc) —
+    * the DuckDB twin of [[simhashVotes]]; [[simhashSql]] assembles the
+    * fingerprint from `votes`. */
+  private def simhashVotesCteSql: String = {
+    val votes = (0 until 32)
+      .map(j => s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS v$j")
+      .mkString(",\n    ")
+    s"""WITH toks AS (SELECT doc_id, unnest(${tokensSql("text")}) AS tk FROM documents),
+       |hashed AS (SELECT doc_id, ${portableHashSql("tk", 0)} AS h FROM toks),
+       |votes AS (SELECT doc_id,
+       |    $votes
+       |  FROM hashed GROUP BY doc_id)""".stripMargin
+  }
+
+  private def simhashSql: String = (0 until 32)
+    .map(j => s"(CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END)")
+    .mkString(" + ")
+
   val defs: Seq[QueryDef] = Seq(
 
     // exact dedup: one representative (min doc_id) per normalized text.
@@ -634,11 +655,11 @@ object DedupQueries {
     // text itself so the shuffle key is 16 bytes, not the document.
     QueryDef("dedup_exact",
       (s, dir) => Tables(s, dir, "documents")
-        .groupBy(md5(regexp_replace(lower(nfcNormalize(col("text"))), "\\s+", " ")).as("fp"))
+        .groupBy(exactFp(col("text")).as("fp"))
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_dups"))
         .select(col("doc_id"), col("n_dups")),
-      Some("""SELECT min(doc_id) AS doc_id, count(*) AS n_dups FROM documents
-             |GROUP BY md5(regexp_replace(lower(nfc_normalize(text)), '\s+', ' ', 'g'))""".stripMargin)),
+      Some(s"""SELECT min(doc_id) AS doc_id, count(*) AS n_dups FROM documents
+             |GROUP BY ${exactFpSql("text")}""".stripMargin)),
 
     // Cross-source OVERLAP MATRIX — how much does source A duplicate
     // source B: the verified near-dup pairs (the same LSH-candidate +
@@ -935,20 +956,8 @@ object DedupQueries {
         tok.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
           .select(col("doc_id"), simhashFromVotes(n => col(n)).as("simhash"))
       },
-      Some {
-        val votes = (0 until 32)
-          .map(j => s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS v$j")
-          .mkString(",\n    ")
-        val assemble = (0 until 32)
-          .map(j => s"(CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END)")
-          .mkString(" + ")
-        s"""WITH toks AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tk FROM documents),
-           |hashed AS (SELECT doc_id, ${portableHashSql("tk", 0)} AS h FROM toks),
-           |votes AS (SELECT doc_id,
-           |    $votes
-           |  FROM hashed GROUP BY doc_id)
-           |SELECT doc_id, CAST($assemble AS BIGINT) AS simhash FROM votes""".stripMargin
-      }),
+      Some(s"""$simhashVotesCteSql
+              |SELECT doc_id, CAST($simhashSql AS BIGINT) AS simhash FROM votes""".stripMargin)),
 
     // SimHash near-dup pairs: byte-band pigeonhole join (any doc pair
     // with Hamming ≤ 3 shares at least one of the 4 bytes), exact
@@ -972,18 +981,8 @@ object DedupQueries {
         val bandSql = (0 until 4)
           .map(k => s"SELECT doc_id, simhash, $k AS band, (simhash >> ${k * 8}) & 255 AS byte FROM sim")
           .mkString("\n  UNION ALL ")
-        val votes = (0 until 32)
-          .map(j => s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS v$j")
-          .mkString(",\n    ")
-        val assemble = (0 until 32)
-          .map(j => s"(CASE WHEN v$j > 0 THEN ${1L << j} ELSE 0 END)")
-          .mkString(" + ")
-        s"""WITH toks AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tk FROM documents),
-           |hashed AS (SELECT doc_id, ${portableHashSql("tk", 0)} AS h FROM toks),
-           |votes AS (SELECT doc_id,
-           |    $votes
-           |  FROM hashed GROUP BY doc_id),
-           |sim AS (SELECT doc_id, CAST($assemble AS BIGINT) AS simhash FROM votes),
+        s"""$simhashVotesCteSql,
+           |sim AS (SELECT doc_id, CAST($simhashSql AS BIGINT) AS simhash FROM votes),
            |bands AS (
            |  $bandSql)
            |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
@@ -1238,7 +1237,7 @@ object DedupQueries {
             ((col("n_copies") - 1) * col("n_tokens")).as("reclaim_tokens"))
       },
       Some(s"""WITH toks AS (
-              |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+              |  SELECT doc_id, ${tokensSql("text")} AS t
               |  FROM documents),
               |p AS (
               |  SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
@@ -1451,9 +1450,7 @@ object DedupQueries {
           .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
           .select(lit("raw").as("stage"), col("n_docs"), col("n_chars"))
         val exact = docs
-          .select(
-            md5(regexp_replace(lower(nfcNormalize(col("text"))), "\\s+", " ")).as("fp"),
-            col("doc_id"), col("n_chars"))
+          .select(exactFp(col("text")).as("fp"), col("doc_id"), col("n_chars"))
           .groupBy(col("fp"))
           .agg(min_by(col("n_chars"), col("doc_id")).as("keep_chars"))
           .agg(count(lit(1)).as("n_docs"), sum(col("keep_chars")).as("n_chars"))
@@ -1464,7 +1461,7 @@ object DedupQueries {
         raw.unionByName(exact).unionByName(sub)
       },
       Some("WITH " + substringCleanedCteSql + ",\n" +
-        """raw AS (
+        s"""raw AS (
           |  SELECT 'raw' AS stage, COUNT(*) AS n_docs,
           |    CAST(SUM(n_chars) AS BIGINT) AS n_chars
           |  FROM documents),
@@ -1473,7 +1470,7 @@ object DedupQueries {
           |    CAST(SUM(keep_chars) AS BIGINT) AS n_chars
           |  FROM (
           |    SELECT arg_min(n_chars, doc_id) AS keep_chars FROM documents
-          |    GROUP BY md5(regexp_replace(lower(nfc_normalize(text)), '\s+', ' ', 'g')))),
+          |    GROUP BY ${exactFpSql("text")})),
           |sub AS (
           |  SELECT 'substring_cleaned' AS stage, COUNT(*) AS n_docs,
           |    CAST(SUM(CAST(d.n_chars AS BIGINT) - COALESCE(pd.cut_chars, 0)) AS BIGINT) AS n_chars
@@ -1603,7 +1600,7 @@ object DedupQueries {
         val withPos = docs.crossJoin(broadcast(mx))
           .select(col("doc_id"),
             (col("doc_id") * 10 >= (col("mx") + 1) * 9).as("is_batch"),
-            md5(regexp_replace(lower(nfcNormalize(col("text"))), "\\s+", " ")).as("fp"))
+            exactFp(col("text")).as("fp"))
           .withColumn("h0", portableHash(col("fp"), 101))
           .withColumn("h1", portableHash(col("fp"), 103))
           .select(Seq(col("doc_id"), col("is_batch"), col("fp")) ++
@@ -1641,7 +1638,7 @@ object DedupQueries {
         s"""WITH mx AS (SELECT max(doc_id) AS m FROM documents),
            |f AS (
            |  SELECT doc_id, doc_id * 10 >= 9 * ((SELECT m FROM mx) + 1) AS is_batch,
-           |    md5(regexp_replace(lower(nfc_normalize(text)), '\\s+', ' ', 'g')) AS fp
+           |    ${exactFpSql("text")} AS fp
            |  FROM documents),
            |h AS (SELECT doc_id, is_batch, fp, $h0 AS h0, $h1 AS h1 FROM f),
            |p AS (
@@ -1687,8 +1684,7 @@ object DedupQueries {
       (s, dir) => {
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
         val norm = Tables(s, dir, "documents")
-          .select(col("doc_id"),
-            regexp_replace(lower(nfcNormalize(col("text"))), "\\s+", " ").as("nt"))
+          .select(col("doc_id"), normText(col("text")).as("nt"))
         lshCandidates(sh)
           .join(norm.as("a"), col("doc_a") === col("a.doc_id"))
           .join(norm.as("b"), col("doc_b") === col("b.doc_id"))
@@ -1704,7 +1700,7 @@ object DedupQueries {
               |$candCteSql,
               |nt AS (
               |  SELECT doc_id,
-              |    regexp_replace(lower(nfc_normalize(text)), '\\s+', ' ', 'g') AS nt
+              |    ${normTextSql("text")} AS nt
               |  FROM documents),
               |m AS (
               |  SELECT doc_a, doc_b,

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SessionScope
 
@@ -19,34 +20,64 @@ object TextQueries {
 
   /** Oracle-side tokenized view of documents (also CurationQueries'). */
   private[queries] val toksCte =
-    "WITH toks AS (SELECT doc_id, text, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents)"
+    s"WITH toks AS (SELECT doc_id, text, lang, ${tokensSql("text")} AS t FROM documents)"
 
-  import org.apache.spark.sql.Column
+  /** Share of the raw text's characters that are neither alphanumeric
+    * nor whitespace — a feature of [[qualityScore]], `text_quality` and
+    * the quality classifier. [[punctRatioSql]] is its DuckDB twin. */
+  private[queries] def punctRatio(text: Column): Column =
+    size(regexp_extract_all(text, lit("[^a-zA-Z0-9\\s]"), lit(0))).cast("long").cast("double") /
+      greatest(length(text).cast("long"), lit(1L)).cast("double")
+
+  private[queries] def punctRatioSql(text: String): String =
+    s"CAST(len(regexp_extract_all($text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / CAST(greatest(length($text), 1) AS DOUBLE)"
+
+  /** Share of the token array `t` that is an English stopword — the
+    * other shared quality feature. [[stopRatioSql]] is its DuckDB twin. */
+  private[queries] def stopRatio(t: Column): Column =
+    stopwordHits(t, stopwords.head._2).cast("double") /
+      greatest(size(t).cast("long"), lit(1L)).cast("double")
+
+  private[queries] def stopRatioSql(t: String): String =
+    s"CAST(${stopwordHitsSql(t, stopwords.head._2)} AS DOUBLE) / CAST(greatest(len($t), 1) AS DOUBLE)"
 
   /** Composite document quality score in [0, 1] — length, punctuation
     * and stopword-density features. Shared by `text_quality` and
-    * `dedup_canonical` (canonical-doc selection ranks by it); keep
-    * [[qualityScoreSql]] in lockstep term-for-term. */
+    * `dedup_canonical` (canonical-doc selection ranks by it);
+    * [[qualityScoreSql]] is its DuckDB twin. */
   def qualityScore(text: Column): Column = {
     val t = tokens(text)
-    val nTok = size(t).cast("long")
-    val nChars = length(text).cast("long")
-    val nPunct = size(regexp_extract_all(text, lit("[^a-zA-Z0-9\\s]"), lit(0))).cast("long")
-    val punctRatio = nPunct.cast("double") / greatest(nChars, lit(1L)).cast("double")
-    val stopRatio = stopwordHits(t, stopwords.head._2).cast("double") /
-      greatest(nTok, lit(1L)).cast("double")
     round(
-      least(nTok.cast("double") / 50.0, lit(1.0)) * 0.3 +
-        (lit(1.0) - punctRatio) * 0.3 +
-        least(stopRatio * 5.0, lit(1.0)) * 0.4, 6)
+      least(size(t).cast("long").cast("double") / 50.0, lit(1.0)) * 0.3 +
+        (lit(1.0) - punctRatio(text)) * 0.3 +
+        least(stopRatio(t) * 5.0, lit(1.0)) * 0.4, 6)
   }
 
   /** DuckDB twin of [[qualityScore]]; `text` and `t` are SQL
     * expressions for the raw text and its token list. */
   def qualityScoreSql(text: String, t: String): String =
     s"""round(least(CAST(len($t) AS DOUBLE) / 50.0, 1.0) * 0.3
-       |    + (1.0 - CAST(len(regexp_extract_all($text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / CAST(greatest(length($text), 1) AS DOUBLE)) * 0.3
-       |    + least(CAST(${stopwordHitsSql(t, stopwords.head._2)} AS DOUBLE) / CAST(greatest(len($t), 1) AS DOUBLE) * 5.0, 1.0) * 0.4, 6)""".stripMargin
+       |    + (1.0 - ${punctRatioSql(text)}) * 0.3
+       |    + least(${stopRatioSql(t)} * 5.0, 1.0) * 0.4, 6)""".stripMargin
+
+  /** The (freq DESC, tk) order of a unigram vocabulary, and its SQL
+    * twin [[vocabOrderSql]]. */
+  private def vocabOrder: Seq[Column] = Seq(col("freq").desc, col("tk"))
+  private[queries] def vocabOrderSql: String = "ORDER BY freq DESC, tk"
+
+  /** The top `n` of a `tk` token stream's unigram vocabulary as
+    * (tk, freq) — vocab_top, vocab_zipf, freq_cm_sketch's probes and
+    * oov_rate's dictionary. */
+  private[queries] def topVocab(toks: DataFrame, n: Int): DataFrame =
+    toks.groupBy(col("tk")).agg(count(lit(1)).as("freq"))
+      .orderBy(vocabOrder: _*).limit(n)
+
+  /** Per-(doc, token) counts (doc_id, tk, `name`) — doc_entropy's `c`
+    * and tfidf_keywords' `tf`. inverted_index groups by (term, doc_id)
+    * instead and keeps its own chain (the key order is in its plan). */
+  private def docTokenCounts(docs: DataFrame, name: String): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("tk"))
+      .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as(name))
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -65,7 +96,7 @@ object TextQueries {
       Some(s"""$toksCte
               |SELECT doc_id,
               |  len(t) AS n_tokens,
-              |  len(regexp_extract_all(lower(text), '$bpeTokenPattern')) AS n_bpe_tokens,
+              |  len(${bpeTokensSql("text")}) AS n_bpe_tokens,
               |  round(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(t, x -> CAST(length(x) AS DOUBLE))), (a, b) -> a + b)
               |    / CAST(greatest(len(t), 1) AS DOUBLE), 6) AS avg_token_len
               |FROM toks""".stripMargin)),
@@ -92,10 +123,9 @@ object TextQueries {
       Some(s"""$toksCte
               |SELECT lang, COUNT(*) AS n_docs,
               |  CAST(SUM(len(t)) AS BIGINT) AS n_words,
-              |  CAST(SUM(len(regexp_extract_all(lower(text), '$bpeTokenPattern'))) AS BIGINT) AS n_bpe,
+              |  CAST(SUM(len(${bpeTokensSql("text")})) AS BIGINT) AS n_bpe,
               |  ${QueryDef.microPointsSql(
-                   "CAST(SUM(len(regexp_extract_all(lower(text), '" + bpeTokenPattern +
-                     "'))) AS DOUBLE) / CAST(greatest(SUM(len(t)), 1) AS DOUBLE)")} AS fertility_micro
+                   s"CAST(SUM(len(${bpeTokensSql("text")})) AS DOUBLE) / CAST(greatest(SUM(len(t)), 1) AS DOUBLE)")} AS fertility_micro
               |FROM toks GROUP BY lang""".stripMargin)),
 
     // quality scoring: length + punctuation + stopword-density features
@@ -103,23 +133,17 @@ object TextQueries {
     QueryDef("text_quality",
       (s, dir) => {
         val t = tokens(col("text"))
-        val nTok = size(t).cast("long")
-        val nChars = length(col("text")).cast("long")
-        val nPunct = size(regexp_extract_all(col("text"), lit("[^a-zA-Z0-9\\s]"), lit(0))).cast("long")
-        val punctRatio = nPunct.cast("double") / greatest(nChars, lit(1L)).cast("double")
-        val stopRatio = stopwordHits(t, stopwords.head._2).cast("double") /
-          greatest(nTok, lit(1L)).cast("double")
         Tables(s, dir, "documents").select(
           col("doc_id"),
-          nTok.as("n_tokens"),
-          round(punctRatio, 6).as("punct_ratio"),
-          round(stopRatio, 6).as("stop_ratio"),
+          size(t).cast("long").as("n_tokens"),
+          round(punctRatio(col("text")), 6).as("punct_ratio"),
+          round(stopRatio(t), 6).as("stop_ratio"),
           qualityScore(col("text")).as("quality"))
       },
       Some(s"""$toksCte
               |SELECT doc_id, len(t) AS n_tokens,
-              |  round(CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE), 6) AS punct_ratio,
-              |  round(CAST(${stopwordHitsSql("t", stopwords.head._2)} AS DOUBLE) / CAST(greatest(len(t), 1) AS DOUBLE), 6) AS stop_ratio,
+              |  round(${punctRatioSql("text")}, 6) AS punct_ratio,
+              |  round(${stopRatioSql("t")}, 6) AS stop_ratio,
               |  ${qualityScoreSql("text", "t")} AS quality
               |FROM toks""".stripMargin)),
 
@@ -134,14 +158,11 @@ object TextQueries {
           col("doc_id") +: scores.map { case (l, sc) => sc.as(s"s_$l") } :+
             langPred(t).as("lang_pred"): _*)
       },
-      Some {
-        val scoreSql = stopwords.map { case (l, ws) => l -> stopwordHitsSql("t", ws) }
-        s"""$toksCte
-           |SELECT doc_id,
-           |  ${scoreSql.map { case (l, sc) => s"$sc AS s_$l" }.mkString(",\n  ")},
-           |  $langPredSqlExpr AS lang_pred
-           |FROM toks""".stripMargin
-      }),
+      Some(s"""$toksCte
+              |SELECT doc_id,
+              |  ${langScoresSql.map { case (l, sc) => s"$sc AS s_$l" }.mkString(",\n  ")},
+              |  $langPredSqlExpr AS lang_pred
+              |FROM toks""".stripMargin)),
 
     // language-ID CONFUSION matrix — the eval loop of the classifier
     // above closed as a query (as `ann_recall_eval` closes the ANN
@@ -203,8 +224,8 @@ object TextQueries {
         graft.operators.HeavyHitters(s, toks, perMille = 1)
           .orderBy(col("freq").desc, col("tk"))
       },
-      Some("""WITH toks AS (
-             |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tk
+      Some(s"""WITH toks AS (
+             |  SELECT unnest(${tokensSql("text")}) AS tk
              |  FROM documents),
              |tot AS (SELECT count(*) AS n FROM toks)
              |SELECT tk, count(*) AS freq
@@ -230,13 +251,9 @@ object TextQueries {
     // serial pattern), and the regression is one tiny aggregate.
     QueryDef("vocab_zipf",
       (s, dir) => {
-        val topN = 1000
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(col("freq").desc, col("tk"))
-        val top = Tables(s, dir, "documents")
-          .select(explode(tokens(col("text"))).as("tk"))
-          .groupBy(col("tk")).agg(count(lit(1)).as("freq"))
-          .orderBy(col("freq").desc, col("tk")).limit(topN)
+        val w = org.apache.spark.sql.expressions.Window.orderBy(vocabOrder: _*)
+        val top = topVocab(Tables(s, dir, "documents")
+          .select(explode(tokens(col("text"))).as("tk")), 1000)
         val xy = top
           .withColumn("r", row_number().over(w))
           .select(
@@ -256,10 +273,10 @@ object TextQueries {
       },
       Some(s"""WITH cnt AS (
               |  SELECT tk, COUNT(*) AS freq
-              |  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tk FROM documents)
+              |  FROM (SELECT unnest(${tokensSql("text")}) AS tk FROM documents)
               |  GROUP BY tk),
               |top AS (
-              |  SELECT tk, freq, row_number() OVER (ORDER BY freq DESC, tk) AS r
+              |  SELECT tk, freq, row_number() OVER ($vocabOrderSql) AS r
               |  FROM cnt QUALIFY r <= 1000),
               |xy AS (
               |  SELECT ${QueryDef.microPointsSql("ln(CAST(r AS DOUBLE))")} AS x,
@@ -306,15 +323,14 @@ object TextQueries {
           .drop("cell")
         val sketch = cells(toks).groupBy(col("r"), col("bucket"))
           .agg(count(lit(1)).as("c"))
-        val probes = toks.groupBy(col("tk")).agg(count(lit(1)).as("freq"))
-          .orderBy(col("freq").desc, col("tk")).limit(20)
+        val probes = topVocab(toks, 20)
         cells(probes).join(broadcast(sketch), Seq("r", "bucket"))
           .groupBy(col("tk"))
           .agg(min(col("freq")).as("freq"), min(col("c")).as("cm_est"))
           .withColumn("overest", col("cm_est") - col("freq"))
       },
-      Some("""WITH toks AS (
-             |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tk
+      Some(s"""WITH toks AS (
+             |  SELECT unnest(${tokensSql("text")}) AS tk
              |  FROM documents),
              |ds AS (SELECT unnest(range(0, 4)) AS r),
              |cells AS (
@@ -324,7 +340,7 @@ object TextQueries {
              |sketch AS (SELECT r, bucket, COUNT(*) AS c FROM cells GROUP BY 1, 2),
              |probes AS (
              |  SELECT tk, COUNT(*) AS freq FROM toks GROUP BY tk
-             |  ORDER BY freq DESC, tk LIMIT 20),
+             |  $vocabOrderSql LIMIT 20),
              |pcells AS (
              |  SELECT p.tk, p.freq, ds.r,
              |    CAST(('0x' || substr(md5(CAST(ds.r AS VARCHAR) || ':' || p.tk), 1, 15)) AS BIGINT) % 256 AS bucket
@@ -338,15 +354,11 @@ object TextQueries {
     // vocabulary building: corpus-wide token frequencies, top 100 —
     // one shuffle on the token, map-side combined (a word count)
     QueryDef("vocab_top",
-      (s, dir) => Tables(s, dir, "documents")
-        .select(explode(tokens(col("text"))).as("tk"))
-        .groupBy(col("tk"))
-        .agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("tk"))
-        .limit(100),
-      Some("""SELECT tk, count(*) AS freq
-             |FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tk FROM documents)
-             |GROUP BY tk ORDER BY freq DESC, tk LIMIT 100""".stripMargin)),
+      (s, dir) => topVocab(Tables(s, dir, "documents")
+        .select(explode(tokens(col("text"))).as("tk")), 100),
+      Some(s"""SELECT tk, count(*) AS freq
+             |FROM (SELECT unnest(${tokensSql("text")}) AS tk FROM documents)
+             |GROUP BY tk $vocabOrderSql LIMIT 100""".stripMargin)),
 
     // Padding-waste audit: naive vs length-grouped batching — the
     // training-cost question every fixed-batch pipeline prices: a batch
@@ -401,7 +413,7 @@ object TextQueries {
              |  GROUP BY batch) g""".stripMargin
         s"""WITH lens AS (
            |  SELECT doc_id,
-           |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS len
+           |    CAST(len(${tokensSql("text")}) AS BIGINT) AS len
            |  FROM documents)
            |${side("arrival", "doc_id")}
            |UNION ALL
@@ -499,7 +511,7 @@ object TextQueries {
       },
       Some(s"""WITH tk AS (
               |  SELECT doc_id,
-              |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+              |    unnest(${tokensSql("text")}) AS term
               |  FROM documents),
               |tf AS (SELECT term, doc_id, COUNT(*) AS tf FROM tk GROUP BY 1, 2),
               |rk AS (
@@ -528,9 +540,7 @@ object TextQueries {
     // corpus at every SF.
     QueryDef("doc_entropy",
       (s, dir) => {
-        val tc = ProfilingQueries.widened(Tables(s, dir, "documents"))
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tk"))
-          .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as("c"))
+        val tc = docTokenCounts(ProfilingQueries.widened(Tables(s, dir, "documents")), "c")
         val dn = tc.groupBy(col("doc_id")).agg(sum(col("c")).as("n"))
         tc.join(dn, Seq("doc_id"))
           .withColumn("mp", QueryDef.microPoints(
@@ -542,7 +552,7 @@ object TextQueries {
           .withColumn("low_entropy", (col("h_u") < lit(2600000L)).cast("long"))
       },
       Some(s"""WITH tks AS (
-             |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tk
+             |  SELECT doc_id, unnest(${tokensSql("text")}) AS tk
              |  FROM documents),
              |tc AS (SELECT doc_id, tk, COUNT(*) AS c FROM tks GROUP BY 1, 2),
              |dn AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n FROM tc GROUP BY 1),
@@ -594,8 +604,8 @@ object TextQueries {
           .groupBy(col("tk")).agg(count(lit(1)).as("freq")))
         nucleusCut(vocab, pNum = 19L, pDen = 20L)
       },
-      Some("""WITH tl AS (
-             |  SELECT regexp_extract_all(lower(text), '[a-z0-9]+') AS t FROM documents),
+      Some(s"""WITH tl AS (
+             |  SELECT ${tokensSql("text")} AS t FROM documents),
              |grams AS (
              |  SELECT t[i] || ' ' || t[i+1] AS tk FROM tl, unnest(range(1, len(t))) AS u(i)),
              |vocab AS (SELECT tk, count(*) AS freq FROM grams GROUP BY tk),
@@ -690,7 +700,7 @@ object TextQueries {
               |        WHERE round = $BpeMergeRounds)),
               |docw AS (
               |  SELECT doc_id,
-              |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
+              |    unnest(${tokensSql("text")}) AS word
               |  FROM documents)
               |SELECT d.doc_id, COUNT(*) AS n_words,
               |  CAST(SUM(length(d.word)) AS BIGINT) AS n_chars,
@@ -741,7 +751,7 @@ object TextQueries {
       Some(s"""WITH toks AS (
              |  SELECT doc_id, lang,
              |    ${ProfilingQueries.shardSql(16)} AS shard,
-             |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tokens
+             |    len(${tokensSql("text")}) AS n_tokens
              |  FROM documents),
              |cums AS (
              |  SELECT doc_id, lang, shard, n_tokens,
@@ -943,10 +953,7 @@ object TextQueries {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("doc_id"))
           .orderBy(col("score_micro").desc, col("tk"))
-        val tfs = Tables(s, dir, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tk"))
-          .groupBy(col("doc_id"), col("tk"))
-          .agg(count(lit(1)).as("tf"))
+        val tfs = docTokenCounts(Tables(s, dir, "documents"), "tf")
         val dfs = tfs.groupBy(col("tk")).agg(count(lit(1)).as("df"))
         val nDocs = Tables(s, dir, "documents").agg(count(lit(1)).as("n"))
         tfs.join(dfs, Seq("tk"))
@@ -1143,8 +1150,6 @@ object TextQueries {
               |FROM occ LEFT JOIN nt USING (bucket)""".stripMargin))
   )
 
-  /** Corpus slices for `vocab_growth`. A def, not a val (the
-    * oracle-string init-order gotcha). */
   /** `padding_waste` batch size — the fixed micro-batch a training
     * loader pads to. Def, not val (defs-init-order contract). */
   private def PadBatch: Int = 32
@@ -1155,6 +1160,8 @@ object TextQueries {
     * contract). */
   private def PostingsCap: Int = 8
 
+  /** Corpus slices for `vocab_growth`. A def, not a val (the
+    * oracle-string init-order gotcha). */
   private def GrowthBuckets: Int = 10
 
   /** Keywords kept per document by `tfidf_keywords`. A def, not a val
@@ -1219,9 +1226,13 @@ object TextQueries {
     }
   }
 
+  /** DuckDB twin of [[langScores]] over the `toks` CTE's `t` column. */
+  private def langScoresSql: Seq[(String, String)] =
+    stopwords.map { case (l, ws) => l -> stopwordHitsSql("t", ws) }
+
   /** DuckDB twin of [[langPred]] over the `toks` CTE's `t` column. */
   private def langPredSqlExpr: String = {
-    val scoreSql = stopwords.map { case (l, ws) => l -> stopwordHitsSql("t", ws) }
+    val scoreSql = langScoresSql
     val cases = scoreSql.zipWithIndex.dropRight(1).map { case ((l, sc), i) =>
       val cond = scoreSql.drop(i + 1).map { case (_, o) => s"$sc >= $o" }.mkString(" AND ")
       s"WHEN $cond THEN '$l'"
@@ -1392,7 +1403,7 @@ object TextQueries {
     s"""WITH RECURSIVE
        |wf AS (
        |  SELECT w AS word, COUNT(*) AS freq FROM (
-       |    SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
+       |    SELECT unnest(${tokensSql("text")}) AS w
        |    FROM documents)
        |  GROUP BY 1),
        |init AS (

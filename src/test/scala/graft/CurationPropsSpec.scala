@@ -27,7 +27,7 @@ class CurationPropsSpec extends SparkSuite {
     val dir = tmpDir("curation_props")
     import spark.implicits._
     texts.zipWithIndex
-      .map { case (t, i) => (i.toLong, t, "en", "src0", t.length.toLong) }
+      .map { case (t, i) => (i.toLong, t, "en", "src0", Option(t).fold(0L)(_.length.toLong)) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -85,6 +85,76 @@ class CurationPropsSpec extends SparkSuite {
         assert(flag == (if (expDup3 > 0.01 || expTop2 > 0.07) 1L else 0L))
       }
     }
+  }
+
+  /** quality_ensemble's rows folded in memory from its three subject
+    * queries' per-doc verdicts (gopher_rules.keep,
+    * quality_classifier.keep, 1 − text_repetition.is_repetitive joined
+    * on doc_id), with SQL null semantics: a null vote makes `votes`
+    * null and never agrees. */
+  private def ensembleOfSubjects(dir: String): Map[String, Long] = {
+    def q(name: String) = SparkEntry.queries(name)(spark, dir)
+    val votes = q("gopher_rules").select(col("doc_id"), col("keep").as("kg"))
+      .join(q("quality_classifier").select(col("doc_id"), col("keep").as("kc")), "doc_id")
+      .join(q("text_repetition")
+        .select(col("doc_id"), (lit(1L) - col("is_repetitive")).as("kr")), "doc_id")
+      .collect()
+      .map(r => (1 to 3).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i))))
+    spark.catalog.clearCache()
+    val n = votes.length.toLong
+    def agree(a: Int, b: Int) =
+      votes.count(v => v(a).isDefined && v(a) == v(b)) * 1000000L / n
+    val total = votes.map(v => if (v.forall(_.isDefined)) Some(v.flatten.sum) else None)
+    total.groupBy(identity).map { case (k, vs) =>
+      k.map(t => s"votes_$t").orNull -> vs.length.toLong } ++ Map(
+      "agree_gopher_classifier_ppm" -> agree(0, 1),
+      "agree_gopher_repetition_ppm" -> agree(0, 2),
+      "agree_classifier_repetition_ppm" -> agree(1, 2),
+      "keep_majority" -> total.count(_.exists(_ >= 2)).toLong,
+      "keep_strict" -> total.count(_.contains(3L)).toLong)
+  }
+
+  private def ensemble(dir: String): Map[String, Long] = {
+    val got = SparkEntry.queries("quality_ensemble")(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    spark.catalog.clearCache()
+    assert(got.map(_._1).distinct.length == got.length, got.mkString(", "))
+    got.toMap
+  }
+
+  test("quality_ensemble is the per-doc composition of its three subject queries") {
+    val testdata = new java.io.File(sf("documents")).getParent // the sf0.001 corpus
+    val want = ensembleOfSubjects(testdata)
+    assert(ensemble(testdata) == want)
+    // non-vacuous on testdata: the voters disagree somewhere
+    assert(want.keys.count(k => k != null && k.startsWith("votes_")) >= 2, want.toString)
+    // generated corpora long enough to pass the Gopher word-count and
+    // classifier length features, plus null-text and 0/1/2-token docs
+    val words = Gen.oneOf("the", "and", "of", "alpha", "beta", "gamma", "ep5", "404")
+    val longDoc = Gen.choose(0, 90).flatMap(n => Gen.listOfN(n, words)).map(_.mkString(" "))
+    forAll(Gen.listOfN(12, longDoc)) { texts =>
+      val dir = writeDocs(texts ++ Seq(null, "", "one", "one two", "x x x x x x"))
+      assert(ensemble(dir) == ensembleOfSubjects(dir))
+    }
+  }
+
+  test("exact-dup fingerprint: NFC, case and whitespace-run variants are one group") {
+    val variants = Seq(
+      "Caf\u00e9 au lait avec cr\u00e8me",        // composed accents
+      "Cafe\u0301 au lait avec cre\u0300me",      // decomposed accents
+      "CAF\u00c9 AU LAIT AVEC CR\u00c8ME",        // upper case, composed
+      "CAFE\u0301 AU LAIT AVEC CRE\u0300ME",      // upper case, decomposed
+      "Caf\u00e9  au\t\tlait\n\navec   cr\u00e8me") // whitespace runs
+    val others = Seq("the cat and dog run far", "caf\u00e9 au lait", "Cafe au lait avec creme")
+    val dir = writeDocs(others ++ variants)
+    val exact = SparkEntry.queries("dedup_exact")(spark, dir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_dups")).toMap
+    val calib = SparkEntry.queries("quality_calibration")(spark, dir).collect()
+    spark.catalog.clearCache()
+    assert(exact == (0L until others.length.toLong).map(_ -> 1L).toMap +
+      (others.length.toLong -> variants.length.toLong), exact.toString)
+    assert(calib.map(_.getAs[Long]("n_docs")).sum == others.length + variants.length)
+    assert(calib.map(_.getAs[Long]("n_dup")).sum == variants.length, calib.mkString(", "))
   }
 
   test("token_histogram partitions the corpus: counts sum to |docs|, buckets hold their ranges") {
@@ -263,8 +333,7 @@ class CurationPropsSpec extends SparkSuite {
     // machinery against literal pair counting
     val docs = spark.read.parquet(s"$d/documents.parquet")
       .select(QueryDef.microPoints(TextQueries.qualityScore(col("text"))).as("u"),
-        md5(regexp_replace(lower(graft.functions.TextFunctions.nfcNormalize(col("text"))),
-          "\\s+", " ")).as("fp"))
+        graft.functions.TextFunctions.exactFp(col("text")).as("fp"))
     val grp = docs.groupBy("fp").agg(count(lit(1)).as("n"))
     val ud = docs.join(grp, Seq("fp"))
       .select(col("u"), (col("n") > 1L).as("d")).collect()
