@@ -163,7 +163,11 @@ object TextFunctions {
   private[graft] def exactFpSql(textSql: String): String =
     s"md5(${normTextSql(textSql)})"
 
-  /** Cosine from precomputed norms (`nrm = sqrt(dotFast(e, e))`
+  /** A vector's L2 norm, `sqrt(dotFast(v, v))`: the `nrm` column the
+    * vector queries project once per vector for [[cosineFast]]. */
+  def l2Norm(v: Column): Column = sqrt(dotFast(v, v))
+
+  /** Cosine from precomputed norms (`nrm` = [[l2Norm]] of the vector,
     * projected once per vector before the pairwise join): identical
     * double arithmetic to [[cosine]] — dot / sqrt(na2) / sqrt(nb2) —
     * but norms are computed |V| times instead of |V|² times. */

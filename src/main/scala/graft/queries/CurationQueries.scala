@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.queries.ProfilingQueries.{topK, topKSql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -213,12 +214,10 @@ object CurationQueries {
        |  FROM d),
        |j AS (SELECT * FROM d CROSS JOIN st),
        |scores AS (
-       |  $perQuery),
-       |ranked AS (
-       |  SELECT query, doc_id, score_micro,
-       |    CAST(row_number() OVER (PARTITION BY query ORDER BY score_micro DESC, doc_id) AS BIGINT) AS rank
-       |  FROM scores WHERE score_micro > 0)
-       |SELECT query, rank, doc_id, score_micro FROM ranked WHERE rank <= $BmTopK""".stripMargin
+       |  $perQuery)
+       |SELECT query, rank, doc_id, score_micro FROM (
+       |${topKSql("query, doc_id, score_micro", "scores WHERE score_micro > 0", "query",
+          "score_micro DESC, doc_id", BmTopK)})""".stripMargin
   }
 
   /** Frozen linear-classifier weights for `quality_classifier`, in
@@ -590,14 +589,11 @@ object CurationQueries {
            |  SELECT lang, doc_id, n_chars,
            |    CAST(n_chars AS DOUBLE) / CAST($u1 AS DOUBLE) AS p
            |  FROM documents),
-           |r AS (
-           |  SELECT lang, doc_id, n_chars, p,
-           |    row_number() OVER (PARTITION BY lang ORDER BY p DESC, doc_id) AS rk
-           |  FROM pr)
+           |r AS (${topKSql("lang, doc_id, n_chars, p", "pr", "lang", "p DESC, doc_id", 8, "rk")})
            |SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS w,
            |  ${QueryDef.microPointsSql("p")} AS pr_micro,
-           |  CAST(rk AS BIGINT) AS rk
-           |FROM r WHERE rk <= 8""".stripMargin
+           |  rk
+           |FROM r""".stripMargin
       }),
 
     // token-length histogram: docs bucketed by token count (width 8,
@@ -1546,12 +1542,8 @@ object CurationQueries {
     val u1 = pmod(portableHash(col("doc_id").cast("string"), 37),
       lit(1073741824L)) + lit(1L)
     val p = col("n_chars").cast("double") / u1.cast("double")
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("p").desc, col("doc_id"))
-    docs
-      .select(col("lang"), col("doc_id"), col("n_chars"), p.as("p"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    topK(docs.select(col("lang"), col("doc_id"), col("n_chars"), p.as("p")),
+        Seq("lang"), Seq(col("p").desc, col("doc_id")), k, "rk")
       .select(col("lang"), col("doc_id"),
         col("n_chars").as("w"),
         QueryDef.microPoints(col("p")).as("pr_micro"),

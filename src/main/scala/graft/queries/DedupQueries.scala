@@ -573,7 +573,7 @@ object DedupQueries {
   def embeddingAllPairs(s: SparkSession, dir: String): DataFrame = {
     val e = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
-        sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
+        l2Norm(col("embedding")).as("nrm"))
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
         cosineFast(col("a.embedding"), col("b.embedding"),
@@ -1008,7 +1008,7 @@ object DedupQueries {
         }
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"),
-            sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"),
+            l2Norm(col("embedding")).as("nrm"),
             explode(array(bandStructs: _*)).as("bs"))
           .select(col("vec_id"), col("embedding"), col("nrm"),
             col("bs.band").as("band"), col("bs.sig").as("sig"))
@@ -2172,11 +2172,16 @@ object DedupQueries {
     s"""WITH p AS (
        |  SELECT greatest(8, least(1048576, CAST(ceil(count(*) / $targetRows.0) AS BIGINT))) AS k
        |  FROM embeddings),
-       |cents AS (
-       |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings
-       |  WHERE vec_id < (SELECT k FROM p)),
+       |${centsSql("(SELECT k FROM p)")},
        |assign AS $centroidRanksSql,
        |cells AS (SELECT vec_id, embedding, c_id FROM assign WHERE rk = 1)""".stripMargin
+
+  /** DuckDB twin of [[centroids]]: the `cents(c_id, c_emb)` CTE of the
+    * vectors below `k` (a number or a scalar subquery). */
+  private[queries] def centsSql(k: String): String =
+    s"""cents AS (
+       |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings
+       |  WHERE vec_id < $k)""".stripMargin
 
   /** DuckDB twin of [[centroidRanks]] over the whole `embeddings` table
     * against a `cents(c_id, c_emb)` CTE: the parenthesized body of the
@@ -2327,7 +2332,7 @@ object DedupQueries {
     // aggregate would throw on a NULL over zero cells
     require(rows > 0, s"semantic dedup: embeddings table at $dir is empty")
     val k = cellCountRows(rows, targetRows)
-    val e = emb.withColumn("nrm", sqrt(dotFast(col("embedding"), col("embedding"))))
+    val e = emb.withColumn("nrm", l2Norm(col("embedding")))
     val assigned = centroidCosines(e, centroids(e, k))
       .groupBy(col("vec_id"))
       .agg(
@@ -2375,7 +2380,7 @@ object DedupQueries {
   private def trainedCells(emb: DataFrame, k: Int, iters: Int): DataFrame =
     QueryDef.eager(graft.operators.KMeans
       .assign(emb, graft.operators.KMeans.train(emb, k, iters))
-      .withColumn("nrm", sqrt(dotFast(col("embedding"), col("embedding")))))
+      .withColumn("nrm", l2Norm(col("embedding"))))
 
   private lazy val queriesByName: Map[String, (SparkSession, String) => DataFrame] =
     defs.map(d => d.name -> d.fn).toMap

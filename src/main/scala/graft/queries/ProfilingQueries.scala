@@ -162,25 +162,45 @@ object ProfilingQueries {
     else offsets
   }
 
+  /** THE per-key top-k: the first `k` rows per `keys` under `order`,
+    * numbered 1..k in the BIGINT column `rank` (`row_number` over
+    * `partitionBy(keys).orderBy(order)`, cut at `rank <= k`); `order`
+    * ends in a tiebreak column, so the cut is deterministic. The rank
+    * filter lowers to a WindowGroupLimit: each input partition is
+    * pre-trimmed to k rows per key before the key-partitioned exchange,
+    * so the exchange moves ≤ k·partitions rows per key, never the input.
+    * Output: `df`'s columns plus `rank`. [[topKSql]] is the DuckDB twin. */
+  private[graft] def topK(df: DataFrame, keys: Seq[String], order: Seq[Column],
+      k: Int, rank: String = "rank"): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(order: _*)).cast("long"))
+      .filter(col(rank) <= k)
+
+  /** DuckDB twin of [[topK]]: `cols` of `from` (a FROM body, joins and
+    * WHERE included) plus the `rank` numbered per `keys` by `order`, cut
+    * at `k` — a full SELECT. */
+  private[queries] def topKSql(cols: String, from: String, keys: String,
+      order: String, k: Int, rank: String = "rank"): String =
+    s"""SELECT * FROM (
+       |  SELECT $cols,
+       |    row_number() OVER (PARTITION BY $keys ORDER BY $order) AS $rank
+       |  FROM $from) t
+       |WHERE $rank <= $k""".stripMargin
+
   /** THE two-level top-k: the `k` best rows per `key` under `order`,
     * ranked 1..k in the BIGINT column `rank`. A window partitioned by
     * `key` alone is the bounded-cardinality funnel (|keys| tasks own
-    * every row); here a `row_number` per (key, content-hash `shard`,
+    * every row); here a [[topK]] per (key, content-hash `shard`,
     * [[shardCol]] over `doc_id`) first keeps ≤ k rows per shard, and the
-    * per-key window ranks only that ≤ k·shards set. Exact because the
+    * per-key [[topK]] ranks only that ≤ k·shards set. Exact because the
     * per-shard top-k is a superset of the global top-k (`order` must be
     * a total order). The shard count is [[shardCount]] of `sizedBy`'s
     * input bytes. Output: `df`'s columns plus `shard`, `r1` and `rank`. */
   private[graft] def shardedTopK(df: DataFrame, key: String,
       order: Seq[Column], k: Int, sizedBy: DataFrame,
       rank: String = "rank"): DataFrame =
-    df.withColumn("shard", shardCol(shardCount(inputBytes(sizedBy))))
-      .withColumn("r1", row_number().over(
-        Window.partitionBy(col(key), col("shard")).orderBy(order: _*)))
-      .filter(col("r1") <= k)
-      .withColumn(rank, row_number().over(
-        Window.partitionBy(col(key)).orderBy(order: _*)).cast("long"))
-      .filter(col(rank) <= k)
+    topK(topK(df.withColumn("shard", shardCol(shardCount(inputBytes(sizedBy)))),
+      Seq(key, "shard"), order, k, "r1"), Seq(key), order, k, rank)
 
   /** `k_anonymity` class-size threshold: classes below K members are
     * re-identification risks. Def, not val (defs-init-order contract). */
@@ -1045,12 +1065,11 @@ object ProfilingQueries {
         s"""WITH ut AS (
            |  SELECT DISTINCT event_type, user_id, $h AS h FROM events),
            |rk AS (
-           |  SELECT event_type, h,
-           |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-           |  FROM (SELECT DISTINCT event_type, h FROM ut)),
+           |  ${topKSql("event_type, h", "(SELECT DISTINCT event_type, h FROM ut)",
+                "event_type", "h", 64, "rn")}),
            |sk AS (
            |  SELECT event_type, list(h ORDER BY h) AS sk
-           |  FROM rk WHERE rn <= 64 GROUP BY 1),
+           |  FROM rk GROUP BY 1),
            |nd AS (SELECT event_type, count(DISTINCT user_id) AS nd FROM ut GROUP BY 1),
            |p AS (
            |  SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -1123,13 +1142,10 @@ object ProfilingQueries {
           s"CAST($arr[CAST((len($arr) * $q + 99) // 100 AS INT)] AS BIGINT)"
         s"""WITH d AS (
            |  SELECT lang, n_chars, $h AS h FROM documents),
-           |r AS (
-           |  SELECT lang, n_chars,
-           |    row_number() OVER (PARTITION BY lang ORDER BY h, n_chars) AS rn
-           |  FROM d),
+           |r AS (${topKSql("lang, n_chars", "d", "lang", "h, n_chars", 256, "rn")}),
            |s AS (
            |  SELECT lang, list_sort(list(n_chars)) AS sv
-           |  FROM r WHERE rn <= 256 GROUP BY 1),
+           |  FROM r GROUP BY 1),
            |e AS (
            |  SELECT lang, COUNT(*) AS n_docs, list_sort(list(n_chars)) AS ev
            |  FROM d GROUP BY 1)

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.queries.DedupQueries.{centroidRanks, centroidRanksSql, centroids}
+import graft.queries.DedupQueries.{centroidRanks, centroidRanksSql, centroids, centsSql}
+import graft.queries.ProfilingQueries.{topK, topKSql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,12 +25,15 @@ import org.apache.spark.sql.functions._
   *  - k-NN graphs over frozen cells: edges, hubness, multi-probe,
   *    PageRank, triangles; and bitext margin mining.
   *
-  * The search queries are built from a few shared stages: centroid
-  * ranking ([[DedupQueries.centroidRanks]]), the cosine top-k
-  * ([[cosineTopK]]) and the recall fold ([[recallAtK]]), each with its
-  * DuckDB twin. The query side (|Q| = [[NQueries]]) is the broadcast
-  * side, the corpus streams, and every top-k window pre-trims per
-  * partition before its exchange.
+  * The search queries are built from a few shared stages, each with its
+  * DuckDB twin: the query set ([[isQuery]], [[queryPairs]]), the IVF
+  * index ([[ivfIndex]], over [[DedupQueries.centroidRanks]]), the
+  * cosine top-k ([[cosineTopK]]), the per-dimension flatten
+  * ([[perDim]]), the SQ8 code ([[sq8Code]]) and the recall fold
+  * ([[recallAtK]]). Every ranked cut is [[ProfilingQueries.topK]]. The
+  * query side (|Q| = [[NQueries]]) is the broadcast side, the corpus
+  * streams, and every top-k window pre-trims per partition before its
+  * exchange.
   *
   * Cosine arithmetic is the strict left fold from
   * [[graft.functions.TextFunctions]] so DuckDB oracles match exactly.
@@ -81,7 +85,7 @@ object SimilarityQueries {
     // search touches |corpus|/cells candidates per query.
     QueryDef("ann_ivf",
       (s, dir) => ivfTopK(s, dir),
-      Some(s"WITH $ivfCellsCteSql\n$ivfTopKSql")),
+      Some(s"WITH ${ivfIndexCteSql(1)}\n${ivfSearchSql("q.cell AS cell")}")),
 
     // IVF with nprobe=4: queries probe their 4 nearest cells instead of
     // 1, trading 4× the candidates for recall — the knob every IVF
@@ -91,37 +95,8 @@ object SimilarityQueries {
     // centroids assignment pass as ann_ivf; the probe side (queries ×
     // nprobe rows) is the broadcast build side of the cell join.
     QueryDef("ann_ivf_nprobe",
-      (s, dir) => {
-        // same single-corpus-pass structure as ann_ivf: the probe list
-        // ranks only the |Q| query vectors against the centroids, so
-        // the corpus-wide assignment feeds the join exactly once
-        val e = vecs(s, dir)
-        val cents = centroids(e, NCentroids)
-        val cells = centroidRanks(e, cents).filter(col("rk") === 1)
-          .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id").as("cell"))
-        val probes = centroidRanks(e.filter(col("vec_id") < NQueries), cents)
-          .filter(col("rk") <= NProbe)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("nrm").as("q_nrm"), col("c_id").as("cell"))
-        cosineTopK(broadcast(probes).join(cells.as("c"),
-            probes("cell") === col("c.cell") && col("q_id") =!= col("c.vec_id")),
-          col("q_id"), col("c.vec_id").as("n_id"),
-          cosineFast(col("q_emb"), col("c.embedding"), col("q_nrm"), col("c.nrm")), TopK)
-      },
-      Some(s"""WITH cents AS (
-              |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings WHERE vec_id < $NCentroids),
-              |ranked AS $centroidRanksSql,
-              |cells AS (SELECT vec_id, embedding, c_id AS cell FROM ranked WHERE rk = 1),
-              |probes AS (
-              |  SELECT vec_id AS q_id, embedding AS q_emb, c_id AS cell
-              |  FROM ranked WHERE vec_id < $NQueries AND rk <= $NProbe)
-              |SELECT * FROM (
-              |  SELECT q.q_id, c.vec_id AS n_id,
-              |    ${cosineSql("q.q_emb", "c.embedding")} AS cos,
-              |    row_number() OVER (PARTITION BY q.q_id
-              |      ORDER BY ${cosineSql("q.q_emb", "c.embedding")} DESC, c.vec_id) AS rank
-              |  FROM probes q JOIN cells c ON q.cell = c.cell AND q.q_id <> c.vec_id) t
-              |WHERE rank <= $TopK""".stripMargin)),
+      (s, dir) => ivfSearch(s, dir, NProbe),
+      Some(s"WITH ${ivfIndexCteSql(NProbe)}\n${ivfSearchSql()}")),
 
     // Product quantization + ADC (Jégou et al., TPAMI 2011) — the
     // memory-compression ANN path: each 64-dim vector is encoded as
@@ -140,12 +115,7 @@ object SimilarityQueries {
     // double) and added in fixed j order. L2² folds left in array
     // order on both engines — bit-exact, so rank ties break identically.
     QueryDef("ann_pq",
-      (s, dir) => {
-        val w = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("n_id"))
-        pqAdc(s, dir)
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
-      },
+      (s, dir) => adcTopK(pqAdc(s, dir)),
       Some {
         s"""WITH $pqCtesSql,
            |parts AS (
@@ -168,13 +138,7 @@ object SimilarityQueries {
     // same order-insensitive conditional sums as ann_pq.
     QueryDef("ann_ivfpq",
       (s, dir) => {
-        val e = vecs(s, dir)
-        val cents = centroids(e, NCentroids)
-        val cells = centroidRanks(e, cents).filter(col("rk") === 1)
-          .select(col("vec_id"), col("c_id").as("cell"))
-        val probes = centroidRanks(e.filter(col("vec_id") < NQueries), cents)
-          .filter(col("rk") <= NProbe)
-          .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
+        val (cells, probes) = ivfIndex(vecs(s, dir), NProbe)
         val cand = probes.join(cells, Seq("cell"))
           .filter(col("q_id") =!= col("vec_id"))
           .select(col("q_id"), col("vec_id"))
@@ -185,27 +149,14 @@ object SimilarityQueries {
               col("k.code") === col("l.c_id"))
           .select(col("cd.q_id").as("q_id"), col("k.vec_id").as("vec_id"),
             col("k.j").as("j"), col("l.dq").as("dq"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("n_id"))
-        adcRecombine(pairs)
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TopK)
+        adcTopK(adcRecombine(pairs))
       },
       Some {
         s"""WITH $pqCtesSql,
-           |cents AS (
-           |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings WHERE vec_id < $NCentroids),
-           |assign AS (
-           |  SELECT vec_id, c_id,
-           |    row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY ${cosineSql("e.embedding", "c_emb")} DESC, c_id) AS rk
-           |  FROM embeddings e CROSS JOIN cents),
-           |cells AS (SELECT vec_id, c_id AS cell FROM assign WHERE rk = 1),
-           |probes AS (
-           |  SELECT vec_id AS q_id, c_id AS cell FROM assign
-           |  WHERE vec_id < $NQueries AND rk <= $NProbe),
+           |${ivfIndexCteSql(NProbe)},
            |cand AS (
-           |  SELECT p.q_id, c.vec_id FROM probes p
-           |  JOIN cells c ON p.cell = c.cell AND p.q_id <> c.vec_id),
+           |  SELECT p.vec_id AS q_id, c.vec_id FROM probes p
+           |  JOIN cells c ON p.cell = c.cell AND p.vec_id <> c.vec_id),
            |parts AS (
            |  SELECT l.q_id, k.vec_id,
            |    $pqDSumsSql
@@ -237,8 +188,8 @@ object SimilarityQueries {
     // |anchors| rows.
     QueryDef("ann_recall_eval",
       (s, dir) => recallAtK(bruteTopK(s, dir), ivfTopK(s, dir)),
-      Some(s"""WITH $ivfCellsCteSql,
-              |got AS (SELECT q_id, n_id FROM ($ivfTopKSql) gv),
+      Some(s"""WITH ${ivfIndexCteSql(1)},
+              |got AS (${ivfSearchSql("q.cell AS cell")}),
               |$recallAtKSql""".stripMargin)),
 
     // NEGATIVE sampling for contrastive training (InfoNCE/triplet
@@ -262,11 +213,10 @@ object SimilarityQueries {
     // scan, no cos arithmetic at all.
     QueryDef("negative_sample",
       (s, dir) => {
-        val e = vecs(s, dir)
-        val q = e.filter(col("vec_id") < NQueries)
+        // the positives' window is cut by rank > TopK, the complement of
+        // a top-k, so it stays a plain window
         val wPos = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-        val wNeg = Window.partitionBy(col("q_id")).orderBy(col("h"), col("n_id"))
-        broadcast(q.as("q")).join(e.as("c"), col("q.vec_id") =!= col("c.vec_id"))
+        val negatives = queryPairs(vecs(s, dir))
           .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
             cosineFast(col("q.embedding"), col("c.embedding"),
               col("q.nrm"), col("c.nrm")).as("cos"),
@@ -274,8 +224,7 @@ object SimilarityQueries {
               col("c.vec_id").cast("string")), 41).as("h"))
           .withColumn("pos_rank", row_number().over(wPos))
           .filter(col("pos_rank") > TopK)
-          .withColumn("rk", row_number().over(wNeg).cast("long"))
-          .filter(col("rk") <= NNeg)
+        topK(negatives, Seq("q_id"), Seq(col("h"), col("n_id")), NNeg, "rk")
           .select(col("q_id"), col("n_id").as("neg_id"), col("rk"), col("cos"))
       },
       Some(s"""WITH p AS (
@@ -285,15 +234,10 @@ object SimilarityQueries {
                      "CAST(q.vec_id AS VARCHAR) || ':' || CAST(c.vec_id AS VARCHAR)", 41)} AS h,
               |    row_number() OVER (PARTITION BY q.vec_id
               |      ORDER BY ${cosineSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS pos_rank
-              |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-              |  WHERE q.vec_id < $NQueries),
-              |f AS (SELECT q_id, n_id, cos, h FROM p WHERE pos_rank > $TopK),
-              |r AS (
-              |  SELECT q_id, n_id, cos,
-              |    row_number() OVER (PARTITION BY q_id ORDER BY h, n_id) AS rk
-              |  FROM f)
-              |SELECT q_id, n_id AS neg_id, CAST(rk AS BIGINT) AS rk, cos
-              |FROM r WHERE rk <= $NNeg""".stripMargin)),
+              |  FROM $queryPairsSql),
+              |f AS (SELECT q_id, n_id, cos, h FROM p WHERE pos_rank > $TopK)
+              |SELECT q_id, n_id AS neg_id, rk, cos FROM (
+              |${topKSql("q_id, n_id, cos", "f", "q_id", "h, n_id", NNeg, "rk")})""".stripMargin)),
 
     // per-DIMENSION embedding moments — the dimension-collapse /
     // dead-axis check run on a representation before trusting it
@@ -315,11 +259,8 @@ object SimilarityQueries {
     // rows.
     QueryDef("embedding_dim_stats",
       (s, dir) => {
-        val mp = QueryDef.microPoints(col("v").cast("double"))
-        Tables(s, dir, "embeddings")
-          .select(posexplode(col("embedding")))
-          .select((col("pos") + 1).cast("long").as("dim"), col("col").as("v"))
-          .select(col("dim"), mp.as("u"))
+        perDim(Tables(s, dir, "embeddings"))
+          .select(col("dim"), QueryDef.microPoints(col("x")).as("u"))
           .groupBy(col("dim"))
           .agg(count(lit(1)).as("n"),
             sum(col("u").cast("decimal(38,0)")).as("s"),
@@ -333,13 +274,10 @@ object SimilarityQueries {
               .otherwise(0L).as("is_dead"))
       },
       Some(s"""WITH ex AS (
-              |  SELECT unnest(list_transform(range(1, len(embedding) + 1),
-              |    i -> struct_pack(dim := i,
-              |      u := ${QueryDef.microPointsSql("CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)")}))) AS e
-              |  FROM embeddings),
+              |  SELECT dim, ${QueryDef.microPointsSql("x")} AS u FROM (${perDimSql()})),
               |agg AS (
-              |  SELECT e.dim AS dim, COUNT(*) AS n, SUM(e.u) AS s,
-              |    SUM(CAST(e.u AS HUGEINT) * e.u) AS ss
+              |  SELECT dim, COUNT(*) AS n, SUM(u) AS s,
+              |    SUM(CAST(u AS HUGEINT) * u) AS ss
               |  FROM ex GROUP BY 1)
               |SELECT CAST(dim AS BIGINT) AS dim, n,
               |  CAST(s // n AS BIGINT) AS mean_u,
@@ -572,8 +510,8 @@ object SimilarityQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"), sigCol.as("bucket"),
-            sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
-        cosineTopK(broadcast(e.filter(col("vec_id") < NQueries).as("q")).join(e.as("c"),
+            l2Norm(col("embedding")).as("nrm"))
+        cosineTopK(broadcast(e.filter(isQuery).as("q")).join(e.as("c"),
             col("q.bucket") === col("c.bucket") && col("q.vec_id") =!= col("c.vec_id")),
           col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
           cosineFast(col("q.embedding"), col("c.embedding"), col("q.nrm"), col("c.nrm")),
@@ -581,8 +519,8 @@ object SimilarityQueries {
       },
       Some(s"""WITH sig AS (
               |  SELECT vec_id, embedding, CAST($sigSql AS BIGINT) AS bucket FROM embeddings)
-              |${queryTopKSql("sig q JOIN sig c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id",
-                   "q.bucket AS bucket")}""".stripMargin)),
+              |${cosineTopKSql("sig q JOIN sig c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id" +
+                   s" WHERE ${isQuerySql("q.vec_id")}", carry = Seq("q.bucket AS bucket"))}""".stripMargin)),
 
     // hybrid dense+sparse retrieval with reciprocal-rank fusion
     // (Cormack, Clarke & Buettcher, SIGIR 2009), query-by-example: for
@@ -604,10 +542,7 @@ object SimilarityQueries {
       (s, dir) => {
         // dense leg: exact cosine, query side broadcast
         val e = vecs(s, dir)
-        val qd = e.filter(col("vec_id") < NQueries)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("nrm").as("q_nrm"))
-        val cos = broadcast(qd).join(e, col("q_id") =!= col("vec_id"))
+        val cos = broadcast(queryVecs(e)).join(e, col("q_id") =!= col("vec_id"))
           .select(col("q_id"), col("vec_id").as("doc_id"),
             cosineFast(col("q_emb"), col("embedding"),
               col("q_nrm"), col("nrm")).as("cos"))
@@ -636,16 +571,12 @@ object SimilarityQueries {
           .select(col("q_id"), col("doc_id"), col("rank_s"))
         // fusion: a doc missing from one leg's pool contributes 0 from
         // that leg (the standard RRF treatment of unranked documents)
-        val fW = Window.partitionBy(col("q_id"))
-          .orderBy(col("rrf_micro").desc, col("doc_id"))
-        dense.join(sparse, Seq("q_id", "doc_id"), "full_outer")
+        val fused = dense.join(sparse, Seq("q_id", "doc_id"), "full_outer")
           .select(col("q_id"), col("doc_id"),
             (coalesce(expr(s"1000000 div ($RrfK + rank_d)"), lit(0L)) +
               coalesce(expr(s"1000000 div ($RrfK + rank_s)"), lit(0L)))
               .as("rrf_micro"))
-          .withColumn("rank", row_number().over(fW).cast("long"))
-          .filter(col("rank") <= HybridTopK)
-          .select(col("q_id"), col("doc_id"), col("rrf_micro"), col("rank"))
+        topK(fused, Seq("q_id"), Seq(col("rrf_micro").desc, col("doc_id")), HybridTopK)
       },
       Some(s"""${DedupQueries.shCte},
               |qsh AS (SELECT doc_id AS q_id, s FROM sh WHERE doc_id < $NQueries),
@@ -654,21 +585,13 @@ object SimilarityQueries {
               |  FROM qsh q JOIN sh c ON q.s = c.s AND c.doc_id <> q.q_id
               |  GROUP BY 1, 2),
               |sparse AS (
-              |  SELECT q_id, doc_id, rank_s FROM (
-              |    SELECT i.q_id, i.doc_id,
-              |      row_number() OVER (PARTITION BY i.q_id
-              |        ORDER BY round(CAST(i.i AS DOUBLE) / CAST(sa.n + sb.n - i.i AS DOUBLE), 6) DESC, i.doc_id) AS rank_s
-              |    FROM inter i
-              |    JOIN sizes sa ON sa.doc_id = i.q_id
-              |    JOIN sizes sb ON sb.doc_id = i.doc_id) t
-              |  WHERE rank_s <= $RrfPoolK),
+              |${topKSql("i.q_id, i.doc_id",
+                   "inter i JOIN sizes sa ON sa.doc_id = i.q_id JOIN sizes sb ON sb.doc_id = i.doc_id",
+                   "i.q_id", "round(CAST(i.i AS DOUBLE) / CAST(sa.n + sb.n - i.i AS DOUBLE), 6) DESC, i.doc_id",
+                   RrfPoolK, "rank_s")}),
               |dense AS (
-              |  SELECT q_id, doc_id, rank_d FROM (
-              |    SELECT q.vec_id AS q_id, c.vec_id AS doc_id,
-              |      row_number() OVER (PARTITION BY q.vec_id
-              |        ORDER BY ${cosineSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS rank_d
-              |    FROM embeddings q JOIN embeddings c ON q.vec_id < $NQueries AND c.vec_id <> q.vec_id) t
-              |  WHERE rank_d <= $RrfPoolK),
+              |  SELECT q_id, n_id AS doc_id, rank AS rank_d FROM (
+              |${cosineTopKSql(queryPairsSql, RrfPoolK)})),
               |fused AS (
               |  SELECT COALESCE(d.q_id, sp.q_id) AS q_id,
               |    COALESCE(d.doc_id, sp.doc_id) AS doc_id,
@@ -677,10 +600,7 @@ object SimilarityQueries {
               |  FROM dense d FULL OUTER JOIN sparse sp
               |    ON d.q_id = sp.q_id AND d.doc_id = sp.doc_id)
               |SELECT q_id, doc_id, CAST(rrf_micro AS BIGINT) AS rrf_micro, rank FROM (
-              |  SELECT q_id, doc_id, rrf_micro,
-              |    CAST(row_number() OVER (PARTITION BY q_id ORDER BY rrf_micro DESC, doc_id) AS BIGINT) AS rank
-              |  FROM fused) t
-              |WHERE rank <= $HybridTopK""".stripMargin)),
+              |${topKSql("q_id, doc_id, rrf_micro", "fused", "q_id", "rrf_micro DESC, doc_id", HybridTopK)})""".stripMargin)),
 
     // MMR diversity rerank (Carbonell & Goldstein, SIGIR 1998) — the
     // post-retrieval stage every RAG/curation pipeline runs: from each
@@ -702,22 +622,16 @@ object SimilarityQueries {
       (s, dir) => {
         import s.implicits._
         val e = vecs(s, dir)
-        val qs = e.filter(col("vec_id") < NQueries)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("nrm").as("q_nrm"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("rel_u").desc, col("n_id"))
         // [[QueryDef.eager]]: the corpus-wide relevance scan + rank
         // window runs ONCE; both sides of the candidate self-join read
         // the ≤|Q|·CandK cached rows.
-        val cand = QueryDef.eager(e.crossJoin(broadcast(qs))
+        val cand = QueryDef.eager(topK(e.crossJoin(broadcast(queryVecs(e)))
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"), col("embedding"),
             col("nrm"),
             QueryDef.microPoints(cosineFast(col("embedding"), col("q_emb"),
-              col("nrm"), col("q_nrm"))).as("rel_u"))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= MmrCandK))
+              col("nrm"), col("q_nrm"))).as("rel_u")),
+          Seq("q_id"), Seq(col("rel_u").desc, col("n_id")), MmrCandK, "rk"))
         // one marker row per candidate (j = -1) so a query whose pool
         // has a single member still forms a group — the pairwise join
         // alone would drop it while the oracle's base case keeps it
@@ -770,14 +684,9 @@ object SimilarityQueries {
       Some {
         val key = "10000000000" // packs (score, -n_id) into one BIGINT argmax key
         s"""WITH RECURSIVE cand AS (
-           |  SELECT q_id, n_id, rel_u FROM (
-           |    SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-           |      ${QueryDef.microPointsSql(cosineSql("q.embedding", "c.embedding"))} AS rel_u,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY ${QueryDef.microPointsSql(cosineSql("q.embedding", "c.embedding"))} DESC, c.vec_id) AS rk
-           |    FROM embeddings q JOIN embeddings c
-           |      ON q.vec_id < $NQueries AND q.vec_id <> c.vec_id) t
-           |  WHERE rk <= $MmrCandK),
+           |  SELECT q_id, n_id, cos AS rel_u FROM (
+           |${cosineTopKSql(queryPairsSql, MmrCandK,
+                QueryDef.microPointsSql(cosineSql("q.embedding", "c.embedding")))})),
            |sims AS (
            |  SELECT a.q_id, a.n_id AS i, b.n_id AS j,
            |    ${QueryDef.microPointsSql(cosineSql("ea.embedding", "eb.embedding"))} AS sim_u
@@ -899,16 +808,9 @@ object SimilarityQueries {
       },
       Some(s"""${DedupQueries.frozenCellsCteSql(DedupQueries.CellTargetRows)},
               |probes AS (
-              |  SELECT vec_id, embedding, c_id FROM assign WHERE rk <= $GraphNProbe),
-              |edges AS (
-              |  SELECT p.vec_id AS src, b.vec_id AS dst,
-              |    ${cosineSql("p.embedding", "b.embedding")} AS cos,
-              |    row_number() OVER (PARTITION BY p.vec_id
-              |      ORDER BY ${cosineSql("p.embedding", "b.embedding")} DESC, b.vec_id) AS rank
-              |  FROM probes p JOIN cells b
-              |    ON p.c_id = b.c_id AND p.vec_id <> b.vec_id)
-              |SELECT src, dst, cos, rank FROM edges
-              |WHERE rank <= $KnnGraphK""".stripMargin)),
+              |  SELECT vec_id, embedding, c_id FROM assign WHERE rk <= $GraphNProbe)
+              |${cosineTopKSql("probes q JOIN cells c ON q.c_id = c.c_id AND q.vec_id <> c.vec_id",
+                   KnnGraphK, names = ("src", "dst"))}""".stripMargin)),
 
     // PageRank over the k-NN graph — graph centrality as a CURATION
     // signal: a vector heavily linked by its neighborhood is a cluster
@@ -966,19 +868,10 @@ object SimilarityQueries {
     // ride along to pin code-range sanity (0..255) in the same pass.
     QueryDef("embedding_quantize",
       (s, dir) => {
-        val ex = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("vec_id"), (col("pos") + 1).cast("long").as("dim"),
-            col("col").cast("double").as("x"))
-        val stats = ex.groupBy(col("dim"))
-          .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-        ex.join(broadcast(stats), Seq("dim"))
-          .withColumn("qv",
-            when(col("mx") === col("mn"), lit(0L))
-              .otherwise(floor((col("x") - col("mn")) *
-                (lit(255.0) / (col("mx") - col("mn"))) + lit(0.5)).cast("long")))
-          .withColumn("deq",
-            col("mn") + col("qv").cast("double") * ((col("mx") - col("mn")) / lit(255.0)))
+        val ex = perDim(Tables(s, dir, "embeddings"), "vec_id")
+        ex.join(broadcast(sq8Stats(ex)), Seq("dim"))
+          .withColumn("qv", sq8Code(col("x"), col("mn"), col("mx")))
+          .withColumn("deq", sq8Decode(col("qv"), col("mn"), col("mx")))
           .withColumn("se_pico",
             floor((col("x") - col("deq")) * (col("x") - col("deq")) *
               lit(1000000000000.0) + lit(0.5)).cast("long"))
@@ -986,22 +879,14 @@ object SimilarityQueries {
           .agg(sum(col("se_pico")).as("sse_pico"),
             min(col("qv")).as("q_min"), max(col("qv")).as("q_max"))
       },
-      Some("""WITH ex AS (
-             |  SELECT vec_id, unnest(list_transform(range(1, len(embedding) + 1),
-             |    i -> struct_pack(dim := i,
-             |      x := CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)))) AS e
-             |  FROM embeddings),
-             |flat AS (SELECT vec_id, e.dim AS dim, e.x AS x FROM ex),
-             |stats AS (SELECT dim, min(x) AS mn, max(x) AS mx FROM flat GROUP BY 1),
+      Some(s"""WITH $sq8StatsCteSql,
              |q AS (
-             |  SELECT vec_id,
-             |    CASE WHEN mx = mn THEN 0
-             |         ELSE CAST(floor((x - mn) * (255.0 / (mx - mn)) + 0.5) AS BIGINT) END AS qv,
+             |  SELECT vec_id, ${sq8CodeSql("x")} AS qv,
              |    x, mn, mx
-             |  FROM flat JOIN stats USING (dim)),
+             |  FROM flat JOIN st USING (dim)),
              |d AS (
              |  SELECT vec_id, qv,
-             |    x - (mn + CAST(qv AS DOUBLE) * ((mx - mn) / 255.0)) AS e
+             |    x - (${sq8DecodeSql("qv")}) AS e
              |  FROM q)
              |SELECT vec_id,
              |  CAST(SUM(CAST(floor(e * e * 1000000000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS sse_pico,
@@ -1026,55 +911,28 @@ object SimilarityQueries {
     QueryDef("ann_sq8",
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
-        val flat = emb.select(col("vec_id"), posexplode(col("embedding")))
-          .select(col("pos"), col("col").cast("double").as("x"))
-        val stats = flat.groupBy(col("pos"))
-          .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("mn"), col("mx")))).as("st"))
-          .select(transform(col("st"), e => e.getField("mn")).as("mna"),
-            transform(col("st"), e => e.getField("mx")).as("mxa"))
+        val stats = sq8Stats(perDim(emb))
+          .agg(array_sort(collect_list(struct(col("dim"), col("mn"), col("mx")))).as("st"))
+          .select(col("st.mn").as("mna"), col("st.mx").as("mxa"))
+        // every component decoded from its SQ8 code, in array order
         val dq = emb.crossJoin(broadcast(stats))
-          .select(col("vec_id"),
-            transform(sequence(lit(0), size(col("embedding")) - 1), i => {
-              val x = element_at(col("embedding"), i + 1).cast("double")
-              val mn = element_at(col("mna"), i + 1)
-              val mx = element_at(col("mxa"), i + 1)
-              val qv = when(mx === mn, lit(0.0))
-                .otherwise(floor((x - mn) * (lit(255.0) / (mx - mn)) + lit(0.5)))
-              mn + qv * ((mx - mn) / lit(255.0))
-            }).as("dq"))
-        val got = cosineTopK(broadcast(dq.filter(col("vec_id") < NQueries).as("q"))
-            .join(dq.as("c"), col("q.vec_id") =!= col("c.vec_id")),
+          .select(col("vec_id"), transform(col("embedding"), (x, i) => {
+            val (mn, mx) = (element_at(col("mna"), i + 1), element_at(col("mxa"), i + 1))
+            sq8Decode(sq8Code(x.cast("double"), mn, mx), mn, mx)
+          }).as("dq"))
+        val got = cosineTopK(queryPairs(dq),
           col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
           cosine(col("q.dq"), col("c.dq")), TopK)
         recallAtK(bruteTopK(s, dir), got)
       },
-      Some {
-        val cosDq = graft.functions.TextFunctions.cosineSql("q.dq", "c.dq")
-        s"""WITH fl AS (
-           |  SELECT vec_id, unnest(list_transform(range(1, len(embedding) + 1),
-           |    i -> struct_pack(dim := i,
-           |      x := CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)))) AS e
-           |  FROM embeddings),
-           |flat AS (SELECT vec_id, e.dim AS dim, e.x AS x FROM fl),
-           |st AS (SELECT dim, min(x) AS mn, max(x) AS mx FROM flat GROUP BY 1),
-           |dq AS (
-           |  SELECT vec_id,
-           |    list(mn + (CASE WHEN mx = mn THEN 0.0
-           |      ELSE floor((x - mn) * (255.0 / (mx - mn)) + 0.5) END)
-           |      * ((mx - mn) / 255.0) ORDER BY dim) AS dq
-           |  FROM flat JOIN st USING (dim) GROUP BY vec_id),
-           |scored AS (
-           |  SELECT q.vec_id AS q_id, c.vec_id AS n_id, $cosDq AS cos
-           |  FROM dq q JOIN dq c ON q.vec_id < $NQueries AND c.vec_id <> q.vec_id),
-           |got AS (
-           |  SELECT q_id, n_id FROM (
-           |    SELECT q_id, n_id,
-           |      row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
-           |    FROM scored) t
-           |  WHERE rank <= $TopK),
-           |$recallAtKSql""".stripMargin
-      }),
+      Some(s"""WITH $sq8StatsCteSql,
+              |dq AS (
+              |  SELECT vec_id, list(${sq8DecodeSql(sq8CodeSql("x"))} ORDER BY dim) AS dq
+              |  FROM flat JOIN st USING (dim) GROUP BY vec_id),
+              |got AS (
+              |${cosineTopKSql(s"dq q JOIN dq c ON q.vec_id <> c.vec_id WHERE ${isQuerySql("q.vec_id")}",
+                   cos = cosineSql("q.dq", "c.dq"))}),
+              |$recallAtKSql""".stripMargin)),
 
     // BINARY (sign-bit) quantized ANN + exact rerank — the 1-bit/dim
     // compression tier below SQ8: each vector collapses to its
@@ -1110,16 +968,14 @@ object SimilarityQueries {
               "acc + IF(element_at(u, i) > 0, shiftleft(1L, i - 1), 0L))").as("lo"),
             expr("aggregate(sequence(33, 64), 0L, (acc, i) -> " +
               "acc + IF(element_at(u, i) > 0, shiftleft(1L, i - 33), 0L))").as("hi"))
-        val qc = codes.filter(col("vec_id") < NQueries)
+        val qc = codes.filter(isQuery)
           .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
-        val wHam = Window.partitionBy(col("q_id")).orderBy(col("hamming"), col("n_id"))
         val cand = broadcast(qc).join(codes.as("c"), col("q_id") =!= col("c.vec_id"))
           .select(col("q_id"), col("c.vec_id").as("n_id"),
             expr("CAST(bit_count(qlo ^ lo) + bit_count(qhi ^ hi) AS BIGINT)")
               .as("hamming"))
-          .withColumn("hrk", row_number().over(wHam))
-          .filter(col("hrk") <= HammingCand)
-        rerankRecall(s, dir, cand.select(col("q_id"), col("n_id")))
+        rerankRecall(s, dir, topK(cand, Seq("q_id"), Seq(col("hamming"), col("n_id")),
+          HammingCand, "hrk").select(col("q_id"), col("n_id")))
       },
       Some {
         val mp = QueryDef.microPointsSql("CAST(x AS DOUBLE)")
@@ -1136,14 +992,10 @@ object SimilarityQueries {
            |        THEN (CAST(1 AS BIGINT) << CAST(i - 33 AS INTEGER)) ELSE 0 END)) AS BIGINT) AS hi
            |  FROM uu),
            |cand AS (
-           |  SELECT q_id, n_id FROM (
-           |    SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-           |      row_number() OVER (PARTITION BY q.vec_id
-           |        ORDER BY bit_count(xor(q.lo, c.lo)) + bit_count(xor(q.hi, c.hi)),
-           |          c.vec_id) AS hrk
-           |    FROM codes q JOIN codes c
-           |      ON q.vec_id < $NQueries AND c.vec_id <> q.vec_id) t
-           |  WHERE hrk <= $HammingCand)""".stripMargin)
+           |${topKSql("q.vec_id AS q_id, c.vec_id AS n_id",
+                s"codes q JOIN codes c ON q.vec_id <> c.vec_id WHERE ${isQuerySql("q.vec_id")}",
+                "q.vec_id", "bit_count(xor(q.lo, c.lo)) + bit_count(xor(q.hi, c.hi)), c.vec_id",
+                HammingCand, "hrk")})""".stripMargin)
       }),
 
     // Adaptive (Matryoshka two-pass) retrieval — the serving pattern
@@ -1173,29 +1025,18 @@ object SimilarityQueries {
       (s, dir) => {
         val ed = Tables(s, dir, "embeddings")
           .select(col("vec_id"), slice(col("embedding"), 1, AdaptiveDim).as("emb"))
-          .withColumn("nrm", sqrt(dotFast(col("emb"), col("emb"))))
-        val qd = broadcast(ed.filter(col("vec_id") < NQueries)
+          .withColumn("nrm", l2Norm(col("emb")))
+        val qd = broadcast(ed.filter(isQuery)
           .select(col("vec_id").as("q_id"), col("emb").as("qe_t"), col("nrm").as("qn_t")))
-        val wLow = Window.partitionBy(col("q_id")).orderBy(col("cos_t").desc, col("n_id"))
         val cand = qd.join(ed.as("c"), col("q_id") =!= col("c.vec_id"))
           .select(col("q_id"), col("c.vec_id").as("n_id"),
             cosineFast(col("qe_t"), col("c.emb"), col("qn_t"), col("c.nrm")).as("cos_t"))
-          .withColumn("lrk", row_number().over(wLow))
-          .filter(col("lrk") <= HammingCand)
-          .select(col("q_id"), col("n_id"))
-        rerankRecall(s, dir, cand)
+        rerankRecall(s, dir, topK(cand, Seq("q_id"), Seq(col("cos_t").desc, col("n_id")),
+          HammingCand, "lrk").select(col("q_id"), col("n_id")))
       },
       Some {
         val cosT = cosineSql(s"q.embedding[1:$AdaptiveDim]", s"c.embedding[1:$AdaptiveDim]")
-        rerankRecallSql(
-          s"""WITH cand AS (
-             |  SELECT q_id, n_id FROM (
-             |    SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             |      row_number() OVER (PARTITION BY q.vec_id
-             |        ORDER BY $cosT DESC, c.vec_id) AS lrk
-             |    FROM embeddings q JOIN embeddings c
-             |      ON q.vec_id < $NQueries AND c.vec_id <> q.vec_id) t
-             |  WHERE lrk <= $HammingCand)""".stripMargin)
+        rerankRecallSql(s"WITH cand AS (\n${cosineTopKSql(queryPairsSql, HammingCand, cosT)})")
       }),
 
     // TRIANGLE COUNT + global clustering coefficient over the k-NN
@@ -1278,26 +1119,22 @@ object SimilarityQueries {
         val sideA = e.filter(col("vec_id") % 2 === 0)
         val sideB = e.filter(col("vec_id") % 2 === 1)
         val anchors = sideA.filter(col("vec_id") < MarginAnchors)
-        val wA = Window.partitionBy(col("a_id")).orderBy(col("c").desc, col("b_id"))
-        val topA = broadcast(anchors.as("a")).join(sideB.as("b"), lit(true))
+        val topA = topK(broadcast(anchors.as("a")).join(sideB.as("b"), lit(true))
           .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
             QueryDef.microPoints(cosineFast(col("a.embedding"), col("b.embedding"),
-              col("a.nrm"), col("b.nrm"))).as("c"))
-          .withColumn("rk", row_number().over(wA))
-          .filter(col("rk") <= K)
+              col("a.nrm"), col("b.nrm"))).as("c")),
+          Seq("a_id"), Seq(col("c").desc, col("b_id")), K, "rk")
         val aAgg = topA.groupBy(col("a_id"))
           .agg(sum(col("c")).as("s_a"),
             max(when(col("rk") === 1, col("b_id"))).as("b_id"),
             max(when(col("rk") === 1, col("c"))).as("c_best"))
         val bSet = aAgg.select(col("b_id").as("vec_id")).distinct()
-        val wB = Window.partitionBy(col("bb_id")).orderBy(col("c").desc, col("a2_id"))
-        val bAgg = broadcast(sideB.join(bSet, Seq("vec_id")).as("bb"))
+        val bAgg = topK(broadcast(sideB.join(bSet, Seq("vec_id")).as("bb"))
           .join(sideA.as("a2"), lit(true))
           .select(col("bb.vec_id").as("bb_id"), col("a2.vec_id").as("a2_id"),
             QueryDef.microPoints(cosineFast(col("bb.embedding"), col("a2.embedding"),
-              col("bb.nrm"), col("a2.nrm"))).as("c"))
-          .withColumn("rk", row_number().over(wB))
-          .filter(col("rk") <= K)
+              col("bb.nrm"), col("a2.nrm"))).as("c")),
+          Seq("bb_id"), Seq(col("c").desc, col("a2_id")), K, "rk")
           .groupBy(col("bb_id")).agg(sum(col("c")).as("s_b"))
         aAgg.join(bAgg, col("b_id") === col("bb_id"))
           .withColumn("margin_micro",
@@ -1317,10 +1154,7 @@ object SimilarityQueries {
            |  SELECT an.vec_id AS a_id, b.vec_id AS b_id,
            |    ${QueryDef.microPointsSql(cosineSql("an.embedding", "b.embedding"))} AS c
            |  FROM an JOIN b ON true),
-           |ra AS (
-           |  SELECT *, row_number() OVER (PARTITION BY a_id ORDER BY c DESC, b_id) AS rk
-           |  FROM ab),
-           |ta AS (SELECT * FROM ra WHERE rk <= $K),
+           |ta AS (${topKSql("*", "ab", "a_id", "c DESC, b_id", K, "rk")}),
            |agga AS (
            |  SELECT a_id, SUM(c) AS s_a,
            |    max(CASE WHEN rk = 1 THEN b_id END) AS b_id,
@@ -1332,10 +1166,8 @@ object SimilarityQueries {
            |  SELECT bb.vec_id AS bb_id, a.vec_id AS a2_id,
            |    ${QueryDef.microPointsSql(cosineSql("bb.embedding", "a.embedding"))} AS c
            |  FROM bb JOIN a ON true),
-           |rb AS (
-           |  SELECT *, row_number() OVER (PARTITION BY bb_id ORDER BY c DESC, a2_id) AS rk
-           |  FROM ba),
-           |aggb AS (SELECT bb_id, SUM(c) AS s_b FROM rb WHERE rk <= $K GROUP BY 1),
+           |tb AS (${topKSql("*", "ba", "bb_id", "c DESC, a2_id", K, "rk")}),
+           |aggb AS (SELECT bb_id, SUM(c) AS s_b FROM tb GROUP BY 1),
            |m AS (
            |  SELECT agga.a_id, agga.b_id, agga.c_best,
            |    CASE WHEN s_a + s_b > 0 THEN
@@ -1366,12 +1198,9 @@ object SimilarityQueries {
     // |labels| wide, so the collect_list is bounded, never corpus-sized.
     QueryDef("embedding_class_sep",
       (s, dir) => {
-        val mp = QueryDef.microPoints(col("v").cast("double"))
-        val g = Tables(s, dir, "embeddings")
-          .select(col("label"), posexplode(col("embedding")))
-          .select(col("label").cast("long").as("label"),
-            (col("pos") + 1).cast("long").as("dim"), col("col").as("v"))
-          .select(col("label"), col("dim"), mp.as("u"))
+        val g = perDim(Tables(s, dir, "embeddings"), "label")
+          .select(col("label").cast("long").as("label"), col("dim"),
+            QueryDef.microPoints(col("x")).as("u"))
           .groupBy(col("dim"), col("label"))
           .agg(count(lit(1)).as("n_l"),
             sum(col("u").cast("decimal(38,0)")).as("s_l"),
@@ -1404,14 +1233,11 @@ object SimilarityQueries {
             QueryDef.microPoints(ssb / ssw).as("fisher_micro"))
       },
       Some(s"""WITH ex AS (
-              |  SELECT label, unnest(list_transform(range(1, len(embedding) + 1),
-              |    i -> struct_pack(dim := i,
-              |      u := ${QueryDef.microPointsSql("CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)")}))) AS e
-              |  FROM embeddings),
+              |  SELECT label, dim, ${QueryDef.microPointsSql("x")} AS u FROM (${perDimSql("label")})),
               |g AS (
-              |  SELECT e.dim AS dim, CAST(label AS BIGINT) AS label,
-              |    COUNT(*) AS n_l, SUM(e.u) AS s_l,
-              |    SUM(CAST(e.u AS HUGEINT) * e.u) AS ss_l
+              |  SELECT dim, CAST(label AS BIGINT) AS label,
+              |    COUNT(*) AS n_l, SUM(u) AS s_l,
+              |    SUM(CAST(u AS HUGEINT) * u) AS ss_l
               |  FROM ex GROUP BY 1, 2),
               |d AS (
               |  SELECT dim, CAST(SUM(n_l) AS BIGINT) AS n, COUNT(*) AS n_labels,
@@ -1449,17 +1275,12 @@ object SimilarityQueries {
         val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         MatryoshkaDims.map { d =>
           val ed = e.select(col("vec_id"), slice(col("embedding"), 1, d).as("emb"))
-            .withColumn("nrm", sqrt(dotFast(col("emb"), col("emb"))))
-          val q = ed.filter(col("vec_id") < NQueries)
-          val w = Window.partitionBy(col("q_id"))
-            .orderBy(col("cos_d").desc, col("n_id"))
-          val topd = broadcast(q.as("q"))
-            .join(ed.as("c"), col("q.vec_id") =!= col("c.vec_id"))
+            .withColumn("nrm", l2Norm(col("emb")))
+          val topd = topK(queryPairs(ed)
             .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
               cosineFast(col("q.emb"), col("c.emb"),
-                col("q.nrm"), col("c.nrm")).as("cos_d"))
-            .withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= TopK)
+                col("q.nrm"), col("c.nrm")).as("cos_d")),
+            Seq("q_id"), Seq(col("cos_d").desc, col("n_id")), TopK, "rk")
             .select(col("q_id"), col("n_id"))
           // truth-pair score shift: attach n-side then q-side truncated
           // vectors by streaming the corpus past the broadcast tiny frame
@@ -1497,13 +1318,7 @@ object SimilarityQueries {
            |  SELECT t.q_id, CAST(COUNT(p.n_id) AS BIGINT) AS hits
            |  FROM ($bruteTopKSql) t
            |  LEFT JOIN (
-           |    SELECT * FROM (
-           |      SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-           |        row_number() OVER (PARTITION BY q.vec_id
-           |          ORDER BY $cosD DESC, c.vec_id) AS rk
-           |      FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-           |      WHERE q.vec_id < $NQueries) x
-           |    WHERE rk <= $TopK) p
+           |${cosineTopKSql(queryPairsSql, cos = cosD)}) p
            |    ON p.q_id = t.q_id AND p.n_id = t.n_id
            |  GROUP BY t.q_id) h
            |JOIN (
@@ -1533,7 +1348,7 @@ object SimilarityQueries {
   private def rerankRecall(s: SparkSession, dir: String,
       cand: DataFrame): DataFrame = {
     val e = vecs(s, dir)
-    val qv = broadcast(e.filter(col("vec_id") < NQueries)
+    val qv = broadcast(e.filter(isQuery)
       .select(col("vec_id").as("qv_id"), col("embedding").as("qe"), col("nrm").as("qn")))
     val got = cosineTopK(cand
         .join(e.as("cv"), col("n_id") === col("cv.vec_id"))
@@ -1581,15 +1396,8 @@ object SimilarityQueries {
   private def rerankRecallSql(prefixCtes: String): String =
     s"""$prefixCtes,
        |got AS (
-       |  SELECT q_id, n_id FROM (
-       |    SELECT cand.q_id, cand.n_id,
-       |      row_number() OVER (PARTITION BY cand.q_id
-       |        ORDER BY ${cosineSql("qe.embedding", "ce.embedding")} DESC,
-       |          cand.n_id) AS rank
-       |    FROM cand
-       |    JOIN embeddings qe ON qe.vec_id = cand.q_id
-       |    JOIN embeddings ce ON ce.vec_id = cand.n_id) t
-       |  WHERE rank <= $TopK),
+       |${cosineTopKSql("cand JOIN embeddings q ON q.vec_id = cand.q_id " +
+          "JOIN embeddings c ON c.vec_id = cand.n_id")}),
        |$recallAtKSql""".stripMargin
 
   /** `embedding_matryoshka` truncation dims: 64 = the full width, a
@@ -1600,6 +1408,49 @@ object SimilarityQueries {
     * contract). */
   private def MatryoshkaDims = Seq(64, 32, 16)
 
+
+  /** The corpus `e` flattened per dimension: one row per (`keep`...,
+    * `dim`), `dim` the 1-based BIGINT position, with the component as
+    * DOUBLE `x`. [[perDimSql]] is the DuckDB twin over `embeddings`. */
+  private def perDim(e: DataFrame, keep: String*): DataFrame =
+    e.select(keep.map(col) :+ posexplode(col("embedding")): _*)
+      .select(keep.map(col) ++ Seq((col("pos") + 1).cast("long").as("dim"),
+        col("col").cast("double").as("x")): _*)
+
+  private def perDimSql(keep: String*): String = {
+    val k = keep.map(_ + ", ").mkString
+    s"""SELECT ${k}e.dim AS dim, e.x AS x FROM (
+       |  SELECT ${k}unnest(list_transform(range(1, len(embedding) + 1),
+       |    i -> struct_pack(dim := i, x := CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)))) AS e
+       |  FROM embeddings)""".stripMargin
+  }
+
+  /** SQ8 (FAISS's scalar quantizer, per-dimension affine map to
+    * 0..255): the per-dim range (dim, mn, mx) of a [[perDim]] frame, a
+    * component's code on its range (0 on a constant dimension) and the
+    * value a code decodes to. [[sq8StatsCteSql]], [[sq8CodeSql]] and
+    * [[sq8DecodeSql]] are the DuckDB twins. */
+  private def sq8Stats(flat: DataFrame): DataFrame =
+    flat.groupBy(col("dim")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+
+  private def sq8Code(x: Column, mn: Column, mx: Column): Column =
+    when(mx === mn, lit(0L))
+      .otherwise(floor((x - mn) * (lit(255.0) / (mx - mn)) + lit(0.5)).cast("long"))
+
+  private def sq8Decode(qv: Column, mn: Column, mx: Column): Column =
+    mn + qv.cast("double") * ((mx - mn) / lit(255.0))
+
+  /** The `flat(vec_id, dim, x)` and `st(dim, mn, mx)` CTEs. */
+  private def sq8StatsCteSql: String =
+    s"""flat AS (${perDimSql("vec_id")}),
+       |st AS (SELECT dim, min(x) AS mn, max(x) AS mx FROM flat GROUP BY 1)""".stripMargin
+
+  /** Over columns `mn` and `mx` in scope. */
+  private def sq8CodeSql(x: String): String =
+    s"CASE WHEN mx = mn THEN 0 ELSE CAST(floor(($x - mn) * (255.0 / (mx - mn)) + 0.5) AS BIGINT) END"
+
+  private def sq8DecodeSql(qv: String): String =
+    s"mn + CAST($qv AS DOUBLE) * ((mx - mn) / 255.0)"
 
   /** Triangle/wedge/transitivity stats over an UNDIRECTED distinct
     * (u < v) edge table (`graph_triangles` core, factored for planted
@@ -1630,91 +1481,119 @@ object SimilarityQueries {
   private def vecs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
-        sqrt(dotFast(col("embedding"), col("embedding"))).as("nrm"))
+        l2Norm(col("embedding")).as("nrm"))
+
+  /** The query set: the first [[NQueries]] vectors. [[isQuerySql]] is
+    * the DuckDB twin over the vec_id column `vecId`. */
+  private def isQuery: Column = col("vec_id") < NQueries
+
+  private def isQuerySql(vecId: String): String = s"$vecId < $NQueries"
+
+  /** The query set of `e` (vec_id, embedding, nrm) as (q_id, q_emb, q_nrm). */
+  private def queryVecs(e: DataFrame): DataFrame =
+    e.filter(isQuery).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+      col("nrm").as("q_nrm"))
+
+  /** Query × corpus pairs of a vector frame `v` (with vec_id): the
+    * broadcast query set `q` joined to every other vector `c`.
+    * [[queryPairsSql]] is the DuckDB twin over `embeddings`. */
+  private def queryPairs(v: DataFrame): DataFrame =
+    broadcast(v.filter(isQuery).as("q")).join(v.as("c"), col("q.vec_id") =!= col("c.vec_id"))
+
+  private def queryPairsSql: String =
+    s"embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id WHERE ${isQuerySql("q.vec_id")}"
 
   /** Brute-force exact top-[[TopK]]: broadcast query set × streamed
     * corpus scan, per-partition heap after one hash partition on q_id.
     * ONE definition serving `ann_bruteforce` AND `ann_recall_eval`'s
     * ground truth — an eval that reimplements its subject can drift. */
-  private[graft] def bruteTopK(s: SparkSession, dir: String): DataFrame = {
-    val e = vecs(s, dir)
-    cosineTopK(broadcast(e.filter(col("vec_id") < NQueries).as("q"))
-        .join(e.as("c"), col("q.vec_id") =!= col("c.vec_id")),
+  private[graft] def bruteTopK(s: SparkSession, dir: String): DataFrame =
+    cosineTopK(queryPairs(vecs(s, dir)),
       col("q.vec_id").as("q_id"), col("c.vec_id").as("n_id"),
       cosineFast(col("q.embedding"), col("c.embedding"), col("q.nrm"), col("c.nrm")),
       TopK)
-  }
 
   /** Cosine top-k, the ranking tail the brute-force, LSH, IVF, SQ8,
     * rerank and k-NN graph searches share: the probe × candidate rows
     * of `pairs` projected to (probe id, candidate id, `carry`..., cos),
     * numbered `rank` per probe by cos desc with a candidate-id
-    * tiebreak, cut at `k`. `probe`/`cand` carry their output names;
-    * `cos` is the pair's score. The rank filter lowers to a
-    * WindowGroupLimit, so each input partition is pre-trimmed to k rows
-    * per probe before the probe-keyed exchange. */
+    * tiebreak, cut at `k` by [[ProfilingQueries.topK]]. `probe`/`cand`
+    * carry their output names; `cos` is the pair's score. The rank
+    * filter lowers to a WindowGroupLimit, so each input partition is
+    * pre-trimmed to k rows per probe before the probe-keyed exchange. */
   private[graft] def cosineTopK(pairs: DataFrame, probe: Column, cand: Column,
       cos: Column, k: Int, carry: Column*): DataFrame = {
     val scored = pairs.select((Seq(probe, cand) ++ carry :+ cos.as("cos")): _*)
     val Array(p, c) = scored.columns.take(2)
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col(p)).orderBy(col("cos").desc, col(c))).cast("long"))
-      .filter(col("rank") <= k)
+    topK(scored, Seq(p), Seq(col("cos").desc, col(c)), k)
   }
 
-  /** IVF nprobe=1 top-[[TopK]]: nearest-cell assignment + cell-local
-    * search. Shared by `ann_ivf` and `ann_recall_eval`'s candidate
-    * side. The QUERY side runs its own |Q|×k [[centroidRanks]] instead
-    * of filtering the corpus-wide one, so the expensive corpus
+  /** DuckDB twin of [[cosineTopK]]: over the `from` pairs of probe
+    * vectors `q` and candidates `c` (both with vec_id), (q.vec_id,
+    * c.vec_id) named `names`, then `carry`, then `cos` (default the
+    * cosine of the two embeddings) AS cos, ranked per probe by cos desc
+    * with a candidate-id tiebreak and cut at `k`. */
+  private def cosineTopKSql(from: String, k: Int = TopK,
+      cos: String = cosineSql("q.embedding", "c.embedding"),
+      names: (String, String) = ("q_id", "n_id"), carry: Seq[String] = Nil): String =
+    topKSql((Seq(s"q.vec_id AS ${names._1}", s"c.vec_id AS ${names._2}") ++ carry :+ s"$cos AS cos")
+      .mkString(", "), from, "q.vec_id", s"$cos DESC, c.vec_id", k)
+
+  /** The IVF index over the corpus `e` (vec_id, embedding, nrm): its
+    * cells — every vector in the nearest of the [[NCentroids]] frozen
+    * centroids, as (vec_id, embedding, nrm, cell) — and the query set's
+    * probe lists, its `nprobe` nearest cells as (q_id, q_emb, q_nrm,
+    * cell). The query side ranks its own |Q|×k [[centroidRanks]]
+    * instead of filtering the corpus-wide one, so the expensive corpus
     * assignment subplan is consumed exactly ONCE (the join's probe
-    * side), not twice, with no persist needed (pinned in PlanAuditSpec
-    * for every IVF query). */
-  private[graft] def ivfTopK(s: SparkSession, dir: String): DataFrame = {
-    val e = vecs(s, dir)
+    * side), with no persist needed (pinned in PlanAuditSpec for every
+    * IVF query). [[ivfIndexCteSql]] is the DuckDB twin. */
+  private def ivfIndex(e: DataFrame, nprobe: Int): (DataFrame, DataFrame) = {
     val cents = centroids(e, NCentroids)
     val cells = centroidRanks(e, cents).filter(col("rk") === 1)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("c_id").as("cell"))
-    val q = centroidRanks(e.filter(col("vec_id") < NQueries), cents)
-      .filter(col("rk") === 1)
+    val probes = centroidRanks(e.filter(isQuery), cents).filter(col("rk") <= nprobe)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"), col("c_id").as("cell"))
-    cosineTopK(broadcast(q).join(cells.as("c"),
-        q("cell") === col("c.cell") && col("q_id") =!= col("c.vec_id")),
-      col("q_id"), col("c.vec_id").as("n_id"),
-      cosineFast(col("q_emb"), col("c.embedding"), col("q_nrm"), col("c.nrm")),
-      TopK, q("cell").as("cell"))
+    (cells, probes)
   }
 
-  /** Shared cents/assign/cells CTE text of the IVF oracles. */
-  private def ivfCellsCteSql: String =
-    s"""cents AS (
-       |  SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings WHERE vec_id < $NCentroids),
+  /** DuckDB twin of [[ivfIndex]]: the cents/assign/cells CTEs and
+    * `probes` (vec_id, embedding, cell), the query set's `nprobe`
+    * nearest cells. */
+  private def ivfIndexCteSql(nprobe: Int): String =
+    s"""${centsSql(NCentroids.toString)},
        |assign AS $centroidRanksSql,
-       |cells AS (SELECT vec_id, embedding, c_id AS cell FROM assign WHERE rk = 1)""".stripMargin
+       |cells AS (SELECT vec_id, embedding, c_id AS cell FROM assign WHERE rk = 1),
+       |probes AS (
+       |  SELECT vec_id, embedding, c_id AS cell FROM assign
+       |  WHERE ${isQuerySql("vec_id")} AND rk <= $nprobe)""".stripMargin
 
-  /** DuckDB twin of [[ivfTopK]]'s final search (expects
-    * [[ivfCellsCteSql]] in scope). */
-  private def ivfTopKSql: String =
-    queryTopKSql("cells q JOIN cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id",
-      "q.cell AS cell")
+  /** IVF search: each query's cosine top-[[TopK]] among the vectors of
+    * its `nprobe` probed cells ([[ivfIndex]]), `carry` columns riding
+    * along (the probe list is `q`). [[ivfSearchSql]] is the DuckDB twin. */
+  private def ivfSearch(s: SparkSession, dir: String, nprobe: Int,
+      carry: Column*): DataFrame = {
+    val (cells, probes) = ivfIndex(vecs(s, dir), nprobe)
+    cosineTopK(broadcast(probes).as("q").join(cells.as("c"),
+        col("q.cell") === col("c.cell") && col("q_id") =!= col("c.vec_id")),
+      col("q_id"), col("c.vec_id").as("n_id"),
+      cosineFast(col("q_emb"), col("c.embedding"), col("q_nrm"), col("c.nrm")),
+      TopK, carry: _*)
+  }
+
+  /** DuckDB twin of [[ivfSearch]] (expects [[ivfIndexCteSql]] in scope). */
+  private def ivfSearchSql(carry: String*): String =
+    cosineTopKSql("probes q JOIN cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id",
+      carry = carry)
+
+  /** IVF nprobe=1 top-[[TopK]], carrying the query's cell: shared by
+    * `ann_ivf` and `ann_recall_eval`'s candidate side. */
+  private[graft] def ivfTopK(s: SparkSession, dir: String): DataFrame =
+    ivfSearch(s, dir, 1, col("q.cell").as("cell"))
 
   /** DuckDB twin of [[bruteTopK]]. */
-  private def bruteTopKSql: String =
-    queryTopKSql("embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id")
-
-  /** DuckDB twin of [[cosineTopK]] for the query set: `join` pairs the
-    * query vectors `q` with candidates `c` (both with vec_id and
-    * embedding); `carry` columns ride between n_id and cos. */
-  private def queryTopKSql(join: String, carry: String*): String =
-    s"""SELECT * FROM (
-       |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,${carry.map(" " + _ + ",").mkString}
-       |    ${cosineSql("q.embedding", "c.embedding")} AS cos,
-       |    row_number() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${cosineSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS rank
-       |  FROM $join
-       |  WHERE q.vec_id < $NQueries) t
-       |WHERE rank <= $TopK""".stripMargin
+  private def bruteTopKSql: String = cosineTopKSql(queryPairsSql)
 
   /** Power-iteration supersteps for `graph_pagerank` (damping 0.85,
     * teleport base 150000 micro-units on a 1e6 scale). */
@@ -1987,15 +1866,9 @@ object SimilarityQueries {
   /** DuckDB twin of [[knnEdges]]: frozen cells + `kept` edge CTE. */
   private def knnEdgesCteSql: String =
     s"""${DedupQueries.frozenCellsCteSql(DedupQueries.CellTargetRows)},
-       |edges AS (
-       |  SELECT a.vec_id AS src, b.vec_id AS dst,
-       |    ${cosineSql("a.embedding", "b.embedding")} AS cos,
-       |    row_number() OVER (PARTITION BY a.vec_id
-       |      ORDER BY ${cosineSql("a.embedding", "b.embedding")} DESC, b.vec_id) AS rank
-       |  FROM cells a JOIN cells b
-       |    ON a.c_id = b.c_id AND a.vec_id <> b.vec_id),
        |kept AS MATERIALIZED (
-       |  SELECT src, dst, cos, rank FROM edges WHERE rank <= $KnnGraphK)""".stripMargin
+       |${cosineTopKSql("cells q JOIN cells c ON q.c_id = c.c_id AND q.vec_id <> c.vec_id",
+            KnnGraphK, names = ("src", "dst"))})""".stripMargin
   // MATERIALIZED: the pagerank oracle references `kept` once per
   // superstep; inlined, DuckDB would re-expand the |cell|² cosine join
   // 6× and OOM at sf0.1 (observed) — materialize the K·|corpus| edge
@@ -2057,21 +1930,17 @@ object SimilarityQueries {
   /** PQ encode: every corpus vector → (vec_id, j, code), code = argmin
     * codeword per subspace (tie → lower c_id). The 4-bytes-per-vector
     * frame a serving system would persist. */
-  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame = {
-    val aw = Window.partitionBy(col("vec_id"), col("j"))
-      .orderBy(col("d"), col("c_id"))
-    pqSubspaces(Tables(s, dir, "embeddings"), "vec_id")
-      .join(broadcast(pqCodebook(s, dir)), Seq("j"))
-      .withColumn("d", pqL22(col("v"), col("c")))
-      .withColumn("rk", row_number().over(aw))
-      .filter(col("rk") === 1)
+  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
+    topK(pqSubspaces(Tables(s, dir, "embeddings"), "vec_id")
+        .join(broadcast(pqCodebook(s, dir)), Seq("j"))
+        .withColumn("d", pqL22(col("v"), col("c"))),
+      Seq("vec_id", "j"), Seq(col("d"), col("c_id")), 1, "rk")
       .select(col("vec_id"), col("j"), col("c_id").as("code"))
-  }
 
   /** Per-query ADC lookup table: (q_id, j, c_id, dq) — |Q|·m·codewords
     * rows, built once per query batch and broadcast. */
   private[graft] def pqLut(s: SparkSession, dir: String): DataFrame =
-    pqSubspaces(Tables(s, dir, "embeddings").filter(col("vec_id") < NQueries), "q_id")
+    pqSubspaces(Tables(s, dir, "embeddings").filter(isQuery), "q_id")
       .join(broadcast(pqCodebook(s, dir)), Seq("j"))
       .withColumn("dq", pqL22(col("v"), col("c")))
       .select(col("q_id"), col("j"), col("c_id"), col("dq"))
@@ -2082,6 +1951,10 @@ object SimilarityQueries {
     adcRecombine(codes.join(broadcast(lut),
         codes("j") === lut("j") && codes("code") === lut("c_id"))
       .select(lut("q_id"), codes("vec_id"), codes("j"), lut("dq")))
+
+  /** The ADC top-[[TopK]] per query: smallest `adc` first, n_id tiebreak. */
+  private def adcTopK(scores: DataFrame): DataFrame =
+    topK(scores, Seq("q_id"), Seq(col("adc"), col("n_id")), TopK)
 
   /** ADC recombination over (q_id, vec_id, j, dq) pairs: per-j partial
     * distances recombined with ORDER-INSENSITIVE conditional sums (all
@@ -2120,23 +1993,16 @@ object SimilarityQueries {
        |  FROM vsub v JOIN csub c ON v.j = c.j),
        |codes AS (
        |  SELECT vec_id, j, c_id AS code FROM (
-       |    SELECT vec_id, j, c_id,
-       |      row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c_id) AS rk
-       |    FROM vd) t WHERE rk = 1),
+       |${topKSql("vec_id, j, c_id", "vd", "vec_id, j", "d, c_id", 1, "rk")})),
        |lut AS (
        |  SELECT q.vec_id AS q_id, q.j, c.c_id, ${pqL22Sql("q.v", "c.c")} AS dq
-       |  FROM vsub q JOIN csub c ON q.j = c.j WHERE q.vec_id < $NQueries)""".stripMargin
+       |  FROM vsub q JOIN csub c ON q.j = c.j WHERE ${isQuerySql("q.vec_id")})""".stripMargin
 
   private def pqDSumsSql: String = (0 until PqM)
     .map(j => s"SUM(CASE WHEN k.j = $j THEN l.dq ELSE 0.0 END) AS d$j")
     .mkString(",\n    ")
 
   private def pqRankSql: String =
-    s"""SELECT q_id, n_id, adc, rank FROM (
-       |  SELECT q_id, vec_id AS n_id,
-       |    round(d0 + d1 + d2 + d3, 6) AS adc,
-       |    CAST(row_number() OVER (PARTITION BY q_id
-       |      ORDER BY round(d0 + d1 + d2 + d3, 6), vec_id) AS BIGINT) AS rank
-       |  FROM parts WHERE vec_id <> q_id) t
-       |WHERE rank <= $TopK""".stripMargin
+    topKSql("q_id, vec_id AS n_id, round(d0 + d1 + d2 + d3, 6) AS adc",
+      "parts WHERE vec_id <> q_id", "q_id", "round(d0 + d1 + d2 + d3, 6), vec_id", TopK)
 }

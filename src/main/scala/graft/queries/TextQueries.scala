@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.queries.ProfilingQueries.{topK, topKSql}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SessionScope
@@ -489,17 +490,13 @@ object TextQueries {
     // floor — cheaper than persisting a corpus-token-sized tf frame).
     QueryDef("inverted_index",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val tf = ProfilingQueries.widened(Tables(s, dir, "documents"))
           .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
           .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
         val dfcf = tf.groupBy(col("term"))
           .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
           .filter(col("df") >= 2L)
-        val w = Window.partitionBy(col("term"))
-          .orderBy(col("tf").desc, col("doc_id"))
-        val postings = tf.withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= PostingsCap)
+        val postings = topK(tf, Seq("term"), Seq(col("tf").desc, col("doc_id")), PostingsCap, "rk")
           .groupBy(col("term"))
           .agg(array_join(
             transform(
@@ -857,18 +854,19 @@ object TextQueries {
              |    '\d{6,}', '<NUM>', 'g')) AS redacted_md5
              |FROM aug""".stripMargin)),
 
-    // document fingerprinting: md5 of whitespace-normalized text (exact
-    // content identity) + order-sensitive polynomial rolling hash over
-    // the token stream
+    // document fingerprinting: the exact-dup fingerprint (md5 of the
+    // NFC → lower → whitespace-run normalised text, the key dedup_exact
+    // groups by) + order-sensitive polynomial rolling hash over the
+    // token stream
     QueryDef("doc_fingerprint",
       (s, dir) => Tables(s, dir, "documents")
         .select(
           col("doc_id"),
-          md5(regexp_replace(lower(col("text")), "\\s+", " ")).as("fp_md5"),
+          exactFp(col("text")).as("fp_md5"),
           rollingHash(tokens(col("text"))).as("fp_roll")),
       Some(s"""$toksCte
               |SELECT doc_id,
-              |  md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp_md5,
+              |  ${exactFpSql("text")} AS fp_md5,
               |  ${rollingHashSql("t")} AS fp_roll
               |FROM toks""".stripMargin)),
 
@@ -950,20 +948,16 @@ object TextQueries {
     // (see `bm25_search`).
     QueryDef("tfidf_keywords",
       (s, dir) => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id"))
-          .orderBy(col("score_micro").desc, col("tk"))
         val tfs = docTokenCounts(Tables(s, dir, "documents"), "tf")
         val dfs = tfs.groupBy(col("tk")).agg(count(lit(1)).as("df"))
         val nDocs = Tables(s, dir, "documents").agg(count(lit(1)).as("n"))
-        tfs.join(dfs, Seq("tk"))
+        val scored = tfs.join(dfs, Seq("tk"))
           .crossJoin(broadcast(nDocs))
           .withColumn("score_micro", QueryDef.microPoints(
             col("tf").cast("double") *
               ((col("n").cast("double") - col("df").cast("double") + lit(0.5)) /
                 (col("df").cast("double") + lit(0.5)))))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= TfidfTopK)
+        topK(scored, Seq("doc_id"), Seq(col("score_micro").desc, col("tk")), TfidfTopK)
           .select(col("doc_id"), col("rank"), col("tk").as("token"),
             col("score_micro"))
       },
@@ -977,14 +971,9 @@ object TextQueries {
               |  SELECT tfs.doc_id, tfs.tk,
               |    ${QueryDef.microPointsSql(
                      "CAST(tf AS DOUBLE) * ((CAST(n AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))")} AS score_micro
-              |  FROM tfs JOIN dfs USING (tk), nd),
-              |ranked AS (
-              |  SELECT doc_id, tk, score_micro,
-              |    CAST(row_number() OVER (
-              |      PARTITION BY doc_id ORDER BY score_micro DESC, tk) AS BIGINT) AS rank
-              |  FROM scored)
-              |SELECT doc_id, rank, tk AS token, score_micro
-              |FROM ranked WHERE rank <= $TfidfTopK""".stripMargin)),
+              |  FROM tfs JOIN dfs USING (tk), nd)
+              |SELECT doc_id, rank, tk AS token, score_micro FROM (
+              |${topKSql("doc_id, tk, score_micro", "scored", "doc_id", "score_micro DESC, tk", TfidfTopK)})""".stripMargin)),
 
     // Flesch reading-ease readability — the classic curation feature a
     // quality pipeline buckets documents by (education-level targeting,

@@ -150,9 +150,15 @@ class CurationPropsSpec extends SparkSuite {
     val exact = SparkEntry.queries("dedup_exact")(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_dups")).toMap
     val calib = SparkEntry.queries("quality_calibration")(spark, dir).collect()
+    val fp = SparkEntry.queries("doc_fingerprint")(spark, dir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("fp_md5")).toMap
     spark.catalog.clearCache()
     assert(exact == (0L until others.length.toLong).map(_ -> 1L).toMap +
       (others.length.toLong -> variants.length.toLong), exact.toString)
+    // doc_fingerprint's fp_md5 is the same exact-dup key: one value for
+    // the variants, a distinct one for each near-miss
+    val variantFps = fp.filter(_._1 >= others.length).values.toSet
+    assert(variantFps.size == 1 && fp.values.toSet.size == others.length + 1, fp.toString)
     assert(calib.map(_.getAs[Long]("n_docs")).sum == others.length + variants.length)
     assert(calib.map(_.getAs[Long]("n_dup")).sum == variants.length, calib.mkString(", "))
   }

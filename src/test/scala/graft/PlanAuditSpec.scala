@@ -273,8 +273,17 @@ class PlanAuditSpec extends SparkSuite {
     // candidate set — the pre-trim matters MOST there
     // weighted_sample's per-language priority top-k leans on the same
     // pre-trim: without it the exchange moves the corpus, with it
-    // <= k rows per input partition per language
-    for (q <- Seq("ann_bruteforce", "mmr_rerank", "knn_graph", "weighted_sample")) {
+    // <= k rows per input partition per language. The rest of the list
+    // is every other query whose ranked cut goes through
+    // ProfilingQueries.topK (graph_pagerank and graph_triangles
+    // checkpoint their edge list at construction, so their final plans
+    // hold no window to inspect).
+    for (q <- Seq("ann_bruteforce", "mmr_rerank", "knn_graph", "weighted_sample",
+        "ann_ivf", "ann_ivf_nprobe", "ann_pq", "ann_ivfpq", "ann_recall_eval",
+        "negative_sample", "ann_lsh", "hybrid_search", "hubness_indegree",
+        "knn_graph_nprobe", "ann_sq8", "ann_binary", "ann_adaptive", "bitext_margin",
+        "embedding_matryoshka", "inverted_index", "tfidf_keywords", "bm25_search",
+        "retrieval_mrr")) {
       val p = plan(SparkEntry.queries(q)(spark, dir))
       assert(p.contains("WindowGroupLimit"), s"$q: no WindowGroupLimit pre-trim\n$p")
     }

@@ -4,10 +4,11 @@ import graft.queries.ProfilingQueries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Contract tests for the two ranking kernels in ProfilingQueries:
-  * `bucketedRank` must equal the naive single-window `row_number`, and
-  * `shardedTopK` must equal the naive per-key top-k, on planted frames
-  * that hit their edge cases. */
+/** Contract tests for the ranking kernels in ProfilingQueries:
+  * `bucketedRank` must equal the naive single-window `row_number`,
+  * `topK` a naive per-key sort-and-take, and `shardedTopK` the naive
+  * per-key top-k, on planted and generated frames that hit their edge
+  * cases. */
 class RankKernelsSpec extends SparkSuite {
 
   test("bucketedRank equals the naive row_number window: grouped, global, descending, edge ties, one-bucket group") {
@@ -41,6 +42,35 @@ class RankKernelsSpec extends SparkSuite {
     check(Nil, Seq(col("v"), col("id")), descending = false)
     check(Seq("g"), Seq(col("v").desc, col("id")), descending = true)
     check(Nil, Seq(col("v").desc, col("id").desc), descending = true)
+  }
+
+  test("topK equals a naive per-key sort-and-take: ascending, descending, tiebreak, k above the group, two-column key") {
+    import spark.implicits._
+    // pqCodes' shape: per (vec_id, j) the codeword c_id with the least
+    // distance d, ties to the lower c_id. Few distinct d values, so the
+    // tiebreak decides often; vec_id 9 has two rows, fewer than most k.
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val rows = (0 until 150).map(i => (rnd.nextInt(4).toLong, rnd.nextInt(3).toLong,
+          i.toLong, rnd.nextInt(5).toDouble)) ++
+        Seq((9L, 0L, 1000L, 1.0), (9L, 1L, 1001L, 1.0))
+      val df = rows.toDF("vec_id", "j", "c_id", "d")
+      for (keys <- Seq(Seq("vec_id"), Seq("vec_id", "j")); desc <- Seq(false, true);
+           k <- Seq(1, 3, 60)) {
+        val order = Seq(if (desc) col("d").desc else col("d"), col("c_id"))
+        val got = ProfilingQueries.topK(df, keys, order, k)
+        assert(got.schema("rank").dataType == org.apache.spark.sql.types.LongType)
+        val gotRows = got.select(col("vec_id"), col("j"), col("c_id"), col("rank"))
+          .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+        val keyOf = (r: (Long, Long, Long, Double)) =>
+          if (keys.size == 1) (r._1, 0L) else (r._1, r._2)
+        val want = rows.groupBy(keyOf).values.toSeq.flatMap { rs =>
+          rs.sortBy(r => (if (desc) -r._4 else r._4, r._3)).take(k).zipWithIndex
+            .map { case (r, i) => (r._1, r._2, r._3, i + 1L) }
+        }.sorted
+        assert(gotRows == want, s"seed=$seed keys=$keys desc=$desc k=$k")
+      }
+    }
   }
 
   test("shardedTopK equals one per-key window: k above the group, one shard, more shards than rows") {
