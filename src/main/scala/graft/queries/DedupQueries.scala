@@ -8,11 +8,14 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators over the `documents` corpus (and
   * embedding-space near-dup over `embeddings`) — the core of any
-  * large-scale training-data pipeline. Five algorithms, cheapest to most
-  * semantic:
+  * large-scale training-data pipeline. The core algorithms, cheapest to
+  * most semantic:
   *
   *  1. exact: hash-groupBy on normalized text — one shuffle on the text
-  *     hash, map-side combinable, the 100 TB workhorse.
+  *     hash, map-side combinable, the 100 TB workhorse; its Bloom-filter
+  *     batch probe (`dedup_bloom_probe`) and the edit-distance check of
+  *     LSH candidates (`dedup_edit_distance`) ride the same
+  *     normalization.
   *  2. n-gram Jaccard: MinHash-LSH candidate discovery → exact-Jaccard
   *     verification of candidates only. The all-pairs inverted-index
   *     self-join ([[allPairsJaccard]]) is quadratic in docs sharing hot
@@ -34,6 +37,13 @@ import org.apache.spark.sql.functions._
   *     tests — sign-LSH recall rises steeply with the threshold (→1 as
   *     cos → 1, the true near-dup regime; at this corpus's τ=0.4,
   *     which is "related", not "duplicate", it finds 16/59 pairs).
+  *     SemDeDup (`dedup_semantic*`) blocks by k-means cell instead and
+  *     verifies cosine within each cell.
+  *
+  * Around them sit the exact set-similarity and containment joins
+  * (prefix filtering, zero false negatives), the span-level detectors
+  * (winnowing fingerprints, exact duplicated substrings and their
+  * cleaner, both over K-char grams), and content-defined chunking.
   *
   * All hashing is [[graft.functions.TextFunctions.portableHash]] so the
   * DuckDB oracles reproduce results exactly. The oracles mirror the
@@ -178,6 +188,16 @@ object DedupQueries {
   private[queries] def jaccard(inter: Column, na: Column, nb: Column): Column =
     round(inter.cast("double") / (na + nb - inter).cast("double"), 6)
 
+  /** DuckDB twin of [[jaccard]] over an intersection count `i` and the
+    * two sides' sizes rows `sa` and `sb` (the [[shCte]] `sizes`). */
+  private[queries] def jaccardSql: String =
+    "round(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE), 6)"
+
+  /** The near-dup contract of the driver dedup queries: exact Jaccard
+    * ≥ this marks a verified pair ([[verifiedPairs]], [[pairsCteSql]]).
+    * A def (the recorded init-order trap, see [[WinnowK]]). */
+  private[graft] def NearDupTau: Double = 0.8
+
   /** Exact-Jaccard pairs for a given candidate-pair set (or all pairs
     * sharing ≥1 shingle when `cand` is None). Callers pass an already
     * persisted `sh` — the plan consumes it 3-4× (sizes + both join
@@ -247,9 +267,9 @@ object DedupQueries {
 
   /** THE verified near-dup pair set of the driver dedup queries: LSH
     * candidates over the capped shingle set `sh`, kept at exact
-    * Jaccard ≥ 0.8 (the threshold [[pairsCteSql]] mirrors). */
+    * Jaccard ≥ [[NearDupTau]] (the threshold [[pairsCteSql]] mirrors). */
   private[graft] def verifiedPairs(sh: DataFrame): DataFrame =
-    jaccardPairs(sh, Some(lshCandidates(sh))).filter(col("jaccard") >= 0.8)
+    jaccardPairs(sh, Some(lshCandidates(sh))).filter(col("jaccard") >= NearDupTau)
 
   /** Cluster labels (doc_id → cluster_id) of the verified near-dup
     * graph — the shared core of `dedup_clusters` AND `dedup_canonical`,
@@ -284,15 +304,21 @@ object DedupQueries {
     propagateMinLabels(verifiedPairs(sh).select(col("doc_a"), col("doc_b")))
   }
 
+  /** Supersteps of plain neighbor-min before pointer doubling joins
+    * in — the common tiny-diameter case never pays the extra join. */
+  private val ShortcutAfter = 5
+
+  /** Both orientations of a (doc_a, doc_b) pair list: discovery orders
+    * pairs doc_a < doc_b, and graph and contamination consumers are
+    * direction-agnostic. */
+  private def symmetric(pairs: DataFrame): DataFrame =
+    pairs.unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+
   /** Min-label propagation over an undirected near-dup pair list
     * (doc_a, doc_b) — the connected-components superstep loop of
     * [[clusterLabels]], factored so the cap/throw contract is testable
     * against synthetic degenerate graphs without crafting a corpus
     * whose LSH pairs happen to chain. */
-  /** Supersteps of plain neighbor-min before pointer doubling joins
-    * in — the common tiny-diameter case never pays the extra join. */
-  private val ShortcutAfter = 5
-
   private[graft] def propagateMinLabels(pairs: DataFrame,
       maxIter: Int = 20): DataFrame = {
     // symmetric edge list, eagerly CHECKPOINTED, not just persisted:
@@ -302,9 +328,7 @@ object DedupQueries {
     // corpus-scan subtree into its task binaries (the same measured
     // disease as embedding_pca_top's gram input: 1.5 MB binaries for
     // ≤D-row jobs). As a leaf, supersteps plan and ship in O(edges).
-    val edges = pairs
-      .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint()
+    val edges = symmetric(pairs).localCheckpoint()
     // each superstep's labels are MATERIALIZED with an eager
     // localCheckpoint, not a bare persist: the label table is a few
     // hundred rows, but un-truncated its lineage deepens by a
@@ -403,14 +427,37 @@ object DedupQueries {
     * re-runs the 16-min signature aggregation over the full shingle set
     * — measured ~1 s per re-run at sf0.1. Released by the caller's
     * clearCache sweep like every other shared intermediate here. */
-  private[graft] def lshCandidates(sh: DataFrame): DataFrame = {
+  private[graft] def lshCandidates(sh: DataFrame): DataFrame =
     // eager: the self-join consumes bands on BOTH sides concurrently
-    val bands = QueryDef.eager(minhashBands(sh))
-    bands.as("x").join(bands.as("y"), Seq("band", "sig"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
+    bucketPairs(QueryDef.eager(minhashBands(sh)), "doc_id", "sig",
+      Seq(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")))
+
+  /** Per-row band buckets: `df` projected to `carry` plus `band` (0
+    * until |bucketKeys|) and `key`, band b's bucket `bucketKeys(b)` —
+    * one explode of per-band structs. The index frame of every banded
+    * LSH join here: MinHash ([[minhashBands]]), SimHash bytes and
+    * embedding sign bits. [[bandRowsSql]] is the DuckDB twin. */
+  private[graft] def bandRows(df: DataFrame, carry: Seq[Column], key: String,
+      bucketKeys: Seq[Column]): DataFrame = {
+    val structs = bucketKeys.zipWithIndex.map { case (k, b) =>
+      struct(lit(b).as("band"), k.as(key))
+    }
+    val exploded = df.select(carry :+ explode(array(structs: _*)).as("bs"): _*)
+    exploded.select(exploded.columns.filter(_ != "bs").map(col) ++
+      Seq(col("bs.band").as("band"), col(s"bs.$key").as(key)): _*)
   }
+
+  /** THE banded bucket self-join: every pair of `bands` rows sharing a
+    * (band, `key`) bucket — an equi-join, so shuffle-partitioned by
+    * bucket and subquadratic — aliased x and y with x.`id` < y.`id`,
+    * projected to `out` and made distinct (a pair sharing several
+    * buckets is one row). [[bucketPairsSql]] is the DuckDB twin. */
+  private[graft] def bucketPairs(bands: DataFrame, id: String, key: String,
+      out: Seq[Column]): DataFrame =
+    bands.as("x").join(bands.as("y"), Seq("band", key))
+      .filter(col(s"x.$id") < col(s"y.$id"))
+      .select(out: _*)
+      .distinct()
 
   /** Per-doc MinHash band buckets (doc_id, band, sig) — the LSH index
     * frame both the full self-join ([[lshCandidates]]) and the
@@ -422,12 +469,8 @@ object DedupQueries {
     val minCols = (0 until K).map(i =>
       min(minhashDerived(col("h0"), col("h1"), i)).as(s"m$i"))
     val mh = hashed.groupBy("doc_id").agg(minCols.head, minCols.tail: _*)
-    val bandStructs = (0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", (0 until K / Bands).map(r => col(s"m${b * (K / Bands) + r}")): _*).as("sig"))
-    }
-    mh.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+    bandRows(mh, Seq(col("doc_id")), "sig", (0 until Bands).map(b =>
+      concat_ws("|", (0 until K / Bands).map(r => col(s"m${b * (K / Bands) + r}")): _*)))
   }
 
   /** Incremental (probe-side) LSH candidates: pairs whose LEFT end is
@@ -452,10 +495,9 @@ object DedupQueries {
   private val bandsCteSql: String = {
     val minSql = (0 until K)
       .map(i => s"min(${minhashDerivedSql("h0", "h1", i)}) AS m$i").mkString(",\n    ")
-    val bandSql = (0 until Bands).map { b =>
-      val cols = (0 until K / Bands).map(r => s"m${b * (K / Bands) + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, concat_ws('|', $cols) AS sig FROM mh"
-    }.mkString("\n  UNION ALL ")
+    val sigs = (0 until Bands).map { b =>
+      s"concat_ws('|', ${(0 until K / Bands).map(r => s"m${b * (K / Bands) + r}").mkString(", ")})"
+    }
     s"""hashed AS (SELECT doc_id, s,
        |    ${portableHashSql("s", 0)} AS h0,
        |    ${portableHashSql("s", 1)} AS h1
@@ -464,16 +506,31 @@ object DedupQueries {
        |    $minSql
        |  FROM hashed GROUP BY doc_id),
        |bands AS (
-       |  $bandSql)""".stripMargin
+       |  ${bandRowsSql("doc_id", "sig", sigs, "mh")})""".stripMargin
   }
+
+  /** DuckDB twin of [[bandRows]]: the body of a `bands` CTE, one
+    * `SELECT carry, b AS band, <bucketKeys(b)> AS key FROM from` per
+    * band, UNION ALL'd. */
+  private def bandRowsSql(carry: String, key: String, bucketKeys: Seq[String],
+      from: String): String =
+    bucketKeys.zipWithIndex
+      .map { case (k, b) => s"SELECT $carry, $b AS band, $k AS $key FROM $from" }
+      .mkString("\n  UNION ALL ")
+
+  /** DuckDB twin of [[bucketPairs]] over a `bands` CTE: the distinct
+    * `out` rows of every x/y pair sharing a (band, `key`) bucket with
+    * x.`id` < y.`id`. */
+  private def bucketPairsSql(id: String, key: String, out: String): String =
+    s"""SELECT DISTINCT $out
+       |  FROM bands x JOIN bands y ON x.band = y.band AND x.$key = y.$key AND x.$id < y.$id""".stripMargin
 
   /** DuckDB twin of [[lshCandidates]]: CTEs hashed/mh/bands/cand,
     * appended after [[shCte]]. */
   private val candCteSql: String =
     s"""$bandsCteSql,
        |cand AS (
-       |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       |  FROM bands x JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id)""".stripMargin
+       |  ${bucketPairsSql("doc_id", "sig", "x.doc_id AS doc_a, y.doc_id AS doc_b")})""".stripMargin
 
   /** DuckDB twin of [[lshCandidatesProbe]]: probe-restricted candidate
     * CTE — `probeCond` is a SQL predicate over `x.doc_id` selecting the
@@ -485,12 +542,28 @@ object DedupQueries {
        |  FROM bands x JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.doc_id <> y.doc_id
        |  WHERE $probeCond)""".stripMargin
 
+  /** THE arrival-batch split of the incremental queries
+    * (dedup_incremental, dedup_semantic_incremental, dedup_bloom_probe):
+    * `df` plus its max `id` as `mx` and `is_batch`, true on the top-10%
+    * id range — id·10 ≥ 9·(mx + 1), exact BIGINT arithmetic, an
+    * arrival-order proxy. [[arrivalBatchSql]] is the DuckDB twin. */
+  private[graft] def arrivalTagged(df: DataFrame, id: String): DataFrame =
+    df.crossJoin(broadcast(df.agg(max(col(id)).as("mx"))))
+      .withColumn("is_batch", col(id) * 10 >= (col("mx") + 1) * 9)
+
+  /** DuckDB twin of [[arrivalTagged]]: the `mx(m)` CTE over `table`'s
+    * `id`, and the predicate "`ref` is in the arrival batch" against it. */
+  private def arrivalMaxSql(id: String, table: String): String =
+    s"mx AS (SELECT max($id) AS m FROM $table)"
+  private def arrivalBatchSql(ref: String): String =
+    s"$ref * 10 >= 9 * ((SELECT m FROM mx) + 1)"
+
   /** DuckDB CTE fragments for exact-Jaccard candidate verification,
     * appended after [[candCteSql]] — ONE definition of the
     * shared-shingle intersection count ([[interCteSql]]) and of the
-    * J ≥ 0.8 threshold contract ([[pairsCteSql]]): five oracles share
-    * these, and an independently re-typed threshold in one of them
-    * would silently de-synchronize the suite. */
+    * J ≥ [[NearDupTau]] threshold contract ([[pairsCteSql]]): five
+    * oracles share these, and an independently re-typed threshold in
+    * one of them would silently de-synchronize the suite. */
   private val interCteSql =
     """inter AS (
       |  SELECT doc_a, doc_b, count(*) AS i
@@ -498,10 +571,34 @@ object DedupQueries {
       |  GROUP BY doc_a, doc_b)""".stripMargin
 
   private val pairsCteSql =
-    """pairs AS (
-      |  SELECT doc_a, doc_b FROM inter
-      |  JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-      |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE), 6) >= 0.8)""".stripMargin
+    s"""pairs AS (
+       |  ${jaccardAtLeastSql("doc_a, doc_b", "inter", NearDupTau)})""".stripMargin
+
+  /** The all-pairs shared-shingle count `name(doc_a, doc_b, i)` over
+    * `sh`, doc_a < doc_b — the quadratic exact join the set-similarity,
+    * containment and LSH-recall oracles check their subject against. */
+  private def sharedShinglesCteSql(name: String): String =
+    s"""$name AS (
+       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
+       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** The `cols` of the pairs of `inter(doc_a, doc_b, i)` whose
+    * [[jaccardSql]] is at least `tau` — the DuckDB twin of
+    * [[jaccardPairs]] followed by a Jaccard filter. */
+  private def jaccardAtLeastSql(cols: String, inter: String, tau: Double): String =
+    s"""SELECT $cols FROM $inter
+       |  JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
+       |  WHERE $jaccardSql >= $tau""".stripMargin
+
+  /** DuckDB twin of [[verifiedPairs]] over the capped shingle set:
+    * the shCappedCte/cand/inter CTE chain ending in `pairs(doc_a,
+    * doc_b)`, the head of every oracle on the verified near-dup pairs. */
+  private val verifiedPairsCteSql =
+    s"""$shCappedCte,
+       |$candCteSql,
+       |$interCteSql,
+       |$pairsCteSql""".stripMargin
 
   /** Full cluster-label closure chain ending in
     * `lab(doc_id, cluster_id)` — the DuckDB twin of [[clusterLabels]]
@@ -511,10 +608,7 @@ object DedupQueries {
     * `corpus_cleaned` so the closure definition cannot de-synchronize
     * between them. */
   private val clustersCteSql =
-    s"""$shCappedCte,
-       |$candCteSql,
-       |$interCteSql,
-       |$pairsCteSql,
+    s"""$verifiedPairsCteSql,
        |edges AS (
        |  SELECT doc_a AS u, doc_b AS v FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs),
@@ -565,7 +659,7 @@ object DedupQueries {
     * shingle self-join explodes on hot shingles at scale. */
   def allPairsJaccard(s: SparkSession, dir: String): DataFrame =
     jaccardPairs(shingleSet(s, dir).persist(), None)
-      .filter(col("jaccard") >= 0.8)
+      .filter(col("jaccard") >= NearDupTau)
 
   /** All-pairs embedding cosine — the QUADRATIC (BroadcastNestedLoop)
     * small-N recall verifier for the sign-LSH bucketed form. Never a
@@ -687,10 +781,7 @@ object DedupQueries {
           .groupBy(col("src_a"), col("src_b"))
           .agg(count(lit(1)).as("n_pairs"))
       },
-      Some(s"""$shCappedCte,
-              |$candCteSql,
-              |$interCteSql,
-              |$pairsCteSql
+      Some(s"""$verifiedPairsCteSql
               |SELECT least(da.source, db.source) AS src_a,
               |  greatest(da.source, db.source) AS src_b,
               |  COUNT(*) AS n_pairs
@@ -712,9 +803,7 @@ object DedupQueries {
       Some(s"""$shCappedCte,
               |$candCteSql,
               |$interCteSql
-              |SELECT doc_a, doc_b, round(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE), 6) AS jaccard
-              |FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-              |WHERE round(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE), 6) >= 0.8""".stripMargin)),
+              |${jaccardAtLeastSql(s"doc_a, doc_b, $jaccardSql AS jaccard", "inter", NearDupTau)}""".stripMargin)),
 
     // MinHash + LSH dedup: retained doc_ids after dropping every doc
     // with a verified (J ≥ 0.8) LSH-candidate partner of smaller id
@@ -728,10 +817,7 @@ object DedupQueries {
           .join(dupped, Seq("doc_id"), "left_anti")
       },
       Some {
-        s"""$shCappedCte,
-           |$candCteSql,
-           |$interCteSql,
-           |$pairsCteSql
+        s"""$verifiedPairsCteSql
            |SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_b FROM pairs)""".stripMargin
       }),
 
@@ -862,10 +948,7 @@ object DedupQueries {
         val splits = Tables(s, dir, "documents").select(
           col("doc_id"), ProfilingQueries.splitCol.as("split"))
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
-        val pairs = verifiedPairs(sh).select(col("doc_a"), col("doc_b"))
-        val sym = pairs.unionByName(
-          pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-        sym
+        symmetric(verifiedPairs(sh).select(col("doc_a"), col("doc_b")))
           .join(splits.as("x"), col("doc_a") === col("x.doc_id"))
           .join(splits.as("y"), col("doc_b") === col("y.doc_id"))
           .filter(col("x.split") =!= "train" && col("y.split") === "train")
@@ -875,10 +958,7 @@ object DedupQueries {
             col("n_train_partners"))
       },
       Some {
-        s"""$shCappedCte,
-           |$candCteSql,
-           |$interCteSql,
-           |$pairsCteSql,
+        s"""$verifiedPairsCteSql,
            |sym AS (
            |  SELECT doc_a, doc_b FROM pairs
            |  UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -908,16 +988,13 @@ object DedupQueries {
     // so both engines cut identically.
     QueryDef("dedup_incremental",
       (s, dir) => {
-        val docs = Tables(s, dir, "documents")
-        val mx = docs.agg(max(col("doc_id")).as("mx"))
-        val flags = docs.crossJoin(broadcast(mx))
-          .select(col("doc_id"),
-            (col("doc_id") * 10 >= (col("mx") + 1) * 9).as("is_batch"))
+        val flags = arrivalTagged(Tables(s, dir, "documents"), "doc_id")
+          .select(col("doc_id"), col("is_batch"))
         val batch = flags.filter(col("is_batch")).select(col("doc_id"))
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
         val cand = lshCandidatesProbe(sh, batch)
         val verified = jaccardPairs(sh, Some(cand))
-          .filter(col("jaccard") >= 0.8)
+          .filter(col("jaccard") >= NearDupTau)
           .select(col("doc_a"), col("doc_b"))
         verified
           .join(flags.as("y"), col("doc_b") === col("y.doc_id"))
@@ -928,22 +1005,18 @@ object DedupQueries {
             when(col("hit") === 1, lit("corpus")).otherwise(lit("batch"))
               .as("reason"))
       },
-      Some {
-        val isBatch = (id: String) =>
-          s"$id * 10 >= 9 * ((SELECT m FROM mx) + 1)"
-        s"""$shCappedCte,
-           |mx AS (SELECT max(doc_id) AS m FROM documents),
-           |${candProbeCteSql(isBatch("x.doc_id"))},
-           |$interCteSql,
-           |$pairsCteSql
-           |SELECT p.doc_a AS doc_id,
-           |  CASE WHEN max(CASE WHEN NOT (${isBatch("p.doc_b")})
-           |                     THEN 1 ELSE 0 END) = 1
-           |       THEN 'corpus' ELSE 'batch' END AS reason
-           |FROM pairs p
-           |WHERE NOT (${isBatch("p.doc_b")}) OR p.doc_b < p.doc_a
-           |GROUP BY p.doc_a""".stripMargin
-      }),
+      Some(s"""$shCappedCte,
+              |${arrivalMaxSql("doc_id", "documents")},
+              |${candProbeCteSql(arrivalBatchSql("x.doc_id"))},
+              |$interCteSql,
+              |$pairsCteSql
+              |SELECT p.doc_a AS doc_id,
+              |  CASE WHEN max(CASE WHEN NOT (${arrivalBatchSql("p.doc_b")})
+              |                     THEN 1 ELSE 0 END) = 1
+              |       THEN 'corpus' ELSE 'batch' END AS reason
+              |FROM pairs p
+              |WHERE NOT (${arrivalBatchSql("p.doc_b")}) OR p.doc_b < p.doc_a
+              |GROUP BY p.doc_a""".stripMargin)),
 
     // SimHash fingerprints: 32-bit, one aggregation pass over token
     // occurrences (map-side combinable — scales like a word count)
@@ -964,31 +1037,23 @@ object DedupQueries {
     // Hamming check on candidates
     QueryDef("simhash_pairs",
       (s, dir) => {
-        val simhash = queriesByName("dedup_simhash")(s, dir)
-        val bandStructs = (0 until 4).map(k =>
-          struct(lit(k).as("band"), shiftright(col("simhash"), k * 8).bitwiseAND(lit(255L)).as("byte")))
-        val bands = simhash.select(col("doc_id"), col("simhash"),
-          explode(array(bandStructs: _*)).as("bs"))
-          .select(col("doc_id"), col("simhash"), col("bs.band").as("band"), col("bs.byte").as("byte"))
-        bands.as("x").join(bands.as("y"), Seq("band", "byte"))
-          .filter(col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-            bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
-          .distinct()
+        val bands = bandRows(queriesByName("dedup_simhash")(s, dir),
+          Seq(col("doc_id"), col("simhash")), "byte",
+          (0 until 4).map(k => shiftright(col("simhash"), k * 8).bitwiseAND(lit(255L))))
+        bucketPairs(bands, "doc_id", "byte",
+          Seq(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+            bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming")))
           .filter(col("hamming") <= 3)
       },
       Some {
-        val bandSql = (0 until 4)
-          .map(k => s"SELECT doc_id, simhash, $k AS band, (simhash >> ${k * 8}) & 255 AS byte FROM sim")
-          .mkString("\n  UNION ALL ")
+        val hamming = "CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT)"
+        val bytes = (0 until 4).map(k => s"(simhash >> ${k * 8}) & 255")
         s"""$simhashVotesCteSql,
            |sim AS (SELECT doc_id, CAST($simhashSql AS BIGINT) AS simhash FROM votes),
            |bands AS (
-           |  $bandSql)
-           |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-           |  CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
-           |FROM bands x JOIN bands y ON x.band = y.band AND x.byte = y.byte AND x.doc_id < y.doc_id
-           |WHERE CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) <= 3""".stripMargin
+           |  ${bandRowsSql("doc_id, simhash", "byte", bytes, "sim")})
+           |${bucketPairsSql("doc_id", "byte", s"x.doc_id AS doc_a, y.doc_id AS doc_b, $hamming AS hamming")}
+           |WHERE $hamming <= 3""".stripMargin
       }),
 
     // embedding-cosine near-dup pairs via banded sign-LSH discovery:
@@ -999,41 +1064,33 @@ object DedupQueries {
     // [[embeddingAllPairs]] in tests.
     QueryDef("dedup_embedding",
       (s, dir) => {
-        val bandStructs = (0 until EmbBands).map { k =>
-          val sig = (0 until EmbBits).map { j =>
+        val sigs = (0 until EmbBands).map { k =>
+          (0 until EmbBits).map { j =>
             when(element_at(col("embedding"), k * EmbBits + j + 1) > 0f,
               lit(1L << j)).otherwise(lit(0L))
           }.reduce(_ + _)
-          struct(lit(k).as("band"), sig.as("sig"))
         }
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding"),
-            l2Norm(col("embedding")).as("nrm"),
-            explode(array(bandStructs: _*)).as("bs"))
-          .select(col("vec_id"), col("embedding"), col("nrm"),
-            col("bs.band").as("band"), col("bs.sig").as("sig"))
-        e.as("a").join(e.as("b"), Seq("band", "sig"))
-          .filter(col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-            cosineFast(col("a.embedding"), col("b.embedding"),
-              col("a.nrm"), col("b.nrm")).as("cos"))
-          .distinct()
+        val e = bandRows(Tables(s, dir, "embeddings"),
+          Seq(col("vec_id"), col("embedding"), l2Norm(col("embedding")).as("nrm")),
+          "sig", sigs)
+        bucketPairs(e, "vec_id", "sig",
+          Seq(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
+            cosineFast(col("x.embedding"), col("y.embedding"),
+              col("x.nrm"), col("y.nrm")).as("cos")))
           .filter(col("cos") >= 0.4)
       },
       Some {
-        val bandSql = (0 until EmbBands).map { k =>
+        val sigs = (0 until EmbBands).map { k =>
           val sig = (0 until EmbBits)
             .map(j => s"(CASE WHEN embedding[${k * EmbBits + j + 1}] > 0 THEN ${1L << j} ELSE 0 END)")
             .mkString(" + ")
-          s"SELECT vec_id, embedding, $k AS band, CAST($sig AS BIGINT) AS sig FROM embeddings"
-        }.mkString("\n  UNION ALL ")
+          s"CAST($sig AS BIGINT)"
+        }
+        val cos = cosineSql("x.embedding", "y.embedding")
         s"""WITH bands AS (
-           |  $bandSql)
-           |SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-           |  ${cosineSql("a.embedding", "b.embedding")} AS cos
-           |FROM bands a JOIN bands b
-           |  ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
-           |WHERE ${cosineSql("a.embedding", "b.embedding")} >= 0.4""".stripMargin
+           |  ${bandRowsSql("vec_id, embedding", "sig", sigs, "embeddings")})
+           |${bucketPairsSql("vec_id", "sig", s"x.vec_id AS id_a, y.vec_id AS id_b, $cos AS cos")}
+           |WHERE $cos >= 0.4""".stripMargin
       }),
 
     // semantic dedup (SemDeDup shape, arXiv:2303.09540): k-means cells
@@ -1138,9 +1195,7 @@ object DedupQueries {
     QueryDef("dedup_semantic_incremental",
       (s, dir) => {
         val (assigned, _) = frozenCells(s, dir)
-        val mx = assigned.agg(max(col("vec_id")).as("mx"))
-        val tagged = assigned.crossJoin(broadcast(mx))
-          .withColumn("is_batch", col("vec_id") * 10 >= (col("mx") + 1) * 9)
+        val tagged = arrivalTagged(assigned, "vec_id")
         val batch = tagged.filter(col("is_batch"))
         val corpus = tagged.filter(!col("is_batch"))
         val vsCorpus = batch.as("a").join(corpus.as("b"),
@@ -1161,10 +1216,10 @@ object DedupQueries {
       },
       Some {
         s"""${frozenCellsCteSql(CellTargetRows)},
-           |mx AS (SELECT max(vec_id) AS m FROM embeddings),
+           |${arrivalMaxSql("vec_id", "embeddings")},
            |t AS (
            |  SELECT c.vec_id, c.embedding, c.c_id,
-           |    c.vec_id * 10 >= 9 * ((SELECT m FROM mx) + 1) AS is_batch
+           |    ${arrivalBatchSql("c.vec_id")} AS is_batch
            |  FROM cells c),
            |dc AS (
            |  SELECT DISTINCT a.vec_id
@@ -1269,15 +1324,9 @@ object DedupQueries {
     QueryDef("dedup_winnowing",
       (s, dir) =>
         winnowingAudit(ProfilingQueries.widened(Tables(s, dir, "documents"))),
-      Some(s"""WITH g AS (
-              |  SELECT doc_id, list_transform(range(1, length(text) - $WinnowK + 2),
-              |      i -> md5(substr(text, CAST(i AS INTEGER), $WinnowK))) AS gr
-              |  FROM documents),
+      Some(s"""WITH ${gramsCteSql(WinnowK, withPos = false)},
               |fp AS (
-              |  SELECT doc_id, unnest(list_distinct(
-              |    list_transform(range(0, greatest(len(gr) - $WinnowW + 1, 0)),
-              |      j -> list_aggregate(list_slice(gr, CAST(j + 1 AS INTEGER), CAST(j + $WinnowW AS INTEGER)), 'min')))) AS h
-              |  FROM g),
+              |  ${winnowSql("h")}),
               |dup AS (SELECT h FROM fp GROUP BY h HAVING count(*) > 1),
               |per AS (SELECT f.doc_id, count(*) AS n_fp, count(d.h) AS n_dup
               |        FROM fp f LEFT JOIN dup d USING (h) GROUP BY 1)
@@ -1311,20 +1360,11 @@ object DedupQueries {
     QueryDef("dedup_winnowing_spans",
       (s, dir) =>
         winnowingSpans(ProfilingQueries.widened(Tables(s, dir, "documents"))),
-      Some(s"""WITH g AS (
-              |  SELECT doc_id, list_transform(range(1, length(text) - $WinnowK + 2),
-              |      i -> md5(substr(text, CAST(i AS INTEGER), $WinnowK))
-              |           || lpad(CAST(i AS VARCHAR), 10, '0')) AS gr
-              |  FROM documents),
+      Some(s"""WITH ${gramsCteSql(WinnowK, withPos = true)},
               |fp0 AS (
-              |  SELECT doc_id, unnest(list_distinct(
-              |    list_transform(range(0, greatest(len(gr) - $WinnowW + 1, 0)),
-              |      j -> list_aggregate(list_slice(gr, CAST(j + 1 AS INTEGER), CAST(j + $WinnowW AS INTEGER)), 'min')))) AS hp
-              |  FROM g),
+              |  ${winnowSql("hp")}),
               |fp AS (
-              |  SELECT doc_id, substr(hp, 1, 32) AS h,
-              |         CAST(substr(hp, 33, 10) AS BIGINT) AS pos
-              |  FROM fp0),
+              |  ${gramDecodeSql("fp0")}),
               |hot AS (
               |  SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS df FROM fp GROUP BY h)
               |  WHERE df > $WinnowPairDfCap),
@@ -1332,22 +1372,8 @@ object DedupQueries {
               |m AS (
               |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos AS a_pos
               |  FROM fc a JOIN fc b USING (h) WHERE a.doc_id < b.doc_id),
-              |isl AS (
-              |  SELECT doc_a, doc_b, a_pos,
-              |    CASE WHEN a_pos > COALESCE(max(a_pos + $WinnowK - 1) OVER
-              |        (PARTITION BY doc_a, doc_b ORDER BY a_pos
-              |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-              |      THEN 1 ELSE 0 END AS brk
-              |  FROM m),
-              |grp AS (
-              |  SELECT doc_a, doc_b, a_pos,
-              |    sum(brk) OVER (PARTITION BY doc_a, doc_b ORDER BY a_pos
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gi
-              |  FROM isl)
-              |SELECT doc_a, doc_b, CAST(min(a_pos) AS BIGINT) AS span_start,
-              |  CAST(max(a_pos) + $WinnowK - 1 AS BIGINT) AS span_end,
-              |  CAST(count(*) AS BIGINT) AS n_fp
-              |FROM grp GROUP BY doc_a, doc_b, gi""".stripMargin)),
+              |${islandSpansSql("m", Seq("doc_a", "doc_b"), "a_pos", WinnowK, "n_fp")}
+              |SELECT * FROM spans""".stripMargin)),
 
     // EXACT duplicated-SUBSTRING spans — the corpus-GLOBAL sibling of
     // the pairwise winnowing audit, after Lee et al. 2022
@@ -1377,35 +1403,13 @@ object DedupQueries {
     QueryDef("dedup_substring",
       (s, dir) =>
         substringSpans(ProfilingQueries.widened(Tables(s, dir, "documents"))),
-      Some(s"""WITH g AS (
-              |  SELECT doc_id, list_transform(range(1, length(text) - $SubstrK + 2),
-              |      i -> md5(substr(text, CAST(i AS INTEGER), $SubstrK))
-              |           || lpad(CAST(i AS VARCHAR), 10, '0')) AS gr
-              |  FROM documents),
-              |p AS (
-              |  SELECT doc_id, substr(hp, 1, 32) AS h,
-              |         CAST(substr(hp, 33, 10) AS BIGINT) AS pos
-              |  FROM (SELECT doc_id, unnest(gr) AS hp FROM g)),
+      Some(s"""WITH $substrGramsCteSql,
               |dup AS (
               |  SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS df FROM p GROUP BY h)
               |  WHERE df >= 2),
               |d AS (SELECT doc_id, pos FROM p WHERE h IN (SELECT h FROM dup)),
-              |isl AS (
-              |  SELECT doc_id, pos,
-              |    CASE WHEN pos > COALESCE(max(pos + $SubstrK - 1) OVER
-              |        (PARTITION BY doc_id ORDER BY pos
-              |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-              |      THEN 1 ELSE 0 END AS brk
-              |  FROM d),
-              |grp AS (
-              |  SELECT doc_id, pos,
-              |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gi
-              |  FROM isl)
-              |SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-              |  CAST(max(pos) + $SubstrK - 1 AS BIGINT) AS span_end,
-              |  CAST(count(*) AS BIGINT) AS n_grams
-              |FROM grp GROUP BY doc_id, gi""".stripMargin)),
+              |${islandSpansSql("d", Seq("doc_id"), "pos", SubstrK, "n_grams")}
+              |SELECT * FROM spans""".stripMargin)),
 
     // exact-substring CLEANING — the deliverable `dedup_substring`'s
     // audit exists for (as `corpus_cleaned` is to `dedup_clusters`),
@@ -1425,14 +1429,12 @@ object DedupQueries {
     QueryDef("substring_cleaned",
       (s, dir) =>
         substringCleaned(ProfilingQueries.widened(Tables(s, dir, "documents"))),
-      // concatenated, NOT interpolated into a stripMargin string — the
-      // chain's `||` concat lines would lose a bar to a second strip
-      Some("WITH " + substringCleanedCteSql + "\n" +
-        """SELECT d.doc_id, CAST(d.n_chars AS BIGINT) AS n_chars,
-          |  COALESCE(pd.cut_chars, 0) AS cut_chars,
-          |  CAST(d.n_chars AS BIGINT) - COALESCE(pd.cut_chars, 0) AS kept_chars,
-          |  COALESCE(pd.n_spans, 0) AS n_spans
-          |FROM documents d LEFT JOIN per_doc pd USING (doc_id)""".stripMargin)),
+      Some(s"""WITH $substringCleanedCteSql
+              |SELECT d.doc_id, CAST(d.n_chars AS BIGINT) AS n_chars,
+              |  COALESCE(pd.cut_chars, 0) AS cut_chars,
+              |  CAST(d.n_chars AS BIGINT) - COALESCE(pd.cut_chars, 0) AS kept_chars,
+              |  COALESCE(pd.n_spans, 0) AS n_spans
+              |FROM documents d LEFT JOIN per_doc pd USING (doc_id)""".stripMargin)),
 
     // the DEDUP FUNNEL report — per-stage corpus accounting (docs +
     // chars surviving raw → exact dedup → substring cleaning), the
@@ -1460,8 +1462,8 @@ object DedupQueries {
           .select(lit("substring_cleaned").as("stage"), col("n_docs"), col("n_chars"))
         raw.unionByName(exact).unionByName(sub)
       },
-      Some("WITH " + substringCleanedCteSql + ",\n" +
-        s"""raw AS (
+      Some(s"""WITH $substringCleanedCteSql,
+          |raw AS (
           |  SELECT 'raw' AS stage, COUNT(*) AS n_docs,
           |    CAST(SUM(n_chars) AS BIGINT) AS n_chars
           |  FROM documents),
@@ -1505,16 +1507,8 @@ object DedupQueries {
           .filter(col("jaccard") >= SetSimTau)
       },
       Some(s"""$shCappedCte,
-              |inter AS (
-              |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-              |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT doc_a, doc_b,
-              |  round(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE), 6) AS jaccard
-              |FROM inter
-              |JOIN sizes sa ON sa.doc_id = doc_a
-              |JOIN sizes sb ON sb.doc_id = doc_b
-              |WHERE round(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE), 6) >= $SetSimTau""".stripMargin)),
+              |${sharedShinglesCteSql("inter")}
+              |${jaccardAtLeastSql(s"doc_a, doc_b, $jaccardSql AS jaccard", "inter", SetSimTau)}""".stripMargin)),
 
     // CONTAINMENT near-dup pairs (Broder 1997's second resemblance
     // measure): max-containment |A∩B| / min(|A|, |B|) ≥ 0.9 — the
@@ -1537,19 +1531,18 @@ object DedupQueries {
     // the exact all-pairs-sharing-a-shingle form — prefix filtering
     // is lossless, so both engines must land on the identical pair
     // set; agreement checks the filter's recall claim itself.
-    // CAP ASYMMETRY (deliberate, shared with the Jaccard queries but
-    // worth stating here because containment is MORE cap-sensitive):
-    // the Spark side df-caps its shingle set, the oracle does not —
-    // [[MinDfFloor]] makes the cap a provable no-op at test SFs
-    // (TextDedupSpec pins max df ≪ floor), so the oracle's agreement
-    // certifies the PREFIX FILTER's losslessness in the uncapped
-    // regime. At real corpus sizes the cap fires BY DESIGN and the
-    // two measures diverge: dropping a hot shingle shrinks both the
-    // intersection and min(n_a, n_b), so capped containment is a
-    // different (and intended — boilerplate carries no subset-dup
-    // signal) statistic, no longer oracle-checkable. The losslessness
-    // claim at scale is therefore "lossless w.r.t. the CAPPED shingle
-    // sets", which the prefix-bound argument covers unchanged.
+    // THE CAP (shared with the Jaccard queries, worth stating here
+    // because containment is MORE cap-sensitive): both engines df-cap
+    // the shingle sets — the Spark side through [[shingleSet]], the
+    // oracle through [[shCappedCte]], the same rule term for term —
+    // so the oracle's agreement certifies the prefix filter's
+    // losslessness w.r.t. the CAPPED sets at every scale. Where the
+    // cap fires (real corpus sizes; [[MinDfFloor]] keeps it a no-op at
+    // the test SFs, TextDedupSpec pins max df ≪ floor), dropping a hot
+    // shingle shrinks both the intersection and min(n_a, n_b): capped
+    // containment is a different statistic from raw containment, and
+    // intended — boilerplate carries no subset-dup signal. The
+    // prefix-bound argument covers the capped sets unchanged.
     QueryDef("dedup_containment",
       (s, dir) => {
         val sh = shingleSet(s, dir, maxDfFrac = Some(DriverMaxDfFrac))
@@ -1562,10 +1555,7 @@ object DedupQueries {
           .filter(col("containment") >= ContainTau)
       },
       Some(s"""$shCappedCte,
-              |inter AS (
-              |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-              |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
+              |${sharedShinglesCteSql("inter")}
               |SELECT doc_a, doc_b, sa.n AS n_a, sb.n AS n_b,
               |  round(CAST(i AS DOUBLE) / CAST(least(sa.n, sb.n) AS DOUBLE), 6) AS containment
               |FROM inter
@@ -1595,12 +1585,8 @@ object DedupQueries {
     // with m=2^20; BloomSpec drives a small-m corpus where they occur).
     QueryDef("dedup_bloom_probe",
       (s, dir) => {
-        val docs = Tables(s, dir, "documents")
-        val mx = docs.agg(max(col("doc_id")).as("mx"))
-        val withPos = docs.crossJoin(broadcast(mx))
-          .select(col("doc_id"),
-            (col("doc_id") * 10 >= (col("mx") + 1) * 9).as("is_batch"),
-            exactFp(col("text")).as("fp"))
+        val withPos = arrivalTagged(Tables(s, dir, "documents"), "doc_id")
+          .select(col("doc_id"), col("is_batch"), exactFp(col("text")).as("fp"))
           .withColumn("h0", portableHash(col("fp"), 101))
           .withColumn("h1", portableHash(col("fp"), 103))
           .select(Seq(col("doc_id"), col("is_batch"), col("fp")) ++
@@ -1635,9 +1621,9 @@ object DedupQueries {
           .map(i => s"(h0 + $i * (h1 & 4294967295)) % $BloomM AS p$i").mkString(",\n    ")
         val hitPred = (0 until BloomK)
           .map(i => s"p$i IN (SELECT pos FROM cp)").mkString(" AND ")
-        s"""WITH mx AS (SELECT max(doc_id) AS m FROM documents),
+        s"""WITH ${arrivalMaxSql("doc_id", "documents")},
            |f AS (
-           |  SELECT doc_id, doc_id * 10 >= 9 * ((SELECT m FROM mx) + 1) AS is_batch,
+           |  SELECT doc_id, ${arrivalBatchSql("doc_id")} AS is_batch,
            |    ${exactFpSql("text")} AS fp
            |  FROM documents),
            |h AS (SELECT doc_id, is_batch, fp, $h0 AS h0, $h1 AS h1 FROM f),
@@ -1733,8 +1719,8 @@ object DedupQueries {
           .filter(col("jaccard") >= SetSimTau)
           .select(col("doc_a"), col("doc_b"))
         // the LSH leg needs NO re-verification (r18): found counts
-        // truth ∩ {LSH candidates with J ≥ 0.8}, and every truth pair
-        // already HAS J ≥ 0.8 (the same deterministic exact Jaccard the
+        // truth ∩ {LSH candidates with J ≥ NearDupTau}, and every truth
+        // pair already HAS J ≥ SetSimTau ≥ NearDupTau (the same exact Jaccard the
         // LSH leg would recompute), so probing the candidate list
         // directly is the identical set — the second jaccardPairs chain
         // (two more shingle-cache joins + pair agg + sizes joins) did
@@ -1743,9 +1729,10 @@ object DedupQueries {
         // bucket join; verification of a discovered TRUE pair is a
         // no-op by definition, and discovered false pairs die in the
         // join exactly as they died in the old J-filter. Exact only
-        // while the truth threshold is at least the LSH leg's 0.8: a
+        // while the truth threshold is at least the LSH leg's NearDupTau: a
         // lower tau would count truth pairs the old leg filtered out.
-        require(SetSimTau >= 0.8, s"dedup_lsh_eval's unverified LSH leg needs SetSimTau >= 0.8, got $SetSimTau")
+        require(SetSimTau >= NearDupTau,
+          s"dedup_lsh_eval's unverified LSH leg needs SetSimTau >= $NearDupTau, got $SetSimTau")
         //
         // n_true and n_found ride ONE left-outer probe + aggregate
         // (count(*) vs count(hit)) instead of [persist truth; semi-join;
@@ -1764,18 +1751,10 @@ object DedupQueries {
             QueryDef.microPoints(col("n_found").cast("double") /
               col("n_true").cast("double")).as("recall_micro"))
       },
-      Some(s"""$shCappedCte,
-              |$candCteSql,
-              |$interCteSql,
-              |$pairsCteSql,
-              |ap AS (
-              |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-              |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
+      Some(s"""$verifiedPairsCteSql,
+              |${sharedShinglesCteSql("ap")},
               |truth AS (
-              |  SELECT doc_a, doc_b FROM ap
-              |  JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-              |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE), 6) >= 0.8),
+              |  ${jaccardAtLeastSql("doc_a, doc_b", "ap", SetSimTau)}),
               |f AS (
               |  SELECT COUNT(*) AS n_found
               |  FROM truth t JOIN pairs p ON p.doc_a = t.doc_a AND p.doc_b = t.doc_b),
@@ -1828,40 +1807,26 @@ object DedupQueries {
     * positions → islands → per-doc accounting), shared by the
     * `substring_cleaned` and `dedup_funnel_report` oracles. */
   private def substringCleanedCteSql: String =
-    s"""g AS (
-       |  SELECT doc_id, list_transform(range(1, length(text) - $SubstrK + 2),
-       |      i -> md5(substr(text, CAST(i AS INTEGER), $SubstrK))
-       |           || lpad(CAST(i AS VARCHAR), 10, '0')) AS gr
-       |  FROM documents),
-       |p AS (
-       |  SELECT doc_id, substr(hp, 1, 32) AS h,
-       |         CAST(substr(hp, 33, 10) AS BIGINT) AS pos
-       |  FROM (SELECT doc_id, unnest(gr) AS hp FROM g)),
+    s"""$substrGramsCteSql,
        |dup AS (
        |  SELECT h, min(doc_id) AS min_doc
        |  FROM p GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
        |cut AS (
        |  SELECT p.doc_id, p.pos FROM p JOIN dup USING (h)
        |  WHERE p.doc_id > dup.min_doc),
-       |isl AS (
-       |  SELECT doc_id, pos,
-       |    CASE WHEN pos > COALESCE(max(pos + $SubstrK - 1) OVER
-       |        (PARTITION BY doc_id ORDER BY pos
-       |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-       |      THEN 1 ELSE 0 END AS brk
-       |  FROM (SELECT DISTINCT doc_id, pos FROM cut)),
-       |grp AS (
-       |  SELECT doc_id, pos,
-       |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gi
-       |  FROM isl),
-       |spans AS (
-       |  SELECT doc_id, gi, min(pos) AS s, max(pos) + $SubstrK - 1 AS e
-       |  FROM grp GROUP BY doc_id, gi),
+       |${islandSpansSql("(SELECT DISTINCT doc_id, pos FROM cut)", Seq("doc_id"), "pos", SubstrK, "n_grams")},
        |per_doc AS (
-       |  SELECT doc_id, CAST(sum(e - s + 1) AS BIGINT) AS cut_chars,
+       |  SELECT doc_id, CAST(sum(span_end - span_start + 1) AS BIGINT) AS cut_chars,
        |         CAST(count(*) AS BIGINT) AS n_spans
        |  FROM spans GROUP BY doc_id)""".stripMargin
+
+  /** DuckDB twin of [[gramPositions]]: the positional [[SubstrK]]-gram
+    * CTE `g` and its (doc_id, h, pos) decode `p` — the head of the
+    * `dedup_substring` and substring-cleaning oracles. */
+  private def substrGramsCteSql: String =
+    s"""${gramsCteSql(SubstrK, withPos = true)},
+       |p AS (
+       |  ${gramDecodeSql("(SELECT doc_id, unnest(gr) AS hp FROM g)")})""".stripMargin
 
   /** Winnowing gram width (chars) and window size (grams): any shared
     * verbatim region of ≥ `WinnowK + WinnowW − 1` = 31 chars is
@@ -1875,6 +1840,36 @@ object DedupQueries {
     * the real 24, failing the cross-engine gate). */
   private[graft] def WinnowK: Int = 24
   private[graft] def WinnowW: Int = 8
+
+  /** The K-char gram CTE `g(doc_id, gr)`: per doc, the md5 hex of
+    * every `k`-char gram in order — the DuckDB side of
+    * [[gramPositions]] and of the gram arrays `winnowSelect` scans.
+    * With `withPos` each hash carries its zero-padded 1-based char
+    * offset (min over the strings = digest order, leftmost gram on
+    * ties), decoded by [[gramDecodeSql]]. */
+  private def gramsCteSql(k: Int, withPos: Boolean): String = {
+    val pos = if (withPos) " || lpad(CAST(i AS VARCHAR), 10, '0')" else ""
+    s"""g AS (
+       |  SELECT doc_id, list_transform(range(1, length(text) - $k + 2),
+       |      i -> md5(substr(text, CAST(i AS INTEGER), $k))$pos) AS gr
+       |  FROM documents)""".stripMargin
+  }
+
+  /** The (doc_id, h, pos) decode of the positional hashes `hp` of
+    * `from` (see [[gramsCteSql]]). */
+  private def gramDecodeSql(from: String): String =
+    s"""SELECT doc_id, substr(hp, 1, 32) AS h,
+       |         CAST(substr(hp, 33, 10) AS BIGINT) AS pos
+       |  FROM $from""".stripMargin
+
+  /** DuckDB twin of [[winnowingFingerprints]] (and, over positional
+    * grams, of [[winnowingFingerprintsPos]]): the distinct minima of
+    * every sliding [[WinnowW]]-gram window of `g`, as column `as`. */
+  private def winnowSql(as: String): String =
+    s"""SELECT doc_id, unnest(list_distinct(
+       |    list_transform(range(0, greatest(len(gr) - $WinnowW + 1, 0)),
+       |      j -> list_aggregate(list_slice(gr, CAST(j + 1 AS INTEGER), CAST(j + $WinnowW AS INTEGER)), 'min')))) AS $as
+       |  FROM g""".stripMargin
 
   /** Winnowing fingerprint set: distinct (doc_id, h) where h is the
     * minimum md5 of each sliding [[WinnowW]]-gram window over the doc's
@@ -1988,6 +1983,30 @@ object DedupQueries {
       .select((parts ++ Seq("span_start", "span_end", nAs)).map(col): _*)
   }
 
+  /** DuckDB twin of [[islandSpans]] over the rows of `from`: the
+    * isl/grp CTEs and `spans(parts, span_start, span_end, nAs)`. */
+  private def islandSpansSql(from: String, parts: Seq[String], pos: String,
+      width: Int, nAs: String): String = {
+    val ps = parts.mkString(", ")
+    s"""isl AS (
+       |  SELECT $ps, $pos,
+       |    CASE WHEN $pos > COALESCE(max($pos + $width - 1) OVER
+       |        (PARTITION BY $ps ORDER BY $pos
+       |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
+       |      THEN 1 ELSE 0 END AS brk
+       |  FROM $from),
+       |grp AS (
+       |  SELECT $ps, $pos,
+       |    sum(brk) OVER (PARTITION BY $ps ORDER BY $pos
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gi
+       |  FROM isl),
+       |spans AS (
+       |  SELECT $ps, CAST(min($pos) AS BIGINT) AS span_start,
+       |    CAST(max($pos) + $width - 1 AS BIGINT) AS span_end,
+       |    CAST(count(*) AS BIGINT) AS $nAs
+       |  FROM grp GROUP BY $ps, gi)""".stripMargin
+  }
+
   /** Exact-substring gram width (chars): the minimum duplicated region
     * `dedup_substring` can certify. Every K-char window of a shared
     * region ≥ K chars hashes identically in both docs, so ANY verbatim
@@ -1997,15 +2016,6 @@ object DedupQueries {
     * not a val (the recorded init-order trap, see [[WinnowK]]). */
   private[graft] def SubstrK: Int = 24
 
-  /** Corpus-global exact duplicated-substring spans over a
-    * (doc_id, text) frame (Lee et al. 2022, arXiv:2107.06499 — the
-    * gram-df re-expression of their suffix-array dedup): positions
-    * whose K-gram md5 occurs in ≥ 2 distinct docs, merged into maximal
-    * char spans per doc. `posexplode` (0-based j → 1-based pos) keeps
-    * the 300-char text out of the exploded stream — only 32-hex-char
-    * hashes shuffle. (doc_id, pos) is unique by construction, so the
-    * islands window has no peer-order ties. Factored off the QueryDef
-    * so SubstringDedupSpec can plant shared regions at known offsets. */
   /** The (doc_id, pos, h) K-gram position stream `dedup_substring` and
     * `substring_cleaned` both consume — one definition of the gram
     * hashing so the audit and the cleaner can never disagree on what
@@ -2021,6 +2031,15 @@ object DedupQueries {
         org.apache.spark.sql.graft.ScanExpressions.gramHashes(col("text"), SubstrK)))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("h"))
 
+  /** Corpus-global exact duplicated-substring spans over a
+    * (doc_id, text) frame (Lee et al. 2022, arXiv:2107.06499 — the
+    * gram-df re-expression of their suffix-array dedup): positions
+    * whose K-gram md5 occurs in ≥ 2 distinct docs, merged into maximal
+    * char spans per doc. `posexplode` (0-based j → 1-based pos) keeps
+    * the 300-char text out of the exploded stream — only 32-hex-char
+    * hashes shuffle. (doc_id, pos) is unique by construction, so the
+    * islands window has no peer-order ties. Factored off the QueryDef
+    * so SubstringDedupSpec can plant shared regions at known offsets. */
   private[graft] def substringSpans(docs: DataFrame): DataFrame = {
     val p = QueryDef.eager(gramPositions(docs))
     val dup = p.groupBy(col("h"))
@@ -2119,12 +2138,7 @@ object DedupQueries {
     * cells inheriting via left join — KMeans.train's coalesce). */
   private def lloydStepSql(assignCte: String, centsCte: String,
       prevCents: String): String =
-    s"""$assignCte AS (
-       |  SELECT vec_id, embedding, c_id FROM (
-       |    SELECT r.vec_id, r.embedding, c.c_id,
-       |      row_number() OVER (PARTITION BY r.vec_id
-       |        ORDER BY ${d2Sql("r.embedding", "c.c_emb")}, c.c_id) AS rk
-       |    FROM reps r CROSS JOIN $prevCents c) WHERE rk = 1),
+    s"""${lloydAssignSql(assignCte, prevCents)},
        |${centsCte}_m AS (
        |  SELECT c_id, list(CAST(m AS FLOAT) ORDER BY pos) AS c_emb FROM (
        |    SELECT c_id, pos, avg(v) AS m FROM (
@@ -2134,6 +2148,17 @@ object DedupQueries {
        |$centsCte AS (
        |  SELECT p.c_id, coalesce(n.c_emb, p.c_emb) AS c_emb
        |  FROM $prevCents p LEFT JOIN ${centsCte}_m n USING (c_id))""".stripMargin
+
+  /** The Lloyd assignment CTE `name(vec_id, embedding, c_id)`: every
+    * `reps` vector in its nearest centroid of `cents` by [[d2Sql]], c_id
+    * tiebreak — the DuckDB twin of KMeans.assign's min_by. */
+  private def lloydAssignSql(name: String, cents: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, embedding, c_id FROM (
+       |    SELECT r.vec_id, r.embedding, c.c_id,
+       |      row_number() OVER (PARTITION BY r.vec_id
+       |        ORDER BY ${d2Sql("r.embedding", "c.c_emb")}, c.c_id) AS rk
+       |    FROM reps r CROSS JOIN $cents c) WHERE rk = 1)""".stripMargin
 
   /** The `dedup_semantic_trained` oracle: quantized pre-collapse,
     * first-k init, [[TrainedIters]] unrolled Lloyd supersteps, final
@@ -2153,12 +2178,7 @@ object DedupQueries {
        |  FROM reps ORDER BY vec_id LIMIT $TrainedK),
        |${lloydStepSql("a1", "c1", "c0")},
        |${lloydStepSql("a2", "c2", "c1")},
-       |af AS (
-       |  SELECT vec_id, embedding, c_id FROM (
-       |    SELECT r.vec_id, r.embedding, c.c_id,
-       |      row_number() OVER (PARTITION BY r.vec_id
-       |        ORDER BY ${d2Sql("r.embedding", "c.c_emb")}, c.c_id) AS rk
-       |    FROM reps r CROSS JOIN c2 c) WHERE rk = 1),
+       |${lloydAssignSql("af", "c2")},
        |${withinCellDropsSql("af")}
        |SELECT f.vec_id, f.c_id, CAST(1 AS BIGINT) AS kept
        |FROM af f

@@ -585,9 +585,9 @@ object SimilarityQueries {
               |  FROM qsh q JOIN sh c ON q.s = c.s AND c.doc_id <> q.q_id
               |  GROUP BY 1, 2),
               |sparse AS (
-              |${topKSql("i.q_id, i.doc_id",
-                   "inter i JOIN sizes sa ON sa.doc_id = i.q_id JOIN sizes sb ON sb.doc_id = i.doc_id",
-                   "i.q_id", "round(CAST(i.i AS DOUBLE) / CAST(sa.n + sb.n - i.i AS DOUBLE), 6) DESC, i.doc_id",
+              |${topKSql("x.q_id, x.doc_id",
+                   "inter x JOIN sizes sa ON sa.doc_id = x.q_id JOIN sizes sb ON sb.doc_id = x.doc_id",
+                   "x.q_id", s"${DedupQueries.jaccardSql} DESC, x.doc_id",
                    RrfPoolK, "rank_s")}),
               |dense AS (
               |  SELECT q_id, n_id AS doc_id, rank AS rank_d FROM (

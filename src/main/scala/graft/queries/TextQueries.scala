@@ -73,12 +73,19 @@ object TextQueries {
     toks.groupBy(col("tk")).agg(count(lit(1)).as("freq"))
       .orderBy(vocabOrder: _*).limit(n)
 
-  /** Per-(doc, token) counts (doc_id, tk, `name`) — doc_entropy's `c`
-    * and tfidf_keywords' `tf`. inverted_index groups by (term, doc_id)
-    * instead and keeps its own chain (the key order is in its plan). */
+  /** Per-(doc, token) counts (doc_id, tk, `name`) — doc_entropy's `c`,
+    * tfidf_keywords' `tf` and collocations_lift's distinct (doc, token)
+    * stream (the unused count is pruned from its plan). inverted_index
+    * groups by (term, doc_id) instead and keeps its own chain (the key
+    * order is in its plan). */
   private def docTokenCounts(docs: DataFrame, name: String): DataFrame =
     docs.select(col("doc_id"), explode(tokens(col("text"))).as("tk"))
       .groupBy(col("doc_id"), col("tk")).agg(count(lit(1)).as(name))
+
+  /** Per-token document frequency `df` over a distinct (doc_id, tk)
+    * stream such as [[docTokenCounts]]. */
+  private def docFreqs(dt: DataFrame): DataFrame =
+    dt.groupBy(col("tk")).agg(count(lit(1)).as("df"))
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -885,11 +892,9 @@ object TextQueries {
     // (lift DESC, x, y) via TakeOrderedAndProject.
     QueryDef("collocations_lift",
       (s, dir) => {
-        val dt = Tables(s, dir, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tk"))
-          .distinct()
-        val dfs = dt.groupBy(col("tk")).agg(count(lit(1)).as("df"))
-          .filter(col("df") >= MinCollocDf)
+        val dt = docTokenCounts(Tables(s, dir, "documents"), "c")
+          .select(col("doc_id"), col("tk"))
+        val dfs = docFreqs(dt).filter(col("df") >= MinCollocDf)
         val nDocs = Tables(s, dir, "documents").agg(count(lit(1)).as("n"))
         val qual = dt.join(dfs, Seq("tk"))
         val pairs = qual.as("a").join(qual.as("b"),
@@ -949,7 +954,7 @@ object TextQueries {
     QueryDef("tfidf_keywords",
       (s, dir) => {
         val tfs = docTokenCounts(Tables(s, dir, "documents"), "tf")
-        val dfs = tfs.groupBy(col("tk")).agg(count(lit(1)).as("df"))
+        val dfs = docFreqs(tfs)
         val nDocs = Tables(s, dir, "documents").agg(count(lit(1)).as("n"))
         val scored = tfs.join(dfs, Seq("tk"))
           .crossJoin(broadcast(nDocs))
